@@ -11,10 +11,12 @@ import org.apache.spark.sql.functions._
   * native TIMESTAMP(MICROS) without timezone), so the reader branches on the
   * loaded type instead of hardcoding one encoding; both paths land on a
   * session-UTC microsecond TIMESTAMP, matching DuckDB's truncation semantics.
+  * Every table's schema comes from one driver-side footer read
+  * ([[graft.sources.ParquetFiles]]), so building a reader launches no job.
   */
 object Tables {
   private def p(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.ParquetFiles.read(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame   = p(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = p(spark, dir, "nation")

@@ -1138,7 +1138,7 @@ object TxLog {
     val dataSchema = snap.schema
       .map(org.apache.spark.sql.types.StructType.fromDDL)
       // legacy logs without schema records: one driver-side footer read
-      .getOrElse(spark.read.parquet(
+      .getOrElse(ParquetFiles.read(spark,
         s"$root/${snap.parts.valuesIterator.next().head}").schema)
     val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       new TxFileIndex(spark, root, snap.parts, partSchema, snap.stats),

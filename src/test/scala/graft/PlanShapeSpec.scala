@@ -50,6 +50,17 @@ class PlanShapeSpec extends SparkSpecBase {
     }
   }
 
+  // every Tables reader resolves its schema with a driver-side footer read
+  // (sources.ParquetFiles): building a star-schema query launches no Spark
+  // job, so a reader that goes back to schema inference fails here
+  Seq("q05_customer_ltv", "q06_product_performance", "q12_customer_dim",
+      "q13_location_agg", "q14_customer_behavior").foreach { name =>
+    test(s"building $name launches no Spark job") {
+      val (_, jobs) = jobsLaunchedBy(SparkEntry.queries(name)(spark, sf))
+      assert(jobs.isEmpty, s"building $name launched jobs ${jobs.mkString(",")}")
+    }
+  }
+
   // r3 verdict items 2-4: the NTILE queries must never regress back to a
   // one-task global-sort window (the full-registry sweep is
   // `runMain graft.tools.PlanAudit --windows`; q72/q73 are allow-listed

@@ -30,4 +30,23 @@ trait SparkSpecBase extends AnyFunSuite {
     Sessions.local("4")
   }
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the ids of the Spark jobs it launched from this
+    * thread, counted through a job group. The status store is fed by the
+    * listener bus asynchronously and in order, so a marker job in a second
+    * group is awaited first: once it shows, every job of `body` does too. */
+  def jobsLaunchedBy[A](body: => A): (A, Seq[Int]) = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, "jobs counted by a spec")
+    val out = try body finally sc.clearJobGroup()
+    sc.setJobGroup(s"$group-marker", "marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-marker").isEmpty &&
+           System.nanoTime < deadline) Thread.sleep(5)
+    assert(sc.statusTracker.getJobIdsForGroup(s"$group-marker").nonEmpty,
+      "marker job never reached the status store")
+    (out, sc.statusTracker.getJobIdsForGroup(group).toSeq)
+  }
 }

@@ -430,6 +430,37 @@ class TxLogSpec extends SparkSpecBase {
     assert(TxLog.readTable(spark, root).count() === 2L)
   }
 
+  test("a legacy log without a schema record reads back equal, its schema " +
+      "from one driver-side footer read (no job while the read is built)") {
+    val root = freshRoot("legacyschema")
+    TxLog.overwritePartitionsTx(kv("a" -> 1, "b" -> 2), root, "part")
+    TxLog.appendBatchTx(kv("a" -> 3), root, "part", "l1")
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getAs[String]("part") -> r.getAs[Long]("n")).sorted.toSeq
+    val want = pairs(TxLog.read(spark, root, "part"))
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val commits = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/_txlog"))
+      .map(_.getPath).filter(_.getName.endsWith(".txn"))
+    assert(commits.length === 2)
+    commits.foreach { p =>
+      val in = fs.open(p)
+      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+      assert(body.linesIterator.exists(_.startsWith("schema=")))
+      val out = fs.create(p, true)
+      try out.write(body.linesIterator.filterNot(_.startsWith("schema="))
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+      finally out.close()
+    }
+    TxLog.clearLogCache()
+    assert(TxLog.snapshot(spark, root).schema.isEmpty,
+      "the stripped log must take the legacy path")
+    val (df, jobs) = jobsLaunchedBy(TxLog.read(spark, root, "part"))
+    assert(jobs.isEmpty, s"building the read launched jobs ${jobs.mkString(",")}")
+    assert(pairs(df) === want)
+  }
+
   test("consumeChanges drives an exactly-once tx-to-tx pipeline: windows " +
       "tagged by version, crash replays absorbed by the downstream ledger") {
     val src = freshRoot("pipe-src")
