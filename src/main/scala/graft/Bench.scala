@@ -75,9 +75,9 @@ object Bench {
     "q160_target_mix",          // exact target-mixture resample (grouped rank)
     "q161_scd2_pit_lookup",     // point-in-time SCD2 version join
     "q162_stratified_kfold",    // exact-balance stratified fold assignment
-    "q163_soft_deletes",        // merge-on-read deletion sidecar + compaction
+    "q163_soft_deletes",        // tx-log deletion vectors + compaction
     "q164_bucketed_join",       // co-located bucketed join round trip
-    "q165_time_travel",         // versioned snapshot commits + old-version read
+    "q165_time_travel",         // tx-log overwrite commits + readTableAt
     "q166_dq_quarantine",       // row-level expectation routing (one projection)
     "q167_cdc_to_scd2",         // CDC feed compiled to full SCD2 history
     "q168_clustered_compaction", // cluster-preserving compaction + stats prune
@@ -105,14 +105,14 @@ object Bench {
     "q190_collocations",        // PMI phrase mining (exact counts, one ln)
     "q191_bloom_artifact",      // persisted cross-job bloom runtime filter
     "q192_stats_artifact",      // maintained skipping index through the warehouse
-    "q193_idempotent_ingest",   // retry-safe batch ingest (batch-id partitions)
+    "q193_idempotent_ingest",   // retry-safe batch ingest (tx-log batch-id ledger)
     "q194_late_dimension",      // inferred-member placeholder + repair pass
     "q195_quarantine_examples", // md5-order example rows per failed rule
     "q196_corpus_interleave",   // integer virtual-time weighted interleave
     "q197_pseudonymize",        // salted-token pseudonymization (projection)
     "q198_new_vs_returning",    // daily acquisition split (first-seen join)
     "q199_cross_corpus_canonical", // multi-source priority dedup rule
-    "q200_nightly_batch",       // COMPOSED warehouse nightly (ingest->DQ->IVM)
+    "q200_nightly_batch",       // COMPOSED nightly (tx-log ingest->DQ->IVM)
     "q201_train_quality_classifier", // fixed-point distributed logistic GD
     "q202_stream_exactly_once", // staged-commit JDBC sink + epoch replay
     "q203_stream_dedup",        // watermarked exact dedup, dup deliveries

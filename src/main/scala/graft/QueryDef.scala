@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One driver-checkable query: a Spark plan builder plus (optionally) the
-  * equivalent ANSI SQL the driver runs in DuckDB over the same parquet
-  * tables. Queries without an oracle get the driver's weaker rows-only
-  * check and are additionally property-tested in `src/test`.
+/** One oracle-checked query: a Spark plan function plus the equivalent
+  * ANSI SQL that DuckDB runs over the same parquet tables (a
+  * `read_parquet` of a committed snapshot for the [[QueryDef.goldenGated]]
+  * queries).
   */
 final case class QueryDef(
     name: String,
@@ -15,8 +15,6 @@ final case class QueryDef(
 object QueryDef {
   def sql(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, fn, Some(oracle))
-  def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
 
   /** Queries gated by a committed golden parquet instead of re-expressible
     * SQL (hash-family/ANN/generator algorithms DuckDB cannot reproduce).

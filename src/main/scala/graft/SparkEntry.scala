@@ -12,8 +12,7 @@ import graft.queries._
   * SQL-expressible query; the nine xxhash64-family/generator queries
   * (MinHash, SimHash, BPE, HLL, CMS, multimodal features, synthetic
   * events) are golden-gated (committed-snapshot `read_parquet` oracle,
-  * QueryDef.goldenGated) with driver-run oracle AUDIT twins — zero
-  * rows-only queries remain.
+  * QueryDef.goldenGated) with DuckDB-oracled AUDIT twins.
   */
 object SparkEntry {
 
@@ -32,7 +31,7 @@ object SparkEntry {
     all.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
     all.collect { case QueryDef(n, _, Some(sql)) => n -> sql }.toMap
 }

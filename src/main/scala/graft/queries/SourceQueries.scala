@@ -5,7 +5,7 @@ import graft.llm.Multimodal
 import graft.queries.SqlFragments.{toksSql, ws}
 import graft.operators.{Baskets, Cdc, Check, Checks, Cleaning, Diff, Ivm}
 import graft.operators.Aggregates._
-import graft.sources.{Competitor, Csv, Generator, Sampling, Warehouse}
+import graft.sources.{Competitor, Csv, Generator, Sampling, TxLog, Warehouse}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,6 +19,14 @@ object SourceQueries {
 
   private def scratch(name: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft-io/$name"
+
+  /** [[scratch]] with anything a previous run left there deleted. */
+  private def freshScratch(s: org.apache.spark.sql.SparkSession, name: String): String = {
+    val root = scratch(name)
+    val p = new org.apache.hadoop.fs.Path(root)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    root
+  }
 
   private val dsumSql = (x: String) => s"CAST(SUM(CAST($x AS DECIMAL(18,2))) AS DOUBLE)"
 
@@ -743,11 +751,7 @@ object SourceQueries {
          |  CAST(SUM(o_orderkey) AS BIGINT) AS key_sum,
          |  ${dsumSql("o_totalprice")} AS revenue
          |FROM u GROUP BY 1, 2""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q146b_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q146b_tx")
       val o = Tables.orders(s, dir)
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
       TxLog.overwritePartitionsTx(o.filter(col("o_orderkey") % 2 === 0),
@@ -1230,13 +1234,13 @@ object SourceQueries {
         .select("doc_id", "lang", "fold")
     },
 
-    // ---- q163: MERGE-ON-READ SOFT DELETES — the deletion-vector
-    // pattern: two delete batches land as sidecar keyset APPENDS (O(keys),
-    // no rewrite), reads anti-join the sidecar, and the maintenance pass
-    // folds it into a staged rewrite. The gate aggregates BOTH stages —
-    // through the MoR read before compaction and through the plain table
-    // after — so a sidecar miss, a lost innocent row, or a compaction
-    // that resurrects deletes all fail value compare.
+    // ---- q163: MERGE-ON-READ DELETES — two deletes land as tx-log
+    // deletion vectors (no data file rewritten), reads apply the vectors,
+    // and compaction materializes them into rewritten files. The gate
+    // aggregates BOTH stages — the merge-on-read version before
+    // compaction (read by time travel) and the compacted table after —
+    // so a missed vector, a lost innocent row, or a compaction that
+    // resurrects deletes all fail value compare.
     QueryDef.sql("q163_soft_deletes",
       s"""WITH base AS (SELECT * FROM orders WHERE o_orderkey % 10 <> 7),
          |a AS (SELECT 'mor' AS stage, o_orderpriority, COUNT(*) AS orders,
@@ -1246,26 +1250,20 @@ object SourceQueries {
          |        ${dsumSql("o_totalprice")} AS revenue
          |      FROM base GROUP BY 2)
          |SELECT * FROM a UNION ALL SELECT * FROM b""".stripMargin) { (s, dir) =>
-      Warehouse.ensureDatabase(s, "graft_wh")
-      val o = Tables.orders(s, dir)
-      // clean-slate the sidecar: a stale keyset from a previous run in
-      // this catalog would delete rows of the fresh table
-      s.sql("DROP TABLE IF EXISTS graft_wh.orders_mor_deletes")
-      Warehouse.overwriteTable(o, "graft_wh.orders_mor")
-      Warehouse.softDeleteKeys(s, "graft_wh.orders_mor", "o_orderkey",
-        o.filter(col("o_orderkey") % 20 === 7).select("o_orderkey"))
-      Warehouse.softDeleteKeys(s, "graft_wh.orders_mor", "o_orderkey",
-        o.filter(col("o_orderkey") % 20 === 17).select("o_orderkey"))
+      val root = freshScratch(s, "q163_tx")
+      TxLog.overwriteTableTx(Tables.orders(s, dir), root, Seq("o_orderpriority"))
+      TxLog.deleteWhereDvTx(s, root, col("o_orderkey") % 20 === 7)
+      val (vMor, _) = TxLog.deleteWhereDvTx(s, root, col("o_orderkey") % 20 === 17)
       def agg(df: org.apache.spark.sql.DataFrame, stage: String) =
         df.groupBy("o_orderpriority")
           .agg(count(lit(1)).as("orders"), dsum(col("o_totalprice")).as("revenue"))
           .select(lit(stage).as("stage"), col("o_orderpriority"),
             col("orders"), col("revenue"))
-      // the MoR stage must materialize BEFORE compaction mutates the table
-      val mor = agg(Warehouse.readWithDeletes(s, "graft_wh.orders_mor",
-        "o_orderkey"), "mor").localCheckpoint()
-      Warehouse.compactDeletes(s, "graft_wh.orders_mor", "o_orderkey")
-      mor.unionByName(agg(s.table("graft_wh.orders_mor"), "compacted"))
+      TxLog.compactPartitionsTx(s, root, "o_orderpriority")
+      require(TxLog.snapshot(s, root).dvs.isEmpty,
+        "q163: compaction must materialize every deletion vector")
+      agg(TxLog.readTableAt(s, root, vMor), "mor")
+        .unionByName(agg(TxLog.readTable(s, root), "compacted"))
     },
 
     // ---- q164: BUCKETED CO-LOCATED JOIN — orders and lineitem written
@@ -1293,13 +1291,11 @@ object SourceQueries {
           dsum(col("o_totalprice")).as("revenue"))
     },
 
-    // ---- q165: VERSIONED SNAPSHOTS / TIME TRAVEL — two immutable
-    // commits (_SUCCESS-gated v= directories; the Iceberg snapshot idea
-    // over plain parquet), then BOTH versions aggregated through
-    // Versioned.read: yesterday's numbers stay reproducible after
-    // today's load (the reference's in-place to_sql replace loses them).
-    // A reader racing a commit resolves its version first — snapshot
-    // isolation by immutability (spec-pinned).
+    // ---- q165: VERSIONED SNAPSHOTS / TIME TRAVEL — two tx-log
+    // overwrite commits, then BOTH versions aggregated: version 1 through
+    // readTableAt, version 2 as the current table. Yesterday's numbers
+    // stay reproducible after today's load (the reference's in-place
+    // to_sql replace loses them).
     QueryDef.sql("q165_time_travel",
       s"""WITH v2 AS (SELECT o_orderkey, o_orderpriority,
          |    CASE WHEN o_orderkey % 11 = 2 THEN o_totalprice + 5.0
@@ -1312,26 +1308,24 @@ object SourceQueries {
          |        ${dsumSql("o_totalprice")} AS revenue
          |      FROM v2 GROUP BY 2)
          |SELECT * FROM a UNION ALL SELECT * FROM b""".stripMargin) { (s, dir) =>
-      import graft.sources.Versioned
-      val root = scratch("q165_versions")
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val root = freshScratch(s, "q165_tx")
       val o = Tables.orders(s, dir)
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
-      val v1 = Versioned.commit(o, root)
-      val v2 = Versioned.commit(
+      val v1 = TxLog.overwriteTableTx(o, root, Seq("o_orderpriority"))
+      val v2 = TxLog.overwriteTableTx(
         o.filter(col("o_orderkey") % 10 =!= 3)
           .withColumn("o_totalprice",
             when(col("o_orderkey") % 11 === 2, col("o_totalprice") + 5.0)
               .otherwise(col("o_totalprice"))),
-        root)
+        root, Seq("o_orderpriority"))
+      require(v1 == 1L && v2 == 2L, s"q165: expected versions 1 and 2, got $v1 and $v2")
       def agg(df: org.apache.spark.sql.DataFrame, v: Int) =
         df.groupBy("o_orderpriority")
           .agg(count(lit(1)).as("orders"), dsum(col("o_totalprice")).as("revenue"))
           .select(lit(v).as("version"), col("o_orderpriority"),
             col("orders"), col("revenue"))
-      agg(Versioned.read(s, root, v1), v1)
-        .unionByName(agg(Versioned.read(s, root), v2)) // default = latest
+      agg(TxLog.readTableAt(s, root, v1), 1)
+        .unionByName(agg(TxLog.readTable(s, root), 2))
     },
 
     // ---- q166: ROW-LEVEL EXPECTATION ROUTING — the DLT-expectations /
@@ -1657,26 +1651,26 @@ object SourceQueries {
 
     // ---- q193: EXACTLY-ONCE BATCH INGEST — three daily batches land,
     // the middle one REPLAYED (the Airflow-retry double-count the
-    // reference's to_sql append suffers): each batch owns its
-    // batch_id partition under dynamic overwrite, so the replay
-    // overwrites instead of duplicating — idempotence from layout, no
-    // ledger, no two-phase hole. The gate aggregates the post-ingest
-    // table; a double-count fails value compare.
+    // reference's to_sql append suffers): the tx log's batch-id ledger
+    // turns the replay into a no-op that returns the first landing's
+    // version. The gate aggregates the post-ingest table; a
+    // double-count fails value compare.
     QueryDef.sql("q193_idempotent_ingest",
       s"""SELECT o_orderpriority, COUNT(*) AS orders,
          |  ${dsumSql("o_totalprice")} AS revenue,
          |  COUNT(DISTINCT o_orderkey) AS distinct_orders
          |FROM orders GROUP BY 1""".stripMargin) { (s, dir) =>
-      Warehouse.ensureDatabase(s, "graft_wh")
-      s.sql("DROP TABLE IF EXISTS graft_wh.orders_ingest")
+      val root = freshScratch(s, "q193_tx")
       val o = Tables.orders(s, dir)
-      def batch(i: Int) = o.filter(col("o_orderkey") % 3 === i)
-      Warehouse.appendBatchIdempotent(batch(0), "graft_wh.orders_ingest", "b0")
-      Warehouse.appendBatchIdempotent(batch(1), "graft_wh.orders_ingest", "b1")
-      // the retry: batch b1 lands AGAIN — must overwrite, not duplicate
-      Warehouse.appendBatchIdempotent(batch(1), "graft_wh.orders_ingest", "b1")
-      Warehouse.appendBatchIdempotent(batch(2), "graft_wh.orders_ingest", "b2")
-      s.table("graft_wh.orders_ingest")
+      def land(i: Int) =
+        TxLog.appendBatchTx(o.filter(col("o_orderkey") % 3 === i), root,
+          "o_orderpriority", s"q193-b$i")
+      land(0)
+      val v1 = land(1)
+      // the retry: batch b1 lands AGAIN — must be a no-op, not a duplicate
+      require(land(1) == v1, "q193: the replayed batch must return its first version")
+      land(2)
+      TxLog.readTable(s, root)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("orders"), dsum(col("o_totalprice")).as("revenue"),
           countDistinct(col("o_orderkey")).as("distinct_orders"))
@@ -1793,8 +1787,7 @@ object SourceQueries {
          |UNION ALL SELECT 'quarantined', '',
          |  (SELECT COUNT(*) FROM corrupt) - (SELECT COUNT(*) FROM valid), NULL
          |UNION ALL SELECT 'rollup', o_orderpriority, n_rows, revenue FROM roll""".stripMargin) { (s, dir) =>
-      Warehouse.ensureDatabase(s, "graft_wh")
-      s.sql("DROP TABLE IF EXISTS graft_wh.nightly_ingest")
+      val root = freshScratch(s, "q200_tx")
       val corrupt = Tables.orders(s, dir).select(col("o_orderkey"),
         when(col("o_orderkey") % 97 === 5, lit(null))
           .otherwise(col("o_custkey")).as("o_custkey"),
@@ -1802,12 +1795,15 @@ object SourceQueries {
         when(col("o_orderkey") % 83 === 11, -col("o_totalprice"))
           .otherwise(col("o_totalprice")).as("o_totalprice"),
         col("o_orderdate"), col("o_orderpriority"))
-      def b(i: Int) = corrupt.filter(col("o_orderkey") % 3 === i)
-      Warehouse.appendBatchIdempotent(b(0), "graft_wh.nightly_ingest", "b0")
-      Warehouse.appendBatchIdempotent(b(1), "graft_wh.nightly_ingest", "b1")
-      Warehouse.appendBatchIdempotent(b(1), "graft_wh.nightly_ingest", "b1") // retry
-      Warehouse.appendBatchIdempotent(b(2), "graft_wh.nightly_ingest", "b2")
-      val landed = s.table("graft_wh.nightly_ingest")
+      def land(i: Int) =
+        TxLog.appendBatchTx(corrupt.filter(col("o_orderkey") % 3 === i), root,
+          "o_orderpriority", s"q200-b$i")
+      land(0)
+      val v1 = land(1)
+      // the retry: batch b1 lands AGAIN — must be a no-op, not a duplicate
+      require(land(1) == v1, "q200: the replayed batch must return its first version")
+      land(2)
+      val landed = TxLog.readTable(s, root)
       val (valid, quarantined) = Checks.routeInvalid(landed, Seq(
         "custkey_present" -> col("o_custkey").isNotNull,
         "price_non_negative" -> (col("o_totalprice") >= 0)))
@@ -2053,11 +2049,7 @@ object SourceQueries {
          |  ${dsumSql("price")} AS revenue,
          |  CAST(3 AS BIGINT) AS final_version
          |FROM fin GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q208_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q208_tx")
       val pc = "o_orderpriority"
       val base = Tables.orders(s, dir)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
@@ -2483,7 +2475,6 @@ object SourceQueries {
          |  ${dsumSql("value")} AS total_value,
          |  CAST(1 AS BIGINT) AS one_file_per_part
          |FROM events GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
       val tmp = java.nio.file.Files.createTempDirectory("graft_q217").toString
       val srcDir = s"$tmp/src"; val root = s"$tmp/table"
       new java.io.File(srcDir).mkdirs()
@@ -2544,11 +2535,7 @@ object SourceQueries {
          |FROM orders
          |WHERE o_orderkey > (SELECT CAST(FLOOR(MAX(o_orderkey) / 2.0) AS BIGINT) FROM orders)
          |GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q218_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q218_tx")
       val orders = Tables.orders(s, dir)
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
       val maxKey = orders.agg(max("o_orderkey")).head.getLong(0)
@@ -2596,11 +2583,7 @@ object SourceQueries {
          |WHERE event_id > (SELECT CAST(FLOOR(MAX(event_id) * 3 / 8.0) AS BIGINT) FROM events)
          |  AND event_id <= (SELECT CAST(FLOOR(MAX(event_id) * 4 / 8.0) AS BIGINT) FROM events)
          |GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q219_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q219_tx")
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"))
       (0 until 3).foreach { i =>
@@ -2643,11 +2626,7 @@ object SourceQueries {
          |  COUNT(DISTINCT event_id) AS n_ids,
          |  ${dsumSql("value")} AS total_value
          |FROM events GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q221_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q221_tx")
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"))
       def slice(i: Int) = ev.filter(pmod(col("event_id"), lit(3)) === i)
@@ -2687,7 +2666,6 @@ object SourceQueries {
          |  COUNT(DISTINCT event_id) AS n_ids,
          |  ${dsumSql("value")} AS total_value
          |FROM events GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
       val base = scratch("q222_tx")
       val basePath = new org.apache.hadoop.fs.Path(base)
       val fs = basePath.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -2741,11 +2719,7 @@ object SourceQueries {
         |  COUNT(*) AS n_rows
         |FROM events WHERE event_id % 8 <> 5
         |GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q220_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q220_tx")
       val ev = Tables.events(s, dir).select(col("event_id"),
         pmod(col("event_id"), lit(8)).cast("string").as("bucket"))
       (0 until 3).foreach { i =>
@@ -2781,11 +2755,7 @@ object SourceQueries {
          |FROM customer
          |WHERE c_name = (SELECT MAX(c_name) FROM customer)
          |GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q223_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q223_tx")
       val cust = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
       // contiguous name-range batches: quartile boundaries computed from
@@ -2847,11 +2817,7 @@ object SourceQueries {
          |  ${dsumSql("c_acctbal")} AS total_bal,
          |  CAST(1 AS BIGINT) AS merge_ok
          |FROM merged GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q224_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q224_tx")
       val cust = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_nationkey", "c_acctbal",
           "c_mktsegment")
@@ -2897,11 +2863,7 @@ object SourceQueries {
          |FROM orders
          |WHERE NOT (o_orderkey > (SELECT CAST(FLOOR(MAX(o_orderkey) * 7 / 8.0) AS BIGINT) FROM orders))
          |GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q225_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q225_tx")
       val orders = Tables.orders(s, dir)
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
       val maxKey = orders.agg(max("o_orderkey")).head.getLong(0)
@@ -2944,10 +2906,7 @@ object SourceQueries {
          |WHERE event_id > (SELECT CAST(FLOOR(MAX(event_id) / 2.0) AS BIGINT) FROM events)
          |GROUP BY 1""".stripMargin) { (s, dir) =>
       import graft.sources.{TxBigFileIndex, TxLog}
-      val root = scratch("q226_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q226_tx")
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"))
       val maxId = ev.agg(max("event_id")).head.getLong(0)
@@ -3016,11 +2975,7 @@ object SourceQueries {
          |FROM events
          |WHERE user_id <= (SELECT CAST(FLOOR(MAX(user_id) / 8.0) AS BIGINT) FROM events)
          |GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q227_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q227_tx")
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"))
@@ -3087,11 +3042,7 @@ object SourceQueries {
          |SELECT change_type, COUNT(*) AS n_rows,
          |  ${dsumSql("c_acctbal")} AS total_bal
          |FROM feed GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q228_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q228_tx")
       val cust = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_nationkey", "c_acctbal",
           "c_mktsegment")
@@ -3131,11 +3082,7 @@ object SourceQueries {
          |  COUNT(DISTINCT event_id) AS n_ids,
          |  ${dsumSql("value")} AS total_value
          |FROM events GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val base = scratch("q229_tx")
-      val basePath = new org.apache.hadoop.fs.Path(base)
-      basePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(basePath, true)
+      val base = freshScratch(s, "q229_tx")
       val root = s"$base/table"; val out = s"$base/out"
       val ckpt = s"$base/ckpt"
       val ev = Tables.events(s, dir)
@@ -3183,11 +3130,7 @@ object SourceQueries {
          |  MAX(cust_id) AS max_id,
          |  CAST(1 AS BIGINT) AS rename_ok
          |FROM allr GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q231_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q231_tx")
       val cust = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
       val maxKey = cust.agg(max("c_custkey")).head.getLong(0)
@@ -3265,11 +3208,7 @@ object SourceQueries {
          |SELECT change_type, COUNT(*) AS n_rows,
          |  ${dsumSql("c_acctbal")} AS total_bal
          |FROM feed GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val base = scratch("q232_tx")
-      val basePath = new org.apache.hadoop.fs.Path(base)
-      basePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(basePath, true)
+      val base = freshScratch(s, "q232_tx")
       val root = s"$base/table"; val out = s"$base/out"
       val ckpt = s"$base/ckpt"
       val cust = Tables.customer(s, dir)
@@ -3357,11 +3296,7 @@ object SourceQueries {
          |  ${dsumSql("balance")} AS total_bal,
          |  CAST(1 AS BIGINT) AS remap_ok
          |FROM feed GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val base = scratch("q233_tx")
-      val basePath = new org.apache.hadoop.fs.Path(base)
-      basePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(basePath, true)
+      val base = freshScratch(s, "q233_tx")
       val root = s"$base/table"; val out = s"$base/out"
       val ckpt = s"$base/ckpt"
       val cust = Tables.customer(s, dir)
@@ -3454,11 +3389,7 @@ object SourceQueries {
          |  ${dsumSql("o_totalprice")} AS total_price,
          |  CAST(1 AS BIGINT) AS restore_ok
          |FROM allr GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q234_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q234_tx")
       val orders = Tables.orders(s, dir).select(
         col("o_orderkey"), year(col("o_orderdate")).as("o_year"),
         col("o_totalprice"))
@@ -3534,11 +3465,7 @@ object SourceQueries {
          |  ${dsumSql("o_totalprice")} AS total_price,
          |  CAST(1 AS BIGINT) AS dv_ok
          |FROM kept GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q235_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q235_tx")
       val orders = Tables.orders(s, dir).select(
         col("o_orderkey"), year(col("o_orderdate")).as("o_year"),
         col("o_totalprice"))
@@ -3616,7 +3543,6 @@ object SourceQueries {
          |  ${dsumSql("o_totalprice")} AS total_price,
          |  CAST(1 AS BIGINT) AS binpack_ok
          |FROM allr GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
       val root = scratch("q236_tx")
       val rootPath = new org.apache.hadoop.fs.Path(root)
       val hfs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -3677,11 +3603,7 @@ object SourceQueries {
         |  ('append', CAST(2 AS BIGINT)), ('dv', CAST(1 AS BIGINT)),
         |  ('meta', CAST(1 AS BIGINT)), ('remove', CAST(1 AS BIGINT)),
         |  ('rewrite', CAST(1 AS BIGINT))) AS t(op, n)""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q237_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q237_tx")
       val cust = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
       val maxKey = cust.agg(max("c_custkey")).head.getLong(0)
@@ -3729,11 +3651,7 @@ object SourceQueries {
          |  ${dsumSql("value")} AS total_value,
          |  CAST(1 AS BIGINT) AS sink_ok
          |FROM events GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val base = scratch("q238_tx")
-      val basePath = new org.apache.hadoop.fs.Path(base)
-      basePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(basePath, true)
+      val base = freshScratch(s, "q238_tx")
       val a = s"$base/a"; val b = s"$base/b"; val ckpt = s"$base/ckpt"
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"))
@@ -3781,11 +3699,7 @@ object SourceQueries {
          |  ${dsumSql("value")} AS total_value,
          |  CAST(1 AS BIGINT) AS upsert_ok
          |FROM events GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val base = scratch("q239_tx")
-      val basePath = new org.apache.hadoop.fs.Path(base)
-      basePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(basePath, true)
+      val base = freshScratch(s, "q239_tx")
       val a = s"$base/a"; val b = s"$base/b"; val ckpt = s"$base/ckpt"
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"))
@@ -3833,11 +3747,7 @@ object SourceQueries {
          |FROM orders, mx
          |WHERE o_orderkey <= CAST(FLOOR(m / 2.0) AS BIGINT)
          |GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q240_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q240_tx")
       val orders = Tables.orders(s, dir).select(
         col("o_orderkey"), year(col("o_orderdate")).as("o_year"),
         col("o_totalprice"))
@@ -3879,11 +3789,7 @@ object SourceQueries {
          |  ${dsumSql("c_acctbal")} AS total_bal,
          |  CAST(1 AS BIGINT) AS check_ok
          |FROM allr GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q241_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q241_tx")
       val cust = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
       val maxKey = cust.agg(max("c_custkey")).head.getLong(0)
@@ -3951,11 +3857,7 @@ object SourceQueries {
          |  ${dsumSql("o_totalprice")} AS total_price,
          |  CAST(1 AS BIGINT) AS bigdv_ok
          |FROM kept GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q242_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q242_tx")
       val orders = Tables.orders(s, dir).select(
         col("o_orderkey"), year(col("o_orderdate")).as("o_year"),
         col("o_totalprice"))
@@ -4039,11 +3941,7 @@ object SourceQueries {
          |  ${dsumSql("bal")} AS total_bal,
          |  CAST(1 AS BIGINT) AS merge_ok
          |FROM allr GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q243_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q243_tx")
       val cust = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
       val maxKey = cust.agg(max("c_custkey")).head.getLong(0)
@@ -4093,11 +3991,7 @@ object SourceQueries {
          |    AS total_price,
          |  CAST(1 AS BIGINT) AS update_ok
          |FROM orders, mx GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q244_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q244_tx")
       val orders = Tables.orders(s, dir).select(
         col("o_orderkey"), year(col("o_orderdate")).as("o_year"),
         col("o_totalprice"))
@@ -4169,11 +4063,7 @@ object SourceQueries {
          |  ${dsumSql("o_totalprice")} AS total_price,
          |  CAST(1 AS BIGINT) AS multicol_ok
          |FROM kept GROUP BY 1, 2""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q230_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q230_tx")
       val orders = Tables.orders(s, dir).select(
         col("o_orderkey"), year(col("o_orderdate")).as("o_year"),
         col("o_orderpriority"), col("o_totalprice"))
@@ -4248,11 +4138,7 @@ object SourceQueries {
          |  (SELECT COUNT(*) FROM customer) AS v1_rows,
          |  CAST(1 AS BIGINT) AS pruning_ok
          |FROM live GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q245_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q245_tx")
       val cust = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
       TxLog.appendBatchTx(cust, root, "c_mktsegment", "q245-b1")   // v1
@@ -4316,11 +4202,7 @@ object SourceQueries {
          |  ${dsumSql("bal")} AS total_bal,
          |  CAST(1 AS BIGINT) AS sql_ok
          |FROM live GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q246_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q246_tx")
       val cust = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
       val maxKey = cust.agg(max("c_custkey")).head.getLong(0)
@@ -4379,11 +4261,7 @@ object SourceQueries {
          |  ${dsumSql("o_totalprice")} AS total_price,
          |  CAST(1 AS BIGINT) AS restore_ok
          |FROM orders GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q247_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q247_tx")
       val orders = Tables.orders(s, dir).select(
         col("o_orderkey"), year(col("o_orderdate")).as("o_year"),
         col("o_totalprice"))
@@ -4455,11 +4333,7 @@ object SourceQueries {
          |  CAST(1 AS BIGINT) AS convert_ok
          |FROM orders WHERE o_orderkey % 5 <> 0 GROUP BY 1""".stripMargin) {
       (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q248_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q248_tx")
       val orders = Tables.orders(s, dir)
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
       val n = orders.count()
@@ -4509,11 +4383,7 @@ object SourceQueries {
          |  ${dsumSql("balance")} AS total_bal,
          |  CAST(1 AS BIGINT) AS write_ok
          |FROM live GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q249_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q249_tx")
       val cust = Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
       val n = cust.count()
@@ -4607,7 +4477,6 @@ object SourceQueries {
          |  ${dsumSql("bal")} AS total_bal,
          |  CAST(1 AS BIGINT) AS catalog_ok
          |FROM live GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
       val meta = scratch("q250_meta")
       val loc = scratch("q250_tbl")
       Seq(meta, loc).foreach { d =>
@@ -4703,11 +4572,7 @@ object SourceQueries {
          |SELECT change_type, COUNT(*) AS n_rows, ${dsumSql("p")} AS total,
          |  CAST(1 AS BIGINT) AS tvf_ok
          |FROM changes GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
-      val root = scratch("q251_tx")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(rootPath, true)
+      val root = freshScratch(s, "q251_tx")
       val base = Tables.orders(s, dir).select(
         col("o_orderkey").as("k"), year(col("o_orderdate")).as("o_year"),
         col("o_totalprice").as("p"))
@@ -4763,7 +4628,6 @@ object SourceQueries {
          |SELECT level, COUNT(*) AS n_rows, ${dsumSql("bal")} AS total_bal,
          |  CAST(1 AS BIGINT) AS add_ok
          |FROM allr GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
       val meta = scratch("q252_meta")
       val root = scratch("q252_tbl")
       Seq(meta, root).foreach { d =>
@@ -4838,7 +4702,6 @@ object SourceQueries {
          |  ${dsumSql("c_acctbal")} AS total_bal,
          |  CAST(1 AS BIGINT) AS props_ok
          |FROM customer GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
       val meta = scratch("q253_meta")
       val root = scratch("q253_tbl")
       Seq(meta, root).foreach { d =>
@@ -4920,7 +4783,6 @@ object SourceQueries {
          |  ${dsumSql("c_acctbal * 2")} AS total_bal2,
          |  CAST(1 AS BIGINT) AS replace_ok
          |FROM customer GROUP BY 1""".stripMargin) { (s, dir) =>
-      import graft.sources.TxLog
       val meta = scratch("q254_meta")
       val root = scratch("q254_tbl")
       Seq(meta, root).foreach { d =>

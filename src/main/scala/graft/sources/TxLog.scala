@@ -47,10 +47,10 @@ object LogStore {
 }
 
 /** Optimistic-concurrency transaction log over plain parquet — the
-  * writer-vs-writer safety [[Warehouse.overwritePartitioned]] /
-  * [[Warehouse.appendBatchIdempotent]] lack (their dynamic-overwrite
-  * idempotence covers retry-of-SELF only; two jobs racing one table can
-  * interleave DROP/write and lose a writer's partitions wholesale).
+  * writer-vs-writer safety [[Warehouse.overwritePartitioned]] lacks
+  * (its dynamic-overwrite idempotence covers retry-of-SELF only; two jobs
+  * racing one table can interleave DROP/write and lose a writer's
+  * partitions wholesale).
   * The Delta/Iceberg commit shape, reduced to its load-bearing core:
   *
   *   - data files are IMMUTABLE and land under a per-writer staging dir
@@ -2810,9 +2810,8 @@ object TxLog {
       "caller")
   }
 
-  /** Idempotent transactional batch append — the tx-log upgrade of
-    * [[Warehouse.appendBatchIdempotent]]: the batch's files land once no
-    * matter how many times the job retries OR how many concurrent
+  /** Idempotent transactional batch append: the batch's files land
+    * once no matter how many times the job retries OR how many concurrent
     * duplicate submissions race (the ledger check runs inside the commit
     * loop, so even two simultaneous first-attempts serialize to one). */
   def appendBatchTx(df: DataFrame, root: String, partCol: String,

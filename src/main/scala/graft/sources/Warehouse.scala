@@ -263,49 +263,6 @@ object Warehouse {
     require(survived.isEmpty, s"forgetKeys: rows with forgotten keys survive in $table")
   }
 
-  /** Exactly-once BATCH ingest — the retry-safety the reference's
-    * Airflow tasks lack (a retried pandas `to_sql` append double-counts):
-    * each batch lands in its OWN `batch_id=<id>` partition via dynamic
-    * partition overwrite, so replaying a batch — after a crash,
-    * mid-write failure, or scheduler retry — OVERWRITES its partition
-    * instead of appending a second copy. Idempotence comes from the
-    * layout, not a ledger, so there is no two-phase commit hole: a torn
-    * first attempt leaves a partial partition that the retry replaces
-    * wholesale. First batch creates the table. */
-  def appendBatchIdempotent(df: DataFrame, table: String,
-                            batchId: String): Unit = {
-    val spark = df.sparkSession
-    val withId = df.withColumn("batch_id", lit(batchId))
-    if (!spark.catalog.tableExists(table)) {
-      overwritePartitioned(withId, table, "batch_id")
-      return
-    }
-    // the idempotence contract holds ONLY because each batch owns a
-    // batch_id partition — against an existing table that is NOT
-    // partitioned by batch_id, overwrite-insertInto would truncate the
-    // WHOLE table (dynamic overwrite protects partitioned targets only)
-    // and the name-aligned select would silently drop the id column.
-    // Refuse loudly instead of wiping the table.
-    val partCols = spark.catalog.listColumns(table).collect()
-      .filter(_.isPartition).map(_.name)
-    require(partCols.contains("batch_id"),
-      s"appendBatchIdempotent: $table is not partitioned by batch_id " +
-        s"(partition cols: ${partCols.mkString(",")}) — idempotent " +
-        "replay needs per-batch partitions")
-    val cols = spark.table(table).columns
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try withId.repartition(
-        spark.sessionState.conf.numShufflePartitions, col("batch_id"))
-      .select(cols.map(withId(_)): _*)
-      .write.mode("overwrite").insertInto(table)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-    spark.catalog.refreshTable(table)
-  }
-
   /** S11: idempotent insert — keep existing rows, append only incoming rows
     * whose key is not already present (ON CONFLICT DO NOTHING semantics).
     * Pure-plan variant: returns base ∪ (incoming ⟂ base) without mutating
@@ -416,64 +373,6 @@ object Warehouse {
         when(col("multi_current"), lit("multi_current"))))
       .filter(col("violations") =!= lit(""))
       .select(col(keyCol), col("violations"))
-  }
-
-  /** Merge-on-read keyed deletes — the Delta/Iceberg DELETION-VECTOR
-    * pattern at key granularity, the other half of the delete story
-    * beside [[forgetKeys]] (copy-on-write): a routine delete only needs
-    * to DISAPPEAR, so it lands as a tiny sidecar keyset
-    * (`<table>_deletes`) in O(deleted keys); readers anti-join the
-    * sidecar ([[readWithDeletes]], broadcast — small by contract) and the
-    * periodic maintenance pass folds it into a rewrite
-    * ([[compactDeletes]]). At 100 TB this turns every routine DELETE from
-    * a partition rewrite into an append. Idempotent: re-deleting a key
-    * appends a duplicate the anti-join doesn't care about and compaction
-    * clears. */
-  def softDeleteKeys(spark: SparkSession, table: String, keyCol: String,
-                     keys: DataFrame): Unit = {
-    val sidecar = s"${table}_deletes"
-    val k = keys.select(col(keyCol)).distinct()
-    if (spark.catalog.tableExists(sidecar)) k.write.mode("append").insertInto(sidecar)
-    else overwriteTable(k, sidecar)
-  }
-
-  /** Read `table` with its delete sidecar applied (no sidecar = plain
-    * read). One broadcast anti-join — the merge-on-read cost every
-    * query pays until [[compactDeletes]] folds it away. */
-  def readWithDeletes(spark: SparkSession, table: String,
-                      keyCol: String): DataFrame = {
-    val base = spark.table(table)
-    val sidecar = s"${table}_deletes"
-    if (!spark.catalog.tableExists(sidecar)) base
-    else base.join(
-      org.apache.spark.sql.functions.broadcast(spark.table(sidecar)),
-      Seq(keyCol), "left_anti")
-  }
-
-  /** Maintenance: fold the delete sidecar into a physical rewrite and
-    * drop it — subsequent reads pay no anti-join. The rewrite STAGES to
-    * a scratch table first (disk-backed, any size): a direct
-    * self-overwrite would drop the table and then try to read the files
-    * it just deleted. The swap-in is a metadata-only RENAME, not a
-    * second physical rewrite — the dataset is written ONCE, and the
-    * only window where `table` is absent is two catalog operations. A
-    * crash inside that window leaves the full compacted copy under the
-    * staging name; re-running compactDeletes recovers (the entry check
-    * below completes the interrupted rename first), and the sidecar
-    * only drops after a completed swap, so no delete is ever lost. */
-  def compactDeletes(spark: SparkSession, table: String, keyCol: String): Unit = {
-    val sidecar = s"${table}_deletes"
-    val staging = s"${table}_compacting"
-    // recovery: a previous run crashed between its DROP and RENAME —
-    // the compacted data lives only under the staging name; finish the
-    // swap before anything reads `table`
-    if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(staging))
-      spark.sql(s"ALTER TABLE $staging RENAME TO $table")
-    if (!spark.catalog.tableExists(sidecar)) return
-    overwriteTable(readWithDeletes(spark, table, keyCol), staging)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $table")
-    spark.sql(s"DROP TABLE IF EXISTS $sidecar")
   }
 
   /** Point-in-time (PIT) lookup against an SCD2 history: each fact row is

@@ -641,57 +641,6 @@ class SourcesSpec extends SparkSpecBase {
       again.select("doc_id", "fold").collect().toSet)
   }
 
-  test("soft deletes: sidecar append leaves table files untouched; MoR " +
-      "read excludes; compaction folds physically and drops the sidecar") {
-    Warehouse.ensureDatabase(spark, "graft_test")
-    spark.sql("DROP TABLE IF EXISTS graft_test.mor_t_deletes")
-    val rows = Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("k", "v")
-    Warehouse.overwriteTable(rows, "graft_test.mor_t")
-    def tableFiles = spark.table("graft_test.mor_t").inputFiles.toSet
-    val before = tableFiles
-    Warehouse.softDeleteKeys(spark, "graft_test.mor_t", "k", Seq(2L).toDF("k"))
-    Warehouse.softDeleteKeys(spark, "graft_test.mor_t", "k", Seq(4L, 2L).toDF("k"))
-    assert(tableFiles == before, "soft delete must not touch table files")
-    val mor = Warehouse.readWithDeletes(spark, "graft_test.mor_t", "k")
-    assert(mor.select("k").collect().map(_.getLong(0)).toSet == Set(1L, 3L))
-    Warehouse.compactDeletes(spark, "graft_test.mor_t", "k")
-    assert(!spark.catalog.tableExists("graft_test.mor_t_deletes"))
-    // post-compaction: plain read already excludes; MoR read is a no-op path
-    assert(spark.table("graft_test.mor_t").select("k")
-      .collect().map(_.getLong(0)).toSet == Set(1L, 3L))
-    assert(Warehouse.readWithDeletes(spark, "graft_test.mor_t", "k").count() == 2)
-    // compaction with no sidecar is a no-op (files untouched)
-    val afterCompact = tableFiles
-    Warehouse.compactDeletes(spark, "graft_test.mor_t", "k")
-    assert(tableFiles == afterCompact)
-  }
-
-  test("Versioned: commits are immutable and _SUCCESS-gated; time travel " +
-      "reads old versions; expire keeps the newest") {
-    import graft.sources.Versioned
-    import org.apache.hadoop.fs.Path
-    val root = tmp("versioned_t")
-    val fsys = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(new Path(root), true)
-    val v1 = Versioned.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root)
-    val v2 = Versioned.commit(Seq((1L, "a2"), (3L, "c")).toDF("k", "v"), root)
-    assert(v1 == 1 && v2 == 2 && Versioned.versions(spark, root) == Seq(1, 2))
-    // time travel: v1 unchanged after the v2 commit
-    assert(Versioned.read(spark, root, v1).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet == Set((1L, "a"), (2L, "b")))
-    assert(Versioned.read(spark, root).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet == Set((1L, "a2"), (3L, "c")))
-    // a directory without _SUCCESS (a torn commit) is invisible
-    fsys.mkdirs(new Path(s"$root/v=3"))
-    assert(Versioned.latestVersion(spark, root).contains(2))
-    intercept[IllegalArgumentException] { Versioned.read(spark, root, 3) }
-    fsys.delete(new Path(s"$root/v=3"), true)
-    // expire: oldest goes, newest stays readable
-    assert(Versioned.expireBefore(spark, root, keep = 1) == 1)
-    assert(Versioned.versions(spark, root) == Seq(2))
-    intercept[IllegalArgumentException] { Versioned.read(spark, root, v1) }
-  }
-
   test("Checks.routeInvalid: ordered multi-rule reasons; NULL predicate " +
       "quarantines; valid branch drops the marker") {
     import graft.operators.Checks
@@ -912,40 +861,10 @@ class SourcesSpec extends SparkSpecBase {
     assert(prunedN >= trueN && prunedN <= fact.count())
   }
 
-  test("appendBatchIdempotent: replay overwrites its partition wholesale " +
-      "(torn first attempt replaced); other batches untouched") {
-    Warehouse.ensureDatabase(spark, "graft_test")
-    spark.sql("DROP TABLE IF EXISTS graft_test.ingest_t")
-    val b1 = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    val b2torn = Seq((10L, "PARTIAL")).toDF("k", "v")     // crashed mid-batch
-    val b2full = Seq((10L, "x"), (11L, "y")).toDF("k", "v")
-    Warehouse.appendBatchIdempotent(b1, "graft_test.ingest_t", "b1")
-    Warehouse.appendBatchIdempotent(b2torn, "graft_test.ingest_t", "b2")
-    // the retry ships the FULL batch — it must replace the torn partition
-    Warehouse.appendBatchIdempotent(b2full, "graft_test.ingest_t", "b2")
-    val got = spark.table("graft_test.ingest_t")
-      .select("k", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(got == Set((1L, "a"), (2L, "b"), (10L, "x"), (11L, "y")))
-    // replaying b1 verbatim is a no-op on content
-    Warehouse.appendBatchIdempotent(b1, "graft_test.ingest_t", "b1")
-    assert(spark.table("graft_test.ingest_t").count() == 4)
-  }
-
   test("warehouse guardrails refuse instead of corrupting: unpartitioned " +
       "idempotent target, multi-level/mismatched retention, NULL forget " +
       "partition") {
     Warehouse.ensureDatabase(spark, "graft_test")
-    // appendBatchIdempotent against a table NOT partitioned by batch_id
-    // would truncate it wholesale — must refuse with the table untouched
-    Warehouse.overwriteTable(Seq((1L, "a")).toDF("k", "v"), "graft_test.flat_t")
-    val e1 = intercept[IllegalArgumentException] {
-      Warehouse.appendBatchIdempotent(
-        Seq((2L, "b")).toDF("k", "v"), "graft_test.flat_t", "b9")
-    }
-    assert(e1.getMessage.contains("batch_id"))
-    assert(spark.table("graft_test.flat_t").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet == Set((1L, "a")))
-
     // dropPartitionsWhere on a multi-level table garbles the first level's
     // value and silently no-ops the DROP — must refuse
     spark.sql("DROP TABLE IF EXISTS graft_test.ml_t")
@@ -1001,28 +920,6 @@ class SourcesSpec extends SparkSpecBase {
     assert(up.groupBy("k").count().filter($"count" > 1).isEmpty,
       "intra-batch duplicate keys must collapse to one row")
     assert(up.count() == 3)
-  }
-
-  test("compactDeletes swaps by rename and recovers a crash between the " +
-      "drop and the rename") {
-    Warehouse.ensureDatabase(spark, "graft_test")
-    spark.sql("DROP TABLE IF EXISTS graft_test.mor2_t_deletes")
-    spark.sql("DROP TABLE IF EXISTS graft_test.mor2_t_compacting")
-    Warehouse.overwriteTable(
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), "graft_test.mor2_t")
-    Warehouse.softDeleteKeys(spark, "graft_test.mor2_t", "k", Seq(2L).toDF("k"))
-    // simulate the torn swap: staging written, target dropped, rename
-    // never ran — the compacted copy exists ONLY under the staging name
-    Warehouse.overwriteTable(
-      Warehouse.readWithDeletes(spark, "graft_test.mor2_t", "k"),
-      "graft_test.mor2_t_compacting")
-    spark.sql("DROP TABLE graft_test.mor2_t")
-    // re-running compactDeletes is the recovery path
-    Warehouse.compactDeletes(spark, "graft_test.mor2_t", "k")
-    assert(spark.table("graft_test.mor2_t").select("k")
-      .collect().map(_.getLong(0)).toSet == Set(1L, 3L))
-    assert(!spark.catalog.tableExists("graft_test.mor2_t_deletes"))
-    assert(!spark.catalog.tableExists("graft_test.mor2_t_compacting"))
   }
 
   test("scd2Lookup keeps the facts' own valid_from/valid_to columns; " +
