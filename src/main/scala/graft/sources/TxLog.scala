@@ -246,7 +246,11 @@ object TxLog {
                           // [[sealBatchLedgerTx]])
                           sealsBatches: Boolean = false,
                           // ops "meta"/"restore": table-property snapshot
-                          props: Option[Map[String, String]] = None) {
+                          props: Option[Map[String, String]] = None,
+                          // written with changeFeed = true: the commit
+                          // serves the change feed even when no row
+                          // changed (and so no change file exists)
+                          changeFeed: Boolean = false) {
     def touched: Set[String] = parts.keySet ++ removed.keySet
   }
 
@@ -620,7 +624,8 @@ object TxLog {
                            payloadChk: Option[(String, Long, Long, Long)] =
                              None,
                            sealsBatches: Boolean = false,
-                           props: Option[Map[String, String]] = None)
+                           props: Option[Map[String, String]] = None,
+                           changeFeed: Boolean = false)
       : String = {
     val header = Seq("graft-txn-v1", s"op=$op", s"readVersion=$readVersion",
       s"batchId=${batchId.map(esc).getOrElse("-")}",
@@ -631,8 +636,10 @@ object TxLog {
       writerSeq.map { case (id, seq) => s"writer=${esc(id)}:$seq" } ++
       // every new writer's change files carry PHYSICAL column names — the
       // marker lets readers distinguish them from legacy logical-name
-      // change files when re-mapping historical windows
-      (if (changes.nonEmpty) Seq("cdfNames=phys") else Seq.empty) ++
+      // change files when re-mapping historical windows. A change-recorded
+      // commit whose rows did not change carries the marker alone.
+      (if (changes.nonEmpty || changeFeed) Seq("cdfNames=phys")
+       else Seq.empty) ++
       (if (constraints.isDefined) Seq("hasConstraints=1") else Seq.empty) ++
       (if (props.isDefined) Seq("hasProps=1") else Seq.empty) ++
       (if (sealsBatches) Seq("sealBatches=1") else Seq.empty)
@@ -1640,7 +1647,8 @@ object TxLog {
     val window = commits.filter(_.version > sinceVersion)
     val bad = window.filter(c => c.op == "overwrite" || c.op == "remove" ||
       c.op == "restore" ||
-      ((c.op == "rewrite" || c.op == "dv") && c.changes.isEmpty))
+      ((c.op == "rewrite" || c.op == "dv") && c.changes.isEmpty &&
+        !c.cdfPhys))
     require(bad.isEmpty, "TxLog.readChangeFeed: commits " +
       s"[${bad.map(c => s"v${c.version}:${c.op}").mkString(", ")}] carry " +
       "no row-level change record — overwrite/remove/restore are not " +
@@ -1685,14 +1693,43 @@ object TxLog {
           .filterNot(c => c == "_commit_version" || c == "_change_type")
           .map(col).toSeq ++ Seq(col("_change_type"), col("_commit_version")): _*))
       }
+    // change files are read with a schema built from the log, never
+    // inferred. Routed ones ([[stageRouted]]) carry partition values and
+    // `_change_type` in their path: like the appends, all of the window's
+    // serve from ONE scan whose partition schema gains `_change_type`,
+    // each row's version derived from its file.
+    val dml = window.filter(c => c.op == "rewrite" || c.op == "dv")
+    val routed = dml.flatMap(c =>
+      c.changes.filterNot(isLegacyChange).map(_ -> c.version))
+    val changeType = org.apache.spark.sql.types.StructField(
+      "_change_type", StringType)
+    val routedFrame: Option[DataFrame] =
+      if (routed.isEmpty) None
+      else {
+        val byKey = routed.map { case (f, _) =>
+          val (t, key) = routedChangeOf(f, ps.length)
+          (renderPartKey(splitPartKey(key, ps.length) :+ t), f)
+        }.groupBy(_._1).map { case (k, xs) => k -> xs.map(_._2) }
+        Some(readSnapshotPos(spark, root,
+          Snapshot(currentVersion, byKey, schemaDDL, mapping = endMapping),
+          org.apache.spark.sql.types.StructType(ps.fields :+ changeType),
+          withPos = false, fileVersions = Some(routed.toMap)))
+      }
+    // legacy data/cdf-<uuid> files: partition columns and _change_type
+    // are plain file columns
+    lazy val legacySchema = org.apache.spark.sql.types.StructType(
+      schemaDDL.map(org.apache.spark.sql.types.StructType.fromDDL)
+        .getOrElse(sys.error(s"TxLog.readChangeFeed: no recorded schema " +
+          s"at $root")).fields ++ ps.fields :+ changeType)
     val frames =
-      insertFrame.toSeq ++
-      window.filter(c => c.op == "rewrite" || c.op == "dv").map { c =>
-        val raw = spark.read.parquet(c.changes.map(f => s"$root/$f"): _*)
+      insertFrame.toSeq ++ routedFrame ++
+      dml.filter(_.changes.exists(isLegacyChange)).map { c =>
+        val raw = spark.read.schema(legacySchema).parquet(
+          c.changes.filter(isLegacyChange).map(f => s"$root/$f"): _*)
         val mapped =
           if (endMapping.isEmpty) raw
           else {
-            // legacy change files (pre-cdfNames commits) carry write-time
+            // legacy change files of pre-cdfNames commits carry write-time
             // LOGICAL names — under a live mapping they cannot be re-mapped
             require(c.cdfPhys, s"TxLog.readChangeFeed: commit " +
               s"v${c.version}'s change files carry write-time column " +
@@ -1837,11 +1874,14 @@ object TxLog {
   }
 
   /** One file of a CDF stream's micro-batch plan: `kind` is "data" (an
-    * append commit's file, streamed as inserts) or "cdf" (a rewrite
-    * commit's write-time change file, rows already tagged). */
+    * append commit's file, streamed as inserts), "change" (a DML
+    * commit's routed change file: partition key and `changeType` from
+    * its path) or "cdf" (a legacy unpartitioned change file, partition
+    * values and change type in its rows). */
   private[graft] final case class ChangePlanFile(kind: String,
                                                  partKey: String, rel: String,
-                                                 length: Long, version: Long)
+                                                 length: Long, version: Long,
+                                                 changeType: String = "")
 
   /** The CHANGE-FEED window (since, until] as a per-file plan — the
     * streaming source's micro-batch planner ([[readChangeFeed]]
@@ -1874,7 +1914,8 @@ object TxLog {
     val window = commits.filter(_.version > since)
     val bad = window.filter(c => c.op == "overwrite" || c.op == "remove" ||
       c.op == "restore" ||
-      ((c.op == "rewrite" || c.op == "dv") && c.changes.isEmpty))
+      ((c.op == "rewrite" || c.op == "dv") && c.changes.isEmpty &&
+        !c.cdfPhys))
     require(bad.isEmpty, "TxLog CDF stream: commits " +
       s"[${bad.map(c => s"v${c.version}:${c.op}").mkString(", ")}] carry " +
       "no row-level change record — overwrite/remove/restore are not " +
@@ -1899,10 +1940,19 @@ object TxLog {
     def lenOf(rel: String): Long = meta.getOrElse(rel, sys.error(
       s"TxLog CDF stream: live file $rel missing under $root — vacuum " +
         "ran inside the stream's window?"))._1
+    val nPart = commits0.flatMap(_.partSchema).lastOption
+      .orElse(chk.flatMap(_.partSchema))
+      .map(org.apache.spark.sql.types.StructType.fromDDL(_).length)
     dataRels.map { case (v, f, ver) =>
       ChangePlanFile("data", v, f, lenOf(f), ver)
     } ++ cdfRels.map { case (f, ver) =>
-      ChangePlanFile("cdf", "", f, lenOf(f), ver)
+      if (isLegacyChange(f)) ChangePlanFile("cdf", "", f, lenOf(f), ver)
+      else {
+        val (t, key) = routedChangeOf(f, nPart.getOrElse(sys.error(
+          s"TxLog CDF stream: the log at $root predates partition-column " +
+            "recording")))
+        ChangePlanFile("change", key, f, lenOf(f), ver, t)
+      }
     }
   }
 
@@ -2251,7 +2301,8 @@ object TxLog {
                         clusterBy: Seq[Column], clusterFiles: Int,
                         mapping0: Map[String, String],
                         constraints0: Map[String, String],
-                        checked: Option[Map[String, String]]): Staged = {
+                        checked: Option[Map[String, String]],
+                        routed: Boolean = false): Staged = {
     require(partCols.nonEmpty, "TxLog.stage: at least one partition column")
     require(partCols.distinct.length == partCols.length,
       s"TxLog.stage: duplicate partition columns [${partCols.mkString(", ")}]")
@@ -2269,7 +2320,8 @@ object TxLog {
         s"TxLog.stage: the staged data does not carry " +
           s"[${missing.mkString(", ")}], referenced by CHECK constraint " +
           s"[$name] ($e) — a writer must carry every constrained column")
-      require(df.filter(not(coalesce(expr(e), lit(true)))).isEmpty,
+      val rows = if (routed) df.filter(col(RouteCol) === DataRoute) else df
+      require(rows.filter(not(coalesce(expr(e), lit(true)))).isEmpty,
         s"TxLog.stage: CHECK constraint [$name] ($e) is violated by the " +
           "staged data — fix the writer or drop the constraint")
     }
@@ -2303,18 +2355,8 @@ object TxLog {
     val rel = s"data/txn-${java.util.UUID.randomUUID()}"
     val dir = new Path(root, rel)
     val shaped =
-      // repartition WITHOUT an explicit count is AQE-coalescible: a small
-      // staged batch collapses to 1-2 reduce tasks, and that one task then
-      // writes EVERY partition's file serially (measured 1.2-1.5 s per
-      // 240-partition stream epoch at sf0.1 — the write was parallelism-
-      // starved, not data-bound). Pinning the session's shuffle-partition
-      // count keeps the one-file-per-value invariant (hash on the value
-      // still lands each value in exactly one task) while spreading the
-      // per-file open/flush cost across the cluster; the count stays
-      // scale-adaptive through spark.sql.shuffle.partitions.
-      if (clusterBy.isEmpty)
-        df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-          partCols.map(col): _*)
+      if (routed) df // the DML caller shuffled its routed rows itself
+      else if (clusterBy.isEmpty) stageShuffle(df, partCols)
       else {
         // range-clustered layout: a global range partitioning on
         // (partCols..., clusterBy...) makes each task a contiguous slice,
@@ -2331,18 +2373,38 @@ object TxLog {
     // and within-task order survive), so clusterBy keys resolve against
     // the caller's logical names
     toPhysical(shaped)
-      .write.mode("errorifexists").partitionBy(partCols: _*)
+      .write.mode("errorifexists")
+      .partitionBy((if (routed) RouteCol +: partCols else partCols): _*)
       .parquet(dir.toString)
     val fs = fsOf(spark, dir)
-    val parts = listStagedLeaves(fs, dir, rel, partCols)
-    require(parts.nonEmpty, "TxLog.stage: staged DataFrame is empty — " +
-      "an empty overwrite would be a silent no-op; drop partitions explicitly")
+    val (parts, changes) =
+      if (!routed) (listStagedLeaves(fs, dir, rel, partCols), Seq.empty[String])
+      else {
+        val routes = fs.listStatus(dir).filter(_.isDirectory)
+          .map(_.getPath.getName.stripPrefix(s"$RouteCol=")).toSeq
+        def leavesOf(r: String) = listStagedLeaves(fs,
+          new Path(dir, s"$RouteCol=$r"), s"$rel/$RouteCol=$r", partCols)
+        (if (routes.contains(DataRoute)) leavesOf(DataRoute)
+         else Map.empty[String, Seq[String]],
+          routes.filter(_ != DataRoute).flatMap(leavesOf(_).values.flatten))
+      }
+    // a DML rewrite may legitimately leave no rows (a delete of every
+    // candidate row); a plain stage of nothing is a caller error
+    require(routed || parts.nonEmpty, "TxLog.stage: staged DataFrame is " +
+      "empty — an empty overwrite would be a silent no-op; drop partitions " +
+      "explicitly")
+    if (parts.isEmpty) {
+      // nothing data-bearing to record: no schema, stats or constraint
+      // claim, exactly what a files-free rewrite commit carries
+      if (changes.isEmpty) fs.delete(dir, true)
+      return Staged(Map.empty, changes = changes)
+    }
     // top-level nullability is erased before recording: parquet round
     // trips make columns nullable and the union read widens it anyway —
     // only STRUCTURAL drift (names/types/order) poisons the table.
     // Recorded under PHYSICAL names (what the files carry).
     val dataSchema = org.apache.spark.sql.types.StructType(
-      df.schema.filterNot(f => partCols.contains(f.name))
+      df.schema.filterNot(f => partCols.contains(f.name) || f.name == RouteCol)
         .map(f => f.copy(name = reverse.getOrElse(f.name, f.name),
           nullable = true)))
     // footer min/max per staged file → data skipping at read time
@@ -2359,7 +2421,7 @@ object TxLog {
     val partField = org.apache.spark.sql.types.StructType(
       partCols.map(c => df.schema(c).copy(nullable = true))).toDDL
     Staged(parts, Some(dataSchema.toDDL), stats, rows, Some(partField),
-      checkedConstraints = checked)
+      changes = changes, checkedConstraints = checked)
   }
 
   /** Delete a staged-but-never-committed dir's files (loser cleanup) —
@@ -2372,34 +2434,82 @@ object TxLog {
         fsOf(spark, d).delete(d, true)
       }
 
-  /** Write row-level change images (the Delta CDF write-side): `df` must
-    * already carry `_change_type`; lands under a private cdf dir, is
-    * recorded on the commit's `c`-rows, and is NEVER part of the table's
-    * live file set — [[readChangeFeed]] reads it per window, [[vacuum]]
-    * retains it while its commit is retained (the same log-retention
-    * horizon as incremental consumption). */
-  /** Translate a change frame's LOGICAL column names to PHYSICAL before
-    * writing — change files share the data files' invariant (physical
-    * names, forever), which is what lets [[readChangeFeed]] re-map any
-    * historical window through one end-mapping projection. Partition
-    * columns and `_change_type` are never mapped and pass through. */
-  private def changesToPhysical(df: DataFrame,
-                                mapping: Map[String, String]): DataFrame =
-    if (mapping.isEmpty) df
-    else {
-      val reverse = mapping.collect { case (p, l) if l != "-" => l -> p }
-      df.select(df.columns.toSeq.map(c =>
-        col(c).as(reverse.getOrElse(c, c))): _*)
-    }
+  /** The route column of a DML write: every row of the one staged frame
+    * is a data row ([[DataRoute]]) or a change image (its `_change_type`),
+    * and the write partitions by the route ahead of the table's partition
+    * columns — Delta's `__is_cdc` partition. */
+  private val RouteCol = "__route"
+  private val DataRoute = "data"
 
-  private def writeChanges(df: DataFrame, root: String): Seq[String] = {
-    val spark = df.sparkSession
-    val rel = s"data/cdf-${java.util.UUID.randomUUID()}"
-    val dir = new Path(root, rel)
-    df.write.mode("errorifexists").parquet(dir.toString)
-    fsOf(spark, dir).listStatus(dir).filter(_.isFile)
-      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-      .map(f => s"$rel/$f").toSeq
+  /** The staging shuffle: hash on the partition columns into the
+    * session's shuffle-partition count. Repartition WITHOUT an explicit
+    * count is AQE-coalescible: a small staged batch collapses to 1-2
+    * reduce tasks, and that one task then writes EVERY partition's file
+    * serially (measured 1.2-1.5 s per 240-partition stream epoch at sf0.1
+    * — the write was parallelism-starved, not data-bound). Pinning the
+    * count keeps the one-file-per-value invariant (hash on the value
+    * still lands each value in exactly one task) while spreading the
+    * per-file open/flush cost across the cluster; the count stays
+    * scale-adaptive through spark.sql.shuffle.partitions. */
+  private def stageShuffle(df: DataFrame, partCols: Seq[String]): DataFrame =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+      partCols.map(col): _*)
+
+  /** Fan each row of `df` out to its routes: every `(when, route,
+    * values)` emits one output row — `values` aligned with `cols` —
+    * where `when` holds. */
+  private def fanOut(df: DataFrame, cols: Seq[String],
+                     outs: Seq[(Column, String, Seq[Column])]): DataFrame =
+    df.select(explode(array(outs.map { case (hit, route, vals) =>
+        when(hit, struct((lit(route).as(RouteCol) +:
+          vals.zip(cols).map { case (v, c) => v.as(c) }): _*))
+      }: _*)).as("__o"))
+      .filter(col("__o").isNotNull)
+      .select(col("__o.*"))
+
+  /** Stage a copy-on-write DML commit in ONE write: `routed` ([[fanOut]]
+    * rows, [[stageShuffle]]d before or after the fan-out, so each task
+    * writes one file per route and partition value) carries the rewritten
+    * rows and the row-level change images (the Delta CDF write-side), and
+    * lands under one `data/txn-<uuid>` dir partitioned by [[RouteCol]]
+    * ahead of the table's partition columns. Change files share the data
+    * files' invariants — PHYSICAL column names forever (what lets
+    * [[readChangeFeed]] re-map any historical window through one
+    * end-mapping projection), partition values in the path — are
+    * recorded on the commit's `c`-rows, and are NEVER part of the table's
+    * live file set: [[readChangeFeed]] reads them per window, [[vacuum]]
+    * retains them while their commit is retained (the same log-retention
+    * horizon as incremental consumption). `checkData = false` stages
+    * change images only (no rows to validate against CHECK
+    * constraints). `changeFeed` marks the commit as change-recorded even
+    * when no row changed. */
+  private def stageRouted(routed: DataFrame, root: String,
+                          partCols: Seq[String], changeFeed: Boolean,
+                          checkData: Boolean = true): Staged = {
+    val (mapping0, constraints0) = writerMetaOf(routed.sparkSession, root)
+    val cons = if (checkData) constraints0 else Map.empty[String, String]
+    stageWith(routed, root, partCols, Nil, 0, mapping0, cons,
+      checked = if (checkData) Some(cons) else None, routed = true)
+      .copy(changeFeed = changeFeed)
+  }
+
+  /** Whether a change file is a legacy unpartitioned `data/cdf-<uuid>`
+    * one: partition columns and `_change_type` are plain file columns.
+    * Routed change files carry both in their path instead. */
+  private def isLegacyChange(rel: String): Boolean =
+    rel.startsWith("data/cdf-")
+
+  /** A routed change file's (change type, table partition key), read off
+    * its `data/txn-<uuid>/__route=<type>/<c1>=<v1>/.../<file>` path —
+    * the [[listStagedLeaves]] key contract. */
+  private def routedChangeOf(rel: String, nPart: Int): (String, String) = {
+    val segs = rel.split("/")
+    require(segs.length == nPart + 4 && segs(2).startsWith(s"$RouteCol="),
+      s"TxLog: change file $rel is not under a $RouteCol=<type> dir with " +
+        s"$nPart partition level(s)")
+    val vals = segs.slice(3, 3 + nPart).map(_.split("=", 2)(1)).toSeq
+    (unesc(segs(2).stripPrefix(s"$RouteCol=")),
+      if (nPart == 1) unesc(vals.head) else vals.mkString("/"))
   }
 
   // ---- commits ----------------------------------------------------------
@@ -2713,7 +2823,7 @@ object TxLog {
             recordSchema, staged.stats, staged.rows, staged.partSchema,
             staged.removed, staged.changes, writerSeq, staged.mapping,
             staged.dvs, staged.constraints, staged.payloadChk,
-            staged.sealsBatches, staged.props))) {
+            staged.sealsBatches, staged.props, staged.changeFeed))) {
         // AUTO-CHECKPOINT CADENCE: long commit chains between manual
         // checkpoints inflate every readLog re-list and fold — fold one
         // in from commit() every N versions (the Delta default cadence).
@@ -3971,24 +4081,18 @@ object TxLog {
           case Left(snap) => snap.dvs.filter { case (f, _) => candFiles(f) }
           case Right(big) => bigDvsFor(spark, root, big, candFiles)
         })
-      val keep = not(coalesce(cond, lit(false))) // NULL predicate keeps
+      val hit = coalesce(cond, lit(false)) // NULL predicate keeps the row
       val candRead = readSnapshot(spark, root, candSnap, ps)
-      val remaining = candRead.filter(keep)
+      val vals = candRead.columns.toSeq.map(col)
       // write-side CDC (opt-in): the deleted rows ARE known here — record
       // them so readChangeFeed can serve this window to row-level
       // incremental consumers (a rewrite is otherwise inexpressible as
-      // appended rows)
-      val cdf =
-        if (!changeFeed) Seq.empty[String]
-        else writeChanges(changesToPhysical(
-          candRead.filter(coalesce(cond, lit(false)))
-            .withColumn("_change_type", lit("delete")),
-          state.fold(_.mapping, _.mapping)), root)
-      val staged =
-        if (remaining.isEmpty) Staged(Map.empty, removed = cands,
-          changes = cdf)
-        else stage(remaining, root, ps.map(_.name), Nil, 0)
-          .copy(removed = cands, changes = cdf)
+      // appended rows); they leave in the same write as the survivors
+      val staged = stageRouted(
+        fanOut(stageShuffle(candRead, ps.map(_.name)), candRead.columns.toSeq,
+          Seq((not(hit), DataRoute, vals)) ++
+            (if (changeFeed) Seq((hit, "delete", vals)) else Nil)),
+        root, ps.map(_.name), changeFeed).copy(removed = cands)
       try return (commit(spark, root, staged, "rewrite",
         readVersion = version, conflictCheck = true),
         cands.valuesIterator.map(_.size).sum)
@@ -4049,26 +4153,19 @@ object TxLog {
           s"updateWhereTx: SET targets unknown column [$k]")
       }
       val hit = coalesce(cond, lit(false)) // NULL predicate = unchanged
-      val updated = candRead.select(candRead.columns.toSeq.map { c =>
-        sets.get(c) match {
-          case Some(v) => when(hit, v).otherwise(col(c)).as(c)
-          case None => col(c)
-        }
-      }: _*)
-      val cdf =
-        if (!changeFeed) Seq.empty[String]
-        else {
-          val pre = candRead.filter(hit)
-            .withColumn("_change_type", lit("update_preimage"))
-          val post = candRead.filter(hit)
-            .select(candRead.columns.toSeq.map(c =>
-              sets.get(c).map(v => v.as(c)).getOrElse(col(c))): _*)
-            .withColumn("_change_type", lit("update_postimage"))
-          writeChanges(changesToPhysical(pre.unionByName(post),
-            state.fold(_.mapping, _.mapping)), root)
-        }
-      val staged = stage(updated, root, ps.map(_.name), Nil, 0)
-        .copy(removed = cands, changes = cdf)
+      val cols = candRead.columns.toSeq
+      val pre = cols.map(col)
+      val post = cols.map { c =>
+        sets.get(c).map(v => when(hit, v).otherwise(col(c))).getOrElse(col(c))
+      }
+      // write-side CDC (opt-in): update pre/post images of the hit rows,
+      // in the same write as the rewritten files
+      val staged = stageRouted(
+        fanOut(stageShuffle(candRead, ps.map(_.name)), cols,
+          Seq((lit(true), DataRoute, post)) ++
+            (if (changeFeed) Seq((hit, "update_preimage", pre),
+               (hit, "update_postimage", post)) else Nil)),
+        root, ps.map(_.name), changeFeed).copy(removed = cands)
       try return (commit(spark, root, staged, "rewrite",
         readVersion = version, conflictCheck = true),
         cands.valuesIterator.map(_.size).sum)
@@ -4183,17 +4280,20 @@ object TxLog {
         counts.map { case (f, n) => f -> (dvFiles, n) }
       val cdf =
         if (!changeFeed) Seq.empty[String]
-        else writeChanges(changesToPhysical(
-          matches.drop("__dv_f", "__dv_p")
-            .withColumn("_change_type", lit("delete")),
-          state.fold(_.mapping, _.mapping)), root)
+        else {
+          val images = matches.drop("__dv_f", "__dv_p")
+          val cols = images.columns.toSeq
+          stageRouted(fanOut(stageShuffle(images, ps.map(_.name)), cols,
+              Seq((lit(true), "delete", cols.map(col)))),
+            root, ps.map(_.name), changeFeed, checkData = false).changes
+        }
       // the affected partitions (empty file sets) are the conflict unit:
       // a concurrent rewrite of a candidate file must force re-derivation
       val staged = Staged(
         counts.keySet.flatMap(f => cands.collectFirst {
           case (v, fs) if fs.contains(f) => v
         }).map(_ -> Seq.empty[String]).toMap,
-        changes = cdf, dvs = dvEntry)
+        changes = cdf, dvs = dvEntry, changeFeed = changeFeed)
       try return (commit(spark, root, staged, "dv",
         readVersion = version, conflictCheck = true), added)
       catch { case _: ConcurrentWriteException =>
@@ -4204,27 +4304,11 @@ object TxLog {
       s"conflicts at $root — pathological contention, back off at the caller")
   }
 
-  /** Transactional keyed MERGE (upsert) — the Delta `MERGE ... WHEN
-    * MATCHED UPDATE * WHEN NOT MATCHED INSERT *` shape, file-granular:
-    * rows of `source` REPLACE target rows sharing their `key`, new keys
-    * append. Data skipping finds the affected files (per source
-    * partition, the live files whose recorded key range overlaps the
-    * source's key bounds — everything else is untouched); those files'
-    * unmatched rows plus ALL source rows restage, and one
-    * conflict-checked "rewrite" commit swaps them in, serialized with
-    * every concurrent writer. CONTRACT: `source` carries the table's
-    * schema (partition column included), a key's partition value is
-    * STABLE (a "moved" key would dodge the candidate search and
-    * duplicate), and source keys are unique. Reference anchor: the
-    * upsert the reference replays row-by-row (`test_db.py:53-65`), here
-    * one metadata round + O(affected files) I/O. Returns the committed
-    * version. */
   /** Candidate files of a keyed merge plus their DV-filtered read: per
     * source partition, the live files whose recorded `key` range
     * overlaps the source's key bounds (per-file stats skipping on the
     * driver state, ONE distributed payload job on a parquet-checkpointed
-    * table). The shared front half of [[mergeKeyedTx]] and
-    * [[mergeClausesTx]]. */
+    * table). The front half of [[mergeTx]]. */
   private def mergeCandidateRead(spark: SparkSession, root: String,
                                  state: Either[Snapshot, BigState],
                                  source: DataFrame, key: String,
@@ -4309,68 +4393,32 @@ object TxLog {
     (cands, candRead)
   }
 
+  /** Transactional keyed MERGE (upsert) — the Delta `MERGE ... WHEN
+    * MATCHED UPDATE * WHEN NOT MATCHED INSERT *` shape, file-granular:
+    * rows of `source` REPLACE target rows sharing their `key`, new keys
+    * append. Data skipping finds the affected files (per source
+    * partition, the live files whose recorded key range overlaps the
+    * source's key bounds — everything else is untouched); those files'
+    * unmatched rows plus ALL source rows restage, and one
+    * conflict-checked "rewrite" commit swaps them in, serialized with
+    * every concurrent writer. CONTRACT: `source` carries the table's
+    * schema (partition column included), a key's partition value is
+    * STABLE (a "moved" key would dodge the candidate search and
+    * duplicate), and source keys are unique. Reference anchor: the
+    * upsert the reference replays row-by-row (`test_db.py:53-65`), here
+    * one metadata round + O(affected files) I/O. It is the `updateAll` +
+    * `insertAll` case of [[mergeClausesTx]], with two differences kept
+    * from its own history: outside the unique-key contract a key's
+    * source rows replace ALL its target rows (no per-pair product), and
+    * an empty source refuses. Returns the committed version. */
   def mergeKeyedTx(spark: SparkSession, root: String, source: DataFrame,
                    key: String, maxAttempts: Int = 20,
                    changeFeed: Boolean = false,
                    writerSeq: Option[(String, Long)] = None,
-                   autoEvolve: Boolean = false): Long = {
-    if (autoEvolve) mergeEvolve(spark, root, source)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val state = stateOf(spark, root)
-      val version = state.fold(_.version, _.version)
-      require(stateNonEmpty(spark, root, state),
-        s"TxLog.mergeKeyedTx: table at $root is empty — append the seed " +
-          "batch instead")
-      val ps = state.fold(_.partSchema, _.partSchema)
-        .map(org.apache.spark.sql.types.StructType.fromDDL)
-        .getOrElse(sys.error(s"TxLog.mergeKeyedTx: the log at $root " +
-          "predates partition-column recording"))
-      val (cands, candRead) =
-        mergeCandidateRead(spark, root, state, source, key, ps)
-      val tableCols = source.columns.map(col).toSeq
-      val unmatched = candRead.map(
-        _.join(source.select(col(key)), Seq(key), "left_anti")
-          .select(tableCols: _*))
-      val upserted = unmatched
-        .map(_.unionByName(source.select(tableCols: _*)))
-        .getOrElse(source.select(tableCols: _*))
-      // write-side CDC (opt-in): matched old rows are update_preimage,
-      // their source counterparts update_postimage, brand-new keys insert
-      val cdf =
-        if (!changeFeed) Seq.empty[String]
-        else {
-          val pre = candRead
-            .map(_.join(source.select(col(key)), Seq(key), "left_semi")
-              .select(tableCols: _*))
-          val matchedKeys = pre.map(_.select(col(key)))
-          val post = matchedKeys.map(mk =>
-            source.select(tableCols: _*).join(mk, Seq(key), "left_semi"))
-          val ins = matchedKeys
-            .map(mk =>
-              source.select(tableCols: _*).join(mk, Seq(key), "left_anti"))
-            .getOrElse(source.select(tableCols: _*))
-          val tagged = Seq(
-            pre.map(_.withColumn("_change_type", lit("update_preimage"))),
-            post.map(_.withColumn("_change_type", lit("update_postimage"))),
-            Some(ins.withColumn("_change_type", lit("insert"))))
-            .flatten.reduce(_ unionByName _)
-          writeChanges(changesToPhysical(tagged,
-            state.fold(_.mapping, _.mapping)), root)
-        }
-      val staged = stage(upserted, root, ps.map(_.name), Nil, 0)
-        .copy(removed = cands, changes = cdf)
-      try return commit(spark, root, staged, "rewrite",
-        readVersion = version, conflictCheck = true,
-        writerSeq = writerSeq)
-      catch { case _: ConcurrentWriteException =>
-        discard(spark, root, staged)
-      }
-    }
-    sys.error(s"TxLog.mergeKeyedTx: $maxAttempts consecutive conflicts " +
-      s"at $root — pathological contention, back off at the caller")
-  }
+                   autoEvolve: Boolean = false): Long =
+    mergeTx(spark, root, source, key, Seq(MergeClause.updateAll()),
+      Seq(MergeClause.insertAll()), maxAttempts, changeFeed, writerSeq,
+      autoEvolve, who = "mergeKeyedTx", upsert = true)
 
   /** Opt-in MERGE schema evolution (the Delta `autoMerge` shape): any
     * source column the table does not carry is declared FIRST as an
@@ -4432,145 +4480,188 @@ object TxLog {
                        Seq(MergeClause.insertAll()),
                      maxAttempts: Int = 20, changeFeed: Boolean = false,
                      writerSeq: Option[(String, Long)] = None,
-                     autoEvolve: Boolean = false): Long = {
+                     autoEvolve: Boolean = false): Long =
+    mergeTx(spark, root, source, key, whenMatched, whenNotMatched,
+      maxAttempts, changeFeed, writerSeq, autoEvolve,
+      who = "mergeClausesTx", upsert = false)
+
+  /** The one MERGE body behind [[mergeKeyedTx]] and [[mergeClausesTx]]:
+    * candidate search, one routed write, the conflict-checked commit
+    * loop. `upsert` keeps [[mergeKeyedTx]]'s two rules: a key's source
+    * rows replace all its target rows (see [[mergeRouted]]), and an empty
+    * source is a caller error where [[mergeClausesTx]] returns the
+    * current version without a commit. */
+  private def mergeTx(spark: SparkSession, root: String, source: DataFrame,
+                      key: String, whenMatched: Seq[MergeClause],
+                      whenNotMatched: Seq[MergeClause], maxAttempts: Int,
+                      changeFeed: Boolean,
+                      writerSeq: Option[(String, Long)], autoEvolve: Boolean,
+                      who: String, upsert: Boolean): Long = {
     if (autoEvolve) mergeEvolve(spark, root, source)
     require(whenMatched.forall(c => c.kind == "update" ||
         c.kind == "updateAll" || c.kind == "delete"),
-      "mergeClausesTx: whenMatched clauses are update/updateAll/delete")
+      s"$who: whenMatched clauses are update/updateAll/delete")
     require(whenNotMatched.forall(_.kind == "insertAll"),
-      "mergeClausesTx: whenNotMatched clauses are insertAll")
+      s"$who: whenNotMatched clauses are insertAll")
     require(whenMatched.nonEmpty || whenNotMatched.nonEmpty,
-      "mergeClausesTx: at least one clause")
+      s"$who: at least one clause")
     // only the FINAL clause of a branch may omit its condition (else the
     // later clauses are dead — the Delta rule, enforced loudly)
     require(whenMatched.dropRight(1).forall(_.condition.nonEmpty),
-      "mergeClausesTx: only the final whenMatched clause may omit its " +
-        "condition")
+      s"$who: only the final whenMatched clause may omit its condition")
     require(whenNotMatched.dropRight(1).forall(_.condition.nonEmpty),
-      "mergeClausesTx: only the final whenNotMatched clause may omit " +
-        "its condition")
+      s"$who: only the final whenNotMatched clause may omit its condition")
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
       val state = stateOf(spark, root)
       val version = state.fold(_.version, _.version)
       require(stateNonEmpty(spark, root, state),
-        s"TxLog.mergeClausesTx: table at $root is empty — append the " +
-          "seed batch instead")
+        s"TxLog.$who: table at $root is empty — append the seed batch " +
+          "instead")
       val ps = state.fold(_.partSchema, _.partSchema)
         .map(org.apache.spark.sql.types.StructType.fromDDL)
-        .getOrElse(sys.error(s"TxLog.mergeClausesTx: the log at $root " +
-          "predates partition-column recording"))
-      val partNames = ps.map(_.name).toSet
+        .getOrElse(sys.error(s"TxLog.$who: the log at $root predates " +
+          "partition-column recording"))
+      val partNames = ps.map(_.name)
       whenMatched.foreach(_.sets.keys.foreach { k =>
-        require(!partNames(k), s"mergeClausesTx: SET touches partition " +
+        require(!partNames.contains(k), s"$who: SET touches partition " +
           s"column [$k] — partitions are structural, a MERGE cannot " +
           "move rows across them")
         require(source.columns.contains(k),
-          s"mergeClausesTx: SET targets unknown column [$k]")
+          s"$who: SET targets unknown column [$k]")
       })
-      val (cands, candReadOpt) =
+      val (cands, candRead) =
         mergeCandidateRead(spark, root, state, source, key, ps)
-      val tableCols = source.columns.toSeq
-      // matched-branch evaluation: __mc = index of the first passing
-      // clause, -1 = matched by no clause (or not matched) — pass through
-      val withIdx = candReadOpt.map { t =>
-        val joined = t.alias("t")
-          .join(source.alias("s"), col(s"t.`$key`") === col(s"s.`$key`"),
-            "left")
-        val matched = col(s"s.`$key`").isNotNull
-        val idx = whenMatched.zipWithIndex
-          .foldLeft(when(lit(false), -1)) { case (acc, (c, i)) =>
-            acc.when(matched &&
-              c.condition.map(expr).getOrElse(lit(true)), i)
-          }.otherwise(-1)
-        joined.withColumn("__mc", idx)
+      // no candidate and no insert clause: nothing can change
+      if (whenNotMatched.isEmpty && cands.isEmpty) return version
+      val staged = stageRouted(
+        mergeRouted(spark, source, candRead, key, partNames, whenMatched,
+          whenNotMatched, changeFeed, upsert),
+        root, partNames, changeFeed).copy(removed = cands)
+      if (staged.parts.isEmpty && cands.isEmpty) {
+        // nothing matched and every insert filtered (so no change image
+        // either, and the empty staging dir is already gone)
+        require(!upsert, "TxLog.stage: staged DataFrame is empty — " +
+          "an empty overwrite would be a silent no-op; drop partitions " +
+          "explicitly")
+        return version
       }
-      val deleteIdx = whenMatched.zipWithIndex
-        .collect { case (c, i) if c.kind == "delete" => i }
-      val updateIdx = whenMatched.zipWithIndex
-        .collect { case (c, i) if c.kind != "delete" => i }
-      def valueOf(c: String): Column = {
-        var e: Column = null
-        whenMatched.zipWithIndex.foreach { case (cl, i) =>
-          val v = cl.kind match {
-            case "updateAll" => col(s"s.`$c`")
-            case "update" => cl.sets.get(c).map(expr)
-              .getOrElse(col(s"t.`$c`"))
-            case "delete" => col(s"t.`$c`") // rows filtered; value unused
-          }
-          e = if (e == null) when(col("__mc") === i, v)
-              else e.when(col("__mc") === i, v)
-        }
-        (if (e == null) col(s"t.`$c`") else e.otherwise(col(s"t.`$c`")))
-          .as(c)
-      }
-      val survivors = withIdx.map { j =>
-        val kept = if (deleteIdx.isEmpty) j
-                   else j.filter(!col("__mc").isin(deleteIdx: _*))
-        kept.select(tableCols.map(valueOf): _*)
-      }
-      // non-matched source rows: the first insert clause whose condition
-      // passes inserts (conditions see the row under the `s` alias)
-      val notMatched = candReadOpt match {
-        case Some(t) => source.join(t.select(col(key)), Seq(key), "left_anti")
-        case None => source
-      }
-      val inserts = whenNotMatched.headOption.map { _ =>
-        val s0 = notMatched.alias("s")
-        val pass = whenNotMatched
-          .map(_.condition.map(expr).getOrElse(lit(true)))
-          .reduce(_ || _)
-        s0.filter(pass).select(tableCols.map(c => col(s"s.`$c`")): _*)
-      }
-      val output = (survivors.toSeq ++ inserts.toSeq)
-        .reduceOption(_ unionByName _)
-      if (output.isEmpty && cands.isEmpty) return version // pure no-op
-      val cdf =
-        if (!changeFeed) Seq.empty[String]
-        else {
-          val tCols = tableCols.map(c => col(s"t.`$c`"))
-          val pre = withIdx.toSeq.flatMap { j => Seq(
-            j.filter(col("__mc").isin(updateIdx: _*))
-              .select(tCols: _*)
-              .withColumn("_change_type", lit("update_preimage")),
-            j.filter(col("__mc").isin(updateIdx: _*))
-              .select(tableCols.map(valueOf): _*)
-              .withColumn("_change_type", lit("update_postimage"))) ++
-            (if (deleteIdx.isEmpty) Seq.empty else Seq(
-              j.filter(col("__mc").isin(deleteIdx: _*))
-                .select(tCols: _*)
-                .withColumn("_change_type", lit("delete"))))
-          }
-          val ins = inserts.toSeq
-            .map(_.withColumn("_change_type", lit("insert")))
-          (pre ++ ins).reduceOption(_ unionByName _) match {
-            case Some(tagged) => writeChanges(changesToPhysical(tagged,
-              state.fold(_.mapping, _.mapping)), root)
-            case None => Seq.empty[String]
-          }
-        }
-      val out = output.get
-      val staged =
-        if (out.isEmpty) {
-          if (cands.isEmpty) {
-            // nothing matched, every insert filtered: a pure no-op — the
-            // already-written change files must not orphan
-            if (cdf.nonEmpty)
-              discard(spark, root, Staged(Map.empty, changes = cdf))
-            return version
-          }
-          Staged(Map.empty, removed = cands, changes = cdf)
-        } else stage(out, root, ps.map(_.name), Nil, 0)
-          .copy(removed = cands, changes = cdf)
       try return commit(spark, root, staged, "rewrite",
         readVersion = version, conflictCheck = true, writerSeq = writerSeq)
       catch { case _: ConcurrentWriteException =>
         discard(spark, root, staged)
       }
     }
-    sys.error(s"TxLog.mergeClausesTx: $maxAttempts consecutive " +
-      s"conflicts at $root — pathological contention, back off at the caller")
+    sys.error(s"TxLog.$who: $maxAttempts consecutive conflicts at $root " +
+      "— pathological contention, back off at the caller")
+  }
+
+  /** A MERGE's rewritten rows and change images as one routed frame
+    * ([[stageRouted]]), from ONE pass over the candidate read and the
+    * source: target and source rows are unioned, hashed on the key, and
+    * a window over the key classifies every row — no join, and no scan
+    * of either side twice. Keys match on the key alone, whatever the
+    * partition (SQL equality: a NULL key matches nothing), and the routed
+    * rows then take the staging shuffle on the partition columns.
+    *
+    * `upsert` is [[mergeKeyedTx]]'s rule: a key's source rows replace all
+    * its target rows. Otherwise each target row pairs with each source
+    * row of its key, as the `ON t.key = s.key` join does, and the clauses
+    * decide; conditions and SET expressions see the pair as the structs
+    * `t` and `s`. The two rules agree while keys are unique. */
+  private def mergeRouted(spark: SparkSession, source: DataFrame,
+                          candRead: Option[DataFrame], key: String,
+                          partCols: Seq[String],
+                          whenMatched: Seq[MergeClause],
+                          whenNotMatched: Seq[MergeClause],
+                          changeFeed: Boolean, upsert: Boolean): DataFrame = {
+    val cols = source.columns.toSeq
+    val side = col("__tgt")
+    val rows = (candRead.toSeq.map(_.select(cols.map(col) :+
+        lit(true).as("__tgt"): _*)) :+
+      source.select(cols.map(col) :+ lit(false).as("__tgt"): _*))
+      .reduce(_ unionByName _)
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col(key))
+    val row = struct(cols.map(col): _*)
+    val keyed = col(key).isNotNull
+    val grouped = rows
+      .repartition(spark.sessionState.conf.numShufflePartitions, col(key))
+      .select((Seq(when(side, row).as("t"), when(!side, row).as("s"), side,
+        (keyed && max(side.cast("int")).over(w) === 1).as("__hasT"),
+        (keyed && min(side.cast("int")).over(w) === 0).as("__hasS")) ++
+        (if (upsert) Nil
+         else Seq(when(side && keyed, collect_list(when(!side, row)).over(w))
+           .as("__partners")))): _*)
+    def tc(c: String) = col(s"t.`$c`")
+    def sc(c: String) = col(s"s.`$c`")
+    val (tVals, sVals) = (cols.map(tc), cols.map(sc))
+    val routed =
+      if (upsert) {
+        val (hasT, hasS) = (col("__hasT"), col("__hasS"))
+        fanOut(grouped, cols,
+          Seq((side && !hasS, DataRoute, tVals), (!side, DataRoute, sVals)) ++
+            (if (!changeFeed) Nil
+             else Seq((side && hasS, "update_preimage", tVals),
+               (!side && hasT, "update_postimage", sVals),
+               (!side && !hasT, "insert", sVals))))
+      } else {
+        // one row per (target row, source partner), (target row, NULL)
+        // when unmatched, and (NULL, source row) for an unmatched source
+        // row — a matched one is carried by its target rows
+        val paired = grouped.filter(side || !col("__hasT"))
+          .select(col("t"), side, explode_outer(
+            when(side, col("__partners")).otherwise(array(col("s"))))
+            .as("s"))
+        // matched-branch evaluation: __mc = index of the first passing
+        // clause, -1 = matched by no clause (or not matched) — pass through
+        val matched = side && col("s").isNotNull
+        val g = paired.withColumn("__mc", whenMatched.zipWithIndex
+          .foldLeft(when(lit(false), -1)) { case (acc, (c, i)) =>
+            acc.when(matched && c.condition.map(expr).getOrElse(lit(true)), i)
+          }.otherwise(-1))
+        def valueOf(c: String): Column =
+          whenMatched.zipWithIndex.foldLeft(when(lit(false), tc(c))) {
+            case (acc, (cl, i)) => acc.when(col("__mc") === i, cl.kind match {
+              case "updateAll" => sc(c)
+              case "update" => cl.sets.get(c).map(expr).getOrElse(tc(c))
+              case "delete" => tc(c) // rows filtered; value unused
+            })
+          }.otherwise(tc(c))
+        val upd = side && col("__mc").isin(whenMatched.zipWithIndex
+          .collect { case (c, i) if c.kind != "delete" => i }: _*)
+        val del = side && col("__mc").isin(whenMatched.zipWithIndex
+          .collect { case (c, i) if c.kind == "delete" => i }: _*)
+        // non-matched source rows: the first insert clause whose condition
+        // passes inserts; a bare column in an insert condition names the
+        // source row's column
+        val ins = !side && whenNotMatched
+          .map(_.condition.map(sourceScoped(spark, _, cols))
+            .getOrElse(lit(true)))
+          .reduceOption(_ || _).getOrElse(lit(false))
+        val post = cols.map(valueOf)
+        fanOut(g, cols,
+          Seq((side && !del, DataRoute, post), (ins, DataRoute, sVals)) ++
+            (if (!changeFeed) Nil
+             else Seq((upd, "update_preimage", tVals),
+               (upd, "update_postimage", post), (del, "delete", tVals),
+               (ins, "insert", sVals))))
+      }
+    stageShuffle(routed, partCols)
+  }
+
+  /** A merge condition with every bare reference to a source column
+    * qualified as `s.<column>`. */
+  private def sourceScoped(spark: SparkSession, cond: String,
+                           cols: Seq[String]): Column = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    val resolver = spark.sessionState.conf.resolver
+    org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      spark.sessionState.sqlParser.parseExpression(cond).transform {
+        case a: UnresolvedAttribute if a.nameParts.length == 1 &&
+            cols.exists(resolver(_, a.nameParts.head)) =>
+          UnresolvedAttribute("s" +: a.nameParts)
+      })
   }
 
   /** Audit surface — the Delta DESCRIBE HISTORY move: every commit still
