@@ -827,7 +827,7 @@ object CurationQueries {
     // minority residuals by the integer class ratio (pw = neg div pos,
     // derived from the data, so the fix needs no per-SF tuning) under a
     // harmonic lr decay (eta_k = eta_1/k — fixed-step weighted GD
-    // oscillates between the two collapses; the TrainSweep experiment
+    // oscillates between the two collapses; the sweep that chose this
     // is recorded in PLANS_r12.md), and 40 rounds separate the split at
     // both shipped SFs. The oracle replays the weighted decayed unroll
     // exactly (pw CTE + weighted residuals + weighted step mass + per-

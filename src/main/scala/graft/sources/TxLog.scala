@@ -69,7 +69,8 @@ object LogStore {
   *     retry the publish at the next version), an OVERLAPPING one under
   *     `conflictCheck` raises [[ConcurrentWriteException]] so the caller
   *     re-derives its data from the NEW snapshot and re-stages — the
-  *     detect-and-retry loop [[readModifyWrite]] packages.
+  *     detect-and-retry loop [[retryOnConflict]] runs for every
+  *     conflict-checked front door.
   *
   * The result is serializable partition overwrite: the final table always
   * equals the commits applied in version order, and a read-modify-write
@@ -417,10 +418,6 @@ object TxLog {
   }
 
   private def readLogEntryOnce(spark: SparkSession, root: String): LogEntry = {
-    // kill switch (A/B measurement, paranoid operators):
-    // spark.conf graft.txlog.logCache=false parses every file every read
-    val useCache =
-      spark.conf.getOption("graft.txlog.logCache").forall(_.toBoolean)
     val dir = logDir(root)
     val fs = fsOf(spark, dir)
     if (!fs.exists(dir)) { logCache.remove(root); return emptyLogEntry }
@@ -440,7 +437,7 @@ object TxLog {
         "TxLog.checkpoint + expireLog")
     val sig = (chkEntry.map(_._2).toSeq ++ files.map(_._2))
       .map(n => n -> statOf(n)).toMap
-    val prev = if (useCache) Option(logCache.get(root)) else None
+    val prev = Option(logCache.get(root))
     prev.filter(_.sig == sig).getOrElse {
       def fresh(n: String): Boolean =
         prev.exists(p => p.sig.get(n) == sig.get(n))
@@ -461,7 +458,7 @@ object TxLog {
       }.toVector
       if (logCache.size > LogCacheMaxRoots) logCache.clear()
       val entry = new LogEntry(sig, chkEntry.map(_._2), chk, commits)
-      if (useCache) logCache.put(root, entry)
+      logCache.put(root, entry)
       entry
     }
   }
@@ -1178,6 +1175,10 @@ object TxLog {
     if (withPos) out else out.drop("__dv_f", "__dv_p")
   }
 
+  /** A deletion-vector sidecar's fixed layout, read without inference. */
+  private val DvSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("file STRING, pos BIGINT")
+
   /** Tag each scanned row with its (rel data file, row position) and
     * anti-join the live deletion vectors — the merge-on-read filter.
     * Over-inclusion of SUPERSEDED sidecars is safe by construction:
@@ -1192,7 +1193,8 @@ object TxLog {
         .withColumn("__dv_p", col("_metadata.row_index"))
     if (dvFiles.isEmpty) tagged
     else {
-      val dv = spark.read.parquet(dvFiles.map(f => s"$root/$f"): _*)
+      val dv = spark.read.schema(DvSchema)
+        .parquet(dvFiles.map(f => s"$root/$f"): _*)
         .select(col("file").as("__dv_f"), col("pos").as("__dv_p"))
       tagged.join(dv, Seq("__dv_f", "__dv_p"), "left_anti")
     }
@@ -1201,12 +1203,8 @@ object TxLog {
   /** Live sidecar cap on a parquet-checkpointed table: the read-side
     * anti-join unions every live vector file, a bounded driver artifact
     * by the same contract as [[DataSkipping]] — a table accumulating
-    * more must compact (materialize) on its maintenance schedule.
-    * Override with `graft.txlog.maxDvFiles`. */
+    * more must compact (materialize) on its maintenance schedule. */
   val DefaultMaxDvFiles = 65536
-  private def maxDvFiles(spark: SparkSession): Int =
-    spark.conf.getOption("graft.txlog.maxDvFiles").map(_.toInt)
-      .getOrElse(DefaultMaxDvFiles)
 
   /** Every live deletion-vector sidecar of a parquet-checkpointed table:
     * the payload's recorded vectors plus post-checkpoint overrides
@@ -1219,18 +1217,17 @@ object TxLog {
     // job entirely — the common case costs nothing
     if (big.ndvs == 0L && big.dvDelta.isEmpty) return Seq.empty
     val payload = payloadLiveDF(spark, root, big)
-    val cap = maxDvFiles(spark)
     val fromPayload: Seq[String] =
       if (!payload.columns.contains("dvfiles")) Seq.empty // legacy payload
       else if (big.ndvs == 0L) Seq.empty
       else payload.filter(col("dvfiles").isNotNull)
         .select(explode(col("dvfiles")).as("dv")).distinct()
-        .limit(cap + 1).collect().map(_.getString(0)).toSeq
+        .limit(DefaultMaxDvFiles + 1).collect().map(_.getString(0)).toSeq
     val all = (fromPayload ++ big.dvDelta.values.flatMap(_._1)).distinct
-    require(all.size <= cap,
-      s"TxLog: the table at $root has more than $cap live deletion-" +
-        "vector sidecars — compact (materialize) the dv'd partitions, " +
-        "or raise graft.txlog.maxDvFiles")
+    require(all.size <= DefaultMaxDvFiles,
+      s"TxLog: the table at $root has more than $DefaultMaxDvFiles live " +
+        "deletion-vector sidecars — compact (materialize) the dv'd " +
+        "partitions")
     all
   }
 
@@ -1252,6 +1249,23 @@ object TxLog {
         .map(r => r.getString(0) ->
           (r.getSeq[String](1).toSeq, r.getLong(2))).toMap
     fromDelta ++ fromPayload
+  }
+
+  /** `state` narrowed to the bounded file set `files`, carrying their live
+    * deletion vectors — the candidate read of a file-granular rewrite
+    * (vectors apply to the read and die with the replaced files). */
+  private def filesSnapshot(spark: SparkSession, root: String,
+                            state: Either[Snapshot, BigState],
+                            files: Map[String, Seq[String]]): Snapshot = {
+    val fileSet = files.valuesIterator.flatten.toSet
+    Snapshot(state.fold(_.version, _.version), files,
+      state.fold(_.schema, _.schema), Map.empty, Map.empty,
+      state.fold(_.partSchema, _.partSchema),
+      mapping = state.fold(_.mapping, _.mapping),
+      dvs = state match {
+        case Left(snap) => snap.dvs.filter { case (f, _) => fileSet(f) }
+        case Right(big) => bigDvsFor(spark, root, big, fileSet)
+      })
   }
 
   /** COLUMN MAPPING at read time (the Delta column-mapping shape): the
@@ -1506,85 +1520,27 @@ object TxLog {
                        skipNonAppend: Boolean = false,
                        untilVersion: Option[Long] = None)
       : (Option[DataFrame], Long) = {
-    val (chk, commitsAfter) = readLog(spark, root)
-    val floor = chk.map(_.version).getOrElse(0L)
-    // below the floor but before expiry the window still serves: a
-    // checkpoint (auto or manual) deletes nothing — only expireLog does
-    val commits0 =
-      if (sinceVersion >= floor || sinceVersion == 0L && floor == 0L)
-        commitsAfter
-      else commitsRange(spark, root, sinceVersion, floor)
-        .map(_ ++ commitsAfter).getOrElse(
-          sys.error(s"TxLog.readChangesSince: version $sinceVersion " +
-            s"predates the latest checkpoint ($floor) and its delta " +
-            "commits are expired; re-baseline from a full snapshot read"))
-    // `untilVersion` caps the window for DETERMINISTIC REPLAY: a consumer
-    // that crashed after delivering (since, vOld] must re-read the
-    // byte-identical window under the identical tag even when NEW commits
-    // landed in between — liveness too is evaluated AS OF the cap, so a
-    // post-cap overwrite can neither shrink nor leak into the replay.
-    val commits = untilVersion match {
-      case Some(u) =>
-        require(u >= sinceVersion, s"TxLog.readChangesSince: cap $u " +
-          s"precedes sinceVersion $sinceVersion")
-        val capped = commits0.filter(_.version <= u)
-        require(capped.lastOption.map(_.version).getOrElse(floor) == u,
-          s"TxLog.readChangesSince: cap version $u was never committed " +
-            s"at $root")
-        capped
-      case None => commits0
-    }
-    val currentVersion = commits.lastOption.map(_.version)
-      .orElse(chk.map(_.version)).getOrElse(0L)
-    val window = commits.filter(_.version > sinceVersion)
-    // "meta" commits (column mapping) change no rows — never a refusal
-    val nonAppend = window.filterNot(c => c.op == "append" || c.op == "meta")
-    if (nonAppend.nonEmpty && !skipNonAppend)
-      sys.error("TxLog.readChangesSince: commits " +
-        s"[${nonAppend.map(c => s"v${c.version}:${c.op}").mkString(", ")}] " +
-        "are not appends — their effect cannot be expressed as appended " +
-        "rows; re-baseline from a snapshot read, or pass skipNonAppend " +
-        "if rewrites are reconciled out of band")
-    // only LIVE files: an appended file a later (skipped) overwrite/
-    // remove/rewrite already replaced must not resurrect rows the table
-    // no longer has. Liveness is decided from the WINDOW alone (a window
-    // append can only die to a LATER commit in range), so this path never
-    // folds the full table — O(window commits) whatever the table size.
-    def liveAfter(va: Long, part: String, file: String): Boolean =
-      !commits.exists(c => c.version > va && (
-        ((c.op == "overwrite" || c.op == "remove" || c.op == "restore") &&
-          c.parts.contains(part) &&
-          // a restore RE-REFERENCES old files — one it carries stays live
-          !c.parts.getOrElse(part, Seq.empty).contains(file)) ||
-        (c.op == "rewrite" &&
-          c.removed.getOrElse(part, Seq.empty).contains(file))))
-    val deltaTriples = window.filter(_.op == "append")
-      .flatMap(c => c.parts.toSeq.flatMap { case (v, fs) =>
-        fs.filter(f => liveAfter(c.version, v, f))
-          .map(f => (c.version, v, f))
-      })
-    val deltaParts =
-      filterThroughPayloadRestore(spark, root, commits, deltaTriples)
-        .groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2) }
-        .filter(_._2.nonEmpty)
-    if (deltaParts.isEmpty) (None, currentVersion)
+    val w = changeWindow(spark, root, "TxLog.readChangesSince", sinceVersion,
+      untilVersion, checkCap = true,
+      "delta commits are expired; re-baseline from a full snapshot read")
+    val deltaParts = w.liveAppends(spark, skipNonAppend,
+        "TxLog.readChangesSince", "their effect cannot be expressed as " +
+          "appended rows; re-baseline from a snapshot read, or pass " +
+          "skipNonAppend if rewrites are reconciled out of band")
+      .groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2) }
+      .filter(_._2.nonEmpty)
+    if (deltaParts.isEmpty) (None, w.version)
     else {
-      val schema = (chk.flatMap(_.schema).toSeq ++
-        commits.flatMap(_.schema)).lastOption
-      val stats = window.iterator.flatMap(_.stats)
+      val stats = w.window.iterator.flatMap(_.stats)
         .filter { case (f, _) => deltaParts.exists(_._2.contains(f)) }.toMap
       // the log's recorded partition schema (N columns) wins when present;
       // the caller-supplied (partCol, partType) covers legacy logs only
-      val ps = (chk.flatMap(_.partSchema).toSeq ++
-        commits.flatMap(_.partSchema)).lastOption
-        .map(org.apache.spark.sql.types.StructType.fromDDL)
+      val ps = w.partSchema.map(org.apache.spark.sql.types.StructType.fromDDL)
         .getOrElse(singleCol(partCol, partType))
-      val mapping = commits.flatMap(_.mapping).lastOption
-        .getOrElse(chk.map(_.mapping).getOrElse(Map.empty))
       (Some(readSnapshot(spark, root,
-        Snapshot(currentVersion, deltaParts, schema, stats,
-          partSchema = None, mapping = mapping), ps)),
-        currentVersion)
+        Snapshot(w.version, deltaParts, w.schema, stats,
+          partSchema = None, mapping = w.mapping), ps)),
+        w.version)
     }
   }
 
@@ -1609,57 +1565,18 @@ object TxLog {
   def readChangeFeed(spark: SparkSession, root: String, sinceVersion: Long,
                      untilVersion: Option[Long] = None)
       : (Option[DataFrame], Long) = {
-    val (chk, commitsAfter) = readLog(spark, root)
-    val floor = chk.map(_.version).getOrElse(0L)
-    val commits0 =
-      if (sinceVersion >= floor || sinceVersion == 0L && floor == 0L)
-        commitsAfter
-      else commitsRange(spark, root, sinceVersion, floor)
-        .map(_ ++ commitsAfter).getOrElse(
-          sys.error(s"TxLog.readChangeFeed: version $sinceVersion " +
-            s"predates the latest checkpoint ($floor) and its commits " +
-            "(and change files) are expired; re-baseline from a full " +
-            "snapshot read"))
-    val commits = untilVersion match {
-      case Some(u) =>
-        require(u >= sinceVersion, s"TxLog.readChangeFeed: cap $u " +
-          s"precedes sinceVersion $sinceVersion")
-        val capped = commits0.filter(_.version <= u)
-        // same contract as readChangesSince: the cap is a deterministic-
-        // replay key, so a stale/bogus cap must refuse loudly rather than
-        // silently serve a narrower window tagged with a different version
-        require(capped.lastOption.map(_.version).getOrElse(floor) == u,
-          s"TxLog.readChangeFeed: cap version $u was never committed " +
-            s"at $root")
-        capped
-      case None => commits0
-    }
-    val currentVersion = commits.lastOption.map(_.version)
-      .orElse(chk.map(_.version)).getOrElse(0L)
+    val w = changeWindow(spark, root, "TxLog.readChangeFeed", sinceVersion,
+      untilVersion, checkCap = true, "commits (and change files) are " +
+        "expired; re-baseline from a full snapshot read")
     // COLUMN-MAPPED TABLES: the whole feed serves under the mapping AS OF
     // the window end (the Delta CDF-under-column-mapping posture) — data
     // files and new-writer change files both carry PHYSICAL names, which
     // never change, so one end-mapping projection re-maps every
     // historical window: renamed columns surface under their END name,
     // dropped columns vanish, later-added columns NULL-backfill.
-    val endMapping = commits.flatMap(_.mapping).lastOption
-      .getOrElse(chk.map(_.mapping).getOrElse(Map.empty))
-    val window = commits.filter(_.version > sinceVersion)
-    val bad = window.filter(c => c.op == "overwrite" || c.op == "remove" ||
-      c.op == "restore" ||
-      ((c.op == "rewrite" || c.op == "dv") && c.changes.isEmpty &&
-        !c.cdfPhys))
-    require(bad.isEmpty, "TxLog.readChangeFeed: commits " +
-      s"[${bad.map(c => s"v${c.version}:${c.op}").mkString(", ")}] carry " +
-      "no row-level change record — overwrite/remove/restore are not " +
-      "CDC-able, " +
-      "and a rewrite serves the feed only when written with " +
-      "changeFeed = true")
-    val schemaDDL = (chk.flatMap(_.schema).toSeq ++
-      commits.flatMap(_.schema)).lastOption
-    val ps = (chk.flatMap(_.partSchema).toSeq ++
-      commits.flatMap(_.partSchema)).lastOption
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
+    val endMapping = w.mapping
+    val (appends, dml) = w.feedCommits()
+    val ps = w.partSchema.map(org.apache.spark.sql.types.StructType.fromDDL)
       .getOrElse(sys.error(s"TxLog.readChangeFeed: the log at $root " +
         "predates partition-column recording"))
     // ALL append commits of the window serve from ONE scan: their frames
@@ -1671,7 +1588,6 @@ object TxLog {
     // relation instead of O(window versions): planning no longer grows
     // with the window, which is what a 100 TB log's wide replay windows
     // need (and what keeps a long window from exploding the union plan).
-    val appends = window.filter(_.op == "append")
     val insertFrame: Option[DataFrame] =
       if (appends.isEmpty) None
       else {
@@ -1682,7 +1598,7 @@ object TxLog {
         val fileVersions: Map[String, Long] = appends.iterator.flatMap(c =>
           c.parts.valuesIterator.flatten.map(_ -> c.version)).toMap
         val f = readSnapshotPos(spark, root,
-            Snapshot(currentVersion, mergedParts, schemaDDL, mergedStats,
+            Snapshot(w.version, mergedParts, w.schema, mergedStats,
               mapping = endMapping), ps, withPos = false,
             fileVersions = Some(fileVersions))
           .withColumn("_change_type", lit("insert"))
@@ -1698,7 +1614,6 @@ object TxLog {
     // `_change_type` in their path: like the appends, all of the window's
     // serve from ONE scan whose partition schema gains `_change_type`,
     // each row's version derived from its file.
-    val dml = window.filter(c => c.op == "rewrite" || c.op == "dv")
     val routed = dml.flatMap(c =>
       c.changes.filterNot(isLegacyChange).map(_ -> c.version))
     val changeType = org.apache.spark.sql.types.StructField(
@@ -1711,14 +1626,14 @@ object TxLog {
           (renderPartKey(splitPartKey(key, ps.length) :+ t), f)
         }.groupBy(_._1).map { case (k, xs) => k -> xs.map(_._2) }
         Some(readSnapshotPos(spark, root,
-          Snapshot(currentVersion, byKey, schemaDDL, mapping = endMapping),
+          Snapshot(w.version, byKey, w.schema, mapping = endMapping),
           org.apache.spark.sql.types.StructType(ps.fields :+ changeType),
           withPos = false, fileVersions = Some(routed.toMap)))
       }
     // legacy data/cdf-<uuid> files: partition columns and _change_type
     // are plain file columns
     lazy val legacySchema = org.apache.spark.sql.types.StructType(
-      schemaDDL.map(org.apache.spark.sql.types.StructType.fromDDL)
+      w.schema.map(org.apache.spark.sql.types.StructType.fromDDL)
         .getOrElse(sys.error(s"TxLog.readChangeFeed: no recorded schema " +
           s"at $root")).fields ++ ps.fields :+ changeType)
     val frames =
@@ -1747,9 +1662,9 @@ object TxLog {
           }
         mapped.withColumn("_commit_version", lit(c.version))
       }
-    if (frames.isEmpty) (None, currentVersion)
+    if (frames.isEmpty) (None, w.version)
     else (Some(frames.reduce(
-      _.unionByName(_, allowMissingColumns = true))), currentVersion)
+      _.unionByName(_, allowMissingColumns = true))), w.version)
   }
 
   /** Table metadata for external readers (the streaming source): the
@@ -1791,77 +1706,150 @@ object TxLog {
     commits.lastOption.map(_.version).orElse(chk.map(_.version)).getOrElse(0L)
   }
 
+  /** A change window (since, until] resolved against the log: the ONE
+    * window rule behind [[readChangesSince]], [[readChangeFeed]] and the
+    * streaming source's planners ([[appendWindowFiles]],
+    * [[changeFeedWindowFiles]]), so batch and stream select the same files
+    * by construction. `all` is the uncapped log after the earlier of
+    * `since` and the checkpoint floor, `commits` its part up to the cap,
+    * `window` their part after `since`; `who` names the reader in its
+    * refusals. */
+  private final case class ChangeWindow(who: String, root: String,
+                                        chk: Option[Chk], all: Seq[Commit],
+                                        commits: Seq[Commit], since: Long) {
+    val window: Seq[Commit] = commits.filter(_.version > since)
+    lazy val version: Long = commits.lastOption.map(_.version)
+      .orElse(chk.map(_.version)).getOrElse(0L)
+    lazy val schema: Option[String] =
+      (chk.flatMap(_.schema).toSeq ++ commits.flatMap(_.schema)).lastOption
+    lazy val partSchema: Option[String] =
+      (chk.flatMap(_.partSchema).toSeq ++ commits.flatMap(_.partSchema))
+        .lastOption
+    lazy val mapping: Map[String, String] =
+      commits.flatMap(_.mapping).lastOption
+        .getOrElse(chk.map(_.mapping).getOrElse(Map.empty))
+
+    /** The window's appended files still LIVE at its end, as (partition,
+      * file). Non-append commits refuse (`refuser: commits [...] are not
+      * appends — hint`) unless `skipNonAppend`; "meta" commits (column
+      * mapping) change no rows and never refuse. An appended file a later
+      * (skipped) overwrite/remove/rewrite already replaced must not
+      * resurrect rows the table no longer has. Liveness is decided from
+      * the window alone (a window append can only die to a LATER commit in
+      * range), so this never folds the full table — O(window commits)
+      * whatever the table size. PAYLOAD-shape restores (parts-free commits
+      * with a payload pointer) carry their survivor set in the payload, so
+      * pre-restore candidates survive by ONE membership probe against the
+      * LAST such restore's payload, bounded by the candidate files — the
+      * driver-shape restore's re-reference semantics at payload scale. */
+    def liveAppends(spark: SparkSession, skipNonAppend: Boolean,
+                    refuser: String, hint: String): Seq[(String, String)] = {
+      val nonAppend = window.filterNot(c => c.op == "append" || c.op == "meta")
+      if (nonAppend.nonEmpty && !skipNonAppend)
+        sys.error(s"$refuser: commits " +
+          s"[${nonAppend.map(c => s"v${c.version}:${c.op}").mkString(", ")}] " +
+          s"are not appends — $hint")
+      def liveAfter(va: Long, part: String, file: String): Boolean =
+        !commits.exists(c => c.version > va && (
+          ((c.op == "overwrite" || c.op == "remove" || c.op == "restore") &&
+            c.parts.contains(part) &&
+            // a restore RE-REFERENCES old files — one it carries stays live
+            !c.parts.getOrElse(part, Seq.empty).contains(file)) ||
+          (c.op == "rewrite" &&
+            c.removed.getOrElse(part, Seq.empty).contains(file))))
+      val cands = window.filter(_.op == "append").flatMap { c =>
+        c.parts.toSeq.flatMap { case (v, fs) =>
+          fs.filter(f => liveAfter(c.version, v, f)).map(f => (c.version, v, f))
+        }
+      }
+      commits.filter(c => c.op == "restore" && c.payloadChk.isDefined)
+        .lastOption match {
+        case None => cands.map { case (_, v, f) => (v, f) }
+        case Some(pr) =>
+          val (before, after) = cands.partition(_._1 < pr.version)
+          val names = before.map(_._3)
+          val surviving: Set[String] =
+            if (names.isEmpty) Set.empty
+            else {
+              import spark.implicits._
+              spark.read.parquet(s"$root/_txlog/${pr.payloadChk.get._1}")
+                .filter(col("file").isin(names.distinct: _*))
+                .select("file").as[String].collect().toSet
+            }
+          before.collect { case (_, v, f) if surviving(f) => (v, f) } ++
+            after.map { case (_, v, f) => (v, f) }
+      }
+    }
+
+    /** The change feed's window commits as (appends, DML rewrites/dvs),
+      * under its eligibility rule: every commit carries a row-level change
+      * record, so overwrite/remove/restore (or a rewrite without change
+      * files) refuse. */
+    def feedCommits(): (Seq[Commit], Seq[Commit]) = {
+      val bad = window.filter(c => c.op == "overwrite" || c.op == "remove" ||
+        c.op == "restore" ||
+        ((c.op == "rewrite" || c.op == "dv") && c.changes.isEmpty &&
+          !c.cdfPhys))
+      require(bad.isEmpty, s"$who: commits " +
+        s"[${bad.map(c => s"v${c.version}:${c.op}").mkString(", ")}] carry " +
+        "no row-level change record — overwrite/remove/restore are not " +
+        "CDC-able, and a rewrite serves the feed only when written with " +
+        "changeFeed = true")
+      (window.filter(_.op == "append"),
+        window.filter(c => c.op == "rewrite" || c.op == "dv"))
+    }
+  }
+
+  /** Resolve (since, until] for a change reader. Below the checkpoint
+    * floor the window still serves while its commits are on disk (a
+    * checkpoint, auto or manual, deletes nothing — only [[expireLog]]
+    * does); once expired it refuses (`who: version … predates the latest
+    * checkpoint (…) and its <expired>`). `until` caps the window for
+    * DETERMINISTIC REPLAY: a consumer that crashed after delivering
+    * (since, vOld] must re-read the byte-identical window under the
+    * identical tag even when NEW commits landed in between — liveness too
+    * is evaluated AS OF the cap, so a post-cap overwrite can neither
+    * shrink nor leak into the replay. With `checkCap` a cap before `since`
+    * or one never committed refuses loudly rather than silently serve a
+    * narrower window tagged with a different version. */
+  private def changeWindow(spark: SparkSession, root: String, who: String,
+                           since: Long, until: Option[Long],
+                           checkCap: Boolean, expired: String): ChangeWindow = {
+    val (chk, commitsAfter) = readLog(spark, root)
+    val floor = chk.map(_.version).getOrElse(0L)
+    val all =
+      if (since >= floor || since == 0L && floor == 0L) commitsAfter
+      else commitsRange(spark, root, since, floor)
+        .map(_ ++ commitsAfter).getOrElse(
+          sys.error(s"$who: version $since predates the latest checkpoint " +
+            s"($floor) and its $expired"))
+    val commits = until.fold(all) { u =>
+      if (checkCap)
+        require(u >= since, s"$who: cap $u precedes sinceVersion $since")
+      val capped = all.filter(_.version <= u)
+      if (checkCap)
+        require(capped.lastOption.map(_.version).getOrElse(floor) == u,
+          s"$who: cap version $u was never committed at $root")
+      capped
+    }
+    ChangeWindow(who, root, chk, all, commits, since)
+  }
+
   /** The APPEND window (since, until] as (partition value, rel file,
     * length) triples with liveness evaluated at `until` — the streaming
     * source's per-micro-batch file plan ([[readChangesSince]] semantics,
     * files instead of a DataFrame). */
-  /** PAYLOAD-shape restores (parts-free commits with a payload pointer)
-    * carry their survivor set in the payload, not on the commit — a
-    * window planner's commit-local liveness scan cannot see them. Decide
-    * survival of pre-restore append candidates with ONE membership probe
-    * against the LAST such restore's payload, bounded by the window's
-    * candidate files — exactly the driver-shape restore's re-reference
-    * semantics, at payload scale. Candidates are (version, part, file);
-    * post-restore appends pass through untouched. */
-  private def filterThroughPayloadRestore(
-      spark: SparkSession, root: String, commits: Seq[Commit],
-      cands: Seq[(Long, String, String)]): Seq[(String, String)] = {
-    val lastPr = commits
-      .filter(c => c.op == "restore" && c.payloadChk.isDefined).lastOption
-    lastPr match {
-      case None => cands.map { case (_, v, f) => (v, f) }
-      case Some(pr) =>
-        val (before, after) = cands.partition(_._1 < pr.version)
-        val names = before.map(_._3)
-        val surviving: Set[String] =
-          if (names.isEmpty) Set.empty
-          else {
-            import spark.implicits._
-            spark.read.parquet(s"$root/_txlog/${pr.payloadChk.get._1}")
-              .filter(col("file").isin(names.distinct: _*))
-              .select("file").as[String].collect().toSet
-          }
-        before.collect { case (_, v, f) if surviving(f) => (v, f) } ++
-          after.map { case (_, v, f) => (v, f) }
-    }
-  }
-
   private[graft] def appendWindowFiles(spark: SparkSession, root: String,
                                        since: Long, until: Long,
                                        skipNonAppend: Boolean)
       : Seq[(String, String, Long)] = {
-    val (chk, commitsAfter) = readLog(spark, root)
-    val floor = chk.map(_.version).getOrElse(0L)
-    val commits0 =
-      if (since >= floor || since == 0L && floor == 0L) commitsAfter
-      else commitsRange(spark, root, since, floor)
-        .map(_ ++ commitsAfter).getOrElse(
-          sys.error(s"TxLog.appendWindowFiles: version $since predates " +
-            s"the latest checkpoint ($floor) and its delta commits are " +
-            "expired — restart the stream from a fresh checkpoint over " +
-            "a snapshot read"))
-    val commits = commits0.filter(_.version <= until)
-    val window = commits.filter(_.version > since)
-    val nonAppend = window.filterNot(c => c.op == "append" || c.op == "meta")
-    if (nonAppend.nonEmpty && !skipNonAppend)
-      sys.error("TxLog streaming source: commits " +
-        s"[${nonAppend.map(c => s"v${c.version}:${c.op}").mkString(", ")}] " +
-        "are not appends — a rewrite/overwrite cannot stream as appended " +
-        "rows; re-baseline the consumer, or set skipNonAppend=true if " +
-        "rewrites are reconciled out of band")
-    def liveAfter(va: Long, part: String, file: String): Boolean =
-      !commits.exists(c => c.version > va && (
-        ((c.op == "overwrite" || c.op == "remove" || c.op == "restore") &&
-          c.parts.contains(part) &&
-          !c.parts.getOrElse(part, Seq.empty).contains(file)) ||
-        (c.op == "rewrite" &&
-          c.removed.getOrElse(part, Seq.empty).contains(file))))
-    val rels0 = window.filter(_.op == "append").flatMap { c =>
-      c.parts.toSeq.flatMap { case (v, fs) =>
-        fs.filter(f => liveAfter(c.version, v, f)).map(f => (c.version, v, f))
-      }
-    }
-    val rels = filterThroughPayloadRestore(spark, root, commits, rels0)
+    val w = changeWindow(spark, root, "TxLog.appendWindowFiles", since,
+      Some(until), checkCap = false, "delta commits are expired — restart " +
+        "the stream from a fresh checkpoint over a snapshot read")
+    val rels = w.liveAppends(spark, skipNonAppend, "TxLog streaming source",
+      "a rewrite/overwrite cannot stream as appended rows; re-baseline the " +
+        "consumer, or set skipNonAppend=true if rewrites are reconciled " +
+        "out of band")
     if (rels.isEmpty) Seq.empty
     else {
       val meta = statusByRel(spark, root, rels.map(_._2))
@@ -1894,54 +1882,34 @@ object TxLog {
   private[graft] def changeFeedWindowFiles(spark: SparkSession, root: String,
                                            since: Long, until: Long)
       : Seq[ChangePlanFile] = {
-    val (chk, commitsAfter) = readLog(spark, root)
-    val floor = chk.map(_.version).getOrElse(0L)
-    val commits0 =
-      if (since >= floor || since == 0L && floor == 0L) commitsAfter
-      else commitsRange(spark, root, since, floor)
-        .map(_ ++ commitsAfter).getOrElse(
-          sys.error(s"TxLog CDF stream: version $since predates the " +
-            s"latest checkpoint ($floor) and its commits (and change " +
-            "files) are expired; restart the stream from a fresh " +
-            "checkpoint over a snapshot read"))
+    val w = changeWindow(spark, root, "TxLog CDF stream", since, Some(until),
+      checkCap = false, "commits (and change files) are expired; restart " +
+        "the stream from a fresh checkpoint over a snapshot read")
     // column-mapped tables serve (files all carry PHYSICAL names; the
     // reader decodes physically and reports the stream-start logical
     // schema) — only LEGACY change files with write-time logical names
     // refuse, below
-    val mapped = commits0.flatMap(_.mapping).lastOption
-      .getOrElse(chk.map(_.mapping).getOrElse(Map.empty)).nonEmpty
-    val commits = commits0.filter(_.version <= until)
-    val window = commits.filter(_.version > since)
-    val bad = window.filter(c => c.op == "overwrite" || c.op == "remove" ||
-      c.op == "restore" ||
-      ((c.op == "rewrite" || c.op == "dv") && c.changes.isEmpty &&
-        !c.cdfPhys))
-    require(bad.isEmpty, "TxLog CDF stream: commits " +
-      s"[${bad.map(c => s"v${c.version}:${c.op}").mkString(", ")}] carry " +
-      "no row-level change record — overwrite/remove/restore are not " +
-      "CDC-able, " +
-      "and a rewrite serves the feed only when written with " +
-      "changeFeed = true")
-    val legacy = window.filter(c =>
-      (c.op == "rewrite" || c.op == "dv") && !c.cdfPhys)
+    val mapped = w.all.flatMap(_.mapping).lastOption
+      .getOrElse(w.chk.map(_.mapping).getOrElse(Map.empty)).nonEmpty
+    val (appends, dml) = w.feedCommits()
+    val legacy = dml.filterNot(_.cdfPhys)
     require(!mapped || legacy.isEmpty, "TxLog CDF stream: commits " +
       s"[${legacy.map(c => s"v${c.version}").mkString(", ")}] wrote their " +
       "change files under write-time column names and the table now has " +
       "a column mapping — those windows cannot re-map; re-baseline the " +
       "consumer")
-    val dataRels = window.filter(_.op == "append").flatMap { c =>
+    val dataRels = appends.flatMap { c =>
       c.parts.toSeq.flatMap { case (v, fs) => fs.map(f => (v, f, c.version)) }
     }
-    val cdfRels = window.filter(c => c.op == "rewrite" || c.op == "dv")
-      .flatMap { c => c.changes.map(f => (f, c.version)) }
+    val cdfRels = dml.flatMap(c => c.changes.map(f => (f, c.version)))
     if (dataRels.isEmpty && cdfRels.isEmpty) return Seq.empty
     val meta = statusByRel(spark, root,
       dataRels.map(_._2) ++ cdfRels.map(_._1))
     def lenOf(rel: String): Long = meta.getOrElse(rel, sys.error(
       s"TxLog CDF stream: live file $rel missing under $root — vacuum " +
         "ran inside the stream's window?"))._1
-    val nPart = commits0.flatMap(_.partSchema).lastOption
-      .orElse(chk.flatMap(_.partSchema))
+    val nPart = w.all.flatMap(_.partSchema).lastOption
+      .orElse(w.chk.flatMap(_.partSchema))
       .map(org.apache.spark.sql.types.StructType.fromDDL(_).length)
     dataRels.map { case (v, f, ver) =>
       ChangePlanFile("data", v, f, lenOf(f), ver)
@@ -2527,7 +2495,7 @@ object TxLog {
     * double-land its batch. Returns the committed (or replayed) version. */
   def commit(spark: SparkSession, root: String, staged: Staged, op: String,
              readVersion: Long, conflictCheck: Boolean = false,
-             batchId: Option[String] = None, maxAttempts: Int = 50,
+             batchId: Option[String] = None,
              writerSeq: Option[(String, Long)] = None,
              conflictAll: Boolean = false): Long = {
     require(op == "overwrite" || op == "append" || op == "remove" ||
@@ -2559,7 +2527,7 @@ object TxLog {
     require(!batchId.contains("-"),
       "TxLog.commit: batchId \"-\" collides with the log's absent sentinel")
     var attempt = 0
-    while (attempt < maxAttempts) {
+    while (attempt < MaxPublishRaces) {
       attempt += 1
       val (chk, commits) = readLog(spark, root)
       batchId.foreach { id =>
@@ -2848,8 +2816,44 @@ object TxLog {
       // lost the version race — loop re-reads the log (and re-checks
       // conflicts/batch replay against the commits that beat us)
     }
-    sys.error(s"TxLog.commit: lost the publish race $maxAttempts times at " +
-      s"$root — pathological contention, back off at the caller")
+    sys.error(s"TxLog.commit: lost the publish race $MaxPublishRaces times " +
+      s"at $root — pathological contention, back off at the caller")
+  }
+
+  /** Lost version races one [[commit]] absorbs. A lost race is not a
+    * conflict: the loser re-reads the log and publishes at the next
+    * version, one metadata round each. */
+  private val MaxPublishRaces = 50
+
+  /** Consecutive conflicts a front door absorbs before it fails loudly. */
+  private[graft] val MaxConflictRetries = 20
+
+  /** One derivation of a front door's work: `run` commits it (or returns
+    * without a commit) and may lose with [[ConcurrentWriteException]];
+    * `lost` then reclaims what this derivation alone staged. */
+  private[graft] final case class Attempt[A](run: () => A,
+                                             lost: () => Unit = () => ())
+
+  /** The conflict-retry loop of every conflict-checked front door
+    * (Delta's commitWithRetry shape): derive an [[Attempt]] from the
+    * current log, run it, and on a [[ConcurrentWriteException]] run its
+    * `lost` cleanup and derive again from the new snapshot. After
+    * [[MaxConflictRetries]] consecutive conflicts, `giveUp` reclaims what
+    * the caller staged once, before the loop, and the call fails naming
+    * `who`. */
+  private[graft] def retryOnConflict[A](root: String, who: String,
+                                        giveUp: () => Unit = () => ())
+                                       (derive: => Attempt[A]): A = {
+    var attempt = 0
+    while (attempt < MaxConflictRetries) {
+      attempt += 1
+      val a = derive
+      try return a.run()
+      catch { case _: ConcurrentWriteException => a.lost() }
+    }
+    giveUp()
+    sys.error(s"$who: $MaxConflictRetries consecutive conflicts at $root — " +
+      "pathological contention, back off at the caller")
   }
 
   // ---- writer front-doors ------------------------------------------------
@@ -2886,13 +2890,19 @@ object TxLog {
     * a full replace cannot avoid (it is the thing being replaced);
     * everything else stays file-list-free on the payload path. */
   def overwriteTableTx(df: DataFrame, root: String, partCols: Seq[String],
-                       writerSeq: Option[(String, Long)] = None,
-                       maxAttempts: Int = 20): Long = {
-    val spark = df.sparkSession
-    val staged = stage(df, root, partCols, Nil, 0)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+                       writerSeq: Option[(String, Long)] = None): Long =
+    overwriteStagedTx(df.sparkSession, root, stage(df, root, partCols, Nil, 0),
+      writerSeq)
+
+  /** [[overwriteTableTx]] over already-staged files. Its terminal exit
+    * reclaims them: they were never committed, and a full table copy
+    * must not stay stranded under data/. */
+  private[graft] def overwriteStagedTx(spark: SparkSession, root: String,
+                                       staged: Staged,
+                                       writerSeq: Option[(String, Long)])
+      : Long =
+    retryOnConflict(root, "TxLog.overwriteTableTx",
+        giveUp = () => discard(spark, root, staged)) {
       val exists = tableExists(spark, root)
       val v0 = if (exists) currentVersion(spark, root) else 0L
       val absent =
@@ -2907,18 +2917,9 @@ object TxLog {
       // readVersion 0 forces a re-derive of the absent set instead. An
       // EXISTING table needs no version-strict check — its absent
       // entries claim every live partition already.
-      try return commit(spark, root, full, "overwrite", readVersion = v0,
-        conflictCheck = true, writerSeq = writerSeq, conflictAll = !exists)
-      catch { case _: ConcurrentWriteException => () }
+      Attempt(() => commit(spark, root, full, "overwrite", readVersion = v0,
+        conflictCheck = true, writerSeq = writerSeq, conflictAll = !exists))
     }
-    // terminal exit: the staged files were never committed — reclaim them
-    // (commit() discards on ITS terminal paths; this loop's own exit must
-    // not strand a full table copy under data/)
-    discard(spark, root, staged)
-    sys.error(s"TxLog.overwriteTableTx: $maxAttempts consecutive " +
-      s"conflicts at $root — pathological contention, back off at the " +
-      "caller")
-  }
 
   /** Idempotent transactional batch append: the batch's files land
     * once no matter how many times the job retries OR how many concurrent
@@ -2971,28 +2972,28 @@ object TxLog {
     * replay discipline the string ids provided, now bounded. Run with
     * the string-id writers quiesced (their next submission refuses). */
   def sealBatchLedgerTx(spark: SparkSession, root: String,
-                        adopt: Option[(String, Long)] = None,
-                        maxAttempts: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      // version FIRST, metadata second (the same lost-update discipline
-      // as the DDL front doors): stale-new metadata conflicts and
-      // re-derives instead of clobbering a racing rename
-      val v = currentVersion(spark, root)
-      val (mapping, _) = writerMetaOf(spark, root)
+                        adopt: Option[(String, Long)] = None): Long =
+    metaTx(spark, root, "TxLog.sealBatchLedgerTx", writerSeq = adopt) {
       // a meta commit SNAPSHOTS the mapping — carry the current one so
       // sealing never clobbers a live rename/drop
-      val staged = Staged(Map.empty, mapping = Some(mapping),
+      Staged(Map.empty, mapping = Some(writerMetaOf(spark, root)._1),
         sealsBatches = true)
-      try return commit(spark, root, staged, "meta", readVersion = v,
-        conflictCheck = true, writerSeq = adopt)
-      catch { case _: ConcurrentWriteException => () }
     }
-    sys.error(s"TxLog.sealBatchLedgerTx: $maxAttempts consecutive " +
-      s"conflicts at $root — pathological contention, back off at the " +
-      "caller")
-  }
+
+  /** A metadata-only front door: version FIRST, metadata second — a DDL
+    * landing between the two reads yields metadata NEWER than the read
+    * version, so the conflict-checked "meta" commit re-derives instead of
+    * letting a stale snapshot clobber a racing rename (meta snapshots are
+    * lost-update-prone, so they conflict with ANY concurrent commit). */
+  private def metaTx(spark: SparkSession, root: String, who: String,
+                     writerSeq: Option[(String, Long)] = None)
+                    (derive: => Staged): Long =
+    retryOnConflict(root, who) {
+      val v0 = currentVersion(spark, root)
+      val staged = derive
+      Attempt(() => commit(spark, root, staged, "meta", readVersion = v0,
+        conflictCheck = true, writerSeq = writerSeq))
+    }
 
   /** The table's current physical→logical column mapping (empty =
     * identity) — for external readers (the streaming source). */
@@ -3026,45 +3027,33 @@ object TxLog {
     * Partition columns are structural (dir layout, log keys) and cannot
     * rename; rebuild the table to change them. */
   def renameColumnTx(spark: SparkSession, root: String,
-                     oldName: String, newName: String,
-                     maxAttempts: Int = 20): Long = {
+                     oldName: String, newName: String): Long = {
     require(oldName != newName, "renameColumnTx: old and new names equal")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val v0 = currentVersion(spark, root)
+    metaTx(spark, root, "renameColumnTx") {
       val (phys, mapping, partNames) = ddlState(spark, root, "renameColumnTx")
-    require(!partNames.contains(oldName) && !partNames.contains(newName),
-      s"renameColumnTx: partition columns are structural and cannot " +
-        s"rename ([$oldName] -> [$newName])")
-    // a CHECK expression references columns by (logical) NAME — renaming
-    // one out from under it would poison every later write's validation
-    writerMetaOf(spark, root)._2.foreach { case (n, e) =>
-      require(!constraintRefs(spark, e).contains(oldName),
-        s"renameColumnTx: CHECK constraint [$n] ($e) references " +
-          s"[$oldName] — drop and re-create the constraint around the " +
-          "rename")
-    }
-    def logicalOf(p: String) = mapping.getOrElse(p, p)
-    val live = phys.map(_.name).filterNot(p => mapping.get(p).contains("-"))
-    require(live.exists(p => logicalOf(p) == oldName),
-      s"renameColumnTx: no column [$oldName] at $root")
-    require(!live.exists(p => logicalOf(p) == newName),
-      s"renameColumnTx: column [$newName] already exists at $root")
-    val physName = live.find(p => logicalOf(p) == oldName).get
+      require(!partNames.contains(oldName) && !partNames.contains(newName),
+        s"renameColumnTx: partition columns are structural and cannot " +
+          s"rename ([$oldName] -> [$newName])")
+      // a CHECK expression references columns by (logical) NAME — renaming
+      // one out from under it would poison every later write's validation
+      writerMetaOf(spark, root)._2.foreach { case (n, e) =>
+        require(!constraintRefs(spark, e).contains(oldName),
+          s"renameColumnTx: CHECK constraint [$n] ($e) references " +
+            s"[$oldName] — drop and re-create the constraint around the " +
+            "rename")
+      }
+      def logicalOf(p: String) = mapping.getOrElse(p, p)
+      val live = phys.map(_.name).filterNot(p => mapping.get(p).contains("-"))
+      require(live.exists(p => logicalOf(p) == oldName),
+        s"renameColumnTx: no column [$oldName] at $root")
+      require(!live.exists(p => logicalOf(p) == newName),
+        s"renameColumnTx: column [$newName] already exists at $root")
+      val physName = live.find(p => logicalOf(p) == oldName).get
       // renaming BACK to the physical name returns it to identity
-      val next =
+      Staged(Map.empty, mapping = Some(
         if (physName == newName) mapping - physName
-        else mapping + (physName -> newName)
-      // conflict-checked against ANY concurrent commit (meta snapshots
-      // are lost-update-prone: a racing DDL would silently clobber) —
-      // retry re-derives from the new state
-      try return commit(spark, root, Staged(Map.empty, mapping = Some(next)),
-        "meta", readVersion = v0, conflictCheck = true)
-      catch { case _: ConcurrentWriteException => () }
+        else mapping + (physName -> newName)))
     }
-    sys.error(s"renameColumnTx: $maxAttempts consecutive conflicts at " +
-      s"$root — pathological contention, back off at the caller")
   }
 
   /** Transactional ADD COLUMN — a METADATA-ONLY commit declaring an
@@ -3086,26 +3075,19 @@ object TxLog {
     * [[stage]] applies to write-time evolution. Partition columns are
     * structural and cannot be added post-hoc. */
   def addColumnTx(spark: SparkSession, root: String, name: String,
-                  dataType: org.apache.spark.sql.types.DataType,
-                  maxAttempts: Int = 20): Long =
-    addColumnsTx(spark, root, Seq(name -> dataType), maxAttempts)
+                  dataType: org.apache.spark.sql.types.DataType): Long =
+    addColumnsTx(spark, root, Seq(name -> dataType))
 
   /** N-column [[addColumnTx]] — ONE metadata commit for the whole ALTER
     * (a reader sees all the new columns or none). */
   def addColumnsTx(spark: SparkSession, root: String,
-                   cols: Seq[(String, org.apache.spark.sql.types.DataType)],
-                   maxAttempts: Int = 20): Long = {
+                   cols: Seq[(String, org.apache.spark.sql.types.DataType)])
+      : Long = {
     require(cols.nonEmpty, "addColumnsTx: no columns to add")
     require(cols.map(_._1).distinct.length == cols.length,
       s"addColumnsTx: duplicate column names " +
         s"[${cols.map(_._1).mkString(", ")}]")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      // version FIRST, metadata second (the meta-commit lost-update
-      // discipline): stale metadata conflicts and re-derives instead of
-      // clobbering a racing rename/drop
-      val v0 = currentVersion(spark, root)
+    metaTx(spark, root, "addColumnsTx") {
       val (phys, mapping, partNames) = ddlState(spark, root, "addColumnsTx")
       def logicalOf(p: String) = mapping.getOrElse(p, p)
       val live = phys.map(_.name)
@@ -3130,14 +3112,9 @@ object TxLog {
           org.apache.spark.sql.types.StructField(n, t, nullable = true) })
       // a meta commit SNAPSHOTS the mapping — carry the current one so
       // the add never clobbers a live rename/drop
-      try return commit(spark, root,
-        Staged(Map.empty, schema = Some(nextSchema.toDDL),
-          mapping = Some(mapping)),
-        "meta", readVersion = v0, conflictCheck = true)
-      catch { case _: ConcurrentWriteException => () }
+      Staged(Map.empty, schema = Some(nextSchema.toDDL),
+        mapping = Some(mapping))
     }
-    sys.error(s"addColumnsTx: $maxAttempts consecutive conflicts at " +
-      s"$root — pathological contention, back off at the caller")
   }
 
   /** Transactional DROP COLUMN — metadata-only: the recorded physical
@@ -3145,39 +3122,29 @@ object TxLog {
     * new files stop carrying it) and the physical name is TOMBSTONED in
     * the mapping so a later writer cannot reuse it and silently
     * resurrect old data under a new logical column. */
-  def dropColumnTx(spark: SparkSession, root: String, name: String,
-                   maxAttempts: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val v0 = currentVersion(spark, root)
+  def dropColumnTx(spark: SparkSession, root: String, name: String): Long =
+    metaTx(spark, root, "dropColumnTx") {
       val (phys, mapping, partNames) = ddlState(spark, root, "dropColumnTx")
-    require(!partNames.contains(name),
-      s"dropColumnTx: partition column [$name] is structural — rebuild " +
-        "the table to change its partitioning")
-    writerMetaOf(spark, root)._2.foreach { case (n, e) =>
-      require(!constraintRefs(spark, e).contains(name),
-        s"dropColumnTx: CHECK constraint [$n] ($e) references [$name] — " +
-          "drop the constraint first")
-    }
-    def logicalOf(p: String) = mapping.getOrElse(p, p)
-    val live = phys.map(_.name).filterNot(p => mapping.get(p).contains("-"))
-    require(live.exists(p => logicalOf(p) == name),
-      s"dropColumnTx: no column [$name] at $root")
-    require(live.size > 1,
-      s"dropColumnTx: [$name] is the table's last data column")
+      require(!partNames.contains(name),
+        s"dropColumnTx: partition column [$name] is structural — rebuild " +
+          "the table to change its partitioning")
+      writerMetaOf(spark, root)._2.foreach { case (n, e) =>
+        require(!constraintRefs(spark, e).contains(name),
+          s"dropColumnTx: CHECK constraint [$n] ($e) references [$name] — " +
+            "drop the constraint first")
+      }
+      def logicalOf(p: String) = mapping.getOrElse(p, p)
+      val live = phys.map(_.name).filterNot(p => mapping.get(p).contains("-"))
+      require(live.exists(p => logicalOf(p) == name),
+        s"dropColumnTx: no column [$name] at $root")
+      require(live.size > 1,
+        s"dropColumnTx: [$name] is the table's last data column")
       val physName = live.find(p => logicalOf(p) == name).get
       val nextSchema = org.apache.spark.sql.types.StructType(
         phys.filterNot(_.name == physName))
-      try return commit(spark, root,
-        Staged(Map.empty, schema = Some(nextSchema.toDDL),
-          mapping = Some(mapping - physName + (physName -> "-"))),
-        "meta", readVersion = v0, conflictCheck = true)
-      catch { case _: ConcurrentWriteException => () }
+      Staged(Map.empty, schema = Some(nextSchema.toDDL),
+        mapping = Some(mapping - physName + (physName -> "-")))
     }
-    sys.error(s"dropColumnTx: $maxAttempts consecutive conflicts at " +
-      s"$root — pathological contention, back off at the caller")
-  }
 
   /** Column names a CHECK-constraint expression references. */
   private def constraintRefs(spark: SparkSession, e: String): Set[String] =
@@ -3198,16 +3165,13 @@ object TxLog {
     * satisfies, SQL CHECK semantics). Expressions speak LOGICAL column
     * names. */
   def addCheckConstraintTx(spark: SparkSession, root: String,
-                           name: String, exprStr: String,
-                           maxAttempts: Int = 20): Long = {
+                           name: String, exprStr: String): Long = {
     require(name.nonEmpty && name != "-",
       "addCheckConstraintTx: constraint name must be non-empty")
     // parse NOW — a malformed expression must fail here, not at some
     // later writer's stage
     spark.sessionState.sqlParser.parseExpression(exprStr): Unit
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    retryOnConflict(root, "addCheckConstraintTx") {
       // version FIRST, metadata second: a DDL landing between the two
       // reads yields metadata NEWER than readVersion, so the commit
       // conflicts and re-derives — the reverse order would let a stale
@@ -3229,35 +3193,23 @@ object TxLog {
       // conflict-checked so a RACING rename/DDL forces a re-derive
       // instead of being clobbered, and a data commit landing inside the
       // existing-data scan forces a re-validation
-      try return commit(spark, root,
+      Attempt(() => commit(spark, root,
         Staged(Map.empty, mapping = Some(mapping),
           constraints = Some(existing + (name -> exprStr))),
-        "meta", readVersion = v0, conflictCheck = true)
-      catch { case _: ConcurrentWriteException => () }
+        "meta", readVersion = v0, conflictCheck = true))
     }
-    sys.error(s"addCheckConstraintTx: $maxAttempts consecutive conflicts " +
-      s"at $root — pathological contention, back off at the caller")
   }
 
   /** Transactional DROP CONSTRAINT (metadata-only). */
   def dropCheckConstraintTx(spark: SparkSession, root: String,
-                            name: String, maxAttempts: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val v0 = currentVersion(spark, root)
+                            name: String): Long =
+    metaTx(spark, root, "dropCheckConstraintTx") {
       val (mapping, existing) = writerMetaOf(spark, root)
       require(existing.contains(name),
         s"dropCheckConstraintTx: no constraint [$name] at $root")
-      try return commit(spark, root,
-        Staged(Map.empty, mapping = Some(mapping),
-          constraints = Some(existing - name)),
-        "meta", readVersion = v0, conflictCheck = true)
-      catch { case _: ConcurrentWriteException => () }
+      Staged(Map.empty, mapping = Some(mapping),
+        constraints = Some(existing - name))
     }
-    sys.error(s"dropCheckConstraintTx: $maxAttempts consecutive " +
-      s"conflicts at $root — pathological contention, back off at the caller")
-  }
 
   /** Table properties in force (empty when none recorded). */
   def tableProperties(spark: SparkSession, root: String): Map[String, String] =
@@ -3286,27 +3238,14 @@ object TxLog {
     *   - `graft.dv.fraction`              maintainTx dv-rewrite fraction
     *   - `graft.vacuum.retentionMs`       maintainTx vacuum horizon */
   def setTablePropertiesTx(spark: SparkSession, root: String,
-                           props: Map[String, String],
-                           maxAttempts: Int = 20): Long = {
+                           props: Map[String, String]): Long = {
     require(props.nonEmpty, "setTablePropertiesTx: no properties")
     props.keys.foreach(k => require(k.nonEmpty && k != "-",
       "setTablePropertiesTx: property keys must be non-empty"))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      // version FIRST, metadata second (the meta-commit lost-update
-      // discipline)
-      val v0 = currentVersion(spark, root)
-      val (mapping, _) = writerMetaOf(spark, root)
-      val existing = tableProperties(spark, root)
-      try return commit(spark, root,
-        Staged(Map.empty, mapping = Some(mapping),
-          props = Some(existing ++ props)),
-        "meta", readVersion = v0, conflictCheck = true)
-      catch { case _: ConcurrentWriteException => () }
+    metaTx(spark, root, "setTablePropertiesTx") {
+      Staged(Map.empty, mapping = Some(writerMetaOf(spark, root)._1),
+        props = Some(tableProperties(spark, root) ++ props))
     }
-    sys.error(s"setTablePropertiesTx: $maxAttempts consecutive conflicts " +
-      s"at $root — pathological contention, back off at the caller")
   }
 
   /** Transactional CREATE — records the DECLARED schema (and optional
@@ -3365,8 +3304,7 @@ object TxLog {
     * full-refresh DAGs (customer_analytics_dag.py:145-151) re-keyed to
     * a schema-changing refresh. */
   def replaceTableTx(df: DataFrame, root: String, partCols: Seq[String],
-                     props: Map[String, String] = Map.empty,
-                     maxAttempts: Int = 20): Long = {
+                     props: Map[String, String] = Map.empty): Long = {
     val spark = df.sparkSession
     require(partCols.nonEmpty,
       "replaceTableTx: at least one partition column")
@@ -3393,9 +3331,9 @@ object TxLog {
             .map(_.copy(nullable = true))).toDDL),
         partSchema = Some(org.apache.spark.sql.types.StructType(
           partCols.map(c => df.schema(c).copy(nullable = true))).toDDL))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    // terminal exit: the staged files were never committed — reclaim
+    retryOnConflict(root, "TxLog.replaceTableTx", giveUp = () =>
+        if (staged0.parts.nonEmpty) discard(spark, root, staged0)) {
       val state =
         if (tableExists(spark, root)) Some(stateOf(spark, root)) else None
       state match {
@@ -3417,11 +3355,10 @@ object TxLog {
             payloadChk = Some((name, rows.size.toLong,
               rows.iterator.map(_.getLong(2)).sum, 0L)))
           // payload-shape restores are version-strict by construction
-          try return commit(spark, root, stagedP, "restore",
-            readVersion = big.version, conflictCheck = true)
-          catch { case _: ConcurrentWriteException =>
-            deletePayloadDir(spark, root, name) // ours, referenced by nothing
-          }
+          Attempt(() => commit(spark, root, stagedP, "restore",
+              readVersion = big.version, conflictCheck = true),
+            // ours, referenced by nothing
+            () => deletePayloadDir(spark, root, name))
         case _ =>
           val v0 = state.map(_.swap.toOption.get.version).getOrElse(0L)
           val gone = state.map(_.swap.toOption.get.parts.keySet --
@@ -3430,38 +3367,21 @@ object TxLog {
             parts = staged0.parts ++ gone.map(_ -> Seq.empty[String]),
             mapping = Some(Map.empty), constraints = Some(Map.empty),
             props = Some(props))
-          try return commit(spark, root, full, "restore",
-            readVersion = v0, conflictCheck = true, conflictAll = true)
-          catch { case _: ConcurrentWriteException => () } // re-derive
+          Attempt(() => commit(spark, root, full, "restore",
+            readVersion = v0, conflictCheck = true, conflictAll = true))
       }
     }
-    // terminal exit: the staged files were never committed — reclaim
-    if (staged0.parts.nonEmpty) discard(spark, root, staged0)
-    sys.error(s"TxLog.replaceTableTx: $maxAttempts consecutive conflicts " +
-      s"at $root — pathological contention, back off at the caller")
   }
 
   /** Transactional UNSET TBLPROPERTIES — removes `keys` (absent keys are
     * a no-op, idempotent replay). */
   def unsetTablePropertiesTx(spark: SparkSession, root: String,
-                             keys: Seq[String],
-                             maxAttempts: Int = 20): Long = {
+                             keys: Seq[String]): Long = {
     require(keys.nonEmpty, "unsetTablePropertiesTx: no keys")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val v0 = currentVersion(spark, root)
-      val (mapping, _) = writerMetaOf(spark, root)
-      val existing = tableProperties(spark, root)
-      try return commit(spark, root,
-        Staged(Map.empty, mapping = Some(mapping),
-          props = Some(existing -- keys)),
-        "meta", readVersion = v0, conflictCheck = true)
-      catch { case _: ConcurrentWriteException => () }
+    metaTx(spark, root, "unsetTablePropertiesTx") {
+      Staged(Map.empty, mapping = Some(writerMetaOf(spark, root)._1),
+        props = Some(tableProperties(spark, root) -- keys))
     }
-    sys.error(s"unsetTablePropertiesTx: $maxAttempts consecutive " +
-      s"conflicts at $root — pathological contention, back off at the " +
-      "caller")
   }
 
   /** Transactional partition removal — the metadata-only DROP PARTITION
@@ -3517,14 +3437,13 @@ object TxLog {
     * driver-materializes and its restore would be a payload rewrite
     * (refused by the [[snapshotAt]] dispatch). Returns the committed
     * version. */
-  def restoreTx(spark: SparkSession, root: String, toVersion: Long,
-                maxAttempts: Int = 20): Long = {
+  def restoreTx(spark: SparkSession, root: String, toVersion: Long): Long = {
     // parquet-checkpointed tables restore by PAYLOAD REWRITE: the target
     // inventory is rebuilt distributedly (the file list never
     // driver-materializes) and the commit carries a payload pointer
     // foldBig resets its baseline to
     if (stateOf(spark, root).isRight)
-      return restorePayloadTx(spark, root, toVersion, maxAttempts)
+      return restorePayloadTx(spark, root, toVersion)
     val target = snapshotAt(spark, root, toVersion)
     require(target.parts.nonEmpty,
       s"TxLog.restoreTx: version $toVersion of $root is empty — nothing " +
@@ -3541,9 +3460,8 @@ object TxLog {
         s"$toVersion are already vacuumed (e.g. " +
         s"${missing.take(3).mkString(", ")}) — that version is no longer " +
         "restorable; retain a longer vacuum window to restore that far")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    // never discards: the staged parts re-reference live files
+    retryOnConflict(root, "TxLog.restoreTx") {
       val snap = snapshot(spark, root)
       // partitions live NOW but absent at the target drop via empty file
       // sets (the "restore" fold semantics)
@@ -3554,12 +3472,9 @@ object TxLog {
         mapping = Some(target.mapping), dvs = target.dvs,
         constraints = Some(target.constraints),
         props = Some(target.props))
-      try return commit(spark, root, staged, "restore",
-        readVersion = snap.version, conflictCheck = true)
-      catch { case _: ConcurrentWriteException => () } // re-derive `gone`
+      Attempt(() => commit(spark, root, staged, "restore",
+        readVersion = snap.version, conflictCheck = true))
     }
-    sys.error(s"TxLog.restoreTx: $maxAttempts consecutive conflicts at " +
-      s"$root — pathological contention, back off at the caller")
   }
 
   /** RESTORE on a parquet-checkpointed table — the payload-rewrite shape:
@@ -3579,99 +3494,87 @@ object TxLog {
     * (older file lists are no longer enumerable — the same floor as
     * payload time travel). */
   private def restorePayloadTx(spark: SparkSession, root: String,
-                               toVersion: Long, maxAttempts: Int): Long = {
+                               toVersion: Long): Long = {
     import spark.implicits._
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    retryOnConflict(root, "TxLog.restoreTx") {
       val (chk, commits) = readLog(spark, root)
-      val c = chk.filter(_.payload.isDefined).getOrElse(
-        // the table UN-crossed? impossible (one-way); treat as driver
-        return restoreTx(spark, root, toVersion, maxAttempts))
-      require(toVersion >= c.version,
-        s"TxLog.restoreTx: version $toVersion predates the latest " +
-          s"parquet checkpoint (${c.version}) at $root — its file list " +
-          "is no longer enumerable; only checkpoint-or-later versions " +
-          "restore on a parquet-checkpointed table")
-      val cur = foldBig(c, commits)
-      val bt = foldBig(c, commits.filter(_.version <= toVersion))
-      require(bt.version == toVersion,
-        s"TxLog.restoreTx: version $toVersion was never committed at " +
-          s"$root (log ends at ${bt.version} for that prefix)")
-      require(bigNonEmpty(spark, root, bt),
-        s"TxLog.restoreTx: version $toVersion of $root is empty — " +
-          "nothing to restore to")
-      val entries = bigEntriesDF(spark, root, bt)
-      // DISTRIBUTED existence probe over data files + dv sidecars: the
-      // driver sees one integer, never the list
-      val conf = new org.apache.spark.SerializableWritable(
-        spark.sparkContext.hadoopConfiguration)
-      val rootQual = fsOf(spark, new Path(root))
-        .makeQualified(new Path(root)).toString.stripSuffix("/") + "/"
-      val missing = entries
-        .select(col("file").as("rel"))
-        .unionByName(entries.filter(col("dvfiles").isNotNull)
-          .select(explode(col("dvfiles")).as("rel")))
-        .distinct().as[String]
-        .mapPartitions { it =>
-          val f = new Path(rootQual).getFileSystem(conf.value)
-          var n = 0
-          it.foreach { rel =>
-            if (!f.exists(new Path(rootQual + rel))) n += 1
-          }
-          Iterator.single(n)
-        }.collect().sum
-      require(missing == 0,
-        s"TxLog.restoreTx: $missing data/dv files of version $toVersion " +
-          s"at $root are already vacuumed — that version is no longer " +
-          "restorable; retain a longer vacuum window to restore that far")
-      val name = writePayloadDir(spark, root, entries, cur.version + 1)
-      val agg = spark.read.parquet(s"$root/_txlog/$name")
-        .agg(count(lit(1)), coalesce(sum("size"), lit(0L)),
-          count(col("dvfiles"))).head
-      val staged = Staged(Map.empty,
-        schema = bt.schema, partSchema = bt.partSchema,
-        mapping = Some(bt.mapping), constraints = Some(bt.constraints),
-        props = Some(bt.props),
-        payloadChk = Some((name, agg.getLong(0), agg.getLong(1),
-          agg.getLong(2))))
-      try return commit(spark, root, staged, "restore",
-        readVersion = cur.version, conflictCheck = true)
-      catch { case _: ConcurrentWriteException =>
-        // OUR payload dir (freshly written, referenced by nothing) —
-        // reclaim it and re-derive from the new log head
-        deletePayloadDir(spark, root, name)
+      // the table UN-crossed? impossible (one-way); treat as driver
+      chk.filter(_.payload.isDefined).fold(
+          Attempt(() => restoreTx(spark, root, toVersion))) { c =>
+        require(toVersion >= c.version,
+          s"TxLog.restoreTx: version $toVersion predates the latest " +
+            s"parquet checkpoint (${c.version}) at $root — its file list " +
+            "is no longer enumerable; only checkpoint-or-later versions " +
+            "restore on a parquet-checkpointed table")
+        val cur = foldBig(c, commits)
+        val bt = foldBig(c, commits.filter(_.version <= toVersion))
+        require(bt.version == toVersion,
+          s"TxLog.restoreTx: version $toVersion was never committed at " +
+            s"$root (log ends at ${bt.version} for that prefix)")
+        require(bigNonEmpty(spark, root, bt),
+          s"TxLog.restoreTx: version $toVersion of $root is empty — " +
+            "nothing to restore to")
+        val entries = bigEntriesDF(spark, root, bt)
+        // DISTRIBUTED existence probe over data files + dv sidecars: the
+        // driver sees one integer, never the list
+        val conf = new org.apache.spark.SerializableWritable(
+          spark.sparkContext.hadoopConfiguration)
+        val rootQual = fsOf(spark, new Path(root))
+          .makeQualified(new Path(root)).toString.stripSuffix("/") + "/"
+        val missing = entries
+          .select(col("file").as("rel"))
+          .unionByName(entries.filter(col("dvfiles").isNotNull)
+            .select(explode(col("dvfiles")).as("rel")))
+          .distinct().as[String]
+          .mapPartitions { it =>
+            val f = new Path(rootQual).getFileSystem(conf.value)
+            var n = 0
+            it.foreach { rel =>
+              if (!f.exists(new Path(rootQual + rel))) n += 1
+            }
+            Iterator.single(n)
+          }.collect().sum
+        require(missing == 0,
+          s"TxLog.restoreTx: $missing data/dv files of version $toVersion " +
+            s"at $root are already vacuumed — that version is no longer " +
+            "restorable; retain a longer vacuum window to restore that far")
+        val name = writePayloadDir(spark, root, entries, cur.version + 1)
+        val agg = spark.read.parquet(s"$root/_txlog/$name")
+          .agg(count(lit(1)), coalesce(sum("size"), lit(0L)),
+            count(col("dvfiles"))).head
+        val staged = Staged(Map.empty,
+          schema = bt.schema, partSchema = bt.partSchema,
+          mapping = Some(bt.mapping), constraints = Some(bt.constraints),
+          props = Some(bt.props),
+          payloadChk = Some((name, agg.getLong(0), agg.getLong(1),
+            agg.getLong(2))))
+        Attempt(() => commit(spark, root, staged, "restore",
+            readVersion = cur.version, conflictCheck = true),
+          // OUR payload dir (freshly written, referenced by nothing) —
+          // reclaim it and re-derive from the new log head
+          () => deletePayloadDir(spark, root, name))
       }
     }
-    sys.error(s"TxLog.restoreTx: $maxAttempts consecutive conflicts at " +
-      s"$root — pathological contention, back off at the caller")
   }
 
   /** Serializable read-modify-write: derive replacement partitions FROM
     * the current snapshot, commit them conflict-checked, and on conflict
-    * discard the stale staging and re-derive from the new snapshot —
-    * the transaction retry loop (Delta's commitWithRetry shape). The
+    * discard the stale staging and re-derive from the new snapshot
+    * ([[retryOnConflict]] over a whole-table overwrite). The
     * final table is always some serialized application of all competing
     * transforms. `transform` must be a pure function of its input frame. */
   def readModifyWrite(spark: SparkSession, root: String, partCol: String,
-                      partType: DataType = StringType, maxAttempts: Int = 20)
-                     (transform: DataFrame => DataFrame): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+                      partType: DataType = StringType)
+                     (transform: DataFrame => DataFrame): Long =
+    retryOnConflict(root, "TxLog.readModifyWrite") {
       val snap = snapshot(spark, root)
       val staged = stage(
         transform(readSnapshot(spark, root, snap, partCol, partType)),
         root, partCol)
-      try return commit(spark, root, staged, "overwrite",
-        readVersion = snap.version, conflictCheck = true)
-      catch { case _: ConcurrentWriteException =>
-        discard(spark, root, staged)
-      }
+      Attempt(() => commit(spark, root, staged, "overwrite",
+          readVersion = snap.version, conflictCheck = true),
+        () => discard(spark, root, staged))
     }
-    sys.error(s"TxLog.readModifyWrite: $maxAttempts consecutive conflicts " +
-      s"at $root — pathological contention, back off at the caller")
-  }
 
   /** [[readModifyWrite]] restricted to the partitions passing `select`:
     * only those are read, transformed, and replaced — the maintenance
@@ -3687,12 +3590,10 @@ object TxLog {
     * [[removePartitionsTx]] instead). */
   def readModifyWriteWhere(spark: SparkSession, root: String, partCol: String,
                            partType: DataType = StringType,
-                           select: String => Boolean, maxAttempts: Int = 20,
+                           select: String => Boolean,
                            clusterBy: Seq[Column] = Nil, clusterFiles: Int = 0)
-                          (transform: DataFrame => DataFrame): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+                          (transform: DataFrame => DataFrame): Long =
+    retryOnConflict(root, "TxLog.readModifyWriteWhere") {
       val state = stateOf(spark, root)
       // the table's RECORDED partition schema (N columns) drives the read
       // and restage; the caller's (partCol, partType) covers legacy logs.
@@ -3744,15 +3645,10 @@ object TxLog {
           s"unselected partitions [${escaped.mkString(", ")}] — it may only " +
           "rewrite the partitions it was given")
       }
-      try return commit(spark, root, staged, "overwrite",
-        readVersion = version, conflictCheck = true)
-      catch { case _: ConcurrentWriteException =>
-        discard(spark, root, staged)
-      }
+      Attempt(() => commit(spark, root, staged, "overwrite",
+          readVersion = version, conflictCheck = true),
+        () => discard(spark, root, staged))
     }
-    sys.error(s"TxLog.readModifyWriteWhere: $maxAttempts consecutive " +
-      s"conflicts at $root — pathological contention, back off at the caller")
-  }
 
   /** Transactional small-file compaction: rewrite each selected
     * partition's file set as ONE file (content-identical — [[stage]]'s
@@ -3813,7 +3709,7 @@ object TxLog {
   def compactBinPackTx(spark: SparkSession, root: String, partCol: String,
                        smallBytes: Long, partType: DataType = StringType,
                        select: String => Boolean = _ => true,
-                       minFiles: Int = 2, maxAttempts: Int = 20,
+                       minFiles: Int = 2,
                        dvFraction: Double = 0.3): (Long, Int) = {
     require(smallBytes > 0, "compactBinPackTx: smallBytes must be positive")
     require(minFiles >= 2, "compactBinPackTx: merging fewer than 2 files " +
@@ -3821,9 +3717,7 @@ object TxLog {
     require(dvFraction > 0,
       "compactBinPackTx: dvFraction must be positive (> 1 disables the " +
         "deletion-vector rewrite policy)")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    def attempt(): Attempt[(Long, Int)] = {
       val state = stateOf(spark, root)
       val version = state.fold(_.version, _.version)
       val ps = state.fold(_.partSchema, _.partSchema)
@@ -3904,15 +3798,8 @@ object TxLog {
         v -> (smallsOnly.getOrElse(v, Seq.empty) ++
           dvHeavy.getOrElse(v, Seq.empty)).distinct
       }.toMap
-      if (smalls.isEmpty) return (version, 0)
-      val smallFiles = smalls.valuesIterator.flatten.toSet
-      val candSnap = Snapshot(version, smalls, state.fold(_.schema, _.schema),
-        Map.empty, Map.empty, state.fold(_.partSchema, _.partSchema),
-        mapping = state.fold(_.mapping, _.mapping),
-        dvs = state match {
-          case Left(snap) => snap.dvs.filter { case (f, _) => smallFiles(f) }
-          case Right(big) => bigDvsFor(spark, root, big, smallFiles)
-        })
+      if (smalls.isEmpty) return Attempt(() => (version, 0))
+      val candSnap = filesSnapshot(spark, root, state, smalls)
       // one merged file per partition ([[stage]]'s hash repartition) —
       // the small-file steady state; a partition whose smalls exceed a
       // sane file size should be on the compactClusteredTx schedule
@@ -3922,14 +3809,12 @@ object TxLog {
           Staged(Map.empty, removed = smalls)
         else stage(merged, root, ps.map(_.name), Nil, 0)
           .copy(removed = smalls)
-      try return (commit(spark, root, staged, "rewrite",
-        readVersion = version, conflictCheck = true), smallFiles.size)
-      catch { case _: ConcurrentWriteException =>
-        discard(spark, root, staged)
-      }
+      Attempt(() => (commit(spark, root, staged, "rewrite",
+          readVersion = version, conflictCheck = true),
+          smalls.valuesIterator.flatten.toSet.size),
+        () => discard(spark, root, staged))
     }
-    sys.error(s"TxLog.compactBinPackTx: $maxAttempts consecutive " +
-      s"conflicts at $root — pathological contention, back off at the caller")
+    retryOnConflict(root, "TxLog.compactBinPackTx")(attempt())
   }
 
   /** Transactional MULTI-KEY Z-ORDER compaction — the full OPTIMIZE
@@ -4050,37 +3935,25 @@ object TxLog {
     * files), not O(table). Returns (committed version, files rewritten);
     * (currentVersion, 0) when no file could match (no commit). */
   def deleteWhereTx(spark: SparkSession, root: String, cond: Column,
-                    maxAttempts: Int = 20,
                     changeFeed: Boolean = false): (Long, Int) = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    def attempt(): Attempt[(Long, Int)] = {
       val state = stateOf(spark, root)
       val version = state.fold(_.version, _.version)
       if (!stateNonEmpty(spark, root, state))
-        return (version, 0)
-      val (schema, partSchema) =
-        (state.fold(_.schema, _.schema), state.fold(_.partSchema, _.partSchema))
-      val ps = partSchema
+        return Attempt(() => (version, 0))
+      val ps = state.fold(_.partSchema, _.partSchema)
         .map(org.apache.spark.sql.types.StructType.fromDDL)
         .getOrElse(sys.error(s"TxLog.deleteWhereTx: the log at $root " +
           "predates partition-column recording"))
       val cands = candidatesOf(
         readState(spark, root, state, ps), cond, ps.map(_.name))
-      if (cands.isEmpty) return (version, 0)
+      if (cands.isEmpty) return Attempt(() => (version, 0))
       // candidates are O(matching files) — a bounded driver-side read
       // even when the table itself is parquet-checkpointed. Deletion
       // vectors of candidate files apply to the read (already-deleted
       // rows neither restage nor re-enter the change feed) and die with
       // the replaced files in the fold.
-      val candFiles = cands.valuesIterator.flatten.toSet
-      val candSnap = Snapshot(version, cands, schema,
-        Map.empty, Map.empty, partSchema,
-        mapping = state.fold(_.mapping, _.mapping),
-        dvs = state match {
-          case Left(snap) => snap.dvs.filter { case (f, _) => candFiles(f) }
-          case Right(big) => bigDvsFor(spark, root, big, candFiles)
-        })
+      val candSnap = filesSnapshot(spark, root, state, cands)
       val hit = coalesce(cond, lit(false)) // NULL predicate keeps the row
       val candRead = readSnapshot(spark, root, candSnap, ps)
       val vals = candRead.columns.toSeq.map(col)
@@ -4093,15 +3966,12 @@ object TxLog {
           Seq((not(hit), DataRoute, vals)) ++
             (if (changeFeed) Seq((hit, "delete", vals)) else Nil)),
         root, ps.map(_.name), changeFeed).copy(removed = cands)
-      try return (commit(spark, root, staged, "rewrite",
-        readVersion = version, conflictCheck = true),
-        cands.valuesIterator.map(_.size).sum)
-      catch { case _: ConcurrentWriteException =>
-        discard(spark, root, staged)
-      }
+      Attempt(() => (commit(spark, root, staged, "rewrite",
+          readVersion = version, conflictCheck = true),
+          cands.valuesIterator.map(_.size).sum),
+        () => discard(spark, root, staged))
     }
-    sys.error(s"TxLog.deleteWhereTx: $maxAttempts consecutive conflicts " +
-      s"at $root — pathological contention, back off at the caller")
+    retryOnConflict(root, "TxLog.deleteWhereTx")(attempt())
   }
 
   /** Transactional keyed UPDATE — `UPDATE t SET col = expr, ... WHERE
@@ -4118,16 +3988,14 @@ object TxLog {
     * update pre/post images. Returns (committed version, files
     * rewritten); (currentVersion, 0) when no file could match. */
   def updateWhereTx(spark: SparkSession, root: String, cond: Column,
-                    sets: Map[String, Column], maxAttempts: Int = 20,
+                    sets: Map[String, Column],
                     changeFeed: Boolean = false): (Long, Int) = {
     require(sets.nonEmpty, "updateWhereTx: no SET expressions")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    def attempt(): Attempt[(Long, Int)] = {
       val state = stateOf(spark, root)
       val version = state.fold(_.version, _.version)
       if (!stateNonEmpty(spark, root, state))
-        return (version, 0)
+        return Attempt(() => (version, 0))
       val ps = partSchemaOf(state, root, "updateWhereTx")
       sets.keys.foreach { k =>
         require(!ps.map(_.name).contains(k),
@@ -4137,16 +4005,8 @@ object TxLog {
       }
       val cands = candidatesOf(
         readState(spark, root, state, ps), cond, ps.map(_.name))
-      if (cands.isEmpty) return (version, 0)
-      val candFiles = cands.valuesIterator.flatten.toSet
-      val candSnap = Snapshot(version, cands,
-        state.fold(_.schema, _.schema), Map.empty, Map.empty,
-        state.fold(_.partSchema, _.partSchema),
-        mapping = state.fold(_.mapping, _.mapping),
-        dvs = state match {
-          case Left(snap) => snap.dvs.filter { case (f, _) => candFiles(f) }
-          case Right(big) => bigDvsFor(spark, root, big, candFiles)
-        })
+      if (cands.isEmpty) return Attempt(() => (version, 0))
+      val candSnap = filesSnapshot(spark, root, state, cands)
       val candRead = readSnapshot(spark, root, candSnap, ps)
       sets.keys.foreach { k =>
         require(candRead.columns.contains(k),
@@ -4166,15 +4026,12 @@ object TxLog {
             (if (changeFeed) Seq((hit, "update_preimage", pre),
                (hit, "update_postimage", post)) else Nil)),
         root, ps.map(_.name), changeFeed).copy(removed = cands)
-      try return (commit(spark, root, staged, "rewrite",
-        readVersion = version, conflictCheck = true),
-        cands.valuesIterator.map(_.size).sum)
-      catch { case _: ConcurrentWriteException =>
-        discard(spark, root, staged)
-      }
+      Attempt(() => (commit(spark, root, staged, "rewrite",
+          readVersion = version, conflictCheck = true),
+          cands.valuesIterator.map(_.size).sum),
+        () => discard(spark, root, staged))
     }
-    sys.error(s"TxLog.updateWhereTx: $maxAttempts consecutive conflicts " +
-      s"at $root — pathological contention, back off at the caller")
+    retryOnConflict(root, "TxLog.updateWhereTx")(attempt())
   }
 
   /** MERGE-ON-READ keyed DELETE — position deletes via DELETION VECTORS
@@ -4199,15 +4056,12 @@ object TxLog {
     * giant vectors. Returns (committed
     * version, positions newly deleted); (currentVersion, 0) = no commit. */
   def deleteWhereDvTx(spark: SparkSession, root: String, cond: Column,
-                      maxAttempts: Int = 20,
                       changeFeed: Boolean = false): (Long, Long) = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    def attempt(): Attempt[(Long, Long)] = {
       val state = stateOf(spark, root)
       val version = state.fold(_.version, _.version)
       if (!stateNonEmpty(spark, root, state))
-        return (version, 0L)
+        return Attempt(() => (version, 0L))
       val ps = partSchemaOf(state, root, "deleteWhereDvTx")
       // candidate search: stats pruning decides FILES, and the dv
       // anti-join can only shrink rows within them — the driver path
@@ -4220,18 +4074,12 @@ object TxLog {
         case Right(_) => candidatesOf(
           readState(spark, root, state, ps), cond, ps.map(_.name))
       }
-      if (cands.isEmpty) return (version, 0L)
+      if (cands.isEmpty) return Attempt(() => (version, 0L))
       val candFiles = cands.valuesIterator.flatten.toSet
       // effective prior vectors for the candidates: driver state on a
       // driver table, one selective payload query (+ delta overrides)
       // on a parquet-checkpointed one — bounded by the candidate set
-      val candDvs = state match {
-        case Left(snap) => snap.dvs.filter { case (f, _) => candFiles(f) }
-        case Right(big) => bigDvsFor(spark, root, big, candFiles)
-      }
-      val candSnap = Snapshot(version, cands, state.fold(_.schema, _.schema),
-        Map.empty, Map.empty, state.fold(_.partSchema, _.partSchema),
-        mapping = state.fold(_.mapping, _.mapping), dvs = candDvs)
+      val candSnap = filesSnapshot(spark, root, state, cands)
       // candidate rows with their (rel file, position) identity, already
       // dv-filtered (a position can never re-delete) and under logical
       // names (so `cond` and the change feed speak the caller's schema)
@@ -4243,11 +4091,12 @@ object TxLog {
       // cumulative vectors: the new sidecar carries old ∪ new positions
       // for every candidate file, so exactly ONE dv entry per data file
       // is ever live (prior sidecars unreference and vacuum away)
-      val priorDvFiles = candDvs.values.flatMap(_._1).toSeq.distinct
+      val priorDvFiles = candSnap.dvs.values.flatMap(_._1).toSeq.distinct
       val allPos =
         if (priorDvFiles.isEmpty) newPos
         else newPos.unionByName(
-          spark.read.parquet(priorDvFiles.map(f => s"$root/$f"): _*)
+          spark.read.schema(DvSchema)
+            .parquet(priorDvFiles.map(f => s"$root/$f"): _*)
             .filter(col("file").isin(candFiles.toSeq: _*)))
       val rel = s"data/dv-${java.util.UUID.randomUUID()}"
       val dir = new Path(root, rel)
@@ -4255,7 +4104,8 @@ object TxLog {
       val dvFiles = fsOf(spark, dir).listStatus(dir).filter(_.isFile)
         .map(_.getPath.getName).filter(_.endsWith(".parquet"))
         .map(f => s"$rel/$f").toSeq
-      val counts = spark.read.parquet(dir.toString).groupBy("file").count()
+      val counts = spark.read.schema(DvSchema).parquet(dir.toString)
+        .groupBy("file").count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       // HARD INVARIANT, loud: every recorded position keys a LIVE
       // candidate file in the log's decoded rel-path space. A key the
@@ -4270,11 +4120,11 @@ object TxLog {
           "relativization produced a key outside the log's rel-path " +
           "space; refusing to record a vector that would silently drop")
       }
-      val priorN = candDvs.valuesIterator.map(_._2).sum
+      val priorN = candSnap.dvs.valuesIterator.map(_._2).sum
       val added = counts.values.sum - priorN
       if (added == 0L) { // cond matched nothing live — no commit
         fsOf(spark, dir).delete(dir, true)
-        return (version, 0L)
+        return Attempt(() => (version, 0L))
       }
       val dvEntry: FileDvs =
         counts.map { case (f, n) => f -> (dvFiles, n) }
@@ -4294,14 +4144,11 @@ object TxLog {
           case (v, fs) if fs.contains(f) => v
         }).map(_ -> Seq.empty[String]).toMap,
         changes = cdf, dvs = dvEntry, changeFeed = changeFeed)
-      try return (commit(spark, root, staged, "dv",
-        readVersion = version, conflictCheck = true), added)
-      catch { case _: ConcurrentWriteException =>
-        discard(spark, root, staged)
-      }
+      Attempt(() => (commit(spark, root, staged, "dv",
+          readVersion = version, conflictCheck = true), added),
+        () => discard(spark, root, staged))
     }
-    sys.error(s"TxLog.deleteWhereDvTx: $maxAttempts consecutive " +
-      s"conflicts at $root — pathological contention, back off at the caller")
+    retryOnConflict(root, "TxLog.deleteWhereDvTx")(attempt())
   }
 
   /** Candidate files of a keyed merge plus their DV-filtered read: per
@@ -4314,9 +4161,6 @@ object TxLog {
                                  source: DataFrame, key: String,
                                  ps: org.apache.spark.sql.types.StructType)
       : (Map[String, Seq[String]], Option[DataFrame]) = {
-    val version = state.fold(_.version, _.version)
-    val (schema, partSchemaDDL) =
-      (state.fold(_.schema, _.schema), state.fold(_.partSchema, _.partSchema))
     val nP = ps.length
     val keyType = source.schema(key).dataType
     // per-source-partition key bounds: O(source partitions) driver rows
@@ -4379,17 +4223,8 @@ object TxLog {
     }
     val candRead =
       if (cands.isEmpty) None
-      else {
-        val candFiles = cands.valuesIterator.flatten.toSet
-        Some(readSnapshot(spark, root,
-          Snapshot(version, cands, schema, Map.empty, Map.empty,
-            partSchemaDDL, mapping = state.fold(_.mapping, _.mapping),
-            dvs = state match {
-              case Left(snap) =>
-                snap.dvs.filter { case (f, _) => candFiles(f) }
-              case Right(big) => bigDvsFor(spark, root, big, candFiles)
-            }), ps))
-      }
+      else Some(readSnapshot(spark, root,
+        filesSnapshot(spark, root, state, cands), ps))
     (cands, candRead)
   }
 
@@ -4412,13 +4247,12 @@ object TxLog {
     * source rows replace ALL its target rows (no per-pair product), and
     * an empty source refuses. Returns the committed version. */
   def mergeKeyedTx(spark: SparkSession, root: String, source: DataFrame,
-                   key: String, maxAttempts: Int = 20,
-                   changeFeed: Boolean = false,
+                   key: String, changeFeed: Boolean = false,
                    writerSeq: Option[(String, Long)] = None,
                    autoEvolve: Boolean = false): Long =
     mergeTx(spark, root, source, key, Seq(MergeClause.updateAll()),
-      Seq(MergeClause.insertAll()), maxAttempts, changeFeed, writerSeq,
-      autoEvolve, who = "mergeKeyedTx", upsert = true)
+      Seq(MergeClause.insertAll()), changeFeed, writerSeq, autoEvolve,
+      who = "mergeKeyedTx", upsert = true)
 
   /** Opt-in MERGE schema evolution (the Delta `autoMerge` shape): any
     * source column the table does not carry is declared FIRST as an
@@ -4478,11 +4312,11 @@ object TxLog {
                      key: String, whenMatched: Seq[MergeClause],
                      whenNotMatched: Seq[MergeClause] =
                        Seq(MergeClause.insertAll()),
-                     maxAttempts: Int = 20, changeFeed: Boolean = false,
+                     changeFeed: Boolean = false,
                      writerSeq: Option[(String, Long)] = None,
                      autoEvolve: Boolean = false): Long =
     mergeTx(spark, root, source, key, whenMatched, whenNotMatched,
-      maxAttempts, changeFeed, writerSeq, autoEvolve,
+      changeFeed, writerSeq, autoEvolve,
       who = "mergeClausesTx", upsert = false)
 
   /** The one MERGE body behind [[mergeKeyedTx]] and [[mergeClausesTx]]:
@@ -4493,7 +4327,7 @@ object TxLog {
     * current version without a commit. */
   private def mergeTx(spark: SparkSession, root: String, source: DataFrame,
                       key: String, whenMatched: Seq[MergeClause],
-                      whenNotMatched: Seq[MergeClause], maxAttempts: Int,
+                      whenNotMatched: Seq[MergeClause],
                       changeFeed: Boolean,
                       writerSeq: Option[(String, Long)], autoEvolve: Boolean,
                       who: String, upsert: Boolean): Long = {
@@ -4511,9 +4345,7 @@ object TxLog {
       s"$who: only the final whenMatched clause may omit its condition")
     require(whenNotMatched.dropRight(1).forall(_.condition.nonEmpty),
       s"$who: only the final whenNotMatched clause may omit its condition")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    def attempt(): Attempt[Long] = {
       val state = stateOf(spark, root)
       val version = state.fold(_.version, _.version)
       require(stateNonEmpty(spark, root, state),
@@ -4534,7 +4366,8 @@ object TxLog {
       val (cands, candRead) =
         mergeCandidateRead(spark, root, state, source, key, ps)
       // no candidate and no insert clause: nothing can change
-      if (whenNotMatched.isEmpty && cands.isEmpty) return version
+      if (whenNotMatched.isEmpty && cands.isEmpty)
+        return Attempt(() => version)
       val staged = stageRouted(
         mergeRouted(spark, source, candRead, key, partNames, whenMatched,
           whenNotMatched, changeFeed, upsert),
@@ -4545,16 +4378,13 @@ object TxLog {
         require(!upsert, "TxLog.stage: staged DataFrame is empty — " +
           "an empty overwrite would be a silent no-op; drop partitions " +
           "explicitly")
-        return version
+        return Attempt(() => version)
       }
-      try return commit(spark, root, staged, "rewrite",
-        readVersion = version, conflictCheck = true, writerSeq = writerSeq)
-      catch { case _: ConcurrentWriteException =>
-        discard(spark, root, staged)
-      }
+      Attempt(() => commit(spark, root, staged, "rewrite",
+          readVersion = version, conflictCheck = true, writerSeq = writerSeq),
+        () => discard(spark, root, staged))
     }
-    sys.error(s"TxLog.$who: $maxAttempts consecutive conflicts at $root " +
-      "— pathological contention, back off at the caller")
+    retryOnConflict(root, s"TxLog.$who")(attempt())
   }
 
   /** A MERGE's rewritten rows and change images as one routed frame

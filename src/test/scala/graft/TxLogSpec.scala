@@ -83,7 +83,7 @@ class TxLogSpec extends SparkSpecBase {
       val tasks = (1 to writers).map { _ =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit = (1 to incsPer).foreach { _ =>
-            TxLog.readModifyWrite(spark, root, "part", maxAttempts = 200) {
+            TxLog.readModifyWrite(spark, root, "part") {
               cur => cur.withColumn("n", col("n") + 1L)
             }
           }

@@ -13,10 +13,11 @@ object TxConflictHook {
 }
 
 /** Copy-on-write DML (MERGE, UPDATE, DELETE) writes its rewritten rows and
-  * its change images in ONE routed write: Spark-job budgets, the routed
-  * change-file layout next to legacy `data/cdf-<uuid>` files, loser
-  * cleanup and vacuum retention. Sources are built with an explicit
-  * schema, so every counted job is one the tx layer launched. */
+  * its change images in ONE routed write: Spark-job budgets (and the
+  * deletion-vector read's), the routed change-file layout next to legacy
+  * `data/cdf-<uuid>` files, loser cleanup and vacuum retention. Sources
+  * are built with an explicit schema, so every counted job is one the tx
+  * layer launched. */
 class TxRoutedWriteSpec extends SparkSpecBase {
 
   private def freshRoot(tag: String): String = {
@@ -100,6 +101,16 @@ class TxRoutedWriteSpec extends SparkSpecBase {
       jobsLaunchedBy(TxLog.readChangeFeed(spark, root, 0L)._1.get)
     assert(jobs.isEmpty, s"building the feed launched ${jobs.size} jobs")
     assert(feed.count() === 8L) // 3 inserts, 3 merge images, 2 deletes
+  }
+
+  test("job budget: building readTable over deletion vectors runs no " +
+      "Spark job") {
+    val root = seeded("jobs-dvread")
+    TxLog.deleteWhereDvTx(spark, root, col("k") === 2L)
+    val (df, jobs) = jobsLaunchedBy(TxLog.readTable(spark, root))
+    assert(jobs.isEmpty, s"building the read launched ${jobs.size} jobs")
+    assert(df.select("k").collect().map(_.getLong(0)).sorted.toSeq ===
+      Seq(1L, 3L))
   }
 
   test("routed layout: data and change files of one DML commit share its " +
