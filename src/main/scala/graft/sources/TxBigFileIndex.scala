@@ -18,11 +18,13 @@ import org.apache.spark.sql.types.StructType
   * never O(table files): a 10-million-file table plans a selective scan
   * holding only its survivors.
   *
-  * The bounded post-checkpoint delta (commits after the checkpoint,
-  * ≤ [[Warehouse.MaxDriverPartitions]] of them) rides a regular
-  * driver-side [[TxFileIndex]] whose results union in; payload rows
-  * masked by the delta (overwritten partitions, rewritten-away files)
-  * are filtered out of the payload scan. File statuses come from the
+  * It serves a [[TxLog.Snapshot]] that carries a [[TxLog.Payload]]: the
+  * snapshot's own `parts` — the bounded post-checkpoint delta (commits
+  * after the checkpoint, ≤ [[Warehouse.MaxDriverPartitions]] of them) —
+  * ride a regular driver-side [[TxFileIndex]] whose results union in;
+  * payload rows masked by the delta (overwritten partitions,
+  * rewritten-away files) are filtered out of the payload scan. File
+  * statuses come from the
   * SIZE+MTIME recorded in the payload at checkpoint time — a selective
   * read of a huge table performs ZERO listing RPCs against the data
   * directories.
@@ -33,15 +35,18 @@ import org.apache.spark.sql.types.StructType
   * that move.
   */
 final class TxBigFileIndex(spark: SparkSession, root: String,
-                           big: TxLog.BigState,
+                           snap: TxLog.Snapshot,
                            override val partitionSchema: StructType)
     extends FileIndex with GraftFileIndex {
   require(partitionSchema.nonEmpty,
     "TxBigFileIndex: at least one partition column")
 
+  private val payload = snap.payload.getOrElse(sys.error(
+    "TxBigFileIndex: the snapshot has no parquet-checkpoint payload"))
+
   override val rootPaths: Seq[Path] = Seq(new Path(root))
 
-  private def payloadDF = TxLog.payloadLiveDF(spark, root, big)
+  private def payloadDF = TxLog.payloadLiveDF(spark, root, payload)
 
   /** The scan's partition predicate re-aimed at the payload's recorded
     * key (cast to the declared partition types with session-zone
@@ -77,9 +82,9 @@ final class TxBigFileIndex(spark: SparkSession, root: String,
   }
 
   private lazy val deltaIndex: Option[TxFileIndex] =
-    if (big.deltaParts.isEmpty) None
-    else Some(new TxFileIndex(spark, root, big.deltaParts, partitionSchema,
-      big.deltaStats))
+    if (snap.parts.isEmpty) None
+    else Some(new TxFileIndex(spark, root, snap.parts, partitionSchema,
+      snap.stats))
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
@@ -102,21 +107,18 @@ final class TxBigFileIndex(spark: SparkSession, root: String,
   override def survivorParts(partitionFilters: Seq[Expression],
                              dataFilters: Seq[Expression])
       : Map[String, Seq[String]] = {
-    val payload = payloadSurvivors(partitionFilters, dataFilters)
+    val fromPayload = payloadSurvivors(partitionFilters, dataFilters)
       .groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2).toSeq }
-    val delta = deltaIndex
+    TxLog.unionParts(fromPayload, deltaIndex
       .map(_.survivorParts(partitionFilters, dataFilters))
-      .getOrElse(Map.empty)
-    (payload.keySet ++ delta.keySet).map { v =>
-      v -> (payload.getOrElse(v, Seq.empty) ++ delta.getOrElse(v, Seq.empty))
-    }.toMap
+      .getOrElse(Map.empty))
   }
 
   /** O(files) driver by definition of the API — for `df.inputFiles`
     * introspection only; the scan path never calls it. */
   override def inputFiles: Array[String] =
     payloadDF.select("file").collect().map(r => s"$root/${r.getString(0)}") ++
-      big.deltaParts.values.flatten.map(rel => s"$root/$rel")
+      snap.parts.values.flatten.map(rel => s"$root/$rel")
 
   override def refresh(): Unit = () // immutable snapshot
 
@@ -124,6 +126,6 @@ final class TxBigFileIndex(spark: SparkSession, root: String,
     * upper bound (delta-masked payload rows still count) — a safe
     * direction for broadcast decisions. */
   override lazy val sizeInBytes: Long =
-    math.max(0L, big.bytes) +
+    math.max(0L, payload.bytes) +
       deltaIndex.map(_.sizeInBytes).getOrElse(0L)
 }

@@ -44,8 +44,10 @@ private[graft] object PartValueRow {
   }
 }
 
-/** A [[FileIndex]] backed by a [[TxLog.Snapshot]]'s live-file list — the
-  * production read shape for the transaction layer (the Delta
+/** A [[FileIndex]] backed by a [[TxLog.Snapshot]]'s driver-side file
+  * list (`parts`: every live file of a driver table, the post-checkpoint
+  * delta of a payload table, which [[TxBigFileIndex]] wraps this index
+  * around) — the production read shape for the transaction layer (the Delta
   * TahoeFileIndex pattern): ONE scan node whatever the partition count,
   * partition values injected from the log's `value → files` mapping (the
   * same information the `partCol=v` staging dir names carry), and

@@ -175,7 +175,7 @@ object TxLog {
                           constraints: Option[Map[String, String]] = None,
                           // op "restore" on a parquet-checkpointed table:
                           // (payload dir name, nfiles, bytes, ndvs) — the
-                          // target state rewritten distributedly; foldBig
+                          // target state rewritten distributedly; the fold
                           // RESETS its baseline to this payload
                           payloadChk: Option[(String, Long, Long, Long)] =
                             None,
@@ -192,13 +192,21 @@ object TxLog {
     def touched: Set[String] = parts.keySet ++ removed.keySet
   }
 
-  /** Resolved table state: partition value → live relative file paths,
-    * plus the table schema AS OF this version (DDL, partition column
-    * excluded — the single source of truth the snapshot scan reads with,
-    * which is what NULL-backfills pre-evolution files without footer
-    * merging). None only on legacy logs written before schema recording.
-    * `stats` covers live files only (pre-stats generations simply have
-    * no entry and are never skipped). */
+  /** Resolved table state — the ONE state type, whatever the checkpoint
+    * format (the Delta Snapshot shape): partition value → relative file
+    * paths, plus the table schema AS OF this version (DDL, partition
+    * column excluded — the single source of truth the snapshot scan reads
+    * with, which is what NULL-backfills pre-evolution files without
+    * footer merging). None only on legacy logs written before schema
+    * recording.
+    *
+    * `payload` None (no checkpoint, or a text one): `parts` lists EVERY
+    * live file, `stats`/`rows`/`dvs` cover live files only (pre-stats
+    * generations simply have no entry and are never skipped). `payload`
+    * Some (the table crossed to a parquet checkpoint): the file-level
+    * base stays in the payload, never driver-materialized, and
+    * `parts`/`stats`/`rows`/`dvs` hold only the post-checkpoint DELTA —
+    * `dvs` then OVERRIDES the payload's vectors for its files. */
   final case class Snapshot(version: Long, parts: Map[String, Seq[String]],
                             schema: Option[String] = None,
                             stats: FileStats = Map.empty,
@@ -208,12 +216,37 @@ object TxLog {
                             // version (empty = identity); "-" = dropped
                             mapping: Map[String, String] = Map.empty,
                             // live deletion vectors (merge-on-read
-                            // deletes); covers live files only, like stats
+                            // deletes)
                             dvs: FileDvs = Map.empty,
                             // CHECK constraints in force at this version
                             constraints: Map[String, String] = Map.empty,
                             // table properties in force at this version
-                            props: Map[String, String] = Map.empty)
+                            props: Map[String, String] = Map.empty,
+                            payload: Option[Payload] = None) {
+    /** Live partition values when the driver holds them: the keys of
+      * `parts` on a driver table, the checkpoint header's set (delta
+      * applied) on a payload table — None when that header omitted it
+      * (above [[chkMaxHeaderValues]]; derive payload-side). */
+    def partValues: Option[Set[String]] =
+      payload.fold(Option(parts.keySet))(_.partValues)
+  }
+
+  /** The parquet-checkpoint base of a [[Snapshot]]: the payload dir under
+    * `_txlog` holding the file-level state as of `chkVersion` (or of the
+    * payload-shape restore that reset it), and the delta's masks over it
+    * — `removedParts`/`removedFiles` hide payload rows, and `dead` (a
+    * DRIVER-shape restore landed after the crossing) hides them all: the
+    * restore's inventory lives in the delta until the next checkpoint
+    * folds everything into a fresh payload. `partValues` is the live
+    * value set (None = the header omitted it); `nfiles`/`bytes`/`ndvs`
+    * are the base's recorded facts (`ndvs` = payload files carrying a
+    * vector; 0 skips dv discovery, -1 unknown). */
+  final case class Payload(dir: String, chkVersion: Long,
+                           partValues: Option[Set[String]],
+                           removedParts: Set[String] = Set.empty,
+                           removedFiles: Set[String] = Set.empty,
+                           nfiles: Long = -1L, bytes: Long = -1L,
+                           ndvs: Long = -1L, dead: Boolean = false)
 
   /** Staged-but-uncommitted data: files already durable under `root`.
     * `schema` is the DATA files' DDL (partition column excluded) — the
@@ -328,7 +361,7 @@ object TxLog {
                                // when the table has more than
                                // [[chkMaxHeaderValues]] partitions (the
                                // header must stay O(1); consumers derive
-                               // values payload-side, see bigPartValues*)
+                               // values payload-side, see partValuesWhere)
                                partValues: Option[Set[String]] = Some(Set.empty),
                                nfiles: Long = -1L,
                                bytes: Long = -1L,
@@ -387,8 +420,7 @@ object TxLog {
       val commits: Vector[(String, Commit)]) {
     // memoized UNCAPPED fold of exactly this window (immutable values;
     // a benign compute race converges on equal results)
-    @volatile private[TxLog] var snap: Option[Either[Snapshot, BigState]] =
-      None
+    @volatile private[TxLog] var snap: Option[Snapshot] = None
     def pair: (Option[Chk], Seq[Commit]) = (chk, commits.map(_._2))
   }
   private val logCache =
@@ -810,169 +842,68 @@ object TxLog {
 
   // ---- snapshots --------------------------------------------------------
 
+  /** Fold a checkpoint plus the commits after it into the table state —
+    * O(checkpoint + delta commits) driver work whatever the table size.
+    * A text checkpoint (or none) seeds `parts` with every live file; a
+    * parquet checkpoint seeds a [[Payload]] base instead, and `parts`
+    * then collects the post-checkpoint delta. A "restore" commit carrying
+    * a payload pointer RESETS the base to that payload (the payload-table
+    * restore shape: the target state was rewritten distributedly, the
+    * commit references it, and subsequent commits fold on top exactly as
+    * after a checkpoint). */
   private def fold(chk: Option[Chk], commits: Seq[Commit]): Snapshot = {
-    require(chk.forall(_.payload.isEmpty),
-      "TxLog.fold: parquet-payload checkpoints never driver-materialize — " +
-        "route through stateOf/readTable (a silent empty fold here would " +
-        "be wrong results, not a slow path)")
-    val (parts, dvs0) = commits.foldLeft((
-        chk.map(_.parts).getOrElse(Map.empty[String, Seq[String]]),
-        chk.map(_.dvs).getOrElse(Map.empty: FileDvs))) {
-      case ((acc, dv), c) =>
+    // `partValues` holds the BASE value set until the delta applies below
+    var payload = chk.flatMap(c => c.payload.map(dir => Payload(dir,
+      c.version, c.partValues, nfiles = c.nfiles, bytes = c.bytes,
+      ndvs = c.ndvs)))
+    def mask(f: Payload => Payload): Unit = payload = payload.map(f)
+    var parts = chk.map(_.parts).getOrElse(Map.empty[String, Seq[String]])
+    var dvs = chk.map(_.dvs).getOrElse(Map.empty: FileDvs)
+    commits.foreach { c =>
       c.op match {
         // an overwrite entry with an EMPTY file set DROPS the partition
         // (the full-table-overwrite idiom, same shape as "restore"):
         // the key still rides the commit's `touched` set for conflicts
-        case "overwrite" => ((acc ++ c.parts).filter(_._2.nonEmpty), dv)
-        case "append" => (c.parts.foldLeft(acc) { case (a, (v, fs)) =>
-          a.updated(v, a.getOrElse(v, Seq.empty) ++ fs) }, dv)
-        case "remove" => (acc -- c.parts.keySet, dv)
+        case "overwrite" =>
+          mask(p => p.copy(removedParts = p.removedParts ++ c.parts.keySet))
+          parts = (parts ++ c.parts).filter(_._2.nonEmpty)
+        case "append" =>
+          parts = c.parts.foldLeft(parts) { case (a, (v, fs)) =>
+            a.updated(v, a.getOrElse(v, Seq.empty) ++ fs) }
+        case "remove" =>
+          mask(p => p.copy(removedParts = p.removedParts ++ c.parts.keySet))
+          parts = parts -- c.parts.keySet
         case "rewrite" =>
           // file-granular swap: drop the removed files, add the staged
-          // ones; a partition rewritten down to zero files disappears
-          (c.touched.foldLeft(acc) { (a, v) =>
+          // ones; a partition rewritten down to zero files disappears,
+          // and a vector dies with its rewritten file
+          c.touched.foreach { v =>
             val gone = c.removed.getOrElse(v, Seq.empty).toSet
-            val next = a.getOrElse(v, Seq.empty).filterNot(gone) ++
+            mask(p => p.copy(removedFiles = p.removedFiles ++ gone))
+            dvs = dvs -- gone
+            val next = parts.getOrElse(v, Seq.empty).filterNot(gone) ++
               c.parts.getOrElse(v, Seq.empty)
-            if (next.isEmpty) a - v else a.updated(v, next)
-          }, dv)
-        case "meta" => (acc, dv) // metadata-only: no file change
+            parts = if (next.isEmpty) parts - v else parts.updated(v, next)
+          }
+        case "meta" => () // metadata-only: no file change
         case "dv" =>
           // merge-on-read position deletes: each entry is the data
-          // file's new CUMULATIVE vector, replacing any prior one; the
-          // commit's `parts` (empty file sets) exist only as the
-          // conflict-check unit
-          (acc, dv ++ c.dvs)
-        case "restore" =>
-          // full-state replacement re-referencing RETAINED files: staged
-          // parts ARE the target version's live sets; partitions absent
-          // at the target ride along with empty file sets and drop here;
-          // deletion vectors snap back to the target's
-          ((acc ++ c.parts).filter(_._2.nonEmpty), c.dvs)
-        case other => sys.error(s"commit v${c.version}: unknown op $other")
-      }
-    }
-    // stats: staged dirs are UUID-fresh so file paths never collide across
-    // commits — merge, then keep live files only (overwrite/remove drop
-    // their victims' entries here, and the checkpoint inherits the
-    // already-pruned map)
-    val live = parts.valuesIterator.flatten.toSet
-    val stats = (chk.map(_.stats).getOrElse(Map.empty: FileStats) ++
-      commits.iterator.flatMap(_.stats)).filter { case (f, _) => live(f) }
-    val rows = (chk.map(_.rows).getOrElse(Map.empty: FileRows) ++
-      commits.iterator.flatMap(_.rows)).filter { case (f, _) => live(f) }
-    Snapshot(commits.lastOption.map(_.version)
-      .orElse(chk.map(_.version)).getOrElse(0L), parts,
-      (chk.flatMap(_.schema).toSeq ++ commits.flatMap(_.schema)).lastOption,
-      stats, rows,
-      (chk.flatMap(_.partSchema).toSeq ++
-        commits.flatMap(_.partSchema)).lastOption,
-      commits.flatMap(_.mapping).lastOption
-        .getOrElse(chk.map(_.mapping).getOrElse(Map.empty)),
-      dvs = dvs0.filter { case (f, _) => live(f) },
-      constraints = commits.flatMap(_.constraints).lastOption
-        .getOrElse(chk.map(_.constraints).getOrElse(Map.empty)),
-      props = commits.flatMap(_.props).lastOption
-        .getOrElse(chk.map(_.props).getOrElse(Map.empty)))
-  }
-
-  /** Resolved state of a PARQUET-CHECKPOINTED table: the file-level
-    * payload stays in `_txlog/<payload>` (never driver-materialized) and
-    * only the bounded post-checkpoint DELTA rides the driver — removed
-    * partitions/files mask payload rows, added files list explicitly.
-    * [[TxBigFileIndex]] unions the two at scan time, evaluating
-    * partition pruning and stats skipping INSIDE the payload scan. */
-  private[sources] final case class BigState(
-      version: Long, chkVersion: Long, payload: String,
-      // None = the checkpoint header omitted the value set (above
-      // chkMaxHeaderValues); derive payload-side via bigPartValues*
-      partValues: Option[Set[String]],
-      removedParts: Set[String],
-      removedFiles: Set[String],
-      deltaParts: Map[String, Seq[String]],
-      deltaStats: FileStats, deltaRows: FileRows,
-      schema: Option[String], partSchema: Option[String],
-      nfiles: Long, bytes: Long,
-      // physical→logical column mapping as of this version
-      mapping: Map[String, String] = Map.empty,
-      // CHECK constraints in force at this version
-      constraints: Map[String, String] = Map.empty,
-      // table properties in force at this version
-      props: Map[String, String] = Map.empty,
-      // post-checkpoint deletion-vector OVERRIDES (file → cumulative
-      // vector): payload files' vectors live in the payload's dvfiles/
-      // dvrows columns; a dv commit after the checkpoint overrides here
-      dvDelta: FileDvs = Map.empty,
-      // payload rows carrying a vector (0 skips dv discovery; -1 unknown)
-      ndvs: Long = -1L,
-      // a DRIVER-shape restore landed after the payload crossing (the
-      // restore-vs-crossing race): the payload is fully superseded by
-      // the restore's inventory, which lives in deltaParts/deltaStats/
-      // deltaRows/dvDelta — payloadLiveDF serves zero rows until the
-      // next checkpoint folds everything into a fresh payload
-      payloadDead: Boolean = false)
-
-  /** Fold post-checkpoint commits into a [[BigState]] delta — O(delta
-    * commits) driver work whatever the payload size. A "restore" commit
-    * carrying a payload pointer RESETS the fold baseline to that payload
-    * (the payload-table restore shape: the target state was rewritten
-    * distributedly, the commit references it, and subsequent commits
-    * fold on top exactly as after a checkpoint). */
-  private def foldBig(chk: Chk, commits: Seq[Commit]): BigState = {
-    var payload = chk.payload.get
-    var payloadDead = false
-    var baseValues = chk.partValues
-    var baseNfiles = chk.nfiles
-    var baseBytes = chk.bytes
-    var baseNdvs = chk.ndvs
-    var removedParts = Set.empty[String]
-    var removedFiles = Set.empty[String]
-    var delta = Map.empty[String, Seq[String]]
-    var dvDelta = Map.empty[String, (Seq[String], Long)]
-    commits.foreach { c =>
-      c.op match {
-        case "overwrite" =>
-          // empty file sets DROP their partitions (full-table overwrite):
-          // removedParts masks them payload-side, and filtering them out
-          // of the delta keeps enumeration (delta.keySet unions) clean
-          removedParts ++= c.parts.keySet
-          delta = (delta -- c.parts.keySet) ++ c.parts.filter(_._2.nonEmpty)
-        case "append" => c.parts.foreach { case (v, fs) =>
-          delta = delta.updated(v, delta.getOrElse(v, Seq.empty) ++ fs) }
-        case "remove" =>
-          removedParts ++= c.parts.keySet
-          delta = delta -- c.parts.keySet
-        case "rewrite" => c.touched.foreach { v =>
-          val gone = c.removed.getOrElse(v, Seq.empty).toSet
-          removedFiles ++= gone // payload removals (delta's filter inline)
-          dvDelta --= gone // a vector dies with its rewritten file
-          val next = delta.getOrElse(v, Seq.empty).filterNot(gone) ++
-            c.parts.getOrElse(v, Seq.empty)
-          delta = if (next.isEmpty) delta - v else delta.updated(v, next)
-        }
-        case "meta" => () // metadata-only (column mapping): no file change
-        case "dv" =>
-          // post-checkpoint vector: overrides the payload's dv columns
-          // for these files (cumulative — the latest vector is the
-          // file's full position set). Consumers treat entries as
-          // overrides FOR LIVE FILES ONLY; a stale key whose file was
-          // since masked is harmless (reads never scan it, counts look
-          // up live rows).
-          dvDelta ++= c.dvs
-        case "restore" => c.payloadChk match {
-          case Some((name, nf, by, nd)) =>
+          // file's new CUMULATIVE vector, replacing any prior one (a
+          // payload file's too); the commit's `parts` (empty file sets)
+          // exist only as the conflict-check unit
+          dvs = dvs ++ c.dvs
+        case "restore" => (c.payloadChk, payload) match {
+          case (Some((name, nf, by, nd)), _) =>
             // payload-table restore: the target state was rewritten
-            // distributedly into `name` — RESET the fold baseline to it
-            // (everything accumulated so far is superseded; the commit
-            // itself carries schema/mapping/constraints snapshots, so
-            // the metadata lastOption derivations below stay correct)
-            payload = name
-            payloadDead = false
-            baseValues = None // derive payload-side (bigPartValues*)
-            baseNfiles = nf; baseBytes = by; baseNdvs = nd
-            removedParts = Set.empty; removedFiles = Set.empty
-            delta = Map.empty; dvDelta = Map.empty
-          case None =>
+            // distributedly into `name` — RESET the base to it (the
+            // commit carries the metadata snapshots, so the lastOption
+            // derivations below stay correct)
+            val chkVersion = payload.fold(c.version)(_.chkVersion)
+            payload = Some(Payload(name, chkVersion, None, nfiles = nf,
+              bytes = by, ndvs = nd))
+            parts = Map.empty
+            dvs = Map.empty
+          case (None, Some(p)) =>
             // a DRIVER-shape restore CAN land right after the payload
             // crossing: the crossing checkpoint publishes no commit, so
             // a restore staged against the driver representation can win
@@ -984,56 +915,68 @@ object TxLog {
             // and the next checkpoint folds everything into a fresh
             // payload. (The parts map is driver-small by construction —
             // it was staged while the table was still driver-shape.)
-            payloadDead = true
-            removedParts = Set.empty; removedFiles = Set.empty
-            delta = c.parts.filter(_._2.nonEmpty)
-            dvDelta = c.dvs
-            baseValues = Some(delta.keySet)
-            baseNfiles = 0L; baseBytes = 0L; baseNdvs = 0L
+            parts = c.parts.filter(_._2.nonEmpty)
+            dvs = c.dvs
+            payload = Some(p.copy(partValues = Some(parts.keySet),
+              removedParts = Set.empty, removedFiles = Set.empty,
+              nfiles = 0L, bytes = 0L, ndvs = 0L, dead = true))
+          case (None, None) =>
+            // full-state replacement re-referencing RETAINED files: staged
+            // parts ARE the target version's live sets; partitions absent
+            // at the target ride along with empty file sets and drop here;
+            // deletion vectors snap back to the target's
+            parts = (parts ++ c.parts).filter(_._2.nonEmpty)
+            dvs = c.dvs
         }
         case other => sys.error(s"commit v${c.version}: unknown op $other")
       }
     }
-    val liveDelta = delta.valuesIterator.flatten.toSet
-    BigState(
-      commits.lastOption.map(_.version).getOrElse(chk.version), chk.version,
-      payload,
-      baseValues.map(_ -- removedParts ++ delta.keySet),
-      removedParts, removedFiles, delta,
-      commits.iterator.flatMap(_.stats).filter(kv => liveDelta(kv._1)).toMap,
-      commits.iterator.flatMap(_.rows).filter(kv => liveDelta(kv._1)).toMap,
-      (chk.schema.toSeq ++ commits.flatMap(_.schema)).lastOption,
-      (chk.partSchema.toSeq ++ commits.flatMap(_.partSchema)).lastOption,
-      baseNfiles, baseBytes,
-      commits.flatMap(_.mapping).lastOption.getOrElse(chk.mapping),
-      commits.flatMap(_.constraints).lastOption.getOrElse(chk.constraints),
-      commits.flatMap(_.props).lastOption.getOrElse(chk.props),
-      dvDelta, baseNdvs, payloadDead)
+    // stats: staged dirs are UUID-fresh so file paths never collide across
+    // commits — merge, then keep live files only (overwrite/remove drop
+    // their victims' entries here, and the checkpoint inherits the
+    // already-pruned map)
+    val live = parts.valuesIterator.flatten.toSet
+    def liveOnly[A](kvs: Iterator[(String, A)]): Map[String, A] =
+      kvs.filter { case (f, _) => live(f) }.toMap
+    Snapshot(commits.lastOption.map(_.version)
+      .orElse(chk.map(_.version)).getOrElse(0L), parts,
+      (chk.flatMap(_.schema).toSeq ++ commits.flatMap(_.schema)).lastOption,
+      liveOnly(chk.iterator.flatMap(_.stats) ++
+        commits.iterator.flatMap(_.stats)),
+      liveOnly(chk.iterator.flatMap(_.rows) ++
+        commits.iterator.flatMap(_.rows)),
+      (chk.flatMap(_.partSchema).toSeq ++
+        commits.flatMap(_.partSchema)).lastOption,
+      commits.flatMap(_.mapping).lastOption
+        .getOrElse(chk.map(_.mapping).getOrElse(Map.empty)),
+      // a payload table's vectors also override payload files', which the
+      // delta does not list — only a driver table prunes to live files
+      dvs = payload.fold(liveOnly(dvs.iterator))(_ => dvs),
+      constraints = commits.flatMap(_.constraints).lastOption
+        .getOrElse(chk.map(_.constraints).getOrElse(Map.empty)),
+      props = commits.flatMap(_.props).lastOption
+        .getOrElse(chk.map(_.props).getOrElse(Map.empty)),
+      payload = payload.map(p => p.copy(partValues =
+        p.partValues.map(_ -- p.removedParts ++ parts.keySet))))
   }
 
-  /** Internal dispatch: driver-resident [[Snapshot]] for inline-
-    * checkpointed (or uncheckpointed) logs, [[BigState]] once the table
-    * crossed to a parquet checkpoint. `cap` bounds the folded commits
-    * (time travel / deterministic replay). */
+  /** The table state as of the latest commit — memoized per log window —
+    * or as of `cap` (time travel / deterministic replay). */
   private def stateOf(spark: SparkSession, root: String,
-                      cap: Option[Long] = None)
-      : Either[Snapshot, BigState] = {
+                      cap: Option[Long] = None): Snapshot = {
     val entry = readLogEntry(spark, root)
-    val (chk, commits0) = entry.pair
-    def foldNow(commits: Seq[Commit]): Either[Snapshot, BigState] = {
+    val (chk, commits) = entry.pair
+    def foldNow(upTo: Seq[Commit]): Snapshot = {
       logFolds.incrementAndGet()
-      chk match {
-        case Some(c) if c.payload.isDefined => Right(foldBig(c, commits))
-        case _ => Left(fold(chk, commits))
-      }
+      fold(chk, upTo)
     }
     cap match {
-      case Some(u) => foldNow(commits0.filter(_.version <= u))
+      case Some(u) => foldNow(commits.filter(_.version <= u))
       case None =>
         // memoized per log window (the entry is replaced whenever the
         // listed window changes, so the memo can never serve stale state)
         entry.snap.getOrElse {
-          val s = foldNow(commits0)
+          val s = foldNow(commits)
           entry.snap = Some(s)
           s
         }
@@ -1043,16 +986,19 @@ object TxLog {
   /** Fold the commit log into the current table state. Version 0 = empty
     * table (no commits yet). DRIVER-RESIDENT by contract: refuses a
     * parquet-checkpointed table (its file list deliberately never fits
-    * the driver) — use [[readTable]]/[[read]]/[[countRows]]/the front
-    * doors, which dispatch to the distributed path. */
-  def snapshot(spark: SparkSession, root: String): Snapshot =
-    stateOf(spark, root) match {
-      case Left(snap) => snap
-      case Right(big) => sys.error(s"TxLog.snapshot: the table at $root " +
-        s"is parquet-checkpointed (${big.nfiles}+ files at c" +
-        s"${big.chkVersion}) — its file list does not driver-materialize; " +
+    * the driver, and its [[Snapshot.parts]] would list the delta only) —
+    * use [[readTable]]/[[read]]/[[countRows]]/the front doors, which read
+    * either checkpoint format. */
+  def snapshot(spark: SparkSession, root: String): Snapshot = {
+    val state = stateOf(spark, root)
+    state.payload.foreach { p =>
+      sys.error(s"TxLog.snapshot: the table at $root " +
+        s"is parquet-checkpointed (${p.nfiles}+ files at c" +
+        s"${p.chkVersion}) — its file list does not driver-materialize; " +
         "use readTable/read/countRows or the transactional front doors")
     }
+    state
+  }
 
   /** Time travel: the table state AS OF `version` — committed data is
     * immutable and versions are a total order, so any retained version
@@ -1065,16 +1011,14 @@ object TxLog {
     * retention schedule that matches how far back readers travel. */
   def snapshotAt(spark: SparkSession, root: String, version: Long): Snapshot = {
     val (chk, commits) = readLog(spark, root)
-    // same dispatch error as snapshot(): a parquet-checkpointed table's
-    // file list never driver-materializes — point callers at the actual
-    // replacement instead of letting fold's internal require fire with a
-    // message about stateOf/readTable
-    chk.filter(_.payload.isDefined).foreach { c =>
+    // same refusal as snapshot(): a parquet-checkpointed table's file
+    // list never driver-materializes — point callers at the actual
+    // replacement
+    for (c <- chk; _ <- c.payload)
       sys.error(s"TxLog.snapshotAt: the table at $root is " +
         s"parquet-checkpointed (${c.nfiles}+ files at c${c.version}) — " +
         "its file list does not driver-materialize; use readTableAt for " +
         "time travel")
-    }
     val floor = chk.map(_.version).getOrElse(0L)
     val have =
       if (version >= floor) fold(chk, commits.filter(_.version <= version))
@@ -1134,18 +1078,28 @@ object TxLog {
                                        partSchema: org.apache.spark.sql.types.StructType,
                                        withPos: Boolean,
                                        fileVersions: Option[Map[String, Long]] = None): DataFrame = {
-    // an empty table READS (zero rows, the declared columns) once a
-    // schema is recorded — the created-before-first-write state
-    // ([[createTableTx]]); only a schema-less empty log refuses
-    require(snap.parts.nonEmpty || snap.schema.isDefined,
-      s"TxLog table at $root is empty — nothing committed yet")
     val dataSchema = snap.schema
       .map(org.apache.spark.sql.types.StructType.fromDDL)
-      // legacy logs without schema records: one driver-side footer read
-      .getOrElse(ParquetFiles.read(spark,
-        s"$root/${snap.parts.valuesIterator.next().head}").schema)
+      .getOrElse {
+        snap.payload.foreach(_ =>
+          sys.error(s"TxLog.readBig: no recorded schema at $root"))
+        // an empty table READS (zero rows, the declared columns) once a
+        // schema is recorded — the created-before-first-write state
+        // ([[createTableTx]]); only a schema-less empty log refuses
+        require(snap.parts.nonEmpty,
+          s"TxLog table at $root is empty — nothing committed yet")
+        // legacy logs without schema records: one driver-side footer read
+        ParquetFiles.read(spark,
+          s"$root/${snap.parts.valuesIterator.next().head}").schema
+      }
+    // a payload table's index prunes the payload inside a Spark job and
+    // serves the delta through the driver-side index
+    val index = snap.payload
+      .map(_ => new TxBigFileIndex(spark, root, snap, partSchema))
+      .getOrElse(new TxFileIndex(spark, root, snap.parts, partSchema,
+        snap.stats))
     val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      new TxFileIndex(spark, root, snap.parts, partSchema, snap.stats),
+      index,
       partitionSchema = partSchema,
       dataSchema = dataSchema,
       bucketSpec = None,
@@ -1170,7 +1124,7 @@ object TxLog {
             relDataPath(col("_metadata.file_path")), m))
     }
     val undeleted = applyDvJoin(spark, root, tagged,
-      snap.dvs.values.flatMap(_._1).toSeq.distinct, withPos)
+      dvFilesOf(spark, root, snap), withPos)
     val out = applyMapping(undeleted, snap.mapping, partSchema)
     if (withPos) out else out.drop("__dv_f", "__dv_p")
   }
@@ -1200,30 +1154,33 @@ object TxLog {
     }
   }
 
-  /** Live sidecar cap on a parquet-checkpointed table: the read-side
-    * anti-join unions every live vector file, a bounded driver artifact
-    * by the same contract as [[DataSkipping]] — a table accumulating
-    * more must compact (materialize) on its maintenance schedule. */
+  /** Live sidecar cap: the read-side anti-join unions every live vector
+    * file, a bounded driver artifact by the same contract as
+    * [[DataSkipping]] — a table accumulating more must compact
+    * (materialize) on its maintenance schedule. */
   val DefaultMaxDvFiles = 65536
 
-  /** Every live deletion-vector sidecar of a parquet-checkpointed table:
-    * the payload's recorded vectors plus post-checkpoint overrides
-    * (superseded sidecars may ride along — harmless, see
-    * [[applyDvJoin]]). ONE distributed job over the payload; the driver
-    * holds sidecar paths only, capped loudly. */
-  private def dvFilesOfBig(spark: SparkSession, root: String,
-                           big: BigState): Seq[String] = {
-    // the recorded ndvs count lets a dv-free table skip the discovery
-    // job entirely — the common case costs nothing
-    if (big.ndvs == 0L && big.dvDelta.isEmpty) return Seq.empty
-    val payload = payloadLiveDF(spark, root, big)
-    val fromPayload: Seq[String] =
-      if (!payload.columns.contains("dvfiles")) Seq.empty // legacy payload
-      else if (big.ndvs == 0L) Seq.empty
-      else payload.filter(col("dvfiles").isNotNull)
-        .select(explode(col("dvfiles")).as("dv")).distinct()
-        .limit(DefaultMaxDvFiles + 1).collect().map(_.getString(0)).toSeq
-    val all = (fromPayload ++ big.dvDelta.values.flatMap(_._1)).distinct
+  /** Every live deletion-vector sidecar of `snap`: its own vectors plus,
+    * on a payload table, the payload's recorded ones (superseded
+    * sidecars may ride along — harmless, see [[applyDvJoin]]), found by
+    * ONE distributed job over the payload. The driver holds sidecar paths
+    * only, capped loudly. */
+  private def dvFilesOf(spark: SparkSession, root: String,
+                        snap: Snapshot): Seq[String] = {
+    val fromPayload = snap.payload.toSeq.flatMap { p =>
+      // the recorded ndvs count lets a dv-free table skip the discovery
+      // job entirely — the common case costs nothing
+      if (p.ndvs == 0L && snap.dvs.isEmpty) Seq.empty
+      else {
+        val live = payloadLiveDF(spark, root, p)
+        if (!live.columns.contains("dvfiles")) Seq.empty // legacy payload
+        else if (p.ndvs == 0L) Seq.empty
+        else live.filter(col("dvfiles").isNotNull)
+          .select(explode(col("dvfiles")).as("dv")).distinct()
+          .limit(DefaultMaxDvFiles + 1).collect().map(_.getString(0)).toSeq
+      }
+    }
+    val all = (fromPayload ++ snap.dvs.values.flatMap(_._1)).distinct
     require(all.size <= DefaultMaxDvFiles,
       s"TxLog: the table at $root has more than $DefaultMaxDvFiles live " +
         "deletion-vector sidecars — compact (materialize) the dv'd " +
@@ -1231,42 +1188,40 @@ object TxLog {
     all
   }
 
-  /** Effective deletion vectors for a BOUNDED file set on a parquet-
-    * checkpointed table: post-checkpoint overrides win; payload vectors
-    * resolve with one selective payload query. */
-  private def bigDvsFor(spark: SparkSession, root: String, big: BigState,
-                        files: Set[String]): FileDvs = {
-    if (files.isEmpty) return Map.empty
-    val fromDelta = big.dvDelta.filter { case (f, _) => files(f) }
-    val rest = files -- fromDelta.keySet
-    val payload = payloadLiveDF(spark, root, big)
-    val fromPayload: FileDvs =
-      if (rest.isEmpty || big.ndvs == 0L ||
-          !payload.columns.contains("dvfiles")) Map.empty
-      else payload
-        .filter(col("file").isin(rest.toSeq: _*) && col("dvfiles").isNotNull)
-        .select("file", "dvfiles", "dvrows").collect()
-        .map(r => r.getString(0) ->
-          (r.getSeq[String](1).toSeq, r.getLong(2))).toMap
-    fromDelta ++ fromPayload
-  }
-
   /** `state` narrowed to the bounded file set `files`, carrying their live
     * deletion vectors — the candidate read of a file-granular rewrite
-    * (vectors apply to the read and die with the replaced files). */
+    * (vectors apply to the read and die with the replaced files). On a
+    * payload table the vectors `state` does not override resolve with
+    * one selective payload query. */
   private def filesSnapshot(spark: SparkSession, root: String,
-                            state: Either[Snapshot, BigState],
+                            state: Snapshot,
                             files: Map[String, Seq[String]]): Snapshot = {
     val fileSet = files.valuesIterator.flatten.toSet
-    Snapshot(state.fold(_.version, _.version), files,
-      state.fold(_.schema, _.schema), Map.empty, Map.empty,
-      state.fold(_.partSchema, _.partSchema),
-      mapping = state.fold(_.mapping, _.mapping),
-      dvs = state match {
-        case Left(snap) => snap.dvs.filter { case (f, _) => fileSet(f) }
-        case Right(big) => bigDvsFor(spark, root, big, fileSet)
-      })
+    val own = state.dvs.filter { case (f, _) => fileSet(f) }
+    val fromPayload: FileDvs = state.payload.filter(_ => fileSet.nonEmpty)
+      .fold(Map.empty: FileDvs) { p =>
+        val rest = fileSet -- own.keySet
+        val live = payloadLiveDF(spark, root, p)
+        if (rest.isEmpty || p.ndvs == 0L ||
+            !live.columns.contains("dvfiles")) Map.empty
+        else live
+          .filter(col("file").isin(rest.toSeq: _*) && col("dvfiles").isNotNull)
+          .select("file", "dvfiles", "dvrows").collect()
+          .map(r => r.getString(0) ->
+            (r.getSeq[String](1).toSeq, r.getLong(2))).toMap
+      }
+    Snapshot(state.version, files, state.schema, Map.empty, Map.empty,
+      state.partSchema, mapping = state.mapping, dvs = own ++ fromPayload)
   }
+
+  /** Two partition → files maps as one, `a`'s files first in a shared
+    * partition — a payload table's selection plus its delta's. */
+  private[sources] def unionParts[A](a: Map[String, Seq[A]],
+                                     b: Map[String, Seq[A]])
+      : Map[String, Seq[A]] =
+    (a.keySet ++ b.keySet).map { v =>
+      v -> (a.getOrElse(v, Seq.empty) ++ b.getOrElse(v, Seq.empty))
+    }.toMap
 
   /** COLUMN MAPPING at read time (the Delta column-mapping shape): the
     * scan runs over PHYSICAL column names (what the files and the
@@ -1291,45 +1246,14 @@ object TxLog {
       df.select(cols: _*)
     }
 
-  /** One-scan read of a parquet-checkpointed table through
-    * [[TxBigFileIndex]] — partition pruning and data skipping run as a
-    * job over the checkpoint payload; the driver holds survivors only. */
-  private def readBig(spark: SparkSession, root: String, big: BigState,
-                      partSchema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val dataSchema = big.schema
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
-      .getOrElse(sys.error(s"TxLog.readBig: no recorded schema at $root"))
-    val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      new TxBigFileIndex(spark, root, big, partSchema),
-      partitionSchema = partSchema,
-      dataSchema = dataSchema,
-      bucketSpec = None,
-      fileFormat = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-      options = Map.empty)(spark)
-    val raw = org.apache.spark.sql.graftbridge.DatasetBridge.ofRows(spark,
-      org.apache.spark.sql.execution.datasources.LogicalRelation(relation))
-    applyMapping(
-      applyDvJoin(spark, root, raw, dvFilesOfBig(spark, root, big),
-        withPos = false),
-      big.mapping, partSchema).drop("__dv_f", "__dv_p")
-  }
-
-  private def readState(spark: SparkSession, root: String,
-                        state: Either[Snapshot, BigState],
-                        partSchema: org.apache.spark.sql.types.StructType): DataFrame =
-    state match {
-      case Left(snap) => readSnapshot(spark, root, snap, partSchema)
-      case Right(big) => readBig(spark, root, big, partSchema)
-    }
-
   private def singleCol(partCol: String, partType: DataType) =
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField(partCol, partType)))
 
   /** Recorded partition schema of `state`, or a loud refusal. */
-  private def partSchemaOf(state: Either[Snapshot, BigState], root: String,
+  private def partSchemaOf(state: Snapshot, root: String,
                            who: String): org.apache.spark.sql.types.StructType =
-    state.fold(_.partSchema, _.partSchema)
+    state.partSchema
       .map(org.apache.spark.sql.types.StructType.fromDDL)
       .getOrElse(sys.error(s"TxLog.$who: the log at $root predates " +
         "partition-column recording — read with an explicit partCol"))
@@ -1337,7 +1261,7 @@ object TxLog {
   /** Read the CURRENT state of the tx table. */
   def read(spark: SparkSession, root: String, partCol: String,
            partType: DataType = StringType): DataFrame =
-    readState(spark, root, stateOf(spark, root), singleCol(partCol, partType))
+    readSnapshot(spark, root, stateOf(spark, root), singleCol(partCol, partType))
 
   /** Read the CURRENT state using the log's own recorded partition
     * metadata — the partition columns are TABLE state, not reader
@@ -1346,7 +1270,7 @@ object TxLog {
     * recording rather than guessing. */
   def readTable(spark: SparkSession, root: String): DataFrame = {
     val state = stateOf(spark, root)
-    readState(spark, root, state, partSchemaOf(state, root, "readTable"))
+    readSnapshot(spark, root, state, partSchemaOf(state, root, "readTable"))
   }
 
   /** Time-travel read AS OF `version` on either checkpoint
@@ -1356,18 +1280,18 @@ object TxLog {
     * travels with the same payload scan plus a version-capped delta. */
   def readTableAt(spark: SparkSession, root: String, version: Long): DataFrame = {
     val floor = readLog(spark, root)._1.map(_.version).getOrElse(0L)
-    val state: Either[Snapshot, BigState] =
+    val state =
       if (version >= floor) stateOf(spark, root, cap = Some(version))
       else
         // below the floor but before expiry: the full pre-checkpoint
         // chain still folds (a checkpoint deletes nothing)
-        Left(fold(None, commitsRange(spark, root, 0L, version).getOrElse(
+        fold(None, commitsRange(spark, root, 0L, version).getOrElse(
           sys.error(s"TxLog.readTableAt: version $version predates the " +
             s"latest checkpoint ($floor) and its delta files are " +
-            "expired; retain a longer log to time-travel that far"))))
-    require(state.fold(_.version, _.version) == version,
+            "expired; retain a longer log to time-travel that far")))
+    require(state.version == version,
       s"TxLog.readTableAt: version $version was never committed at $root")
-    readState(spark, root, state, partSchemaOf(state, root, "readTableAt"))
+    readSnapshot(spark, root, state, partSchemaOf(state, root, "readTableAt"))
   }
 
   /** Time travel BY TIMESTAMP — resolve the latest version whose commit
@@ -1426,8 +1350,7 @@ object TxLog {
     * COUNT(*) over a table or partition slice must not be a scan).
     * Some(n) only when EVERY live file in the selection carries a
     * recorded count; None sends the caller to a real scan (pre-stats
-    * log generations, opt-out writers — correctness never degrades to
-    * an estimate). */
+    * log generations — correctness never degrades to an estimate). */
   def countRows(spark: SparkSession, root: String,
                 select: String => Boolean = _ => true): Option[Long] = {
     val total = partitionCounts(spark, root)
@@ -1441,60 +1364,52 @@ object TxLog {
     * payload (plus the driver-side delta) — O(partitions) driver rows,
     * never O(files). */
   def partitionCounts(spark: SparkSession, root: String): Map[String, Option[Long]] = {
-    stateOf(spark, root) match {
-      case Left(snap) =>
-        snap.parts.map { case (v, fs) =>
-          // deletion vectors subtract exactly (cumulative per-file counts
-          // ride the log), so merge-on-read deletes stay metadata-countable
-          v -> (if (fs.forall(snap.rows.contains))
-                  Some(fs.map(f => snap.rows(f) -
-                    snap.dvs.get(f).map(_._2).getOrElse(0L)).sum)
-                else None)
-        }
-      case Right(big) =>
-        var df = payloadLiveDF(spark, root, big)
-        val hasDvCols = df.columns.contains("dvfiles")
-        // files whose vector was overridden after the checkpoint leave
-        // the distributed agg and re-enter with their overridden counts
-        val ovKeys = big.dvDelta.keySet.toSeq
-        if (ovKeys.nonEmpty) df = df.filter(not(col("file").isin(ovKeys: _*)))
-        val effRows =
-          if (hasDvCols) col("rows") - coalesce(col("dvrows"), lit(0L))
-          else col("rows")
-        val payload = df.groupBy("part")
-          .agg(sum(effRows).as("n"), count(lit(1)).as("nf"),
-            count(col("rows")).as("nr"))
-          .collect().map { r =>
-            // any file without a recorded count poisons its partition
-            (r.getString(0),
-             if (r.getLong(2) == r.getLong(3)) Option(r.get(1))
-               .map(_.asInstanceOf[Long])
-             else None)
-          }.toMap
-        val ovByPart: Map[String, Option[Long]] =
-          if (ovKeys.isEmpty) Map.empty
-          else payloadLiveDF(spark, root, big)
-            .filter(col("file").isin(ovKeys: _*))
-            .select("part", "file", "rows").collect().toSeq
-            .map { r =>
-              (r.getString(0), Option(r.get(2)).map(_.asInstanceOf[Long] -
-                big.dvDelta(r.getString(1))._2))
-            }
-            .groupBy(_._1).map { case (v, xs) =>
-              v -> (if (xs.forall(_._2.nonEmpty)) Some(xs.flatMap(_._2).sum)
-                    else None)
-            }
-        val deltaCounts = big.deltaParts.map { case (v, fs) =>
-          v -> (if (fs.forall(big.deltaRows.contains))
-                  Some(fs.map(f => big.deltaRows(f) -
-                    big.dvDelta.get(f).map(_._2).getOrElse(0L)).sum)
-                else None)
-        }
-        (payload.keySet ++ ovByPart.keySet ++ deltaCounts.keySet).map { v =>
-          val both =
-            Seq(payload.get(v), ovByPart.get(v), deltaCounts.get(v)).flatten
-          v -> (if (both.forall(_.nonEmpty)) Some(both.flatten.sum) else None)
+    val snap = stateOf(spark, root)
+    // deletion vectors subtract exactly (cumulative per-file counts ride
+    // the log), so merge-on-read deletes stay metadata-countable
+    val own = snap.parts.map { case (v, fs) =>
+      v -> (if (fs.forall(snap.rows.contains))
+              Some(fs.map(f => snap.rows(f) -
+                snap.dvs.get(f).map(_._2).getOrElse(0L)).sum)
+            else None)
+    }
+    snap.payload.fold(own) { p =>
+      var df = payloadLiveDF(spark, root, p)
+      val hasDvCols = df.columns.contains("dvfiles")
+      // files whose vector was overridden after the checkpoint leave
+      // the distributed agg and re-enter with their overridden counts
+      val ovKeys = snap.dvs.keySet.toSeq
+      if (ovKeys.nonEmpty) df = df.filter(not(col("file").isin(ovKeys: _*)))
+      val effRows =
+        if (hasDvCols) col("rows") - coalesce(col("dvrows"), lit(0L))
+        else col("rows")
+      val payload = df.groupBy("part")
+        .agg(sum(effRows).as("n"), count(lit(1)).as("nf"),
+          count(col("rows")).as("nr"))
+        .collect().map { r =>
+          // any file without a recorded count poisons its partition
+          (r.getString(0),
+           if (r.getLong(2) == r.getLong(3)) Option(r.get(1))
+             .map(_.asInstanceOf[Long])
+           else None)
         }.toMap
+      val ovByPart: Map[String, Option[Long]] =
+        if (ovKeys.isEmpty) Map.empty
+        else payloadLiveDF(spark, root, p)
+          .filter(col("file").isin(ovKeys: _*))
+          .select("part", "file", "rows").collect().toSeq
+          .map { r =>
+            (r.getString(0), Option(r.get(2)).map(_.asInstanceOf[Long] -
+              snap.dvs(r.getString(1))._2))
+          }
+          .groupBy(_._1).map { case (v, xs) =>
+            v -> (if (xs.forall(_._2.nonEmpty)) Some(xs.flatMap(_._2).sum)
+                  else None)
+          }
+      (payload.keySet ++ ovByPart.keySet ++ own.keySet).map { v =>
+        val all = Seq(payload.get(v), ovByPart.get(v), own.get(v)).flatten
+        v -> (if (all.forall(_.nonEmpty)) Some(all.flatten.sum) else None)
+      }.toMap
     }
   }
 
@@ -2014,12 +1929,12 @@ object TxLog {
         // the tag stays stable and the downstream ledger dedups it
         val state = stateOf(spark, root,
           cap = pendingIntent.filter(_ >= floor))
-        val v = state.fold(_.version, _.version)
+        val v = state.version
         writeCp(since, Some(v))
-        val ps = state.fold(_.partSchema, _.partSchema)
+        val ps = state.partSchema
           .map(org.apache.spark.sql.types.StructType.fromDDL)
           .getOrElse(singleCol(partCol, partType))
-        process(readState(spark, root, state, ps), v)
+        process(readSnapshot(spark, root, state, ps), v)
         writeCp(v, None)
         cycles += 1
       } else {
@@ -2210,9 +2125,7 @@ object TxLog {
       val partField = org.apache.spark.sql.types.StructType(
         partCols.map(c => discovered(c).copy(nullable = true))).toDDL
       val (stats, rows) =
-        if (spark.conf.getOption("graft.txlog.stats").forall(_.toBoolean))
-          TxStats.collect(spark, root, parts.values.flatten.toSeq, dataSchema)
-        else (Map.empty: FileStats, Map.empty: FileRows)
+        TxStats.collect(spark, root, parts.values.flatten.toSeq, dataSchema)
       commit(spark, root,
         Staged(parts, Some(dataSchema.toDDL), stats, rows, Some(partField)),
         "overwrite", readVersion = 0L)
@@ -2376,12 +2289,9 @@ object TxLog {
         .map(f => f.copy(name = reverse.getOrElse(f.name, f.name),
           nullable = true)))
     // footer min/max per staged file → data skipping at read time
-    // (graft.txlog.stats=false opts a writer out; readers treat absent
-    // stats as unskippable, so mixed writer configs stay correct)
+    // (readers treat absent stats — pre-stats logs — as unskippable)
     val (stats, rows) =
-      if (spark.conf.getOption("graft.txlog.stats").forall(_.toBoolean))
-        TxStats.collect(spark, root, parts.values.flatten.toSeq, dataSchema)
-      else (Map.empty: FileStats, Map.empty: FileRows)
+      TxStats.collect(spark, root, parts.values.flatten.toSeq, dataSchema)
     // the partition columns are TABLE metadata, not reader knowledge:
     // record name+type (in partition order) so readTable needs no
     // caller-supplied columns and a writer partitioning differently is
@@ -2574,22 +2484,21 @@ object TxLog {
           }
         }
       }
-      // a driver-shape "restore" commit is only foldable while the table
-      // is NOT parquet-checkpointed (its parts map re-references the full
-      // file list — exactly what foldBig refuses to driver-materialize).
+      // a driver-shape "restore" commit belongs on a table that is NOT
+      // parquet-checkpointed (its parts map re-references the full file
+      // list — exactly what the payload base keeps off the driver).
       // restoreTx's entry guard (snapshotAt dispatch) saw a non-payload
       // log, but a standalone maintenance checkpoint() can cross the
       // table to a parquet payload WITHOUT publishing a commit — the
       // version race below would never fire and the restore would land
-      // at chkVersion+1, making every subsequent fold throw. Re-check
-      // here, retryably: restoreTx's loop re-derives via snapshot(),
-      // which refuses payload tables loudly (and never discards the
-      // staging — restore parts re-reference LIVE committed files).
+      // at chkVersion+1, superseding the whole payload. Re-check here,
+      // retryably: restoreTx's loop re-derives via snapshot(), which
+      // refuses payload tables loudly (and never discards the staging —
+      // restore parts re-reference LIVE committed files).
       if (op == "restore" && staged.payloadChk.isEmpty)
-        chk.filter(_.payload.isDefined).foreach { c =>
+        for (c <- chk; _ <- c.payload)
           throw new ConcurrentWriteException(c.version,
             Seq("<checkpoint crossed to parquet payload>"))
-        }
       if (conflictCheck) {
         // a "meta" commit (mapping/constraint DDL) snapshots metadata
         // derived from its read — ANY concurrent commit invalidates that
@@ -2675,35 +2584,23 @@ object TxLog {
       // its commit would regress the recorded schema and drop the column
       // from every subsequent read. Old logs without schema records
       // impose no constraint (None).
-      // META-ONLY fold: the guards need schema/partSchema/partition
-      // VALUES, never the file list — so commits to a parquet-
-      // checkpointed table stay O(delta) driver work.
-      // _3 is a PREDICATE ("does the staged key set cover every live
-      // partition?") rather than the raw value set: above
-      // chkMaxHeaderValues partitions the set is not driver-resident and
-      // the cover test runs payload-side (one anti-join probe) — and
+      // The guards need schema/partSchema/partition VALUES, never the
+      // file list — so commits to a parquet-checkpointed table stay
+      // O(delta) driver work. `covers` asks "does the staged key set
+      // cover every live partition?" rather than reading the value set:
+      // above chkMaxHeaderValues partitions the set is not driver-resident
+      // and the cover test runs payload-side (one anti-join probe) — and
       // only the rare schema-change-by-full-overwrite path ever calls it
-      val current: (Option[String], Option[String], Set[String] => Boolean,
-                    Map[String, String]) =
-        chk match {
-          case Some(c) if c.payload.isDefined =>
-            val b = foldBig(c, commits)
-            val covered = (stagedKeys: Set[String]) => b.partValues match {
-              case Some(vs) => vs.subsetOf(stagedKeys)
-              case None =>
-                import spark.implicits._
-                payloadLiveDF(spark, root, b).select("part")
-                  .unionByName(b.deltaParts.keySet.toSeq.toDF("part"))
-                  .join(stagedKeys.toSeq.toDF("part"), Seq("part"),
-                    "left_anti")
-                  .isEmpty
-            }
-            (b.schema, b.partSchema, covered, b.mapping)
-          case _ =>
-            val s = fold(chk, commits)
-            (s.schema, s.partSchema,
-              (ks: Set[String]) => s.parts.keySet.subsetOf(ks), s.mapping)
-        }
+      val cur = fold(chk, commits)
+      def covers(stagedKeys: Set[String]): Boolean = cur.partValues match {
+        case Some(vs) => vs.subsetOf(stagedKeys)
+        case None =>
+          import spark.implicits._
+          payloadLiveDF(spark, root, cur.payload.get).select("part")
+            .unionByName(cur.parts.keySet.toSeq.toDF("part"))
+            .join(stagedKeys.toSeq.toDF("part"), Seq("part"), "left_anti")
+            .isEmpty
+      }
       // MAPPING-AWARE SANITIZER: a writer that staged BEFORE a concurrent
       // DROP COLUMN landed carries the dropped physical column in its
       // staged schema — recording it verbatim would resurrect the column
@@ -2713,7 +2610,7 @@ object TxLog {
       // never read. "meta" commits are exempt (dropColumnTx writes the
       // new tombstone and its subset schema in one commit).
       val stagedSchema = staged.schema.map { ss =>
-        val tombstoned = current._4.collect { case (p, "-") => p }.toSet
+        val tombstoned = cur.mapping.collect { case (p, "-") => p }.toSet
         // "restore" deliberately reinstates the target version's schema —
         // a currently-tombstoned column it carries is the RESURRECTION
         // the caller asked for (its mapping snapshot clears the tombstone)
@@ -2729,7 +2626,7 @@ object TxLog {
       // staging under a different partition column would scramble the
       // log's value→files semantics for every reader. Terminal (no
       // retry can fix the caller's layout), so staged files reclaim now.
-      for (cp <- current._2; sp <- staged.partSchema if cp != sp) {
+      for (cp <- cur.partSchema; sp <- staged.partSchema if cp != sp) {
         // NEVER discard a "restore" staging: its parts RE-REFERENCE live
         // committed files — discard would delete real table data
         if (op != "restore") discard(spark, root, staged)
@@ -2741,15 +2638,14 @@ object TxLog {
       // op "meta" is exempt: a DROP COLUMN deliberately records a SUBSET
       // schema — the guard exists for writers that silently lost a
       // column, not for explicit DDL
-      for (cs <- current._1; ss <- stagedSchema
+      for (cs <- cur.schema; ss <- stagedSchema
            if cs != ss && op != "meta" && op != "restore") {
         val curT = org.apache.spark.sql.types.StructType.fromDDL(cs)
         val stagedTypes = org.apache.spark.sql.types.StructType.fromDDL(ss)
           .map(f => f.name -> f.dataType).toMap
         val additive = curT.forall(f =>
           stagedTypes.get(f.name).contains(f.dataType))
-        val fullReplace = op == "overwrite" &&
-          current._3(staged.parts.keySet)
+        val fullReplace = op == "overwrite" && covers(staged.parts.keySet)
         if (!(additive || fullReplace)) {
           // TERMINAL refusal (unlike a conflict, no retry can fix a
           // writer that lost a column) — reclaim the staged files here
@@ -2769,7 +2665,7 @@ object TxLog {
       // the current order and APPEND genuinely new columns; only a
       // schema-changing full overwrite adopts the staged order verbatim.
       val recordSchema: Option[String] =
-        (current._1, stagedSchema) match {
+        (cur.schema, stagedSchema) match {
           case (Some(cs), Some(ss))
             if cs != ss && op != "meta" && op != "restore" =>
             val curT = org.apache.spark.sql.types.StructType.fromDDL(cs)
@@ -3177,13 +3073,13 @@ object TxLog {
       // conflicts and re-derives — the reverse order would let a stale
       // mapping snapshot clobber a racing rename without any conflict
       val state = stateOf(spark, root)
-      val v0 = state.fold(_.version, _.version)
+      val v0 = state.version
       val (mapping, existing) = writerMetaOf(spark, root)
       require(!existing.contains(name),
         s"addCheckConstraintTx: constraint [$name] already exists at $root")
-      if (stateNonEmpty(spark, root, state)) {
+      if (hasData(spark, root, state)) {
         val ps = partSchemaOf(state, root, "addCheckConstraintTx")
-        require(readState(spark, root, state, ps)
+        require(readSnapshot(spark, root, state, ps)
             .filter(not(coalesce(expr(exprStr), lit(true)))).isEmpty,
           s"addCheckConstraintTx: existing rows at $root violate [$name] " +
             s"($exprStr) — clean the data first")
@@ -3213,7 +3109,7 @@ object TxLog {
 
   /** Table properties in force (empty when none recorded). */
   def tableProperties(spark: SparkSession, root: String): Map[String, String] =
-    stateOf(spark, root).fold(_.props, _.props)
+    stateOf(spark, root).props
 
   /** Properties in force for an already-parsed log window (last
     * property-carrying commit wins; otherwise the checkpoint snapshot). */
@@ -3336,33 +3232,28 @@ object TxLog {
         if (staged0.parts.nonEmpty) discard(spark, root, staged0)) {
       val state =
         if (tableExists(spark, root)) Some(stateOf(spark, root)) else None
-      state match {
-        case Some(Right(big)) =>
+      val v0 = state.fold(0L)(_.version)
+      state.flatMap(_.payload) match {
+        case Some(_) =>
           // payload-shape replacement: the staged files ARE the new
           // inventory — one payload dir, one commit, O(new files) driver
-          val meta = statusByRel(spark, root,
-            staged0.parts.values.flatten.toSeq)
-          val rows = entryRows(root, staged0.parts, staged0.stats,
-            staged0.rows, meta, nPartsOf(staged0.partSchema), Map.empty)
-          import scala.jdk.CollectionConverters._
-          val pdf = spark.createDataFrame(rows.asJava, PayloadSchema)
-            .repartition(math.max(1, rows.size / 500000))
-          val name = writePayloadDir(spark, root, pdf, big.version + 1)
+          val (entries, (nfiles, bytes, _)) = entriesDF(spark, root,
+            Snapshot(v0, staged0.parts, stats = staged0.stats,
+              rows = staged0.rows, partSchema = staged0.partSchema))
+          val name = writePayloadDir(spark, root, entries, v0 + 1)
           val stagedP = Staged(Map.empty,
             schema = staged0.schema, partSchema = staged0.partSchema,
             mapping = Some(Map.empty), constraints = Some(Map.empty),
             props = Some(props),
-            payloadChk = Some((name, rows.size.toLong,
-              rows.iterator.map(_.getLong(2)).sum, 0L)))
+            payloadChk = Some((name, nfiles, bytes, 0L)))
           // payload-shape restores are version-strict by construction
           Attempt(() => commit(spark, root, stagedP, "restore",
-              readVersion = big.version, conflictCheck = true),
+              readVersion = v0, conflictCheck = true),
             // ours, referenced by nothing
             () => deletePayloadDir(spark, root, name))
-        case _ =>
-          val v0 = state.map(_.swap.toOption.get.version).getOrElse(0L)
-          val gone = state.map(_.swap.toOption.get.parts.keySet --
-            staged0.parts.keySet).getOrElse(Set.empty[String])
+        case None =>
+          val gone = state.fold(Set.empty[String])(
+            _.parts.keySet -- staged0.parts.keySet)
           val full = staged0.copy(
             parts = staged0.parts ++ gone.map(_ -> Seq.empty[String]),
             mapping = Some(Map.empty), constraints = Some(Map.empty),
@@ -3405,17 +3296,15 @@ object TxLog {
     * runs one payload distinct query — an O(partitions) driver answer an
     * explicit enumeration API cannot avoid. */
   def partitionValues(spark: SparkSession, root: String): Set[String] =
-    stateOf(spark, root).fold(_.parts.keySet,
-      bigPartValuesWhere(spark, root, _, _ => true).toSet)
+    partValuesWhere(spark, root, stateOf(spark, root), _ => true).toSet
 
   /** Transactional retention: drop every partition whose value fails
     * `keep` — the [[Warehouse.dropPartitionsWhere]] shape on a tx table.
     * Returns the partitions dropped (0 = nothing to do, no commit). */
   def dropPartitionsWhereTx(spark: SparkSession, root: String,
                             keep: String => Boolean): Int = {
-    val values = stateOf(spark, root).fold(_.parts.keySet.toSeq,
-      bigPartValuesWhere(spark, root, _, _ => true))
-    val doomed = values.filterNot(keep).sorted
+    val doomed = partValuesWhere(spark, root, stateOf(spark, root),
+      v => !keep(v)).sorted
     if (doomed.nonEmpty) removePartitionsTx(spark, root, doomed): Unit
     doomed.length
   }
@@ -3441,8 +3330,8 @@ object TxLog {
     // parquet-checkpointed tables restore by PAYLOAD REWRITE: the target
     // inventory is rebuilt distributedly (the file list never
     // driver-materializes) and the commit carries a payload pointer
-    // foldBig resets its baseline to
-    if (stateOf(spark, root).isRight)
+    // the fold resets its base to
+    if (stateOf(spark, root).payload.isDefined)
       return restorePayloadTx(spark, root, toVersion)
     val target = snapshotAt(spark, root, toVersion)
     require(target.parts.nonEmpty,
@@ -3480,10 +3369,10 @@ object TxLog {
   /** RESTORE on a parquet-checkpointed table — the payload-rewrite shape:
     * the target version's full inventory (files, stats, partition values,
     * deletion vectors) is rebuilt as ONE distributed job over the
-    * checkpoint payload plus the version-capped delta ([[bigEntriesDF]]),
+    * checkpoint payload plus the version-capped delta ([[entriesDF]]),
     * written as a fresh payload dir, and referenced by a parts-free
     * "restore" commit whose [[Commit.payloadChk]] pointer makes
-    * [[foldBig]] reset its baseline there. The driver never holds the
+    * [[fold]] reset its base there. The driver never holds the
     * file list. Same contracts as the driver-table restore: every target
     * file must still exist (checked DISTRIBUTEDLY — the vacuum horizon
     * bounds restorability), schema/mapping/constraints reinstate to the
@@ -3498,23 +3387,22 @@ object TxLog {
     import spark.implicits._
     retryOnConflict(root, "TxLog.restoreTx") {
       val (chk, commits) = readLog(spark, root)
+      val cur = fold(chk, commits)
       // the table UN-crossed? impossible (one-way); treat as driver
-      chk.filter(_.payload.isDefined).fold(
-          Attempt(() => restoreTx(spark, root, toVersion))) { c =>
-        require(toVersion >= c.version,
+      cur.payload.fold(Attempt(() => restoreTx(spark, root, toVersion))) { p =>
+        require(toVersion >= p.chkVersion,
           s"TxLog.restoreTx: version $toVersion predates the latest " +
-            s"parquet checkpoint (${c.version}) at $root — its file list " +
-            "is no longer enumerable; only checkpoint-or-later versions " +
-            "restore on a parquet-checkpointed table")
-        val cur = foldBig(c, commits)
-        val bt = foldBig(c, commits.filter(_.version <= toVersion))
+            s"parquet checkpoint (${p.chkVersion}) at $root — its file " +
+            "list is no longer enumerable; only checkpoint-or-later " +
+            "versions restore on a parquet-checkpointed table")
+        val bt = fold(chk, commits.filter(_.version <= toVersion))
         require(bt.version == toVersion,
           s"TxLog.restoreTx: version $toVersion was never committed at " +
             s"$root (log ends at ${bt.version} for that prefix)")
-        require(bigNonEmpty(spark, root, bt),
+        require(hasData(spark, root, bt),
           s"TxLog.restoreTx: version $toVersion of $root is empty — " +
             "nothing to restore to")
-        val entries = bigEntriesDF(spark, root, bt)
+        val (entries, _) = entriesDF(spark, root, bt)
         // DISTRIBUTED existence probe over data files + dv sidecars: the
         // driver sees one integer, never the list
         val conf = new org.apache.spark.SerializableWritable(
@@ -3539,15 +3427,13 @@ object TxLog {
             s"at $root are already vacuumed — that version is no longer " +
             "restorable; retain a longer vacuum window to restore that far")
         val name = writePayloadDir(spark, root, entries, cur.version + 1)
-        val agg = spark.read.parquet(s"$root/_txlog/$name")
-          .agg(count(lit(1)), coalesce(sum("size"), lit(0L)),
-            count(col("dvfiles"))).head
+        val (nfiles, bytes, ndvs) =
+          payloadFacts(spark.read.parquet(s"$root/_txlog/$name"))
         val staged = Staged(Map.empty,
           schema = bt.schema, partSchema = bt.partSchema,
           mapping = Some(bt.mapping), constraints = Some(bt.constraints),
           props = Some(bt.props),
-          payloadChk = Some((name, agg.getLong(0), agg.getLong(1),
-            agg.getLong(2))))
+          payloadChk = Some((name, nfiles, bytes, ndvs)))
         Attempt(() => commit(spark, root, staged, "restore",
             readVersion = cur.version, conflictCheck = true),
           // OUR payload dir (freshly written, referenced by nothing) —
@@ -3598,43 +3484,32 @@ object TxLog {
       // the table's RECORDED partition schema (N columns) drives the read
       // and restage; the caller's (partCol, partType) covers legacy logs.
       // On a multi-column table `select` sees the composite key.
-      val ps = state.fold(_.partSchema, _.partSchema)
+      val ps = state.partSchema
         .map(org.apache.spark.sql.types.StructType.fromDDL)
         .getOrElse(singleCol(partCol, partType))
       // selected partitions' files only — on a parquet-checkpointed table
-      // this is one payload query bounded by the SELECTION, never a full
-      // driver fold (the maintenance contract: partition-scoped rewrites)
-      val (version, sel, selSnap) = state match {
-        case Left(snap) =>
-          val s = snap.parts.filter { case (v, _) => select(v) }
-          val selFiles = s.valuesIterator.flatten.toSet
-          // the dv-filtered read MATERIALIZES deletion vectors: the
-          // rewrite restages only live rows, and the dv entries die with
-          // their replaced files in the fold
-          (snap.version, s, snap.copy(parts = s,
-            dvs = snap.dvs.filter { case (f, _) => selFiles(f) }))
-        case Right(big) =>
-          val values = bigPartValuesWhere(spark, root, big, select)
-          val payloadSel =
-            if (values.isEmpty) Map.empty[String, Seq[String]]
-            else payloadLiveDF(spark, root, big)
-              .filter(col("part").isin(values: _*))
-              .select("part", "file").collect()
-              .groupBy(_.getString(0))
-              .map { case (v, xs) => v -> xs.map(_.getString(1)).toSeq }
-          val deltaSel = big.deltaParts.filter { case (v, _) => select(v) }
-          val merged = (payloadSel.keySet ++ deltaSel.keySet).map { v =>
-            v -> (payloadSel.getOrElse(v, Seq.empty) ++
-              deltaSel.getOrElse(v, Seq.empty))
-          }.toMap
-          (big.version, merged,
-            Snapshot(big.version, merged, big.schema, big.deltaStats,
-              big.deltaRows, big.partSchema, big.mapping,
-              dvs = bigDvsFor(spark, root, big,
-                merged.valuesIterator.flatten.toSet)))
+      // the payload's are one payload query bounded by the SELECTION,
+      // never a full driver fold (the maintenance contract:
+      // partition-scoped rewrites)
+      val own = state.parts.filter { case (v, _) => select(v) }
+      val sel = state.payload.fold(own) { p =>
+        val values = partValuesWhere(spark, root, state, select)
+        val fromPayload =
+          if (values.isEmpty) Map.empty[String, Seq[String]]
+          else payloadLiveDF(spark, root, p)
+            .filter(col("part").isin(values: _*))
+            .select("part", "file").collect()
+            .groupBy(_.getString(0))
+            .map { case (v, xs) => v -> xs.map(_.getString(1)).toSeq }
+        unionParts(fromPayload, own)
       }
       require(sel.nonEmpty,
         s"TxLog.readModifyWriteWhere: no partition at $root passes select")
+      // the dv-filtered read MATERIALIZES deletion vectors: the rewrite
+      // restages only live rows, and the dv entries die with their
+      // replaced files in the fold
+      val selSnap = filesSnapshot(spark, root, state, sel)
+        .copy(stats = state.stats, rows = state.rows)
       val staged = stage(
         transform(readSnapshot(spark, root, selSnap, ps)),
         root, ps.map(_.name), clusterBy, clusterFiles)
@@ -3646,7 +3521,7 @@ object TxLog {
           "rewrite the partitions it was given")
       }
       Attempt(() => commit(spark, root, staged, "overwrite",
-          readVersion = version, conflictCheck = true),
+          readVersion = state.version, conflictCheck = true),
         () => discard(spark, root, staged))
     }
 
@@ -3719,65 +3594,49 @@ object TxLog {
         "deletion-vector rewrite policy)")
     def attempt(): Attempt[(Long, Int)] = {
       val state = stateOf(spark, root)
-      val version = state.fold(_.version, _.version)
-      val ps = state.fold(_.partSchema, _.partSchema)
+      val version = state.version
+      val ps = state.partSchema
         .map(org.apache.spark.sql.types.StructType.fromDDL)
         .getOrElse(singleCol(partCol, partType))
       // selected partitions' file facts — (size, rows, deleted-rows):
-      // grouped driver listings + recorded counts on a driver-resident
-      // table, ONE payload query on a parquet-checkpointed one — never
-      // a full-table driver fold
-      val sized: Map[String, Seq[(String, Long, Option[Long], Long)]] =
-        state match {
-          case Left(snap) =>
-            val sel = snap.parts.filter { case (v, _) => select(v) }
-            val meta = statusByRel(spark, root, sel.values.flatten.toSeq)
-            sel.map { case (v, fs) =>
-              v -> fs.map(f => (f, meta.getOrElse(f, sys.error(
-                s"TxLog.compactBinPackTx: live file $f missing under " +
-                  root))._1,
-                snap.rows.get(f),
-                snap.dvs.get(f).map(_._2).getOrElse(0L)))
-            }
-          case Right(big) =>
-            val values = bigPartValuesWhere(spark, root, big, select)
-            val hasDvCols = payloadLiveDF(spark, root, big).columns
-              .contains("dvrows")
-            val payloadSel =
-              if (values.isEmpty)
-                Map.empty[String, Seq[(String, Long, Option[Long], Long)]]
-              else payloadLiveDF(spark, root, big)
-                .filter(col("part").isin(values: _*))
-                .select(col("part"), col("file"), col("size"), col("rows"),
-                  if (hasDvCols) coalesce(col("dvrows"), lit(0L))
-                  else lit(0L))
-                .collect()
-                .groupBy(_.getString(0))
-                .map { case (v, xs) =>
-                  v -> xs.map { r =>
-                    val f = r.getString(1)
-                    // a post-checkpoint dv commit overrides the payload's
-                    // recorded vector for its files (cumulative)
-                    val del = big.dvDelta.get(f).map(_._2)
-                      .getOrElse(r.getLong(4))
-                    (f, r.getLong(2),
-                      if (r.isNullAt(3)) None else Some(r.getLong(3)), del)
-                  }.toSeq }
-            val deltaMeta = statusByRel(spark, root,
-              big.deltaParts.filter(kv => select(kv._1))
-                .values.flatten.toSeq)
-            val deltaSel = big.deltaParts.filter(kv => select(kv._1))
-              .map { case (v, fs) => v -> fs.map(f =>
-                (f, deltaMeta.getOrElse(f, sys.error(
-                  s"TxLog.compactBinPackTx: live file $f missing under " +
-                    root))._1,
-                  big.deltaRows.get(f),
-                  big.dvDelta.get(f).map(_._2).getOrElse(0L))) }
-            (payloadSel.keySet ++ deltaSel.keySet).map { v =>
-              v -> (payloadSel.getOrElse(v, Seq.empty) ++
-                deltaSel.getOrElse(v, Seq.empty))
-            }.toMap
-        }
+      // grouped driver listings + recorded counts for the driver-side
+      // files, ONE payload query for a payload's — never a full-table
+      // driver fold
+      val own = state.parts.filter { case (v, _) => select(v) }
+      val meta = statusByRel(spark, root, own.values.flatten.toSeq)
+      val ownSized = own.map { case (v, fs) =>
+        v -> fs.map(f => (f, meta.getOrElse(f, sys.error(
+          s"TxLog.compactBinPackTx: live file $f missing under " +
+            root))._1,
+          state.rows.get(f),
+          state.dvs.get(f).map(_._2).getOrElse(0L)))
+      }
+      val sized = state.payload.fold(ownSized) { p =>
+        val values = partValuesWhere(spark, root, state, select)
+        val hasDvCols = payloadLiveDF(spark, root, p).columns
+          .contains("dvrows")
+        val fromPayload =
+          if (values.isEmpty)
+            Map.empty[String, Seq[(String, Long, Option[Long], Long)]]
+          else payloadLiveDF(spark, root, p)
+            .filter(col("part").isin(values: _*))
+            .select(col("part"), col("file"), col("size"), col("rows"),
+              if (hasDvCols) coalesce(col("dvrows"), lit(0L))
+              else lit(0L))
+            .collect()
+            .groupBy(_.getString(0))
+            .map { case (v, xs) =>
+              v -> xs.map { r =>
+                val f = r.getString(1)
+                // a post-checkpoint dv commit overrides the payload's
+                // recorded vector for its files (cumulative)
+                val del = state.dvs.get(f).map(_._2)
+                  .getOrElse(r.getLong(4))
+                (f, r.getLong(2),
+                  if (r.isNullAt(3)) None else Some(r.getLong(3)), del)
+              }.toSeq }
+        unionParts(fromPayload, ownSized)
+      }
       // two rewrite reasons, one rewrite: (a) small files bin-pack when
       // at least minFiles share a partition; (b) a file whose DELETED
       // FRACTION crosses dvFraction rewrites REGARDLESS of count — the
@@ -3845,8 +3704,8 @@ object TxLog {
         "wrap Long shifts and silently collide bit positions")
     require(files > 0, "compactZorderTx: files must be positive")
     val zState = stateOf(spark, root)
-    val df = readState(spark, root, zState,
-      zState.fold(_.partSchema, _.partSchema)
+    val df = readSnapshot(spark, root, zState,
+      zState.partSchema
         .map(org.apache.spark.sql.types.StructType.fromDDL)
         .getOrElse(singleCol(partCol, partType)))
     zorderBy.foreach { c =>
@@ -3938,15 +3797,15 @@ object TxLog {
                     changeFeed: Boolean = false): (Long, Int) = {
     def attempt(): Attempt[(Long, Int)] = {
       val state = stateOf(spark, root)
-      val version = state.fold(_.version, _.version)
-      if (!stateNonEmpty(spark, root, state))
+      val version = state.version
+      if (!hasData(spark, root, state))
         return Attempt(() => (version, 0))
-      val ps = state.fold(_.partSchema, _.partSchema)
+      val ps = state.partSchema
         .map(org.apache.spark.sql.types.StructType.fromDDL)
         .getOrElse(sys.error(s"TxLog.deleteWhereTx: the log at $root " +
           "predates partition-column recording"))
       val cands = candidatesOf(
-        readState(spark, root, state, ps), cond, ps.map(_.name))
+        readSnapshot(spark, root, state, ps), cond, ps.map(_.name))
       if (cands.isEmpty) return Attempt(() => (version, 0))
       // candidates are O(matching files) — a bounded driver-side read
       // even when the table itself is parquet-checkpointed. Deletion
@@ -3993,8 +3852,8 @@ object TxLog {
     require(sets.nonEmpty, "updateWhereTx: no SET expressions")
     def attempt(): Attempt[(Long, Int)] = {
       val state = stateOf(spark, root)
-      val version = state.fold(_.version, _.version)
-      if (!stateNonEmpty(spark, root, state))
+      val version = state.version
+      if (!hasData(spark, root, state))
         return Attempt(() => (version, 0))
       val ps = partSchemaOf(state, root, "updateWhereTx")
       sets.keys.foreach { k =>
@@ -4004,7 +3863,7 @@ object TxLog {
             "across them")
       }
       val cands = candidatesOf(
-        readState(spark, root, state, ps), cond, ps.map(_.name))
+        readSnapshot(spark, root, state, ps), cond, ps.map(_.name))
       if (cands.isEmpty) return Attempt(() => (version, 0))
       val candSnap = filesSnapshot(spark, root, state, cands)
       val candRead = readSnapshot(spark, root, candSnap, ps)
@@ -4059,21 +3918,17 @@ object TxLog {
                       changeFeed: Boolean = false): (Long, Long) = {
     def attempt(): Attempt[(Long, Long)] = {
       val state = stateOf(spark, root)
-      val version = state.fold(_.version, _.version)
-      if (!stateNonEmpty(spark, root, state))
+      val version = state.version
+      if (!hasData(spark, root, state))
         return Attempt(() => (version, 0L))
       val ps = partSchemaOf(state, root, "deleteWhereDvTx")
       // candidate search: stats pruning decides FILES, and the dv
-      // anti-join can only shrink rows within them — the driver path
-      // uses the simpler dv-less plan; the payload path runs the scan's
-      // own distributed pruning job
-      val cands = state match {
-        case Left(snap) => candidatesOf(
-          readSnapshot(spark, root, snap.copy(dvs = Map.empty), ps),
-          cond, ps.map(_.name))
-        case Right(_) => candidatesOf(
-          readState(spark, root, state, ps), cond, ps.map(_.name))
-      }
+      // anti-join can only shrink rows within them — so the search reads
+      // without the state's own vectors (a payload's pruning still runs
+      // as the scan's distributed job)
+      val cands = candidatesOf(
+        readSnapshot(spark, root, state.copy(dvs = Map.empty), ps),
+        cond, ps.map(_.name))
       if (cands.isEmpty) return Attempt(() => (version, 0L))
       val candFiles = cands.valuesIterator.flatten.toSet
       // effective prior vectors for the candidates: driver state on a
@@ -4151,75 +4006,97 @@ object TxLog {
     retryOnConflict(root, "TxLog.deleteWhereDvTx")(attempt())
   }
 
+  /** Per-source-partition bounds of `key` as (partition key, min, max) in
+    * Catalyst's internal representation — what `groupBy(partition
+    * columns).agg(min(key), max(key))` answers (NULL keys ignored; a
+    * partition whose keys are all NULL bounds at (null, null)), in ONE
+    * job and without that aggregate's shuffle: each task folds its rows
+    * into a per-partition (min, max) under Spark's ordering for the key
+    * type, and the driver merges the per-task maps. */
+  private def keyBounds(source: DataFrame, ps: org.apache.spark.sql.types.StructType,
+                        key: String): Seq[(String, Any, Any)] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.types.PhysicalDataType
+    val nP = ps.length
+    val keyType = source.schema(key).dataType
+    val perTask = source
+      .select(ps.map(f => col(f.name).cast(StringType)).toSeq :+ col(key): _*)
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        val ord = PhysicalDataType.ordering(keyType)
+        val m = scala.collection.mutable.HashMap.empty[Seq[String], (Any, Any)]
+        rows.foreach { r =>
+          val pv = (0 until nP).map(i =>
+            if (r.isNullAt(i)) null else r.getUTF8String(i).toString)
+          val k =
+            if (r.isNullAt(nP)) null else InternalRow.copyValue(r.get(nP, keyType))
+          m(pv) = widenBounds(ord, m.getOrElse(pv, (null, null)), (k, k))
+        }
+        Iterator.single(m.toMap)
+      }.collect()
+    val ord = PhysicalDataType.ordering(keyType)
+    perTask.foldLeft(Map.empty[Seq[String], (Any, Any)]) { (acc, m) =>
+      m.foldLeft(acc) { case (a, (pv, b)) =>
+        a.updated(pv, widenBounds(ord, a.getOrElse(pv, (null, null)), b))
+      }
+    }.toSeq.map { case (pv, (lo, hi)) => (renderPartKey(pv), lo, hi) }
+  }
+
+  /** The union of two (min, max) key ranges; (null, null) is empty. */
+  private def widenBounds(ord: Ordering[Any], a: (Any, Any),
+                          b: (Any, Any)): (Any, Any) =
+    if (a._1 == null) b
+    else if (b._1 == null) a
+    else (ord.min(a._1, b._1), ord.max(a._2, b._2))
+
   /** Candidate files of a keyed merge plus their DV-filtered read: per
     * source partition, the live files whose recorded `key` range
     * overlaps the source's key bounds (per-file stats skipping on the
-    * driver state, ONE distributed payload job on a parquet-checkpointed
-    * table). The front half of [[mergeTx]]. */
+    * driver-side files, ONE distributed job over a payload). The front
+    * half of [[mergeTx]]. */
   private def mergeCandidateRead(spark: SparkSession, root: String,
-                                 state: Either[Snapshot, BigState],
+                                 state: Snapshot,
                                  source: DataFrame, key: String,
                                  ps: org.apache.spark.sql.types.StructType)
       : (Map[String, Seq[String]], Option[DataFrame]) = {
-    val nP = ps.length
     val keyType = source.schema(key).dataType
     // per-source-partition key bounds: O(source partitions) driver rows
     // (all N partition columns cast to their raw-string key segments)
-    val bounds = source
-      .groupBy(ps.map(f => col(f.name).cast(StringType)).toSeq: _*)
-      .agg(min(col(key)).as("__mn"), max(col(key)).as("__mx")).collect()
-    def pvOf(r: org.apache.spark.sql.Row): String =
-      renderPartKey((0 until nP).map(r.getString))
+    val bounds = keyBounds(source, ps, key)
     // recorded file stats are keyed by PHYSICAL column names — a
     // renamed merge key translates so skipping keeps bounding the
     // candidate set
-    val physKey = state.fold(_.mapping, _.mapping)
+    val physKey = state.mapping
       .collectFirst { case (p, l) if l == key => p }.getOrElse(key)
     val attr = org.apache.spark.sql.catalyst.expressions
       .AttributeReference(physKey, keyType)()
     // keep a file unless its stats prove [fileMin,fileMax] and the
     // source bounds [mn,mx] are disjoint: "might a row satisfy
     // key >= mn AND key <= mx" is exactly range overlap
-    def overlapExprs(r: org.apache.spark.sql.Row)
+    def overlapExprs(mn: Any, mx: Any)
         : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
       Seq(org.apache.spark.sql.catalyst.expressions.GreaterThanOrEqual(
-            attr, org.apache.spark.sql.catalyst.expressions.Literal
-              .create(r.get(nP), keyType)),
+            attr, org.apache.spark.sql.catalyst.expressions.Literal(mn, keyType)),
           org.apache.spark.sql.catalyst.expressions.LessThanOrEqual(
-            attr, org.apache.spark.sql.catalyst.expressions.Literal
-              .create(r.get(nP + 1), keyType)))
-    val cands: Map[String, Seq[String]] = state match {
-      case Left(snap) =>
-        bounds.flatMap { r =>
-          val pv = pvOf(r)
-          val fs = snap.parts.getOrElse(pv, Seq.empty).filter { f =>
-            snap.stats.get(f).forall(TxStats.mightMatch(overlapExprs(r), _))
-          }
-          if (fs.isEmpty) None else Some(pv -> fs)
-        }.toMap
-      case Right(big) =>
-        // ONE distributed candidate job over the payload: OR over the
-        // per-partition (part = v AND key-range-overlap) predicates
-        val payloadPred = bounds.map { r =>
-          (col("part") === pvOf(r)) &&
-            TxStats.mightMatchColumn(overlapExprs(r), col("stats"))
-        }.reduceOption(_ || _).getOrElse(lit(false))
-        val fromPayload = payloadLiveDF(spark, root, big)
-          .filter(payloadPred).select("part", "file").collect()
-          .groupBy(_.getString(0))
-          .map { case (v, xs) => v -> xs.map(_.getString(1)).toSeq }
-        val fromDelta = bounds.flatMap { r =>
-          val pv = pvOf(r)
-          val fs = big.deltaParts.getOrElse(pv, Seq.empty).filter { f =>
-            big.deltaStats.get(f)
-              .forall(TxStats.mightMatch(overlapExprs(r), _))
-          }
-          if (fs.isEmpty) None else Some(pv -> fs)
-        }.toMap
-        (fromPayload.keySet ++ fromDelta.keySet).map { v =>
-          v -> (fromPayload.getOrElse(v, Seq.empty) ++
-            fromDelta.getOrElse(v, Seq.empty))
-        }.toMap
+            attr, org.apache.spark.sql.catalyst.expressions.Literal(mx, keyType)))
+    val own = bounds.flatMap { case (pv, mn, mx) =>
+      val fs = state.parts.getOrElse(pv, Seq.empty).filter { f =>
+        state.stats.get(f).forall(TxStats.mightMatch(overlapExprs(mn, mx), _))
+      }
+      if (fs.isEmpty) None else Some(pv -> fs)
+    }.toMap
+    val cands = state.payload.fold(own) { p =>
+      // ONE distributed candidate job over the payload: OR over the
+      // per-partition (part = v AND key-range-overlap) predicates
+      val payloadPred = bounds.map { case (pv, mn, mx) =>
+        (col("part") === pv) &&
+          TxStats.mightMatchColumn(overlapExprs(mn, mx), col("stats"))
+      }.reduceOption(_ || _).getOrElse(lit(false))
+      val fromPayload = payloadLiveDF(spark, root, p)
+        .filter(payloadPred).select("part", "file").collect()
+        .groupBy(_.getString(0))
+        .map { case (v, xs) => v -> xs.map(_.getString(1)).toSeq }
+      unionParts(fromPayload, own)
     }
     val candRead =
       if (cands.isEmpty) None
@@ -4347,11 +4224,11 @@ object TxLog {
       s"$who: only the final whenNotMatched clause may omit its condition")
     def attempt(): Attempt[Long] = {
       val state = stateOf(spark, root)
-      val version = state.fold(_.version, _.version)
-      require(stateNonEmpty(spark, root, state),
+      val version = state.version
+      require(hasData(spark, root, state),
         s"TxLog.$who: table at $root is empty — append the seed batch " +
           "instead")
-      val ps = state.fold(_.partSchema, _.partSchema)
+      val ps = state.partSchema
         .map(org.apache.spark.sql.types.StructType.fromDDL)
         .getOrElse(sys.error(s"TxLog.$who: the log at $root predates " +
           "partition-column recording"))
@@ -4618,57 +4495,51 @@ object TxLog {
   /** Table-level operational facts — the Delta DESCRIBE DETAIL move:
     * ONE row (version, representation, file/partition/byte tallies,
     * deleted-row count, schema-evolution and constraint inventory) with
-    * ZERO data-file scans on either representation: a driver table costs
-    * grouped dir listings, a parquet-checkpointed one a single metadata
-    * job over the payload. */
+    * ZERO data-file scans on either representation: the driver-side
+    * files cost grouped dir listings, a payload a single metadata job. */
   def tableDetail(spark: SparkSession, root: String): DataFrame = {
     val state = stateOf(spark, root)
-    val (repr, nFiles, nParts, bytes, dvRows) = state match {
-      case Left(snap) =>
-        val files = snap.parts.values.flatten.toSeq
-        val meta = statusByRel(spark, root, files)
-        ("inline", files.size.toLong, snap.parts.size.toLong,
-          files.flatMap(meta.get).map(_._1).sum,
-          snap.dvs.valuesIterator.map(_._2).sum)
-      case Right(big) =>
-        val hasDv = payloadLiveDF(spark, root, big).columns
-          .contains("dvfiles")
-        val agg = payloadLiveDF(spark, root, big).agg(
+    val files = state.parts.values.flatten.toSeq
+    val meta = statusByRel(spark, root, files)
+    // a payload's (files, bytes, deleted rows): one aggregate over its
+    // live rows, a vector the delta overrides counted once (its payload
+    // dvrows excluded by a bounded lookup, the override counted below)
+    val (payloadFiles, payloadBytes, payloadDvRows) =
+      state.payload.fold((0L, 0L, 0L)) { p =>
+        val hasDv = payloadLiveDF(spark, root, p).columns.contains("dvfiles")
+        val agg = payloadLiveDF(spark, root, p).agg(
           count(lit(1)), coalesce(sum("size"), lit(0L)),
           if (hasDv) coalesce(sum("dvrows"), lit(0L)) else lit(0L)).head
-        val ovAdj = big.dvDelta.valuesIterator.map(_._2).sum
-        // overridden payload vectors are counted once: exclude their
-        // payload dvrows, count the override (bounded lookup)
-        val ovPayload =
-          if (big.dvDelta.isEmpty || !hasDv) 0L
-          else payloadLiveDF(spark, root, big)
-            .filter(col("file").isin(big.dvDelta.keySet.toSeq: _*))
+        val overridden =
+          if (state.dvs.isEmpty || !hasDv) 0L
+          else payloadLiveDF(spark, root, p)
+            .filter(col("file").isin(state.dvs.keySet.toSeq: _*))
             .agg(coalesce(sum("dvrows"), lit(0L))).head.getLong(0)
-        ("parquet-checkpoint",
-          agg.getLong(0) + big.deltaParts.valuesIterator.map(_.size).sum,
-          big.partValues.map(_.size.toLong).getOrElse {
-            // header omitted the value set (above chkMaxHeaderValues):
-            // one metadata-payload distinct count, delta keys unioned in
-            import spark.implicits._
-            payloadLiveDF(spark, root, big).select("part")
-              .unionByName(big.deltaParts.keySet.toSeq.toDF("part"))
-              .distinct().count()
-          },
-          agg.getLong(1),
-          agg.getLong(2) - ovPayload + ovAdj)
+        (agg.getLong(0), agg.getLong(1), agg.getLong(2) - overridden)
+      }
+    val nParts = state.partValues.map(_.size.toLong).getOrElse {
+      // header omitted the value set (above chkMaxHeaderValues): one
+      // metadata-payload distinct count, delta keys unioned in
+      import spark.implicits._
+      payloadLiveDF(spark, root, state.payload.get).select("part")
+        .unionByName(state.parts.keySet.toSeq.toDF("part"))
+        .distinct().count()
     }
-    val mapping = state.fold(_.mapping, _.mapping)
+    val mapping = state.mapping
     val rows = Seq(org.apache.spark.sql.Row(
-      state.fold(_.version, _.version), repr,
-      state.fold(_.partSchema, _.partSchema).orNull,
-      nParts, nFiles, bytes, dvRows,
+      state.version,
+      if (state.payload.isDefined) "parquet-checkpoint" else "inline",
+      state.partSchema.orNull,
+      nParts, files.size + payloadFiles,
+      files.flatMap(meta.get).map(_._1).sum + payloadBytes,
+      state.dvs.valuesIterator.map(_._2).sum + payloadDvRows,
       mapping.count(_._2 != "-").toLong,
       mapping.count(_._2 == "-").toLong,
-      state.fold(_.constraints, _.constraints).size.toLong,
-      state.fold(_.schema, _.schema).orNull,
+      state.constraints.size.toLong,
+      state.schema.orNull,
       // canonical sorted k=v rendering (NULL when none) — the recorded
       // operational policy, visible where an operator looks first
-      Option(state.fold(_.props, _.props)).filter(_.nonEmpty)
+      Option(state.props).filter(_.nonEmpty)
         .map(_.toSeq.sorted.map { case (k, v) => s"$k=$v" }
           .mkString(", ")).orNull))
     import scala.jdk.CollectionConverters._
@@ -4725,25 +4596,19 @@ object TxLog {
     val writers = chk.map(_.writers).getOrElse(Map.empty) ++
       commits.flatMap(c => c.writerSeq.map { case (w, s) =>
         w -> (s, c.version) }).toMap
-    chk match {
-      case Some(c) if c.payload.isDefined =>
-        // parquet-checkpointed already: fold the delta INTO a new payload
-        // with one Spark job (filter dead payload rows, union delta
-        // entries) — the driver never holds the file list
-        if (commits.nonEmpty)
-          writeChkV2FromBig(spark, root, foldBig(c, commits), batchIds,
-            writers, sealedL)
-      case _ =>
-        val snap = fold(chk, commits)
-        val nf = snap.parts.valuesIterator.map(_.size).sum
-        if (nf < chkParquetMin(spark))
-          tryPublishNamed(spark, root, f"c$version%020d.chk",
-            renderChk(snap.parts, batchIds, snap.schema, snap.stats,
-              snap.rows, snap.partSchema, writers, snap.mapping,
-              snap.dvs, snap.constraints, sealedL, snap.props)): Unit
-        else writeChkV2FromSnap(spark, root, snap, batchIds, writers,
-          sealedL)
-    }
+    val snap = fold(chk, commits)
+    if (snap.payload.isDefined) {
+      // parquet-checkpointed already: fold the delta INTO a new payload
+      // with one Spark job (filter dead payload rows, union delta
+      // entries) — the driver never holds the file list
+      if (commits.nonEmpty)
+        writeChkV2(spark, root, snap, batchIds, writers, sealedL)
+    } else if (snap.parts.valuesIterator.map(_.size).sum < chkParquetMin(spark))
+      tryPublishNamed(spark, root, f"c$version%020d.chk",
+        renderChk(snap.parts, batchIds, snap.schema, snap.stats,
+          snap.rows, snap.partSchema, writers, snap.mapping,
+          snap.dvs, snap.constraints, sealedL, snap.props)): Unit
+    else writeChkV2(spark, root, snap, batchIds, writers, sealedL)
     version
   }
 
@@ -4902,160 +4767,149 @@ object TxLog {
     partSchema.map(org.apache.spark.sql.types.StructType.fromDDL(_).length)
       .getOrElse(1)
 
-  private def writeChkV2FromSnap(spark: SparkSession, root: String,
-                                 snap: Snapshot,
-                                 batchIds: Set[String],
-                                 writers: Map[String, (Long, Long)],
-                                 sealedLedger: Boolean = false): Unit = {
-    val meta = statusByRel(spark, root, snap.parts.values.flatten.toSeq)
-    val rows = entryRows(root, snap.parts, snap.stats, snap.rows, meta,
-      nPartsOf(snap.partSchema), snap.dvs)
-    import scala.jdk.CollectionConverters._
-    val df = spark.createDataFrame(rows.asJava, PayloadSchema)
-      .repartition(math.max(1, rows.size / 500000))
-    val name = writePayloadDir(spark, root, df, snap.version)
-    val bytes = rows.iterator.map(_.getLong(2)).sum
-    val values =
-      if (snap.parts.size > chkMaxHeaderValues(spark)) None
-      else Some(snap.parts.keySet)
-    val won = tryPublishNamed(spark, root, f"c${snap.version}%020d.chk",
-      renderChkV2(name, values, batchIds, snap.schema,
-        snap.partSchema, rows.size.toLong, bytes, writers, snap.mapping,
-        snap.constraints, ndvs = snap.dvs.size.toLong,
-        sealedLedger = sealedLedger, props = snap.props))
-    if (!won) deletePayloadDir(spark, root, name)
-  }
-
-  /** Live partition values of a parquet-checkpointed table passing
-    * `select`. FREE when the checkpoint header carries the value set
-    * (≤ [[chkMaxHeaderValues]] partitions); an omitted header derives
-    * them with ONE payload distinct query, streamed through
-    * `toLocalIterator` so driver memory is O(passing values), never
-    * O(partitions). */
-  private def bigPartValuesWhere(spark: SparkSession, root: String,
-                                 big: BigState,
-                                 select: String => Boolean): Seq[String] =
-    big.partValues match {
+  /** Live partition values of `snap` passing `select`. FREE when the
+    * driver holds the value set (a driver table's keys, or a checkpoint
+    * header carrying it — ≤ [[chkMaxHeaderValues]] partitions); an
+    * omitted header derives them with ONE payload distinct query,
+    * streamed through `toLocalIterator` so driver memory is O(passing
+    * values), never O(partitions). */
+  private def partValuesWhere(spark: SparkSession, root: String,
+                              snap: Snapshot,
+                              select: String => Boolean): Seq[String] =
+    snap.partValues match {
       case Some(vs) => vs.filter(select).toSeq
       case None =>
         val out = Seq.newBuilder[String]
-        val it = payloadLiveDF(spark, root, big)
+        val it = payloadLiveDF(spark, root, snap.payload.get)
           .select("part").distinct().toLocalIterator()
         while (it.hasNext) {
           val v = it.next().getString(0)
           if (select(v)) out += v
         }
-        (out.result() ++ big.deltaParts.keys.filter(select)).distinct
+        (out.result() ++ snap.parts.keys.filter(select)).distinct
     }
 
-  /** Table-has-live-rows test that works when the header's value set is
-    * omitted: the delta answers driver-side, the payload with a LIMIT-1
-    * probe. */
-  private def bigNonEmpty(spark: SparkSession, root: String,
-                          big: BigState): Boolean =
-    big.partValues match {
+  /** Whether `snap` holds live files — answered driver-side unless the
+    * header's value set is omitted, then by a LIMIT-1 payload probe. */
+  private def hasData(spark: SparkSession, root: String,
+                      snap: Snapshot): Boolean =
+    snap.partValues match {
       case Some(vs) => vs.nonEmpty
-      case None => big.deltaParts.nonEmpty ||
-        !payloadLiveDF(spark, root, big).isEmpty
+      case None => snap.parts.nonEmpty ||
+        !payloadLiveDF(spark, root, snap.payload.get).isEmpty
     }
-
-  private def stateNonEmpty(spark: SparkSession, root: String,
-                            state: Either[Snapshot, BigState]): Boolean =
-    state.fold(_.parts.nonEmpty, bigNonEmpty(spark, root, _))
 
   /** Whether the table holds any committed data (false for a table that
     * exists only as a [[createTableTx]] create commit). */
   private[graft] def hasData(spark: SparkSession, root: String): Boolean =
-    stateNonEmpty(spark, root, stateOf(spark, root))
+    hasData(spark, root, stateOf(spark, root))
 
+  /** The payload's LIVE rows: the rows the delta masks filtered out. */
   private[sources] def payloadLiveDF(spark: SparkSession, root: String,
-                                     big: BigState): DataFrame = {
-    var df = spark.read.parquet(s"$root/_txlog/${big.payload}")
+                                     p: Payload): DataFrame = {
+    var df = spark.read.parquet(s"$root/_txlog/${p.dir}")
     // a driver-shape restore superseded the payload: serve its SCHEMA
     // with zero rows (the restore's inventory lives in the delta)
-    if (big.payloadDead) return df.filter(lit(false))
-    if (big.removedParts.nonEmpty)
-      df = df.filter(not(col("part").isin(big.removedParts.toSeq: _*)))
-    if (big.removedFiles.nonEmpty)
-      df = df.filter(not(col("file").isin(big.removedFiles.toSeq: _*)))
+    if (p.dead) return df.filter(lit(false))
+    if (p.removedParts.nonEmpty)
+      df = df.filter(not(col("part").isin(p.removedParts.toSeq: _*)))
+    if (p.removedFiles.nonEmpty)
+      df = df.filter(not(col("file").isin(p.removedFiles.toSeq: _*)))
     df
   }
 
-  /** Materialize a [[BigState]] as ONE payload-shaped DataFrame (the
-    * full 9-column live inventory): prior payload filtered by the
-    * removal sets, legacy-payload columns normalized, post-checkpoint
-    * dv overrides folded in, delta entries unioned. Shared by
-    * [[writeChkV2FromBig]] (checkpoint fold) and the payload-table
-    * RESTORE (which rewrites a TARGET version's inventory). */
-  private def bigEntriesDF(spark: SparkSession, root: String,
-                           big: BigState): DataFrame = {
-    val nP = nPartsOf(big.partSchema)
-    val deltaMeta = statusByRel(spark, root,
-      big.deltaParts.values.flatten.toSeq)
+  /** `snap`'s full live inventory as ONE payload-shaped DataFrame (the
+    * 9-column layout): entries for its driver-side files (sizes and
+    * mtimes listed, vectors attached) plus, on a payload table, the
+    * payload's live rows with legacy-payload columns normalized and the
+    * delta's vector overrides folded in. Returned with the driver-side
+    * entries' (files, bytes, files with a vector). Shared by the
+    * checkpoint, the payload-table RESTORE (which rewrites a TARGET
+    * version's inventory) and the payload-shape replace. */
+  private def entriesDF(spark: SparkSession, root: String, snap: Snapshot)
+      : (DataFrame, (Long, Long, Long)) = {
+    val nP = nPartsOf(snap.partSchema)
+    val meta = statusByRel(spark, root, snap.parts.values.flatten.toSeq)
+    val rows = entryRows(root, snap.parts, snap.stats, snap.rows, meta, nP,
+      snap.dvs)
     import scala.jdk.CollectionConverters._
-    val deltaDF = spark.createDataFrame(
-      entryRows(root, big.deltaParts, big.deltaStats, big.deltaRows,
-        deltaMeta, nP, big.dvDelta).asJava, PayloadSchema)
-    val prior = payloadLiveDF(spark, root, big)
-    // legacy payloads (written before partv) are single-column by
-    // construction: their key IS the one raw value
-    val priorWithSegs =
-      if (prior.columns.contains("partv")) prior
-      else {
-        require(nP == 1, s"TxLog.checkpoint: payload at $root lacks " +
-          "partv but the table records a multi-column partition schema")
-        prior.withColumn("partv", array(col("part")))
-      }
-    // legacy payloads predate the dv columns; post-checkpoint vector
-    // overrides fold INTO the new payload here (the dv analogue of the
-    // partition-delta fold)
-    val priorWithDv0 =
-      if (priorWithSegs.columns.contains("dvfiles")) priorWithSegs
-      else priorWithSegs
-        .withColumn("dvfiles",
-          lit(null).cast(org.apache.spark.sql.types.ArrayType(StringType)))
-        .withColumn("dvrows",
-          lit(null).cast(org.apache.spark.sql.types.LongType))
-    val priorWithDv =
-      if (big.dvDelta.isEmpty) priorWithDv0
-      else {
-        import spark.implicits._
-        val ov = big.dvDelta.toSeq.map { case (f, (dvf, n)) => (f, dvf, n) }
-          .toDF("file", "__ovf", "__ovn")
-        priorWithDv0.join(broadcast(ov), Seq("file"), "left")
-          .withColumn("dvfiles", coalesce(col("__ovf"), col("dvfiles")))
-          .withColumn("dvrows", coalesce(col("__ovn"), col("dvrows")))
-          .drop("__ovf", "__ovn")
-      }
-    priorWithDv
-      .select("part", "file", "size", "mtime", "rows", "stats", "partv",
-        "dvfiles", "dvrows")
-      .unionByName(deltaDF)
+    val own = spark.createDataFrame(rows.asJava, PayloadSchema)
+    val entries = snap.payload.fold(
+        own.repartition(math.max(1, rows.size / 500000))) { p =>
+      val prior = payloadLiveDF(spark, root, p)
+      // legacy payloads (written before partv) are single-column by
+      // construction: their key IS the one raw value
+      val priorWithSegs =
+        if (prior.columns.contains("partv")) prior
+        else {
+          require(nP == 1, s"TxLog.checkpoint: payload at $root lacks " +
+            "partv but the table records a multi-column partition schema")
+          prior.withColumn("partv", array(col("part")))
+        }
+      // legacy payloads predate the dv columns; post-checkpoint vector
+      // overrides fold INTO the new payload here (the dv analogue of the
+      // partition-delta fold)
+      val priorWithDv0 =
+        if (priorWithSegs.columns.contains("dvfiles")) priorWithSegs
+        else priorWithSegs
+          .withColumn("dvfiles",
+            lit(null).cast(org.apache.spark.sql.types.ArrayType(StringType)))
+          .withColumn("dvrows",
+            lit(null).cast(org.apache.spark.sql.types.LongType))
+      val priorWithDv =
+        if (snap.dvs.isEmpty) priorWithDv0
+        else {
+          import spark.implicits._
+          val ov = snap.dvs.toSeq.map { case (f, (dvf, n)) => (f, dvf, n) }
+            .toDF("file", "__ovf", "__ovn")
+          priorWithDv0.join(broadcast(ov), Seq("file"), "left")
+            .withColumn("dvfiles", coalesce(col("__ovf"), col("dvfiles")))
+            .withColumn("dvrows", coalesce(col("__ovn"), col("dvrows")))
+            .drop("__ovf", "__ovn")
+        }
+      priorWithDv
+        .select("part", "file", "size", "mtime", "rows", "stats", "partv",
+          "dvfiles", "dvrows")
+        .unionByName(own)
+    }
+    (entries, (rows.size.toLong, rows.iterator.map(_.getLong(2)).sum,
+      rows.count(r => !r.isNullAt(7)).toLong))
   }
 
-  private def writeChkV2FromBig(spark: SparkSession, root: String,
-                                big: BigState,
-                                batchIds: Set[String],
-                                writers: Map[String, (Long, Long)],
-                                sealedLedger: Boolean = false): Unit = {
-    val unioned = bigEntriesDF(spark, root, big)
-    val name = writePayloadDir(spark, root, unioned, big.version)
-    val fresh = spark.read.parquet(s"$root/_txlog/$name")
-    val agg = fresh.agg(count(lit(1)), coalesce(sum("size"), lit(0L)),
+  /** A written payload's (files, bytes, files with a vector): one
+    * aggregate job. */
+  private def payloadFacts(payload: DataFrame): (Long, Long, Long) = {
+    val agg = payload.agg(count(lit(1)), coalesce(sum("size"), lit(0L)),
       count(col("dvfiles"))).head
+    (agg.getLong(0), agg.getLong(1), agg.getLong(2))
+  }
+
+  /** A parquet (v2) checkpoint of `snap` at its version: its inventory
+    * ([[entriesDF]]) written as a fresh payload dir, referenced by a text
+    * header carrying O(partitions) values, the batch ledger and the
+    * schema. When a prior payload contributed rows, the header's facts
+    * and value set come from jobs over the fresh dir; otherwise the
+    * driver already holds them. */
+  private def writeChkV2(spark: SparkSession, root: String, snap: Snapshot,
+                         batchIds: Set[String],
+                         writers: Map[String, (Long, Long)],
+                         sealedLedger: Boolean): Unit = {
+    val (entries, ownFacts) = entriesDF(spark, root, snap)
+    val name = writePayloadDir(spark, root, entries, snap.version)
+    val fresh = snap.payload.map(_ =>
+      spark.read.parquet(s"$root/_txlog/$name"))
+    val (nfiles, bytes, ndvs) = fresh.map(payloadFacts).getOrElse(ownFacts)
     // BOUNDED value collect: above the header cap the list is omitted
     // (novals) and the collect never materializes O(partitions) rows
     val maxVals = chkMaxHeaderValues(spark)
-    val sample = fresh.select("part").distinct().limit(maxVals + 1)
-      .collect()
-    val values =
-      if (sample.length > maxVals) None
-      else Some(sample.map(_.getString(0)).toSet)
-    val won = tryPublishNamed(spark, root, f"c${big.version}%020d.chk",
-      renderChkV2(name, values, batchIds, big.schema, big.partSchema,
-        agg.getLong(0), agg.getLong(1), writers, big.mapping,
-        big.constraints, ndvs = agg.getLong(2),
-        sealedLedger = sealedLedger, props = big.props))
+    val values = fresh.fold(Option(snap.parts.keySet)) { f =>
+      val sample = f.select("part").distinct().limit(maxVals + 1).collect()
+      Some(sample.map(_.getString(0)).toSet)
+    }.filter(_.size <= maxVals)
+    val won = tryPublishNamed(spark, root, f"c${snap.version}%020d.chk",
+      renderChkV2(name, values, batchIds, snap.schema, snap.partSchema,
+        nfiles, bytes, writers, snap.mapping, snap.constraints,
+        ndvs = ndvs, sealedLedger = sealedLedger, props = snap.props))
     if (!won) deletePayloadDir(spark, root, name)
   }
 
@@ -5126,13 +4980,14 @@ object TxLog {
           catch { case _: java.io.FileNotFoundException => Seq.empty }
       }.flatten.toSet
     }
-    stateOf(spark, root) match {
-      case Left(snap) =>
+    val snap = stateOf(spark, root)
+    snap.payload match {
+      case Some(p) =>
+        vacuumBig(spark, root, snap, p, changeFiles, minAgeMs, dryRun)
+      case None =>
         vacuumDriver(spark, root,
           snap.parts.values.flatten.toSet ++ changeFiles ++
             snap.dvs.values.flatMap(_._1), minAgeMs, dryRun)
-      case Right(big) =>
-        vacuumBig(spark, root, big, changeFiles, minAgeMs, dryRun)
     }
   }
 
@@ -5203,8 +5058,8 @@ object TxLog {
     * deleted inside tasks — no step holds O(table files) on the driver.
     * Empty staging dirs are left in place (reclaimed when their last
     * file goes through a later driver-path vacuum or external cleanup). */
-  private def vacuumBig(spark: SparkSession, root: String, big: BigState,
-                        changeFiles: Set[String], minAgeMs: Long,
+  private def vacuumBig(spark: SparkSession, root: String, snap: Snapshot,
+                        p: Payload, changeFiles: Set[String], minAgeMs: Long,
                         dryRun: Boolean = false): Int = {
     import spark.implicits._
     val dataDir = new Path(root, "data")
@@ -5250,7 +5105,7 @@ object TxLog {
             (q.stripPrefix(rootQual), st.getModificationTime)
           }
       }.toDF("rel", "mtime")
-    val liveBase = payloadLiveDF(spark, root, big)
+    val liveBase = payloadLiveDF(spark, root, p)
     val payloadDvFiles =
       if (!liveBase.columns.contains("dvfiles"))
         Seq.empty[String].toDF("rel")
@@ -5259,8 +5114,8 @@ object TxLog {
     val liveDF = liveBase
       .select(col("file").as("rel"))
       .unionByName(payloadDvFiles)
-      .unionByName((big.deltaParts.values.flatten.toSeq ++
-        changeFiles ++ big.dvDelta.values.flatMap(_._1)).toDF("rel"))
+      .unionByName((snap.parts.values.flatten.toSeq ++
+        changeFiles ++ snap.dvs.values.flatMap(_._1)).toDF("rel"))
     found.filter(col("mtime") <= cutoff)
       .join(liveDF, Seq("rel"), "left_anti")
       .select("rel").as[String]

@@ -292,9 +292,26 @@ class TxLogSpec extends SparkSpecBase {
   test("data skipping: stats-less files (opt-out writers, pre-stats logs) " +
       "are never skipped; date and decimal keys prune") {
     val root = freshRoot("skipmixed")
-    spark.conf.set("graft.txlog.stats", "false")
-    try TxLog.appendBatchTx(kv("a" -> 1), root, "part", "m1")
-    finally spark.conf.set("graft.txlog.stats", "true")
+    TxLog.appendBatchTx(kv("a" -> 1), root, "part", "m1")
+    // the first commit loses its stats and row-count records: the file a
+    // writer without stats (or a pre-stats log) leaves behind
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val first = new org.apache.hadoop.fs.Path(root,
+      f"_txlog/v${1L}%020d.txn")
+    val body = {
+      val in = fs.open(first)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    }
+    assert(body.linesIterator.exists(_.startsWith("s\t")) &&
+      body.linesIterator.exists(_.startsWith("f\t")))
+    val out = fs.create(first, true)
+    try out.write(body.linesIterator
+      .filterNot(l => l.startsWith("s\t") || l.startsWith("f\t"))
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
+    finally out.close()
+    TxLog.clearLogCache()
     TxLog.appendBatchTx(kv("a" -> 10), root, "part", "m2")
     val snap = TxLog.snapshot(spark, root)
     assert(snap.stats.size === 1, "opt-out file must carry no stats")

@@ -7,13 +7,14 @@ import org.apache.spark.sql.functions._
   * sequence (append / rewrite-delete / dv-delete / keyed merge / restore
   * / checkpoint / log expiry / vacuum) runs against both the real table
   * and an in-memory model, and after EVERY op the table's full content,
-  * metadata-only count, and partition enumeration must equal the
-  * model's. The table crosses to the parquet-payload representation
-  * mid-sequence (chkParquetMin=1) with the O(1) header forced on
-  * (chkMaxHeaderValues=2), so the sequence exercises the driver fold,
-  * foldBig, the payload restore reset, novals-derived enumeration, and
-  * the maintenance ops' interplay — the op-INTERLEAVINGS no single
-  * hand-written spec covers. Deterministic seeds: failures reproduce. */
+  * metadata-only count, per-partition counts and partition enumeration
+  * must equal the model's. The table crosses to the parquet-payload
+  * representation mid-sequence (chkParquetMin=1) with the O(1) header
+  * forced on (chkMaxHeaderValues=2), so the sequence exercises the one
+  * fold from both a text checkpoint and a payload base, the payload
+  * restore reset, novals-derived enumeration, and the maintenance ops'
+  * interplay — the op-INTERLEAVINGS no single hand-written spec covers.
+  * Deterministic seeds: failures reproduce. */
 class TxModelSpec extends SparkSpecBase {
 
   private def freshRoot(tag: String): String = {
@@ -62,6 +63,20 @@ class TxModelSpec extends SparkSpecBase {
         s"missing=${(want.keySet -- got.keySet).take(5)}")
       assert(TxLog.countRows(spark, root) === Some(model.size.toLong),
         s"[$tag seed=$seed] metadata count diverged")
+      // per-partition metadata counts: a partition with live rows counts
+      // exactly those; any other enumerated partition (fully dv-deleted)
+      // counts 0
+      val counts = TxLog.partitionCounts(spark, root)
+      val live = model.keys.groupBy(partOf).map { case (p, ks) =>
+        p -> ks.size.toLong }
+      assert(live.keySet.subsetOf(counts.keySet),
+        s"[$tag seed=$seed] a live-row partition has no count: " +
+          s"${live.keySet -- counts.keySet}")
+      counts.foreach { case (p, n) =>
+        assert(n === Some(live.getOrElse(p, 0L)),
+          s"[$tag seed=$seed] partition $p counts $n, model has " +
+            s"${live.getOrElse(p, 0L)}")
+      }
       // partition enumeration is FILE-level metadata (the Delta SHOW
       // PARTITIONS contract): a fully-dv-deleted partition still holds
       // live files and rightly enumerates (its rows are gone — the
