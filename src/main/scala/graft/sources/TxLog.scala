@@ -1973,10 +1973,6 @@ object TxLog {
             clusterBy: Seq[Column] = Nil, clusterFiles: Int = 0): Staged =
     stage(df, root, Seq(partCol), clusterBy, clusterFiles)
 
-  /** N-column [[stage]]: hierarchical `c1=v1/c2=v2/...` staging dirs, the
-    * log key the composite [[renderPartKey]] form. Real warehouse tables
-    * partition by (date, region)-style composites — one partition column
-    * was the tx layer's last hard single-column assumption. */
   /** The table's current physical→logical column mapping — a meta-only
     * log read (no file-list fold on either representation). */
   private def mappingOf(spark: SparkSession, root: String): Map[String, String] =
@@ -2161,8 +2157,28 @@ object TxLog {
     }
   }
 
+  /** N-column [[stage]]: hierarchical `c1=v1/c2=v2/...` staging dirs, the
+    * log key the composite [[renderPartKey]] form. Real warehouse tables
+    * partition by (date, region)-style composites — one partition column
+    * was the tx layer's last hard single-column assumption. A `df` with
+    * no rows is refused ("staged DataFrame is empty") after its staging
+    * dir is deleted, so a refused stage leaves nothing under `data/`. */
   def stage(df: DataFrame, root: String, partCols: Seq[String],
             clusterBy: Seq[Column], clusterFiles: Int): Staged = {
+    val staged = stageMaybeEmpty(df, root, partCols, clusterBy, clusterFiles)
+    // a plain stage of nothing is a caller error, refused once the empty
+    // staging dir is gone
+    require(staged.parts.nonEmpty, "TxLog.stage: staged DataFrame is " +
+      "empty — an empty overwrite would be a silent no-op; drop partitions " +
+      "explicitly")
+    staged
+  }
+
+  /** [[stage]] without its empty-result refusal: nothing staged returns
+    * a files-free [[Staged]] and leaves no dir behind. */
+  private def stageMaybeEmpty(df: DataFrame, root: String,
+                              partCols: Seq[String], clusterBy: Seq[Column],
+                              clusterFiles: Int): Staged = {
     // writers speak LOGICAL names; files and the recorded schema carry
     // PHYSICAL ones — translate through the current mapping (identity on
     // unmapped tables). A column reusing a TOMBSTONED physical name is
@@ -2269,14 +2285,11 @@ object TxLog {
          else Map.empty[String, Seq[String]],
           routes.filter(_ != DataRoute).flatMap(leavesOf(_).values.flatten))
       }
-    // a DML rewrite may legitimately leave no rows (a delete of every
-    // candidate row); a plain stage of nothing is a caller error
-    require(routed || parts.nonEmpty, "TxLog.stage: staged DataFrame is " +
-      "empty — an empty overwrite would be a silent no-op; drop partitions " +
-      "explicitly")
     if (parts.isEmpty) {
       // nothing data-bearing to record: no schema, stats or constraint
-      // claim, exactly what a files-free rewrite commit carries
+      // claim, exactly what a files-free rewrite commit carries (a DML
+      // rewrite that deletes every candidate row, a compaction whose rows
+      // are all dv-deleted); [[stage]] refuses it after this cleanup
       if (changes.isEmpty) fs.delete(dir, true)
       return Staged(Map.empty, changes = changes)
     }
@@ -3573,7 +3586,10 @@ object TxLog {
     * commit). A partition with fewer than `minFiles` small files is left
     * alone (rewriting one small file buys nothing). Deletion vectors on
     * the rewritten files materialize away (the read is dv-filtered);
-    * vectors on untouched files survive. Serialized with concurrent
+    * vectors on untouched files survive. The dv-filtered read of the
+    * small files is staged once, with no separate emptiness probe: when
+    * every small row was dv-deleted nothing is staged (no dir is left)
+    * and the commit is a pure removal. Serialized with concurrent
     * writers by the conflict protocol, exactly like every rewrite.
     * Streaming-ingest tables accrete small files per micro-batch — this
     * plus a partition-scoped schedule is the steady-state answer; at
@@ -3661,13 +3677,10 @@ object TxLog {
       val candSnap = filesSnapshot(spark, root, state, smalls)
       // one merged file per partition ([[stage]]'s hash repartition) —
       // the small-file steady state; a partition whose smalls exceed a
-      // sane file size should be on the compactClusteredTx schedule
-      val merged = readSnapshot(spark, root, candSnap, ps)
-      val staged =
-        if (merged.isEmpty) // every small row was dv-deleted: pure removal
-          Staged(Map.empty, removed = smalls)
-        else stage(merged, root, ps.map(_.name), Nil, 0)
-          .copy(removed = smalls)
+      // sane file size should be on the compactClusteredTx schedule.
+      // Nothing staged (every small row dv-deleted) is a pure removal
+      val staged = stageMaybeEmpty(readSnapshot(spark, root, candSnap, ps),
+        root, ps.map(_.name), Nil, 0).copy(removed = smalls)
       Attempt(() => (commit(spark, root, staged, "rewrite",
           readVersion = version, conflictCheck = true),
           smalls.valuesIterator.flatten.toSet.size),
@@ -3903,6 +3916,8 @@ object TxLog {
     * live vectors on (rel file, `_metadata.row_index`) — a codegen'd
     * broadcast hash probe per row, nothing on dv-free tables — and
     * metadata-only COUNTs subtract the recorded per-file counts exactly.
+    * Those counts are folded by the sidecar write's own tasks, so the
+    * sidecar is never read back.
     * Vectors MATERIALIZE (and disappear) at the next rewrite of their
     * file: compaction/MERGE read dv-filtered and replace the file, so
     * the steady state under maintenance is dv-free. Same candidate
@@ -3955,13 +3970,37 @@ object TxLog {
             .filter(col("file").isin(candFiles.toSeq: _*)))
       val rel = s"data/dv-${java.util.UUID.randomUUID()}"
       val dir = new Path(root, rel)
-      allPos.write.mode("errorifexists").parquet(dir.toString)
+      // per-file counts come from the rows the write streams, not from a
+      // re-read of the sidecar: each task folds its rows into a
+      // (file -> positions) map, and the driver merges the task maps.
+      // Exactly once: the fold sits directly under the file writer, so it
+      // runs in the write's result stage, and Spark merges a result
+      // task's accumulator update only for the first successful attempt
+      // of each partition (a failed attempt's update is dropped, a
+      // duplicate attempt's ignored). A failed write throws before any
+      // count is read. Unnamed, so the status store keeps no per-task
+      // copy of it.
+      val folds = spark.sparkContext.collectionAccumulator[Map[String, Long]]
+      allPos.mapPartitions { rows =>
+        val m = scala.collection.mutable.HashMap.empty[String, Long]
+        org.apache.spark.TaskContext.get()
+          .addTaskCompletionListener[Unit](_ => folds.add(m.toMap))
+        rows.map { r =>
+          val f = r.getString(0)
+          m(f) = m.getOrElse(f, 0L) + 1L
+          r
+        }
+      }(org.apache.spark.sql.Encoders.row(allPos.schema))
+        .write.mode("errorifexists").parquet(dir.toString)
       val dvFiles = fsOf(spark, dir).listStatus(dir).filter(_.isFile)
         .map(_.getPath.getName).filter(_.endsWith(".parquet"))
         .map(f => s"$rel/$f").toSeq
-      val counts = spark.read.schema(DvSchema).parquet(dir.toString)
-        .groupBy("file").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      import scala.jdk.CollectionConverters._
+      val counts = folds.value.asScala.foldLeft(Map.empty[String, Long]) {
+        (acc, m) => m.foldLeft(acc) { case (a, (f, n)) =>
+          a.updated(f, a.getOrElse(f, 0L) + n)
+        }
+      }
       // HARD INVARIANT, loud: every recorded position keys a LIVE
       // candidate file in the log's decoded rel-path space. A key the
       // relativization mangled ("" or an encoded variant) would record

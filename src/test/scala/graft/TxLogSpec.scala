@@ -1690,6 +1690,11 @@ class TxLogSpec extends SparkSpecBase {
     TxLog.appendBatchTx(Seq(("a", 4L, 4.0)).toDF("part", "k", "v"),
       root, "part", "bp3")
     TxLog.deleteWhereDvTx(spark, root, col("part") === "a")
+    val data = new org.apache.hadoop.fs.Path(root, "data")
+    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def txnDirs = fs.listStatus(data).map(_.getPath.getName)
+      .filter(_.startsWith("txn-")).toSet
+    val dirsBefore = txnDirs
     val (_, n2) = TxLog.compactBinPackTx(spark, root, "part",
       smallBytes = Long.MaxValue)
     assert(n2 === 2)
@@ -1697,6 +1702,26 @@ class TxLogSpec extends SparkSpecBase {
     assert(!snap2.parts.contains("a") && snap2.dvs.isEmpty)
     assert(TxLog.read(spark, root, "part").agg(sum("v")).head.getDouble(0)
       === 9.0)
+    // the pure removal leaves no staging dir behind, and nothing more
+    // for vacuum to reclaim than the files it unreferenced
+    assert(txnDirs === dirsBefore)
+    assert(TxLog.vacuum(spark, root, minAgeMs = 0L, dryRun = true) === 6)
+  }
+
+  test("a refused empty stage leaves no staging dir behind") {
+    val root = freshRoot("emptystage")
+    TxLog.appendBatchTx(kv("a" -> 1), root, "part", "es1")
+    val data = new org.apache.hadoop.fs.Path(root, "data")
+    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def entries = fs.listStatus(data).map(_.getPath.getName).toSet
+    val before = entries
+    val ex = intercept[IllegalArgumentException] {
+      TxLog.appendBatchTx(kv("a" -> 2).filter(lit(false)), root, "part",
+        "es2")
+    }
+    assert(ex.getMessage.contains("staged DataFrame is empty"))
+    assert(entries === before)
+    assert(TxLog.currentVersion(spark, root) === 1L)
   }
 
   test("timestamp time travel resolves commit mtimes") {

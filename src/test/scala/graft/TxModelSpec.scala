@@ -136,10 +136,12 @@ class TxModelSpec extends SparkSpecBase {
           TxLog.deleteWhereTx(spark, root, col("k") % m === r)
           model = model.filter { case (k, _) => math.abs(k % m) != r }
           snap()
-        case 3 => // merge-on-read position delete
+        case 3 => // merge-on-read position delete, change-recorded on
+          // some draws (derived from m and r, so no extra random draw)
           val m = 2 + rnd.nextInt(4)
           val r = rnd.nextInt(m)
-          TxLog.deleteWhereDvTx(spark, root, col("k") % m === r)
+          TxLog.deleteWhereDvTx(spark, root, col("k") % m === r,
+            changeFeed = (m + r) % 2 == 0)
           model = model.filter { case (k, _) => math.abs(k % m) != r }
           snap()
         case 4 | 5 => // keyed merge: update some existing + insert new

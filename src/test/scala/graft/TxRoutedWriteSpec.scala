@@ -164,7 +164,26 @@ class TxRoutedWriteSpec extends SparkSpecBase {
         identity))
     // the driver path's recorded counts, held exactly: a change that
     // adds (or saves) a job here shows up and must say so
-    assert((deleted, packed, rewritten) === ((3, 5, 3)))
+    assert((deleted, packed, rewritten) === ((3, 3, 3)))
+  }
+
+  test("job budget: a change-recorded deletion-vector delete over a prior " +
+      "vector runs its recorded job count") {
+    val root = dvSeeded("jobs-driver-dvdelete")
+    val (out, jobs) = jobsLaunchedBy(
+      TxLog.deleteWhereDvTx(spark, root, col("k") === 1L, changeFeed = true))
+    assert(out._2 === 1L)
+    assert(TxLog.readTable(spark, root).select("k").collect()
+      .map(_.getLong(0)).sorted.toSeq === Seq(3L, 5L, 6L))
+    // the first file of a carries the vector of keys 2 and 1 now: the
+    // recorded per-file counts keep the metadata answers exact
+    assert(TxLog.countRows(spark, root) === Some(3L))
+    assert(TxLog.partitionCounts(spark, root) ===
+      Map("a" -> Some(1L), "b" -> Some(2L)))
+    assert(feedRows(TxLog.readChangeFeed(spark, root,
+      out._1 - 1)._1.get) === Set(("delete", "a", 1L, 10L, out._1)))
+    // held exactly, like the counts above
+    assert(jobs.size === 5, s"dv delete launched ${jobs.size} jobs")
   }
 
   test("routed layout: data and change files of one DML commit share its " +
