@@ -875,8 +875,7 @@ private[graft] object TxSql {
       if (!p.eof) fail(s"trailing input after OPTIMIZE: ${p.rest()}")
       return TxSqlCommand(Seq(attr("version", LongType)),
         s => {
-          val pc = TxLog.tableMeta(s, root)._2.headOption
-            .map(_.name).getOrElse("part")
+          val pc = TxLog.tableMeta(s, root)._2.head.name
           val nf = if (files > 0) files
                    else s.sessionState.conf.numShufflePartitions
           Seq(Row(TxLog.compactZorderTx(s, root, pc, keys, nf)))
@@ -937,8 +936,7 @@ private[graft] object TxSql {
         attr("log_files_expired", LongType),
         attr("data_files_vacuumed", LongType)),
       s => {
-        val pc = TxLog.tableMeta(s, root)._2.headOption
-          .map(_.name).getOrElse("part")
+        val pc = TxLog.tableMeta(s, root)._2.head.name
         val select = where
           .map { case (c, f) => TxLog.partitionSelect(s, root, c)(f) }
           .getOrElse((_: String) => true)

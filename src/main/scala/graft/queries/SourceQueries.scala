@@ -761,12 +761,11 @@ object SourceQueries {
             .otherwise("store")),
         root, "o_orderpriority", "q146b-evolved")
       // time travel: the pre-evolution version reads the v1 schema
-      val v1 = TxLog.readSnapshot(s, root,
-        TxLog.snapshotAt(s, root, 1L), "o_orderpriority")
+      val v1 = TxLog.readTableAt(s, root, 1L)
       require(!v1.columns.contains("channel"),
         s"q146b: v1 time travel leaked the evolved column: " +
           v1.columns.mkString(","))
-      TxLog.read(s, root, "o_orderpriority")
+      TxLog.readTable(s, root)
         .groupBy("o_orderpriority", "channel")
         .agg(count(lit(1)).as("orders"),
           sum(col("o_orderkey")).as("key_sum"),
@@ -2063,7 +2062,8 @@ object SourceQueries {
       // writer B derives + stages from the pre-A snapshot (soon stale)
       val snapB = TxLog.snapshot(s, root)
       val stagedB = TxLog.stage(
-        wB(TxLog.readSnapshot(s, root, snapB, pc)), root, pc)
+        wB(TxLog.readSnapshot(s, root, snapB, TxLog.tableMeta(s, root)._2)),
+        root, pc)
       // writer A lands first → v2
       val vA = TxLog.readModifyWrite(s, root, pc)(wA)
       require(vA == 2L, s"q208: writer A committed v$vA, expected v2")
@@ -2078,7 +2078,7 @@ object SourceQueries {
       // B retries: re-derives from A's committed snapshot → v3
       val vB = TxLog.readModifyWrite(s, root, pc)(wB)
       require(vB == 3L, s"q208: writer B retried to v$vB, expected v3")
-      TxLog.read(s, root, pc)
+      TxLog.readTable(s, root)
         .groupBy(pc)
         .agg(count(lit(1)).as("orders"),
           countDistinct(col("o_orderkey")).as("distinct_orders"),
@@ -2511,7 +2511,7 @@ object SourceQueries {
       require(parts.size >= 200,
         s"q217: expected >=200 bucket partitions, got ${parts.size}")
       val maxFiles = parts.values.map(_.size).max
-      TxLog.read(s, root, "bucket")
+      TxLog.readTable(s, root)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           countDistinct(col("event_id")).as("n_ids"),
@@ -2552,12 +2552,12 @@ object SourceQueries {
       val thr = maxKey / 2
       // shuffle-free probe (AQE leaves it unwrapped, so the scan node is
       // directly collectible); no rows reach the driver
-      val probe = TxLog.read(s, root, "o_orderpriority")
+      val probe = TxLog.readTable(s, root)
         .filter(col("o_orderkey") > thr).select("o_orderpriority")
       val read = graft.tools.PlanCheck.filesRead(probe)
       require(read * 2 <= totalFiles,
         s"q218: data skipping left $read of $totalFiles files in the scan")
-      TxLog.read(s, root, "o_orderpriority")
+      TxLog.readTable(s, root)
         .filter(col("o_orderkey") > thr)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_orders"),
@@ -2598,13 +2598,13 @@ object SourceQueries {
       val maxId = ev.agg(max("event_id")).head.getLong(0)
       val lo = maxId * 3 / 8
       val hi = maxId * 4 / 8
-      val probe = TxLog.read(s, root, "event_type")
+      val probe = TxLog.readTable(s, root)
         .filter(col("event_id") > lo && col("event_id") <= hi)
         .select("event_type")
       val read = graft.tools.PlanCheck.filesRead(probe)
       require(read * 2 <= totalFiles,
         s"q219: id-range read scanned $read of $totalFiles clustered files")
-      TxLog.read(s, root, "event_type")
+      TxLog.readTable(s, root)
         .filter(col("event_id") > lo && col("event_id") <= hi)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
@@ -2632,15 +2632,15 @@ object SourceQueries {
       def slice(i: Int) = ev.filter(pmod(col("event_id"), lit(3)) === i)
       TxLog.appendBatchTx(slice(0), root, "event_type", "q221-b0")
       TxLog.appendBatchTx(slice(1), root, "event_type", "q221-b1")
-      val (c1, v1) = TxLog.readChangesSince(s, root, 0L, "event_type")
+      val (c1, v1) = TxLog.readChangesSince(s, root, 0L)
       TxLog.appendBatchTx(slice(2), root, "event_type", "q221-b2")
-      val (c2, v2) = TxLog.readChangesSince(s, root, v1, "event_type")
+      val (c2, v2) = TxLog.readChangesSince(s, root, v1)
       require(v2 > v1, "q221: second cycle saw no new version")
       val b2Rows = slice(2).count()
       require(c2.get.count() == b2Rows,
         s"q221: second window read ${c2.get.count()} rows, batch had $b2Rows")
       // drained consumer: third cycle must be empty at the same version
-      val (c3, v3) = TxLog.readChangesSince(s, root, v2, "event_type")
+      val (c3, v3) = TxLog.readChangesSince(s, root, v2)
       require(c3.isEmpty && v3 == v2,
         "q221: drained consumer still saw changes")
       c1.get.unionByName(c2.get)
@@ -2675,7 +2675,7 @@ object SourceQueries {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"))
       def slice(i: Int) = ev.filter(pmod(col("event_id"), lit(3)) === i)
-      def pump(): Int = TxLog.consumeChanges(s, src, "event_type", ckpt) {
+      def pump(): Int = TxLog.consumeChanges(s, src, ckpt) {
         (win, v) =>
           TxLog.appendBatchTx(win, dst, "event_type", s"q222-w$v"): Unit
       }
@@ -2688,7 +2688,7 @@ object SourceQueries {
       // table's ledger absorbs
       var crashed = false
       try {
-        TxLog.consumeChanges(s, src, "event_type", ckpt) { (win, v) =>
+        TxLog.consumeChanges(s, src, ckpt) { (win, v) =>
           TxLog.appendBatchTx(win, dst, "event_type", s"q222-w$v"): Unit
           sys.error("q222: simulated crash before checkpoint")
         }: Unit
@@ -2698,7 +2698,7 @@ object SourceQueries {
       require(pump() == 1, "q222: restarted consumer did not replay")
       TxLog.appendBatchTx(slice(2), src, "event_type", "q222-b2")
       require(pump() == 1, "q222: post-replay window not delivered")
-      TxLog.read(s, dst, "event_type")
+      TxLog.readTable(s, dst)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           countDistinct(col("event_id")).as("n_ids"),
@@ -2777,12 +2777,12 @@ object SourceQueries {
       }
       val totalFiles = TxLog.snapshot(s, root).parts.values.map(_.size).sum
       val topName = cust.agg(max("c_name")).head.getString(0)
-      val probe = TxLog.read(s, root, "c_mktsegment")
+      val probe = TxLog.readTable(s, root)
         .filter(col("c_name") === topName).select("c_mktsegment")
       val read = graft.tools.PlanCheck.filesRead(probe)
       require(read * 2 <= totalFiles,
         s"q223: string skipping left $read of $totalFiles files in the scan")
-      TxLog.read(s, root, "c_mktsegment")
+      TxLog.readTable(s, root)
         .filter(col("c_name") === topName)
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n_cust"),
@@ -2842,7 +2842,7 @@ object SourceQueries {
       require(rewritten * 2 <= totalFiles,
         s"q224: merge rewrote $rewritten of $totalFiles files — the " +
           "candidate search did not skip non-overlapping files")
-      TxLog.read(s, root, "c_mktsegment")
+      TxLog.readTable(s, root)
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n_cust"),
           dsum(col("c_acctbal")).as("total_bal"))
@@ -2881,7 +2881,7 @@ object SourceQueries {
       require(rewritten > 0 && rewritten * 2 <= totalFiles,
         s"q225: delete rewrote $rewritten of $totalFiles files — data " +
           "skipping did not bound the rewrite to the covering files")
-      TxLog.read(s, root, "o_orderpriority")
+      TxLog.readTable(s, root)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_orders"),
           dsum(col("o_totalprice")).as("total_price"))
@@ -2934,7 +2934,7 @@ object SourceQueries {
       TxLog.appendBatchTx(ev.filter(col("event_id") > lo),
         root, "event_type", "q226-b4")
       val thr = maxId / 2
-      val probe = TxLog.read(s, root, "event_type")
+      val probe = TxLog.readTable(s, root)
         .filter(col("event_id") > thr).select("event_type")
       // the scan must ride the payload-backed index (a driver fold here
       // would defeat the design this gate exists to pin)
@@ -2949,7 +2949,7 @@ object SourceQueries {
       val read = graft.tools.PlanCheck.filesRead(probe)
       require(read * 2 <= totalFiles,
         s"q226: payload-side skipping left $read of $totalFiles files")
-      TxLog.read(s, root, "event_type")
+      TxLog.readTable(s, root)
         .filter(col("event_id") > thr)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
@@ -2995,7 +2995,7 @@ object SourceQueries {
       require(totalFiles >= 12,
         s"q227: z-rewrite produced only $totalFiles files")
       def filesFor(cond: org.apache.spark.sql.Column): Long = {
-        val probe = TxLog.read(s, root, "event_type").filter(cond)
+        val probe = TxLog.readTable(s, root).filter(cond)
           .select("event_type")
         graft.tools.PlanCheck.filesRead(probe)
       }
@@ -3007,7 +3007,7 @@ object SourceQueries {
         s"q227: SECOND-key slice scanned $readU of $totalFiles z-files")
       require(readE * 2 <= totalFiles,
         s"q227: first-key slice scanned $readE of $totalFiles z-files")
-      TxLog.read(s, root, "event_type")
+      TxLog.readTable(s, root)
         .filter(col("user_id") <= maxUser / 8)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),

@@ -51,8 +51,8 @@ final class TxBigFileIndex(spark: SparkSession, root: String,
   /** The scan's partition predicate re-aimed at the payload's recorded
     * key (cast to the declared partition types with session-zone
     * semantics, mirroring [[PartValueRow]]): the raw `part` column for a
-    * single partition column (every legacy payload), the `partv` raw
-    * segment array for N≥2 (written by every multi-column checkpoint). */
+    * single partition column (its key IS the raw value), the `partv` raw
+    * segment array for N≥2. */
   private def partPredicate(partitionFilters: Seq[Expression]): Option[Column] =
     if (partitionFilters.isEmpty) None
     else {

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.hadoop.fs.{FileSystem, Path}
 import java.nio.charset.StandardCharsets
 
@@ -132,7 +132,9 @@ object TxLog {
     * append extends it, rewrite swaps `removed` out and `parts` in —
     * the file-granular MERGE/DELETE delta); `stats` carries the added
     * files' footer min/max for data skipping, `rows` their exact footer
-    * row counts. */
+    * row counts. A data-bearing commit always records `schema` and
+    * `partSchema`: a commit file without the current [[Generation]] line
+    * never parses. */
   final case class Commit(version: Long, op: String, readVersion: Long,
                           batchId: Option[String],
                           parts: Map[String, Seq[String]],
@@ -155,13 +157,11 @@ object TxLog {
                           // "-" tombstones a dropped physical column.
                           // None = no mapping change in this commit.
                           mapping: Option[Map[String, String]] = None,
-                          // change files carry PHYSICAL column names (all
-                          // new writers) — the invariant that lets the
-                          // change feed re-map historical windows through
-                          // the END mapping; false only on legacy commits
-                          // whose change files carry write-time LOGICAL
-                          // names (servable only while the table is
-                          // unmapped)
+                          // the commit was written change-recorded
+                          // (`cdfNames=phys`: its change files, if any,
+                          // carry PHYSICAL column names) — how the change
+                          // feed tells a files-free change-recorded
+                          // rewrite from one written without a record
                           cdfPhys: Boolean = false,
                           // op "dv": merge-on-read position deletes — per
                           // affected data file its new CUMULATIVE deletion
@@ -197,12 +197,13 @@ object TxLog {
     * paths, plus the table schema AS OF this version (DDL, partition
     * column excluded — the single source of truth the snapshot scan reads
     * with, which is what NULL-backfills pre-evolution files without
-    * footer merging). None only on legacy logs written before schema
-    * recording.
+    * footer merging). Every log carries the current [[Generation]], whose
+    * data-bearing commits record the schema and partition schema, so
+    * both are None only before the first schema-recording commit.
     *
     * `payload` None (no checkpoint, or a text one): `parts` lists EVERY
-    * live file, `stats`/`rows`/`dvs` cover live files only (pre-stats
-    * generations simply have no entry and are never skipped). `payload`
+    * live file, `stats`/`rows`/`dvs` cover live files only (a file
+    * without stats has no entry and is never skipped). `payload`
     * Some (the table crossed to a parquet checkpoint): the file-level
     * base stays in the payload, never driver-materialized, and
     * `parts`/`stats`/`rows`/`dvs` hold only the post-checkpoint DELTA —
@@ -240,13 +241,13 @@ object TxLog {
     * folds everything into a fresh payload. `partValues` is the live
     * value set (None = the header omitted it); `nfiles`/`bytes`/`ndvs`
     * are the base's recorded facts (`ndvs` = payload files carrying a
-    * vector; 0 skips dv discovery, -1 unknown). */
+    * vector; 0 skips dv discovery). */
   final case class Payload(dir: String, chkVersion: Long,
                            partValues: Option[Set[String]],
                            removedParts: Set[String] = Set.empty,
                            removedFiles: Set[String] = Set.empty,
-                           nfiles: Long = -1L, bytes: Long = -1L,
-                           ndvs: Long = -1L, dead: Boolean = false)
+                           nfiles: Long, bytes: Long,
+                           ndvs: Long, dead: Boolean = false)
 
   /** Staged-but-uncommitted data: files already durable under `root`.
     * `schema` is the DATA files' DDL (partition column excluded) — the
@@ -297,13 +298,13 @@ object TxLog {
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(s)
 
   /** Composite partition-key codec. A table's in-memory partition key is
-    * the RAW value for single-column partitioning (back-compat with every
-    * existing log and payload), and for N≥2 columns the per-segment
-    * Hive-ESCAPED '/'-joined form — escapePathName escapes '/' inside
-    * values, so the separator is unambiguous (exactly the table's dir
-    * fragment without column names). Everything downstream (commit
-    * `touched` sets, conflict checks, the payload's `part` column,
-    * `select` predicates) treats the key as an opaque string. */
+    * the RAW value for single-column partitioning, and for N≥2 columns
+    * the per-segment Hive-ESCAPED '/'-joined form — escapePathName
+    * escapes '/' inside values, so the separator is unambiguous (exactly
+    * the table's dir fragment without column names). Everything
+    * downstream (commit `touched` sets, conflict checks, the payload's
+    * `part` column, `select` predicates) treats the key as an opaque
+    * string. */
   private[sources] def renderPartKey(raws: Seq[String]): String =
     if (raws.lengthCompare(1) == 0) raws.head
     else raws.map(esc).mkString("/")
@@ -324,6 +325,22 @@ object TxLog {
   private val VersionRe = """v(\d{20})\.txn""".r
   private val ChkRe = """c(\d{20})\.chk""".r
   private val PayloadRe = """c(\d{20})-[0-9a-f-]+\.chkpq""".r
+
+  /** The on-disk generation every commit and checkpoint records in its
+    * header block (`gen=2`), the way Delta's protocol action pins a
+    * reader version: a log file without it is refused, never read a
+    * different way. */
+  private val Generation = 2
+
+  /** Refuse a commit or checkpoint that does not record [[Generation]]. */
+  private def checkGen(root: String, file: String, lines: Seq[String]): Unit = {
+    val gen = lines.collectFirst { case l if l.startsWith("gen=") => l.drop(4) }
+    require(gen.contains(Generation.toString),
+      s"TxLog: $file at $root records " +
+        gen.fold("no log generation")(g => s"generation $g") +
+        s" — this reader needs gen=$Generation; rebuild the table from " +
+        "its data")
+  }
 
   /** A log checkpoint: the FULL partition mapping + every batch id seen
     * as of `version` — the Delta checkpoint mechanism that keeps the
@@ -363,11 +380,13 @@ object TxLog {
                                // header must stay O(1); consumers derive
                                // values payload-side, see partValuesWhere)
                                partValues: Option[Set[String]] = Some(Set.empty),
+                               // v2: the payload's file and byte counts
+                               // (-1 on a text checkpoint)
                                nfiles: Long = -1L,
                                bytes: Long = -1L,
                                // v2: count of payload files carrying a
                                // deletion vector (0 lets every read skip
-                               // the dv-discovery job; -1 = legacy/unknown)
+                               // the dv-discovery job)
                                ndvs: Long = -1L,
                                // the STRING batch-id ledger is sealed
                                // ([[sealBatchLedgerTx]]): b-lines are
@@ -477,7 +496,7 @@ object TxLog {
         prev.filter(p => p.chkName.contains(n) && fresh(n))
           .flatMap(_.chk).getOrElse {
             logFilesParsed.incrementAndGet()
-            parseChk(v, readFile(fs, new Path(dir, n)))
+            parseChk(root, v, readFile(fs, new Path(dir, n)))
           }
       }
       val prevCommits: Map[String, Commit] =
@@ -485,7 +504,7 @@ object TxLog {
       val commits = files.map { case (v, n) =>
         n -> (if (fresh(n)) prevCommits.get(n) else None).getOrElse {
           logFilesParsed.incrementAndGet()
-          parseCommit(v, readFile(fs, new Path(dir, n)))
+          parseCommit(root, v, readFile(fs, new Path(dir, n)))
         }
       }.toVector
       if (logCache.size > LogCacheMaxRoots) logCache.clear()
@@ -519,7 +538,7 @@ object TxLog {
           "above the driver-side metadata bound")
       if (files.map(_._1).toSeq != ((lo + 1) to hi)) None
       else Some(files.map { case (v, n) =>
-        parseCommit(v, readFile(fs, new Path(dir, n)))
+        parseCommit(root, v, readFile(fs, new Path(dir, n)))
       }.toSeq)
     } catch {
       // a commit vanishing mid-read IS the expiry signal
@@ -527,10 +546,11 @@ object TxLog {
     }
   }
 
-  private def parseCommit(version: Long, body: String): Commit = {
+  private def parseCommit(root: String, version: Long, body: String): Commit = {
     val lines = body.split("\n").toSeq.filter(_.nonEmpty)
     require(lines.headOption.contains("graft-txn-v1"),
       s"commit v$version: unknown log format header")
+    checkGen(root, s"commit v$version", lines)
     def fieldOpt(k: String): Option[String] = lines
       .collectFirst { case l if l.startsWith(s"$k=") => l.drop(k.length + 1) }
     def field(k: String): String = fieldOpt(k)
@@ -656,17 +676,17 @@ object TxLog {
                            props: Option[Map[String, String]] = None,
                            changeFeed: Boolean = false)
       : String = {
-    val header = Seq("graft-txn-v1", s"op=$op", s"readVersion=$readVersion",
+    val header = Seq("graft-txn-v1", s"gen=$Generation", s"op=$op",
+      s"readVersion=$readVersion",
       s"batchId=${batchId.map(esc).getOrElse("-")}",
       s"schema=${schema.map(esc).getOrElse("-")}",
       s"part=${partSchema.map(esc).getOrElse("-")}") ++
       payloadChk.toSeq.flatMap { case (name, nf, by, nd) =>
         Seq(s"payload=$name", s"nfiles=$nf", s"bytes=$by", s"ndvs=$nd") } ++
       writerSeq.map { case (id, seq) => s"writer=${esc(id)}:$seq" } ++
-      // every new writer's change files carry PHYSICAL column names — the
-      // marker lets readers distinguish them from legacy logical-name
-      // change files when re-mapping historical windows. A change-recorded
-      // commit whose rows did not change carries the marker alone.
+      // a change-recorded commit: its change files carry PHYSICAL column
+      // names, and one whose rows did not change carries the marker alone
+      // (the change feed serves it as a files-free window commit)
       (if (changes.nonEmpty || changeFeed) Seq("cdfNames=phys")
        else Seq.empty) ++
       (if (constraints.isDefined) Seq("hasConstraints=1") else Seq.empty) ++
@@ -694,11 +714,12 @@ object TxLog {
       renderStats(stats) ++ renderRows(rows)).mkString("\n") + "\n"
   }
 
-  private def parseChk(version: Long, body: String): Chk = {
+  private def parseChk(root: String, version: Long, body: String): Chk = {
     val lines = body.split("\n").toSeq.filter(_.nonEmpty)
     val header = lines.headOption.getOrElse("")
     require(header == "graft-chk-v1" || header == "graft-chk-v2",
       s"checkpoint c$version: unknown format header")
+    checkGen(root, s"checkpoint c$version", lines)
     val parts = lines.filter(_.startsWith("p\t")).map(_.split("\t"))
       .map { case Array(_, v, p) => (unesc(v), p) }
       .groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2) }
@@ -720,6 +741,8 @@ object TxLog {
     def fieldOpt(k: String): Option[String] = lines
       .collectFirst { case l if l.startsWith(s"$k=") => l.drop(k.length + 1) }
       .filter(_ != "-")
+    def field(k: String): String = fieldOpt(k)
+      .getOrElse(sys.error(s"checkpoint c$version: missing field $k"))
     val schema = fieldOpt("schema").map(unesc)
     val partSchema = fieldOpt("part").map(unesc)
     if (header == "graft-chk-v2") {
@@ -731,12 +754,9 @@ object TxLog {
           .map(l => unesc(l.split("\t", -1)(1))).toSet)
       Chk(version, Map.empty, batchIds, schema, Map.empty, Map.empty,
         partSchema, writers, mapping, constraints = constraints,
-        payload = Some(fieldOpt("payload").getOrElse(
-          sys.error(s"checkpoint c$version: v2 without payload ref"))),
-        partValues = partValues,
-        nfiles = fieldOpt("nfiles").map(_.toLong).getOrElse(-1L),
-        bytes = fieldOpt("bytes").map(_.toLong).getOrElse(-1L),
-        ndvs = fieldOpt("ndvs").map(_.toLong).getOrElse(-1L),
+        payload = Some(field("payload")), partValues = partValues,
+        nfiles = field("nfiles").toLong, bytes = field("bytes").toLong,
+        ndvs = field("ndvs").toLong,
         sealedLedger = fieldOpt("sealed").isDefined, props = props)
     } else
       Chk(version, parts, batchIds, schema, parseStats(lines),
@@ -776,7 +796,8 @@ object TxLog {
     val partRows = parts.toSeq.sortBy(_._1).flatMap { case (v, fs) =>
       fs.sorted.map(f => s"p\t${esc(v)}\t$f")
     }
-    (Seq("graft-chk-v1", s"schema=${schema.map(esc).getOrElse("-")}",
+    (Seq("graft-chk-v1", s"gen=$Generation",
+      s"schema=${schema.map(esc).getOrElse("-")}",
       s"part=${partSchema.map(esc).getOrElse("-")}") ++
       (if (sealedLedger) Seq("sealed=1") else Seq.empty) ++
       batchIds.toSeq.sorted.map(b => s"b\t${esc(b)}") ++
@@ -793,10 +814,11 @@ object TxLog {
                           writers: Map[String, (Long, Long)],
                           mapping: Map[String, String],
                           constraints: Map[String, String],
-                          ndvs: Long = -1L,
+                          ndvs: Long,
                           sealedLedger: Boolean = false,
                           props: Map[String, String] = Map.empty): String =
-    (Seq("graft-chk-v2", s"schema=${schema.map(esc).getOrElse("-")}",
+    (Seq("graft-chk-v2", s"gen=$Generation",
+      s"schema=${schema.map(esc).getOrElse("-")}",
       s"part=${partSchema.map(esc).getOrElse("-")}",
       s"payload=$payload", s"nfiles=$nfiles", s"bytes=$bytes",
       s"ndvs=$ndvs") ++
@@ -987,7 +1009,7 @@ object TxLog {
     * table (no commits yet). DRIVER-RESIDENT by contract: refuses a
     * parquet-checkpointed table (its file list deliberately never fits
     * the driver, and its [[Snapshot.parts]] would list the delta only) —
-    * use [[readTable]]/[[read]]/[[countRows]]/the front doors, which read
+    * use [[readTable]]/[[countRows]]/the front doors, which read
     * either checkpoint format. */
   def snapshot(spark: SparkSession, root: String): Snapshot = {
     val state = stateOf(spark, root)
@@ -995,7 +1017,7 @@ object TxLog {
       sys.error(s"TxLog.snapshot: the table at $root " +
         s"is parquet-checkpointed (${p.nfiles}+ files at c" +
         s"${p.chkVersion}) — its file list does not driver-materialize; " +
-        "use readTable/read/countRows or the transactional front doors")
+        "use readTable/countRows or the transactional front doors")
     }
     state
   }
@@ -1041,15 +1063,9 @@ object TxLog {
     * snapshot's RECORDED table schema, not the footers — after additive
     * evolution ([[commit]]'s ADD-COLUMN path), pre-evolution files
     * NULL-backfill the new columns, and a [[snapshotAt]] time travel
-    * reads with the schema as of that version. */
-  def readSnapshot(spark: SparkSession, root: String, snap: Snapshot,
-                   partCol: String, partType: DataType = StringType): DataFrame =
-    readSnapshot(spark, root, snap, org.apache.spark.sql.types.StructType(
-      Seq(org.apache.spark.sql.types.StructField(partCol, partType))))
-
-  /** N-column [[readSnapshot]]: the scan's partition schema is the full
-    * (ordered) partition StructType; log keys decode through
-    * [[splitPartKey]]. */
+    * reads with the schema as of that version. The scan's partition
+    * schema is the full (ordered) partition StructType the log records;
+    * log keys decode through [[splitPartKey]]. */
   def readSnapshot(spark: SparkSession, root: String, snap: Snapshot,
                    partSchema: org.apache.spark.sql.types.StructType): DataFrame =
     readSnapshotPos(spark, root, snap, partSchema, withPos = false)
@@ -1072,26 +1088,22 @@ object TxLog {
     * vectors. Deletion vectors always apply (a position-delete read can
     * never resurrect earlier deletes); the anti-join broadcasts the
     * vector side by size, so a dv'd read costs one codegen'd hash probe
-    * per row and nothing at all on dv-free snapshots. */
+    * per row and nothing at all on dv-free snapshots. The data schema is
+    * always the snapshot's recorded one: a log of the current
+    * [[Generation]] records it with its first data-bearing commit, so
+    * only a log with nothing committed refuses, and no footer is read. */
   private[sources] def readSnapshotPos(spark: SparkSession, root: String,
                                        snap: Snapshot,
                                        partSchema: org.apache.spark.sql.types.StructType,
                                        withPos: Boolean,
                                        fileVersions: Option[Map[String, Long]] = None): DataFrame = {
+    // an empty table READS (zero rows, the declared columns) once a
+    // schema is recorded — the created-before-first-write state
+    // ([[createTableTx]]); only a schema-less empty log refuses
     val dataSchema = snap.schema
       .map(org.apache.spark.sql.types.StructType.fromDDL)
-      .getOrElse {
-        snap.payload.foreach(_ =>
-          sys.error(s"TxLog.readBig: no recorded schema at $root"))
-        // an empty table READS (zero rows, the declared columns) once a
-        // schema is recorded — the created-before-first-write state
-        // ([[createTableTx]]); only a schema-less empty log refuses
-        require(snap.parts.nonEmpty,
-          s"TxLog table at $root is empty — nothing committed yet")
-        // legacy logs without schema records: one driver-side footer read
-        ParquetFiles.read(spark,
-          s"$root/${snap.parts.valuesIterator.next().head}").schema
-      }
+      .getOrElse(sys.error(
+        s"TxLog table at $root is empty — nothing committed yet"))
     // a payload table's index prunes the payload inside a Spark job and
     // serves the delta through the driver-side index
     val index = snap.payload
@@ -1170,15 +1182,10 @@ object TxLog {
     val fromPayload = snap.payload.toSeq.flatMap { p =>
       // the recorded ndvs count lets a dv-free table skip the discovery
       // job entirely — the common case costs nothing
-      if (p.ndvs == 0L && snap.dvs.isEmpty) Seq.empty
-      else {
-        val live = payloadLiveDF(spark, root, p)
-        if (!live.columns.contains("dvfiles")) Seq.empty // legacy payload
-        else if (p.ndvs == 0L) Seq.empty
-        else live.filter(col("dvfiles").isNotNull)
-          .select(explode(col("dvfiles")).as("dv")).distinct()
-          .limit(DefaultMaxDvFiles + 1).collect().map(_.getString(0)).toSeq
-      }
+      if (p.ndvs == 0L) Seq.empty
+      else payloadLiveDF(spark, root, p).filter(col("dvfiles").isNotNull)
+        .select(explode(col("dvfiles")).as("dv")).distinct()
+        .limit(DefaultMaxDvFiles + 1).collect().map(_.getString(0)).toSeq
     }
     val all = (fromPayload ++ snap.dvs.values.flatMap(_._1)).distinct
     require(all.size <= DefaultMaxDvFiles,
@@ -1201,10 +1208,8 @@ object TxLog {
     val fromPayload: FileDvs = state.payload.filter(_ => fileSet.nonEmpty)
       .fold(Map.empty: FileDvs) { p =>
         val rest = fileSet -- own.keySet
-        val live = payloadLiveDF(spark, root, p)
-        if (rest.isEmpty || p.ndvs == 0L ||
-            !live.columns.contains("dvfiles")) Map.empty
-        else live
+        if (rest.isEmpty || p.ndvs == 0L) Map.empty
+        else payloadLiveDF(spark, root, p)
           .filter(col("file").isin(rest.toSeq: _*) && col("dvfiles").isNotNull)
           .select("file", "dvfiles", "dvrows").collect()
           .map(r => r.getString(0) ->
@@ -1246,31 +1251,36 @@ object TxLog {
       df.select(cols: _*)
     }
 
-  private def singleCol(partCol: String, partType: DataType) =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(partCol, partType)))
-
-  /** Recorded partition schema of `state`, or a loud refusal. */
-  private def partSchemaOf(state: Snapshot, root: String,
+  /** A recorded partition-schema DDL as a StructType, or a loud refusal
+    * naming `who`: a log records it with its first data-bearing commit. */
+  private def partSchemaOf(partSchema: Option[String], root: String,
                            who: String): org.apache.spark.sql.types.StructType =
-    state.partSchema
+    partSchema
       .map(org.apache.spark.sql.types.StructType.fromDDL)
-      .getOrElse(sys.error(s"TxLog.$who: the log at $root predates " +
-        "partition-column recording — read with an explicit partCol"))
+      .getOrElse(sys.error(s"$who: the log at $root records no partition " +
+        "columns — nothing partitioned was committed yet"))
 
-  /** Read the CURRENT state of the tx table. */
-  def read(spark: SparkSession, root: String, partCol: String,
-           partType: DataType = StringType): DataFrame =
-    readSnapshot(spark, root, stateOf(spark, root), singleCol(partCol, partType))
+  /** [[partSchemaOf]] for a rewrite front door, which names `partCol`:
+    * a name that is not one of the recorded partition columns is
+    * refused, as [[replaceTableTx]] refuses foreign `partCols`. */
+  private def rewritePartSchema(state: Snapshot, root: String, who: String,
+                                partCol: String)
+      : org.apache.spark.sql.types.StructType = {
+    val ps = partSchemaOf(state.partSchema, root, who)
+    require(ps.fieldNames.contains(partCol),
+      s"$who: [$partCol] is not a partition column of $root (recorded: " +
+        s"[${ps.fieldNames.mkString(", ")}])")
+    ps
+  }
 
   /** Read the CURRENT state using the log's own recorded partition
     * metadata — the partition columns are TABLE state, not reader
     * knowledge (callers that hardcode them can drift from the writer;
-    * this can't). Refuses legacy logs written before partition
-    * recording rather than guessing. */
+    * this can't). */
   def readTable(spark: SparkSession, root: String): DataFrame = {
     val state = stateOf(spark, root)
-    readSnapshot(spark, root, state, partSchemaOf(state, root, "readTable"))
+    readSnapshot(spark, root, state,
+      partSchemaOf(state.partSchema, root, "TxLog.readTable"))
   }
 
   /** Time-travel read AS OF `version` on either checkpoint
@@ -1291,7 +1301,8 @@ object TxLog {
             "expired; retain a longer log to time-travel that far")))
     require(state.version == version,
       s"TxLog.readTableAt: version $version was never committed at $root")
-    readSnapshot(spark, root, state, partSchemaOf(state, root, "readTableAt"))
+    readSnapshot(spark, root, state,
+      partSchemaOf(state.partSchema, root, "TxLog.readTableAt"))
   }
 
   /** Time travel BY TIMESTAMP — resolve the latest version whose commit
@@ -1349,8 +1360,8 @@ object TxLog {
     * tasks, zero file opens (the Delta numRecords move: at 100 TB a
     * COUNT(*) over a table or partition slice must not be a scan).
     * Some(n) only when EVERY live file in the selection carries a
-    * recorded count; None sends the caller to a real scan (pre-stats
-    * log generations — correctness never degrades to an estimate). */
+    * recorded count; None sends the caller to a real scan (correctness
+    * never degrades to an estimate). */
   def countRows(spark: SparkSession, root: String,
                 select: String => Boolean = _ => true): Option[Long] = {
     val total = partitionCounts(spark, root)
@@ -1375,14 +1386,11 @@ object TxLog {
     }
     snap.payload.fold(own) { p =>
       var df = payloadLiveDF(spark, root, p)
-      val hasDvCols = df.columns.contains("dvfiles")
       // files whose vector was overridden after the checkpoint leave
       // the distributed agg and re-enter with their overridden counts
       val ovKeys = snap.dvs.keySet.toSeq
       if (ovKeys.nonEmpty) df = df.filter(not(col("file").isin(ovKeys: _*)))
-      val effRows =
-        if (hasDvCols) col("rows") - coalesce(col("dvrows"), lit(0L))
-        else col("rows")
+      val effRows = col("rows") - coalesce(col("dvrows"), lit(0L))
       val payload = df.groupBy("part")
         .agg(sum(effRows).as("n"), count(lit(1)).as("nf"),
           count(col("rows")).as("nr"))
@@ -1431,7 +1439,6 @@ object TxLog {
     * [[snapshotAt]]); 0 = from the beginning. Returns None when the
     * window holds no appended rows. */
   def readChangesSince(spark: SparkSession, root: String, sinceVersion: Long,
-                       partCol: String, partType: DataType = StringType,
                        skipNonAppend: Boolean = false,
                        untilVersion: Option[Long] = None)
       : (Option[DataFrame], Long) = {
@@ -1448,10 +1455,7 @@ object TxLog {
     else {
       val stats = w.window.iterator.flatMap(_.stats)
         .filter { case (f, _) => deltaParts.exists(_._2.contains(f)) }.toMap
-      // the log's recorded partition schema (N columns) wins when present;
-      // the caller-supplied (partCol, partType) covers legacy logs only
-      val ps = w.partSchema.map(org.apache.spark.sql.types.StructType.fromDDL)
-        .getOrElse(singleCol(partCol, partType))
+      val ps = partSchemaOf(w.partSchema, root, "TxLog.readChangesSince")
       (Some(readSnapshot(spark, root,
         Snapshot(w.version, deltaParts, w.schema, stats,
           partSchema = None, mapping = w.mapping), ps)),
@@ -1491,9 +1495,7 @@ object TxLog {
     // dropped columns vanish, later-added columns NULL-backfill.
     val endMapping = w.mapping
     val (appends, dml) = w.feedCommits()
-    val ps = w.partSchema.map(org.apache.spark.sql.types.StructType.fromDDL)
-      .getOrElse(sys.error(s"TxLog.readChangeFeed: the log at $root " +
-        "predates partition-column recording"))
+    val ps = partSchemaOf(w.partSchema, root, "TxLog.readChangeFeed")
     // ALL append commits of the window serve from ONE scan: their frames
     // were structurally identical (same recorded schema, same end-of-
     // window mapping, no deletion vectors) and differed only in file set
@@ -1529,8 +1531,7 @@ object TxLog {
     // `_change_type` in their path: like the appends, all of the window's
     // serve from ONE scan whose partition schema gains `_change_type`,
     // each row's version derived from its file.
-    val routed = dml.flatMap(c =>
-      c.changes.filterNot(isLegacyChange).map(_ -> c.version))
+    val routed = dml.flatMap(c => c.changes.map(_ -> c.version))
     val changeType = org.apache.spark.sql.types.StructField(
       "_change_type", StringType)
     val routedFrame: Option[DataFrame] =
@@ -1545,38 +1546,7 @@ object TxLog {
           org.apache.spark.sql.types.StructType(ps.fields :+ changeType),
           withPos = false, fileVersions = Some(routed.toMap)))
       }
-    // legacy data/cdf-<uuid> files: partition columns and _change_type
-    // are plain file columns
-    lazy val legacySchema = org.apache.spark.sql.types.StructType(
-      w.schema.map(org.apache.spark.sql.types.StructType.fromDDL)
-        .getOrElse(sys.error(s"TxLog.readChangeFeed: no recorded schema " +
-          s"at $root")).fields ++ ps.fields :+ changeType)
-    val frames =
-      insertFrame.toSeq ++ routedFrame ++
-      dml.filter(_.changes.exists(isLegacyChange)).map { c =>
-        val raw = spark.read.schema(legacySchema).parquet(
-          c.changes.filter(isLegacyChange).map(f => s"$root/$f"): _*)
-        val mapped =
-          if (endMapping.isEmpty) raw
-          else {
-            // legacy change files of pre-cdfNames commits carry write-time
-            // LOGICAL names — under a live mapping they cannot be re-mapped
-            require(c.cdfPhys, s"TxLog.readChangeFeed: commit " +
-              s"v${c.version}'s change files carry write-time column " +
-              "names and the table now has a column mapping — that window " +
-              "cannot re-map; re-baseline from a snapshot read")
-            val cols = raw.columns.toSeq.flatMap { n =>
-              if (n == "_change_type") Some(col(n))
-              else endMapping.get(n) match {
-                case Some("-") => None // dropped since — vanish from feed
-                case Some(l) => Some(col(n).as(l))
-                case None => Some(col(n))
-              }
-            }
-            raw.select(cols: _*)
-          }
-        mapped.withColumn("_commit_version", lit(c.version))
-      }
+    val frames = insertFrame.toSeq ++ routedFrame
     if (frames.isEmpty) (None, w.version)
     else (Some(frames.reduce(
       _.unionByName(_, allowMissingColumns = true))), w.version)
@@ -1584,7 +1554,7 @@ object TxLog {
 
   /** Table metadata for external readers (the streaming source): the
     * recorded data schema and the full (ordered) partition schema.
-    * Refuses logs written before schema/partition recording. */
+    * Refuses a log that has recorded neither yet. */
   private[graft] def tableMeta(spark: SparkSession, root: String)
       : (org.apache.spark.sql.types.StructType,
          org.apache.spark.sql.types.StructType) = {
@@ -1592,11 +1562,8 @@ object TxLog {
     val schema = (chk.flatMap(_.schema).toSeq ++ commits.flatMap(_.schema))
       .lastOption.map(org.apache.spark.sql.types.StructType.fromDDL)
       .getOrElse(sys.error(s"TxLog.tableMeta: no recorded schema at $root"))
-    val ps = (chk.flatMap(_.partSchema).toSeq ++
-      commits.flatMap(_.partSchema)).lastOption
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
-      .getOrElse(sys.error(s"TxLog.tableMeta: the log at $root predates " +
-        "partition-column recording"))
+    val ps = partSchemaOf((chk.flatMap(_.partSchema).toSeq ++
+      commits.flatMap(_.partSchema)).lastOption, root, "TxLog.tableMeta")
     (schema, ps)
   }
 
@@ -1687,7 +1654,8 @@ object TxLog {
             if (names.isEmpty) Set.empty
             else {
               import spark.implicits._
-              spark.read.parquet(s"$root/_txlog/${pr.payloadChk.get._1}")
+              spark.read.schema(PayloadSchema)
+                .parquet(s"$root/_txlog/${pr.payloadChk.get._1}")
                 .filter(col("file").isin(names.distinct: _*))
                 .select("file").as[String].collect().toSet
             }
@@ -1777,10 +1745,9 @@ object TxLog {
   }
 
   /** One file of a CDF stream's micro-batch plan: `kind` is "data" (an
-    * append commit's file, streamed as inserts), "change" (a DML
+    * append commit's file, streamed as inserts) or "change" (a DML
     * commit's routed change file: partition key and `changeType` from
-    * its path) or "cdf" (a legacy unpartitioned change file, partition
-    * values and change type in its rows). */
+    * its path). */
   private[graft] final case class ChangePlanFile(kind: String,
                                                  partKey: String, rel: String,
                                                  length: Long, version: Long,
@@ -1800,19 +1767,10 @@ object TxLog {
     val w = changeWindow(spark, root, "TxLog CDF stream", since, Some(until),
       checkCap = false, "commits (and change files) are expired; restart " +
         "the stream from a fresh checkpoint over a snapshot read")
-    // column-mapped tables serve (files all carry PHYSICAL names; the
-    // reader decodes physically and reports the stream-start logical
-    // schema) — only LEGACY change files with write-time logical names
-    // refuse, below
-    val mapped = w.all.flatMap(_.mapping).lastOption
-      .getOrElse(w.chk.map(_.mapping).getOrElse(Map.empty)).nonEmpty
+    // column-mapped tables serve: data and change files all carry
+    // PHYSICAL names, and the reader decodes physically and reports the
+    // stream-start logical schema
     val (appends, dml) = w.feedCommits()
-    val legacy = dml.filterNot(_.cdfPhys)
-    require(!mapped || legacy.isEmpty, "TxLog CDF stream: commits " +
-      s"[${legacy.map(c => s"v${c.version}").mkString(", ")}] wrote their " +
-      "change files under write-time column names and the table now has " +
-      "a column mapping — those windows cannot re-map; re-baseline the " +
-      "consumer")
     val dataRels = appends.flatMap { c =>
       c.parts.toSeq.flatMap { case (v, fs) => fs.map(f => (v, f, c.version)) }
     }
@@ -1823,19 +1781,12 @@ object TxLog {
     def lenOf(rel: String): Long = meta.getOrElse(rel, sys.error(
       s"TxLog CDF stream: live file $rel missing under $root — vacuum " +
         "ran inside the stream's window?"))._1
-    val nPart = w.all.flatMap(_.partSchema).lastOption
-      .orElse(w.chk.flatMap(_.partSchema))
-      .map(org.apache.spark.sql.types.StructType.fromDDL(_).length)
+    val nPart = partSchemaOf(w.partSchema, root, "TxLog CDF stream").length
     dataRels.map { case (v, f, ver) =>
       ChangePlanFile("data", v, f, lenOf(f), ver)
     } ++ cdfRels.map { case (f, ver) =>
-      if (isLegacyChange(f)) ChangePlanFile("cdf", "", f, lenOf(f), ver)
-      else {
-        val (t, key) = routedChangeOf(f, nPart.getOrElse(sys.error(
-          s"TxLog CDF stream: the log at $root predates partition-column " +
-            "recording")))
-        ChangePlanFile("change", key, f, lenOf(f), ver, t)
-      }
+      val (t, key) = routedChangeOf(f, nPart)
+      ChangePlanFile("change", key, f, lenOf(f), ver, t)
     }
   }
 
@@ -1874,9 +1825,8 @@ object TxLog {
     * append (same posture as skipNonAppend: rewrites reconciled out of
     * band). Runs until the log is drained or `maxCycles`; returns the
     * number of delivered windows. */
-  def consumeChanges(spark: SparkSession, root: String, partCol: String,
+  def consumeChanges(spark: SparkSession, root: String,
                      checkpointPath: String,
-                     partType: DataType = StringType,
                      maxCycles: Int = Int.MaxValue,
                      skipNonAppend: Boolean = false,
                      reBaseline: Boolean = false)
@@ -1931,18 +1881,16 @@ object TxLog {
           cap = pendingIntent.filter(_ >= floor))
         val v = state.version
         writeCp(since, Some(v))
-        val ps = state.partSchema
-          .map(org.apache.spark.sql.types.StructType.fromDDL)
-          .getOrElse(singleCol(partCol, partType))
-        process(readSnapshot(spark, root, state, ps), v)
+        process(readSnapshot(spark, root, state,
+          partSchemaOf(state.partSchema, root, "TxLog.consumeChanges")), v)
         writeCp(v, None)
         cycles += 1
       } else {
         // a pending intent = a crashed delivery: replay the identical
         // capped window under the identical tag; otherwise plan the next
         // window, durably record its end as the intent, THEN deliver
-        val (df, v) = readChangesSince(spark, root, since, partCol,
-          partType, skipNonAppend, untilVersion = pendingIntent)
+        val (df, v) = readChangesSince(spark, root, since, skipNonAppend,
+          untilVersion = pendingIntent)
         df match {
           case Some(d) =>
             if (pendingIntent.isEmpty) writeCp(since, Some(v))
@@ -2302,7 +2250,7 @@ object TxLog {
         .map(f => f.copy(name = reverse.getOrElse(f.name, f.name),
           nullable = true)))
     // footer min/max per staged file → data skipping at read time
-    // (readers treat absent stats — pre-stats logs — as unskippable)
+    // (readers treat absent stats as unskippable)
     val (stats, rows) =
       TxStats.collect(spark, root, parts.values.flatten.toSeq, dataSchema)
     // the partition columns are TABLE metadata, not reader knowledge:
@@ -2383,12 +2331,6 @@ object TxLog {
       checked = if (checkData) Some(cons) else None, routed = true)
       .copy(changeFeed = changeFeed)
   }
-
-  /** Whether a change file is a legacy unpartitioned `data/cdf-<uuid>`
-    * one: partition columns and `_change_type` are plain file columns.
-    * Routed change files carry both in their path instead. */
-  private def isLegacyChange(rel: String): Boolean =
-    rel.startsWith("data/cdf-")
 
   /** A routed change file's (change type, table partition key), read off
     * its `data/txn-<uuid>/__route=<type>/<c1>=<v1>/.../<file>` path —
@@ -2595,8 +2537,8 @@ object TxLog {
       // overwrite replacing every current partition (arbitrary rewrite).
       // A SUBSET writer (one that silently lost a column) stays refused:
       // its commit would regress the recorded schema and drop the column
-      // from every subsequent read. Old logs without schema records
-      // impose no constraint (None).
+      // from every subsequent read. A log that has recorded no schema
+      // yet (nothing data-bearing committed) imposes no constraint.
       // The guards need schema/partSchema/partition VALUES, never the
       // file list — so commits to a parquet-checkpointed table stay
       // O(delta) driver work. `covers` asks "does the staged key set
@@ -3091,7 +3033,8 @@ object TxLog {
       require(!existing.contains(name),
         s"addCheckConstraintTx: constraint [$name] already exists at $root")
       if (hasData(spark, root, state)) {
-        val ps = partSchemaOf(state, root, "addCheckConstraintTx")
+        val ps = partSchemaOf(state.partSchema, root,
+          "TxLog.addCheckConstraintTx")
         require(readSnapshot(spark, root, state, ps)
             .filter(not(coalesce(expr(exprStr), lit(true)))).isEmpty,
           s"addCheckConstraintTx: existing rows at $root violate [$name] " +
@@ -3222,7 +3165,7 @@ object TxLog {
       s"[${notCarried.mkString(", ")}] not in the replacement frame")
     if (tableExists(spark, root)) {
       val recorded = tableMeta(spark, root)._2.map(_.name).toSeq
-      require(recorded.isEmpty || recorded == partCols,
+      require(recorded == partCols,
         s"replaceTableTx: partCols [${partCols.mkString(", ")}] do not " +
           s"match the recorded partitioning [${recorded.mkString(", ")}] " +
           s"at $root — a location has ONE partitioning; rebuild at a " +
@@ -3230,10 +3173,13 @@ object TxLog {
     }
     val partSet = partCols.toSet
     // fresh-definition staging: identity mapping, no inherited
-    // constraints (the commit supersedes both below)
+    // constraints (the commit supersedes both below). Staged once: an
+    // empty `df` stages nothing (and leaves no dir), and the replacement
+    // then records its declared schema and partition schema alone
+    val staged = stageWith(df, root, partCols, Nil, 0, Map.empty, Map.empty,
+      None)
     val staged0 =
-      if (!df.isEmpty)
-        stageWith(df, root, partCols, Nil, 0, Map.empty, Map.empty, None)
+      if (staged.parts.nonEmpty) staged
       else Staged(Map.empty,
         schema = Some(org.apache.spark.sql.types.StructType(
           df.schema.filterNot(f => partSet(f.name))
@@ -3441,7 +3387,8 @@ object TxLog {
             "restorable; retain a longer vacuum window to restore that far")
         val name = writePayloadDir(spark, root, entries, cur.version + 1)
         val (nfiles, bytes, ndvs) =
-          payloadFacts(spark.read.parquet(s"$root/_txlog/$name"))
+          payloadFacts(spark.read.schema(PayloadSchema)
+            .parquet(s"$root/_txlog/$name"))
         val staged = Staged(Map.empty,
           schema = bt.schema, partSchema = bt.partSchema,
           mapping = Some(bt.mapping), constraints = Some(bt.constraints),
@@ -3462,14 +3409,13 @@ object TxLog {
     * ([[retryOnConflict]] over a whole-table overwrite). The
     * final table is always some serialized application of all competing
     * transforms. `transform` must be a pure function of its input frame. */
-  def readModifyWrite(spark: SparkSession, root: String, partCol: String,
-                      partType: DataType = StringType)
+  def readModifyWrite(spark: SparkSession, root: String, partCol: String)
                      (transform: DataFrame => DataFrame): Long =
     retryOnConflict(root, "TxLog.readModifyWrite") {
       val snap = snapshot(spark, root)
-      val staged = stage(
-        transform(readSnapshot(spark, root, snap, partCol, partType)),
-        root, partCol)
+      val ps = rewritePartSchema(snap, root, "TxLog.readModifyWrite", partCol)
+      val staged = stage(transform(readSnapshot(spark, root, snap, ps)),
+        root, ps.map(_.name), Nil, 0)
       Attempt(() => commit(spark, root, staged, "overwrite",
           readVersion = snap.version, conflictCheck = true),
         () => discard(spark, root, staged))
@@ -3488,18 +3434,16 @@ object TxLog {
     * only replaces partitions it stages; drop them with
     * [[removePartitionsTx]] instead). */
   def readModifyWriteWhere(spark: SparkSession, root: String, partCol: String,
-                           partType: DataType = StringType,
                            select: String => Boolean,
                            clusterBy: Seq[Column] = Nil, clusterFiles: Int = 0)
                           (transform: DataFrame => DataFrame): Long =
     retryOnConflict(root, "TxLog.readModifyWriteWhere") {
       val state = stateOf(spark, root)
       // the table's RECORDED partition schema (N columns) drives the read
-      // and restage; the caller's (partCol, partType) covers legacy logs.
-      // On a multi-column table `select` sees the composite key.
-      val ps = state.partSchema
-        .map(org.apache.spark.sql.types.StructType.fromDDL)
-        .getOrElse(singleCol(partCol, partType))
+      // and restage; `partCol` must be one of its columns. On a
+      // multi-column table `select` sees the composite key.
+      val ps = rewritePartSchema(state, root, "TxLog.readModifyWriteWhere",
+        partCol)
       // selected partitions' files only — on a parquet-checkpointed table
       // the payload's are one payload query bounded by the SELECTION,
       // never a full driver fold (the maintenance contract:
@@ -3549,9 +3493,8 @@ object TxLog {
     * O(selected) — run it partition-scoped on a schedule, never
     * table-wide at 100 TB. */
   def compactPartitionsTx(spark: SparkSession, root: String, partCol: String,
-                          partType: DataType = StringType,
                           select: String => Boolean = _ => true): Long =
-    readModifyWriteWhere(spark, root, partCol, partType, select)(identity)
+    readModifyWriteWhere(spark, root, partCol, select)(identity)
 
   /** Transactional RANGE-CLUSTERED compaction — the OPTIMIZE-ZORDER-lite
     * maintenance move for [[TxStats]] data skipping: rewrite the selected
@@ -3567,11 +3510,10 @@ object TxLog {
     * cluster's write parallelism. */
   def compactClusteredTx(spark: SparkSession, root: String, partCol: String,
                          clusterBy: Seq[Column], files: Int,
-                         partType: DataType = StringType,
                          select: String => Boolean = _ => true): Long = {
     require(clusterBy.nonEmpty, "compactClusteredTx: no cluster columns")
     require(files > 0, "compactClusteredTx: files must be positive")
-    readModifyWriteWhere(spark, root, partCol, partType, select,
+    readModifyWriteWhere(spark, root, partCol, select,
       clusterBy = clusterBy, clusterFiles = files)(identity)
   }
 
@@ -3598,7 +3540,7 @@ object TxLog {
     * [[readModifyWriteWhere]]). Returns (version, small files removed);
     * no commit when nothing qualifies. */
   def compactBinPackTx(spark: SparkSession, root: String, partCol: String,
-                       smallBytes: Long, partType: DataType = StringType,
+                       smallBytes: Long,
                        select: String => Boolean = _ => true,
                        minFiles: Int = 2,
                        dvFraction: Double = 0.3): (Long, Int) = {
@@ -3611,9 +3553,8 @@ object TxLog {
     def attempt(): Attempt[(Long, Int)] = {
       val state = stateOf(spark, root)
       val version = state.version
-      val ps = state.partSchema
-        .map(org.apache.spark.sql.types.StructType.fromDDL)
-        .getOrElse(singleCol(partCol, partType))
+      val ps = rewritePartSchema(state, root, "TxLog.compactBinPackTx",
+        partCol)
       // selected partitions' file facts — (size, rows, deleted-rows):
       // grouped driver listings + recorded counts for the driver-side
       // files, ONE payload query for a payload's — never a full-table
@@ -3629,16 +3570,13 @@ object TxLog {
       }
       val sized = state.payload.fold(ownSized) { p =>
         val values = partValuesWhere(spark, root, state, select)
-        val hasDvCols = payloadLiveDF(spark, root, p).columns
-          .contains("dvrows")
         val fromPayload =
           if (values.isEmpty)
             Map.empty[String, Seq[(String, Long, Option[Long], Long)]]
           else payloadLiveDF(spark, root, p)
             .filter(col("part").isin(values: _*))
             .select(col("part"), col("file"), col("size"), col("rows"),
-              if (hasDvCols) coalesce(col("dvrows"), lit(0L))
-              else lit(0L))
+              coalesce(col("dvrows"), lit(0L)))
             .collect()
             .groupBy(_.getString(0))
             .map { case (v, xs) =>
@@ -3706,7 +3644,6 @@ object TxLog {
     * Runs under the same conflict protocol as every rewrite. */
   def compactZorderTx(spark: SparkSession, root: String, partCol: String,
                       zorderBy: Seq[String], files: Int,
-                      partType: DataType = StringType,
                       select: String => Boolean = _ => true): Long = {
     require(zorderBy.size >= 2,
       "compactZorderTx: z-order needs 2+ keys (use compactClusteredTx " +
@@ -3718,9 +3655,7 @@ object TxLog {
     require(files > 0, "compactZorderTx: files must be positive")
     val zState = stateOf(spark, root)
     val df = readSnapshot(spark, root, zState,
-      zState.partSchema
-        .map(org.apache.spark.sql.types.StructType.fromDDL)
-        .getOrElse(singleCol(partCol, partType)))
+      rewritePartSchema(zState, root, "TxLog.compactZorderTx", partCol))
     zorderBy.foreach { c =>
       val t = df.schema(c).dataType
       require(t.isInstanceOf[org.apache.spark.sql.types.NumericType] ||
@@ -3747,7 +3682,7 @@ object TxLog {
     val zCol = graft.plans.ZBucketInterleave(
       zorderBy.map(c => col(c).cast(org.apache.spark.sql.types.DoubleType)),
       bounds, ZorderBits)
-    readModifyWriteWhere(spark, root, partCol, partType, select,
+    readModifyWriteWhere(spark, root, partCol, select,
       clusterBy = Seq(zCol), clusterFiles = files)(identity)
   }
 
@@ -3813,10 +3748,7 @@ object TxLog {
       val version = state.version
       if (!hasData(spark, root, state))
         return Attempt(() => (version, 0))
-      val ps = state.partSchema
-        .map(org.apache.spark.sql.types.StructType.fromDDL)
-        .getOrElse(sys.error(s"TxLog.deleteWhereTx: the log at $root " +
-          "predates partition-column recording"))
+      val ps = partSchemaOf(state.partSchema, root, "TxLog.deleteWhereTx")
       val cands = candidatesOf(
         readSnapshot(spark, root, state, ps), cond, ps.map(_.name))
       if (cands.isEmpty) return Attempt(() => (version, 0))
@@ -3868,7 +3800,7 @@ object TxLog {
       val version = state.version
       if (!hasData(spark, root, state))
         return Attempt(() => (version, 0))
-      val ps = partSchemaOf(state, root, "updateWhereTx")
+      val ps = partSchemaOf(state.partSchema, root, "TxLog.updateWhereTx")
       sets.keys.foreach { k =>
         require(!ps.map(_.name).contains(k),
           s"updateWhereTx: SET touches partition column [$k] — " +
@@ -3936,7 +3868,7 @@ object TxLog {
       val version = state.version
       if (!hasData(spark, root, state))
         return Attempt(() => (version, 0L))
-      val ps = partSchemaOf(state, root, "deleteWhereDvTx")
+      val ps = partSchemaOf(state.partSchema, root, "TxLog.deleteWhereDvTx")
       // candidate search: stats pruning decides FILES, and the dv
       // anti-join can only shrink rows within them — so the search reads
       // without the state's own vectors (a payload's pruning still runs
@@ -4424,7 +4356,7 @@ object TxLog {
       else fs.listStatus(dir).toSeq.flatMap { st =>
         st.getPath.getName match {
           case n @ VersionRe(v) =>
-            try Some((parseCommit(v.toLong, readFile(fs, st.getPath)),
+            try Some((parseCommit(root, v.toLong, readFile(fs, st.getPath)),
               st.getModificationTime))
             catch { case _: java.io.FileNotFoundException => None }
           case _ => None
@@ -4459,14 +4391,14 @@ object TxLog {
     * older than `vacuumAgeMs`. Idempotent by composition (each step is);
     * a second immediate run reports zeros. Returns a one-row report. */
   def maintainTx(spark: SparkSession, root: String, partCol: String,
-                 smallBytes: Long, partType: DataType = StringType,
+                 smallBytes: Long,
                  select: String => Boolean = _ => true,
                  vacuumAgeMs: Long = 3600000L,
                  dvFraction: Double = 0.3,
                  sealLedger: Boolean = false,
                  adopt: Option[(String, Long)] = None): DataFrame = {
     val (_, packed) = compactBinPackTx(spark, root, partCol, smallBytes,
-      partType, select, dvFraction = dvFraction)
+      select, dvFraction = dvFraction)
     // opt-in ledger migration as part of the bundle: seal (+ adopt a
     // writer-seq baseline), then the checkpoint below drops the b-lines
     if (sealLedger) {
@@ -4494,23 +4426,17 @@ object TxLog {
     * `graft.vacuum.retentionMs` (default 1 h) and `graft.dv.fraction`
     * (default 0.3); `graft.autoCheckpoint.every` / `graft.seal.nudgeIds`
     * are consumed by [[commit]] / [[checkpoint]] directly. */
-  def maintainTx(spark: SparkSession, root: String, partCol: String,
-                 partType: DataType): DataFrame = {
+  def maintainTx(spark: SparkSession, root: String,
+                 partCol: String): DataFrame = {
     val props = tableProperties(spark, root)
     maintainTx(spark, root, partCol,
       smallBytes = props.get("graft.binpack.smallBytes").map(_.toLong)
         .getOrElse(64L << 20),
-      partType = partType,
       vacuumAgeMs = props.get("graft.vacuum.retentionMs").map(_.toLong)
         .getOrElse(3600000L),
       dvFraction = props.get("graft.dv.fraction").map(_.toDouble)
         .getOrElse(0.3))
   }
-
-  /** String-partitioned [[maintainTx]] by recorded properties. */
-  def maintainTx(spark: SparkSession, root: String,
-                 partCol: String): DataFrame =
-    maintainTx(spark, root, partCol, StringType: DataType)
 
   /** `select`-predicate builder for PARTITION-SCOPED maintenance: lifts
     * a predicate over the named partition column's RAW value onto the
@@ -4545,12 +4471,11 @@ object TxLog {
     // dvrows excluded by a bounded lookup, the override counted below)
     val (payloadFiles, payloadBytes, payloadDvRows) =
       state.payload.fold((0L, 0L, 0L)) { p =>
-        val hasDv = payloadLiveDF(spark, root, p).columns.contains("dvfiles")
         val agg = payloadLiveDF(spark, root, p).agg(
           count(lit(1)), coalesce(sum("size"), lit(0L)),
-          if (hasDv) coalesce(sum("dvrows"), lit(0L)) else lit(0L)).head
+          coalesce(sum("dvrows"), lit(0L))).head
         val overridden =
-          if (state.dvs.isEmpty || !hasDv) 0L
+          if (state.dvs.isEmpty) 0L
           else payloadLiveDF(spark, root, p)
             .filter(col("file").isin(state.dvs.keySet.toSeq: _*))
             .agg(coalesce(sum("dvrows"), lit(0L))).head.getLong(0)
@@ -4709,13 +4634,12 @@ object TxLog {
     // the key's RAW column values (one element per partition column) —
     // what the payload-side partition predicate evaluates against on an
     // N-column table (the composite `part` string stays the join/identity
-    // key). Legacy payloads lack it; they are single-column by
-    // construction and keep pruning on `part`.
+    // key).
     org.apache.spark.sql.types.StructField("partv",
       org.apache.spark.sql.types.ArrayType(StringType, false), true),
     // DELETION VECTOR columns (null = no vector): the file's cumulative
     // position sidecars and deleted-row count — DV state rides the
-    // payload at scale exactly like stats (legacy payloads lack them)
+    // payload at scale exactly like stats
     org.apache.spark.sql.types.StructField("dvfiles",
       org.apache.spark.sql.types.ArrayType(StringType, false), true),
     org.apache.spark.sql.types.StructField("dvrows",
@@ -4800,12 +4724,6 @@ object TxLog {
     fsOf(spark, p).delete(p, true): Unit
   }
 
-  /** Partition-column count of a recorded partition-schema DDL (1 for
-    * legacy logs without one — single-column by construction). */
-  private def nPartsOf(partSchema: Option[String]): Int =
-    partSchema.map(org.apache.spark.sql.types.StructType.fromDDL(_).length)
-      .getOrElse(1)
-
   /** Live partition values of `snap` passing `select`. FREE when the
     * driver holds the value set (a driver table's keys, or a checkpoint
     * header carrying it — ≤ [[chkMaxHeaderValues]] partitions); an
@@ -4846,7 +4764,7 @@ object TxLog {
   /** The payload's LIVE rows: the rows the delta masks filtered out. */
   private[sources] def payloadLiveDF(spark: SparkSession, root: String,
                                      p: Payload): DataFrame = {
-    var df = spark.read.parquet(s"$root/_txlog/${p.dir}")
+    var df = spark.read.schema(PayloadSchema).parquet(s"$root/_txlog/${p.dir}")
     // a driver-shape restore superseded the payload: serve its SCHEMA
     // with zero rows (the restore's inventory lives in the delta)
     if (p.dead) return df.filter(lit(false))
@@ -4860,14 +4778,16 @@ object TxLog {
   /** `snap`'s full live inventory as ONE payload-shaped DataFrame (the
     * 9-column layout): entries for its driver-side files (sizes and
     * mtimes listed, vectors attached) plus, on a payload table, the
-    * payload's live rows with legacy-payload columns normalized and the
-    * delta's vector overrides folded in. Returned with the driver-side
-    * entries' (files, bytes, files with a vector). Shared by the
-    * checkpoint, the payload-table RESTORE (which rewrites a TARGET
-    * version's inventory) and the payload-shape replace. */
+    * payload's live rows with the delta's vector overrides folded in.
+    * Returned with the driver-side entries' (files, bytes, files with a
+    * vector). Shared by the checkpoint, the payload-table RESTORE (which
+    * rewrites a TARGET version's inventory) and the payload-shape
+    * replace. */
   private def entriesDF(spark: SparkSession, root: String, snap: Snapshot)
       : (DataFrame, (Long, Long, Long)) = {
-    val nP = nPartsOf(snap.partSchema)
+    // no recorded partition schema means no files: nothing to split
+    val nP = snap.partSchema
+      .fold(0)(org.apache.spark.sql.types.StructType.fromDDL(_).length)
     val meta = statusByRel(spark, root, snap.parts.values.flatten.toSeq)
     val rows = entryRows(root, snap.parts, snap.stats, snap.rows, meta, nP,
       snap.dvs)
@@ -4876,32 +4796,15 @@ object TxLog {
     val entries = snap.payload.fold(
         own.repartition(math.max(1, rows.size / 500000))) { p =>
       val prior = payloadLiveDF(spark, root, p)
-      // legacy payloads (written before partv) are single-column by
-      // construction: their key IS the one raw value
-      val priorWithSegs =
-        if (prior.columns.contains("partv")) prior
-        else {
-          require(nP == 1, s"TxLog.checkpoint: payload at $root lacks " +
-            "partv but the table records a multi-column partition schema")
-          prior.withColumn("partv", array(col("part")))
-        }
-      // legacy payloads predate the dv columns; post-checkpoint vector
-      // overrides fold INTO the new payload here (the dv analogue of the
-      // partition-delta fold)
-      val priorWithDv0 =
-        if (priorWithSegs.columns.contains("dvfiles")) priorWithSegs
-        else priorWithSegs
-          .withColumn("dvfiles",
-            lit(null).cast(org.apache.spark.sql.types.ArrayType(StringType)))
-          .withColumn("dvrows",
-            lit(null).cast(org.apache.spark.sql.types.LongType))
+      // post-checkpoint vector overrides fold INTO the new payload here
+      // (the dv analogue of the partition-delta fold)
       val priorWithDv =
-        if (snap.dvs.isEmpty) priorWithDv0
+        if (snap.dvs.isEmpty) prior
         else {
           import spark.implicits._
           val ov = snap.dvs.toSeq.map { case (f, (dvf, n)) => (f, dvf, n) }
             .toDF("file", "__ovf", "__ovn")
-          priorWithDv0.join(broadcast(ov), Seq("file"), "left")
+          prior.join(broadcast(ov), Seq("file"), "left")
             .withColumn("dvfiles", coalesce(col("__ovf"), col("dvfiles")))
             .withColumn("dvrows", coalesce(col("__ovn"), col("dvrows")))
             .drop("__ovf", "__ovn")
@@ -4936,7 +4839,7 @@ object TxLog {
     val (entries, ownFacts) = entriesDF(spark, root, snap)
     val name = writePayloadDir(spark, root, entries, snap.version)
     val fresh = snap.payload.map(_ =>
-      spark.read.parquet(s"$root/_txlog/$name"))
+      spark.read.schema(PayloadSchema).parquet(s"$root/_txlog/$name"))
     val (nfiles, bytes, ndvs) = fresh.map(payloadFacts).getOrElse(ownFacts)
     // BOUNDED value collect: above the header cap the list is omitted
     // (novals) and the collect never materializes O(partitions) rows
@@ -4978,7 +4881,8 @@ object TxLog {
     // orphan) — the one the floor checkpoint references survives
     val floorPayload = names.collectFirst {
       case n @ ChkRe(v) if v.toLong == floor => n
-    }.flatMap(n => parseChk(floor, readFile(fs, new Path(dir, n))).payload)
+    }.flatMap(n =>
+      parseChk(root, floor, readFile(fs, new Path(dir, n))).payload)
     val deadPayload = names.collect {
       case n @ PayloadRe(v) if v.toLong < floor ||
         (v.toLong == floor && !floorPayload.contains(n)) => n
@@ -5015,7 +4919,8 @@ object TxLog {
       if (!fs.exists(dir)) Set.empty[String]
       else fs.listStatus(dir).map(_.getPath.getName).collect {
         case n @ VersionRe(v) =>
-          try parseCommit(v.toLong, readFile(fs, new Path(dir, n))).changes
+          try parseCommit(root, v.toLong,
+            readFile(fs, new Path(dir, n))).changes
           catch { case _: java.io.FileNotFoundException => Seq.empty }
       }.flatten.toSet
     }
@@ -5145,11 +5050,8 @@ object TxLog {
           }
       }.toDF("rel", "mtime")
     val liveBase = payloadLiveDF(spark, root, p)
-    val payloadDvFiles =
-      if (!liveBase.columns.contains("dvfiles"))
-        Seq.empty[String].toDF("rel")
-      else liveBase.filter(col("dvfiles").isNotNull)
-        .select(explode(col("dvfiles")).as("rel"))
+    val payloadDvFiles = liveBase.filter(col("dvfiles").isNotNull)
+      .select(explode(col("dvfiles")).as("rel"))
     val liveDF = liveBase
       .select(col("file").as("rel"))
       .unionByName(payloadDvFiles)

@@ -495,13 +495,10 @@ private final class TxCdfMicroBatchStream(root: String,
         val row = PartValueRow(spark, pf.partKey, partSchema)
         Array.tabulate[Any](nPart)(i => row.get(i, partSchema(i).dataType))
       }
-      val partValues = pf.kind match {
-        case "data" => partRow
-        case "change" =>
-          partRow :+ org.apache.spark.unsafe.types.UTF8String
-            .fromString(pf.changeType)
-        case _ => Array.empty[Any]
-      }
+      val partValues =
+        if (pf.kind == "data") partRow
+        else partRow :+ org.apache.spark.unsafe.types.UTF8String
+          .fromString(pf.changeType)
       TxCdfInputPartition(pf.kind, s"$root/${pf.rel}", pf.length,
         partValues, pf.version)
     }.toArray
@@ -510,18 +507,13 @@ private final class TxCdfMicroBatchStream(root: String,
   override def createReaderFactory(): PartitionReaderFactory = {
     // data files decode through (dataSchema, partSchema) with partition
     // values appended; routed change files the same way, `_change_type`
-    // appended as one more path value; legacy change files carry
-    // data+partition+_change_type as PLAIN columns, read with an empty
-    // partition schema
+    // appended as one more path value
     val changeType = org.apache.spark.sql.types.StructField("_change_type",
       org.apache.spark.sql.types.StringType, true)
     val dataFn = ParquetReadBridge.rowReader(spark, physDataSchema, partSchema)
     val changeFn = ParquetReadBridge.rowReader(spark, physDataSchema,
       StructType(partSchema.fields :+ changeType))
-    val cdfFn = ParquetReadBridge.rowReader(spark,
-      StructType((physDataSchema ++ partSchema).toSeq :+ changeType),
-      StructType(Seq.empty))
-    new TxCdfReaderFactory(dataFn, changeFn, cdfFn,
+    new TxCdfReaderFactory(dataFn, changeFn,
       tableSchema.fields.map(_.dataType))
   }
 
@@ -536,15 +528,13 @@ private final case class TxCdfInputPartition(kind: String, path: String,
 
 private final class TxCdfReaderFactory(dataFn: ParquetReadBridge.FileReadFn,
                                        changeFn: ParquetReadBridge.FileReadFn,
-                                       cdfFn: ParquetReadBridge.FileReadFn,
                                        outTypes: Array[org.apache.spark.sql.types.DataType])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[TxCdfInputPartition]
     val width = outTypes.length
     // a data row arrives width-2 (no change columns); a change row
-    // width-1 (change type read from the path or the file, version still
-    // missing)
+    // width-1 (change type read from the path, version still missing)
     def partRow = InternalRow.fromSeq(
       scala.collection.immutable.ArraySeq.unsafeWrapArray(p.partValues))
     val it: Iterator[InternalRow] =
@@ -560,8 +550,7 @@ private final class TxCdfReaderFactory(dataFn: ParquetReadBridge.FileReadFn,
           out
         }
       else
-        (if (p.kind == "change") changeFn(p.path, partRow, p.length)
-         else cdfFn(p.path, InternalRow.empty, p.length)).map { row =>
+        changeFn(p.path, partRow, p.length).map { row =>
           val out = new org.apache.spark.sql.catalyst.expressions
             .GenericInternalRow(width)
           var i = 0

@@ -306,7 +306,7 @@ class PropertySpec extends SparkSpecBase {
       col("k") % 2 === 0)
     assert(nDel === values.size.toLong)
     graft.sources.TxLog.checkpoint(spark, root)
-    val got = graft.sources.TxLog.read(spark, root, "part")
+    val got = graft.sources.TxLog.readTable(spark, root)
       .select("part", "k").collect()
       .map(r => r.getString(0) -> r.getLong(1))
     assert(got.length === values.size)

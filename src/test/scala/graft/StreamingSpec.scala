@@ -283,7 +283,7 @@ class StreamingSpec extends SparkSpecBase {
       TxLog.overwritePartitionsTx(
         Seq((50L, "purchase", 5.0)).toDF("event_id", "event_type", "value"),
         root, "event_type")
-      val got = TxLog.read(spark, root, "event_type")
+      val got = TxLog.readTable(spark, root)
         .collect().map(r => r.getAs[Long]("event_id")).toSet
       assert(got === Set(1L, 2L, 3L, 50L)) // no poison row, nothing lost
     } finally q.stop()
@@ -382,7 +382,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(mfs.delete(marker, false))
     emit(2, Seq((4L, "view", 4.0)))
     runOnce() // restart: replays epoch 1 (no-op), then lands epoch 2
-    val got = TxLog.read(spark, root, "event_type")
+    val got = TxLog.readTable(spark, root)
       .collect().map(r => r.getAs[Long]("event_id")).sorted
     assert(got.toSeq === Seq(1L, 2L, 3L, 4L),
       s"restart replay duplicated or lost rows: ${got.mkString(",")}")

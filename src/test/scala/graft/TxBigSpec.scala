@@ -66,12 +66,12 @@ class TxBigSpec extends SparkSpecBase {
     assert(bigIndexOf(all) ne null)
     assert(all.agg(sum("n")).head.getLong(0) === 333L)
     // data skipping inside the payload scan: a point probe reads 1 file
-    val probe = TxLog.read(spark, root, "part").filter(col("n") === 20L)
+    val probe = TxLog.readTable(spark, root).filter(col("n") === 20L)
     assert(probe.select("part").collect().map(_.getString(0)).toSeq
       === Seq("b"))
     assert(filesRead(probe) === 1L, "payload-side skipping must prune to 1")
     // partition pruning inside the payload scan
-    assert(filesRead(TxLog.read(spark, root, "part")
+    assert(filesRead(TxLog.readTable(spark, root)
       .filter(col("part") === "a")) === 3L)
     // writes continue post-checkpoint: append, metadata counts
     TxLog.appendBatchTx(kv("a" -> 1000, "c" -> 3000), root, "part", "g4")
@@ -85,7 +85,7 @@ class TxBigSpec extends SparkSpecBase {
     val gv = TxLog.appendBatchTx(kv("a" -> 9999), root, "part", "g2")
     assert(gv === 3L, "pre-checkpoint batch id must replay as a no-op")
     // incremental consumption over the delta
-    val (changes, _) = TxLog.readChangesSince(spark, root, 3L, "part")
+    val (changes, _) = TxLog.readChangesSince(spark, root, 3L)
     assert(changes.get.agg(sum("n")).head.getLong(0) === 4000L)
     // keyed delete: only covering files rewrite
     val (_, rewritten) = TxLog.deleteWhereTx(spark, root,
@@ -116,7 +116,7 @@ class TxBigSpec extends SparkSpecBase {
     assert(TxLog.readTable(spark, root).agg(sum("n")).head.getLong(0)
       === 5304L)
     // the retention floor moved with the re-checkpoint
-    assert(TxLog.readChangesSince(spark, root, v2, "part")._2 === v2)
+    assert(TxLog.readChangesSince(spark, root, v2)._2 === v2)
   }}
 
   test("z-order compaction makes BOTH keys skippable: range probes on " +
@@ -135,7 +135,7 @@ class TxBigSpec extends SparkSpecBase {
         "append", 0L)
     }
     def filesFor(c: String, lo: Long, hi: Long): Long =
-      filesRead(TxLog.read(spark, root, "part")
+      filesRead(TxLog.readTable(spark, root)
         .filter(col(c) >= lo && col(c) < hi))
     TxLog.compactZorderTx(spark, root, "part", Seq("k1", "k2"), files = 16)
     val total = TxLog.snapshot(spark, root).parts.values.map(_.size).sum
@@ -146,7 +146,7 @@ class TxBigSpec extends SparkSpecBase {
     assert(r1 * 2 <= total, s"k1 slice scanned $r1 of $total z-files")
     assert(r2 * 2 <= total, s"k2 slice scanned $r2 of $total z-files")
     // content survived the rewrite bit-for-bit
-    assert(TxLog.read(spark, root, "part")
+    assert(TxLog.readTable(spark, root)
       .agg(sum(col("k1") + col("k2") * 64)).head.getLong(0)
       === (0L until 4096L).sum)
   }
@@ -183,7 +183,7 @@ class TxBigSpec extends SparkSpecBase {
       // the inventory is now 100k+ files; a selective probe must read
       // ONLY the real partition's files — survivors are the only thing
       // the driver ever materializes
-      val probe = TxLog.read(spark, root, "part").filter(col("n") === 2L)
+      val probe = TxLog.readTable(spark, root).filter(col("n") === 2L)
       val idx = bigIndexOf(probe)
       val survivors = probe.queryExecution.executedPlan.collect {
         case s: org.apache.spark.sql.execution.FileSourceScanExec => s
@@ -286,7 +286,7 @@ class TxBigSpec extends SparkSpecBase {
         // reads + partition pruning keep working (the payload's partv
         // column drives pruning, never the header)
         assert(TxLog.readTable(spark, root).count() === 6L)
-        assert(filesRead(TxLog.read(spark, root, "part")
+        assert(filesRead(TxLog.readTable(spark, root)
           .filter(col("part") === "c")) === 1L)
         // explicit enumeration derives from the payload
         assert(TxLog.partitionValues(spark, root) ===
@@ -378,7 +378,7 @@ class TxBigSpec extends SparkSpecBase {
         assert(chkTxt.length < 4096,
           s"header must be O(1), got ${chkTxt.length} bytes")
         // selective reads keep pruning through the payload scan
-        val probe = TxLog.read(spark, root, "part")
+        val probe = TxLog.readTable(spark, root)
           .filter(col("part") === "real")
         assert(probe.select("n").collect().map(_.getLong(0)).toSet ===
           Set(1L, 2L, 3L))
@@ -396,7 +396,7 @@ class TxBigSpec extends SparkSpecBase {
         // front doors relying on emptiness probes keep working
         TxLog.mergeKeyedTx(spark, root,
           Seq(("real", 4L)).toDF("part", "n"), "n")
-        assert(TxLog.read(spark, root, "part")
+        assert(TxLog.readTable(spark, root)
           .filter(col("part") === "real").count() === 4L)
       } finally spark.conf.unset("graft.txlog.autoCheckpointEvery")
     }
@@ -424,7 +424,7 @@ class TxBigSpec extends SparkSpecBase {
         // the incremental window (1, 5]: b (re-referenced by the
         // restore's payload) and d (post-restore) stream; c must not
         val (changes, v) = TxLog.readChangesSince(spark, root, 1L,
-          "part", skipNonAppend = true)
+          skipNonAppend = true)
         assert(v === 5L)
         assert(changes.get.select("k").collect().map(_.getLong(0)).toSet
           === Set(2L, 4L))

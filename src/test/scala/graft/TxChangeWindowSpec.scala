@@ -57,7 +57,7 @@ class TxChangeWindowSpec extends SparkSpecBase {
     def appends(since: Long, until: Option[Long],
                 skip: Boolean = false): Either[String, Set[String]] = {
       val batch = outcome(files(TxLog.readChangesSince(spark, root, since,
-        "part", skipNonAppend = skip, untilVersion = until)._1))
+        skipNonAppend = skip, untilVersion = until)._1))
       val stream = outcome(TxLog.appendWindowFiles(spark, root, since,
         until.getOrElse(8L), skip).map(_._2).toSet)
       assert(batch.isLeft === stream.isLeft,
@@ -100,7 +100,7 @@ class TxChangeWindowSpec extends SparkSpecBase {
     refused(feed(6L, Some(8L)), "no row-level change record")
     // an uncommitted cap: both batch readers refuse it (the stream planners
     // take their cap from committed offsets and do not check it)
-    Seq(outcome(files(TxLog.readChangesSince(spark, root, 3L, "part",
+    Seq(outcome(files(TxLog.readChangesSince(spark, root, 3L,
         untilVersion = Some(99L))._1)),
       outcome(files(TxLog.readChangeFeed(spark, root, 3L, Some(99L))._1)))
       .foreach(refused(_, "was never committed"))

@@ -26,7 +26,7 @@ class TxLogSpec extends SparkSpecBase {
     val root = freshRoot("fold")
     TxLog.overwritePartitionsTx(kv("a" -> 1, "b" -> 2), root, "part")
     TxLog.overwritePartitionsTx(kv("b" -> 20, "c" -> 30), root, "part")
-    val got = TxLog.read(spark, root, "part")
+    val got = TxLog.readTable(spark, root)
       .collect().map(r => r.getAs[String]("part") -> r.getAs[Long]("n")).toMap
     assert(got === Map("a" -> 1L, "b" -> 20L, "c" -> 30L))
     assert(TxLog.snapshot(spark, root).version === 2L)
@@ -36,7 +36,7 @@ class TxLogSpec extends SparkSpecBase {
     val root = freshRoot("append")
     TxLog.overwritePartitionsTx(kv("a" -> 1), root, "part")
     TxLog.appendBatchTx(kv("a" -> 2), root, "part", "b1")
-    val rows = TxLog.read(spark, root, "part")
+    val rows = TxLog.readTable(spark, root)
       .groupBy("part").agg(sum("n").as("s"), count(lit(1)).as("c"))
       .collect().head
     assert(rows.getAs[Long]("s") === 3L && rows.getAs[Long]("c") === 2L)
@@ -47,7 +47,7 @@ class TxLogSpec extends SparkSpecBase {
     val v1 = TxLog.appendBatchTx(kv("a" -> 5), root, "part", "batch-7")
     val v2 = TxLog.appendBatchTx(kv("a" -> 999), root, "part", "batch-7")
     assert(v1 === v2)
-    assert(TxLog.read(spark, root, "part").agg(sum("n")).head.getLong(0) === 5L)
+    assert(TxLog.readTable(spark, root).agg(sum("n")).head.getLong(0) === 5L)
     // the replay's staged files were discarded, so vacuum finds nothing
     assert(TxLog.vacuum(spark, root, minAgeMs = 0L) === 0)
   }
@@ -68,7 +68,7 @@ class TxLogSpec extends SparkSpecBase {
     // disjoint partitions commute — same readVersion commits fine
     TxLog.commit(spark, root, stagedDisjoint, "overwrite",
       readVersion = snap.version, conflictCheck = true)
-    val got = TxLog.read(spark, root, "part")
+    val got = TxLog.readTable(spark, root)
       .collect().map(r => r.getString(1) -> r.getLong(0)).toMap
     assert(got === Map("a" -> 1L, "b" -> 20L, "c" -> 3L))
   }
@@ -93,7 +93,7 @@ class TxLogSpec extends SparkSpecBase {
     } finally pool.shutdown()
     // every increment survived: the classic lost-update anomaly would
     // leave n < writers*incsPer; the conflict check + retry forbids it
-    val n = TxLog.read(spark, root, "part").select("n").head.getLong(0)
+    val n = TxLog.readTable(spark, root).select("n").head.getLong(0)
     assert(n === (writers * incsPer).toLong)
     assert(TxLog.snapshot(spark, root).version === (writers * incsPer + 1).toLong)
   }
@@ -112,7 +112,7 @@ class TxLogSpec extends SparkSpecBase {
       val versions = tasks.map(_.get()).toSet
       assert(versions.size === 1, s"duplicate batch landed at $versions")
     } finally pool.shutdown()
-    assert(TxLog.read(spark, root, "part").agg(sum("n")).head.getLong(0) === 10L)
+    assert(TxLog.readTable(spark, root).agg(sum("n")).head.getLong(0) === 10L)
   }
 
   test("vacuum removes losers' staging, keeps every live file") {
@@ -128,7 +128,7 @@ class TxLogSpec extends SparkSpecBase {
     // the default 1 h age must reclaim NOTHING
     assert(TxLog.vacuum(spark, root) === 0)
     assert(TxLog.vacuum(spark, root, minAgeMs = 0L) === 2)
-    assert(TxLog.read(spark, root, "part").select("n").head.getLong(0) === 2L)
+    assert(TxLog.readTable(spark, root).select("n").head.getLong(0) === 2L)
     assert(TxLog.vacuum(spark, root, minAgeMs = 0L) === 0)
   }
 
@@ -139,14 +139,14 @@ class TxLogSpec extends SparkSpecBase {
     TxLog.appendBatchTx(kv("a" -> 10), root, "part", "batch-x")
     TxLog.overwritePartitionsTx(kv("b" -> 20), root, "part")
     val preSnap = TxLog.snapshot(spark, root)
-    val before = TxLog.read(spark, root, "part")
+    val before = TxLog.readTable(spark, root)
       .groupBy("part").agg(sum("n").as("s")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val cv = TxLog.checkpoint(spark, root)
     assert(cv === 3L)
     assert(TxLog.expireLog(spark, root) === 3) // three delta files folded
     // the fold from the checkpoint alone is identical
-    val after = TxLog.read(spark, root, "part")
+    val after = TxLog.readTable(spark, root)
       .groupBy("part").agg(sum("n").as("s")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(after === before && after === Map("a" -> 11L, "b" -> 20L))
@@ -155,7 +155,7 @@ class TxLogSpec extends SparkSpecBase {
     // is still a no-op
     val v = TxLog.appendBatchTx(kv("a" -> 999), root, "part", "batch-x")
     assert(v === 3L)
-    assert(TxLog.read(spark, root, "part").agg(sum("n")).head.getLong(0) === 31L)
+    assert(TxLog.readTable(spark, root).agg(sum("n")).head.getLong(0) === 31L)
     // a writer whose snapshot predates the checkpoint cannot prove
     // disjointness against expired commits — must conflict, then succeed
     // through the normal retry (re-deriving from the current snapshot)
@@ -168,7 +168,7 @@ class TxLogSpec extends SparkSpecBase {
     TxLog.readModifyWrite(spark, root, "part") { cur =>
       cur.filter(col("part") === "a").withColumn("n", col("n") + 1L)
     }
-    assert(TxLog.read(spark, root, "part").agg(sum("n")).head.getLong(0) === 33L)
+    assert(TxLog.readTable(spark, root).agg(sum("n")).head.getLong(0) === 33L)
     // commits continue past the checkpoint; a fresh snapshot sees them
     assert(TxLog.snapshot(spark, root).version === 4L)
     assert(preSnap.version === 3L)
@@ -181,14 +181,14 @@ class TxLogSpec extends SparkSpecBase {
     val logFiles = new java.io.File(s"$root/_txlog").list().toSeq
     assert(logFiles.count(_.endsWith(".chk")) === 1)
     assert(TxLog.snapshot(spark, root).version === 4L)
-    assert(TxLog.read(spark, root, "part").agg(sum("n")).head.getLong(0) === 33L)
+    assert(TxLog.readTable(spark, root).agg(sum("n")).head.getLong(0) === 33L)
   }
 
   test("snapshot read is ONE scan; a partition filter prunes at the " +
       "file index") {
     val root = freshRoot("prune")
     TxLog.overwritePartitionsTx(kv("a" -> 1, "b" -> 2, "c" -> 3), root, "part")
-    val full = TxLog.read(spark, root, "part")
+    val full = TxLog.readTable(spark, root)
     val fullScans = full.queryExecution.executedPlan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s
     }
@@ -196,7 +196,7 @@ class TxLogSpec extends SparkSpecBase {
     // a 10k-partition table must not build a 10k-branch plan)
     assert(fullScans.size === 1,
       s"expected a single scan node, got ${fullScans.size}")
-    val filtered = TxLog.read(spark, root, "part").filter(col("part") === "b")
+    val filtered = TxLog.readTable(spark, root).filter(col("part") === "b")
     assert(filtered.collect().map(_.getLong(0)).toSeq === Seq(2L))
     // the filter reaches the scan as a PARTITION filter: of the three
     // one-file partitions, only b's file is listed (file-index pruning,
@@ -219,14 +219,14 @@ class TxLogSpec extends SparkSpecBase {
       root, "part")
     val snap = TxLog.snapshot(spark, root)
     assert(snap.parts.size === 240)
-    val full = TxLog.read(spark, root, "part")
+    val full = TxLog.readTable(spark, root)
     val scans = full.queryExecution.executedPlan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s
     }
     assert(scans.size === 1,
       s"240-partition table built ${scans.size} scan nodes")
     assert(full.agg(sum("n")).head.getLong(0) === (0L until 240L).sum)
-    val filtered = TxLog.read(spark, root, "part")
+    val filtered = TxLog.readTable(spark, root)
       .filter(col("part") === "p137")
     assert(filtered.collect().map(_.getLong(0)).toSeq === Seq(137L))
     val scan = filtered.queryExecution.executedPlan.collect {
@@ -252,14 +252,14 @@ class TxLogSpec extends SparkSpecBase {
       }.head.metrics("numFiles").value
     }
     // point lookup: exactly the one file whose range covers it
-    val eq = TxLog.read(spark, root, "part").filter(col("n") === 20L)
+    val eq = TxLog.readTable(spark, root).filter(col("n") === 20L)
     assert(eq.select("part").collect().map(_.getString(0)).toSeq === Seq("b"))
     assert(filesRead(eq) === 1L, "n=20 must read exactly one file")
     // range: two files at or above 100
     assert(filesRead(
-      TxLog.read(spark, root, "part").filter(col("n") >= 100L)) === 2L)
+      TxLog.readTable(spark, root).filter(col("n") >= 100L)) === 2L)
     // provably-dead predicate: zero files, empty result
-    val dead = TxLog.read(spark, root, "part").filter(col("n") === 55L)
+    val dead = TxLog.readTable(spark, root).filter(col("n") === 55L)
     assert(dead.count() === 0L)
     assert(filesRead(dead) === 0L, "no file range covers 55")
     // stats survive the checkpoint+expire cycle
@@ -267,7 +267,7 @@ class TxLogSpec extends SparkSpecBase {
     TxLog.expireLog(spark, root)
     assert(TxLog.snapshot(spark, root).stats === snap.stats)
     assert(filesRead(
-      TxLog.read(spark, root, "part").filter(col("n") === 20L)) === 1L,
+      TxLog.readTable(spark, root).filter(col("n") === 20L)) === 1L,
       "skipping must survive log expiry via checkpoint stats")
     // compaction rewrites files — fresh stats for the new files, and the
     // widened per-partition ranges keep exactly the covering files
@@ -277,7 +277,7 @@ class TxLogSpec extends SparkSpecBase {
       v -> post.stats(fs.head)("n")
     }
     assert(ranges === Map("a" -> ("1", "100"), "b" -> ("2", "200")))
-    val eq2 = TxLog.read(spark, root, "part").filter(col("n") === 20L)
+    val eq2 = TxLog.readTable(spark, root).filter(col("n") === 20L)
     assert(eq2.select("part").collect().map(_.getString(0)).toSeq === Seq("b"))
     // a's compacted range [1,100] covers 20 — conservatively read (2 files)
     assert(filesRead(eq2) === 2L)
@@ -315,7 +315,7 @@ class TxLogSpec extends SparkSpecBase {
     TxLog.appendBatchTx(kv("a" -> 10), root, "part", "m2")
     val snap = TxLog.snapshot(spark, root)
     assert(snap.stats.size === 1, "opt-out file must carry no stats")
-    val f = TxLog.read(spark, root, "part").filter(col("n") === 999L)
+    val f = TxLog.readTable(spark, root).filter(col("n") === 999L)
     f.collect(): Unit
     val read = f.queryExecution.executedPlan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s
@@ -341,10 +341,10 @@ class TxLogSpec extends SparkSpecBase {
         case s: org.apache.spark.sql.execution.FileSourceScanExec => s
       }.head.metrics("numFiles").value
     }
-    assert(readCount(TxLog.read(spark, root2, "part")
+    assert(readCount(TxLog.readTable(spark, root2)
       .filter(col("d") >= lit(java.sql.Date.valueOf("2024-06-01")))) === 1L,
       "date range must prune to the covering file")
-    assert(readCount(TxLog.read(spark, root2, "part")
+    assert(readCount(TxLog.readTable(spark, root2)
       .filter(col("m") < lit(new java.math.BigDecimal("5.00")))) === 1L,
       "decimal range must prune to the covering file")
   }
@@ -367,7 +367,7 @@ class TxLogSpec extends SparkSpecBase {
         case s: org.apache.spark.sql.execution.FileSourceScanExec => s
       }.head.metrics("numFiles").value
     }
-    val pre = TxLog.read(spark, root, "part")
+    val pre = TxLog.readTable(spark, root)
       .filter(col("n") >= 5L && col("n") <= 10L)
     assert(filesRead(pre) === 2L, "interleaved batches must not be skippable")
     TxLog.compactClusteredTx(spark, root, "part", Seq(col("n")), files = 6)
@@ -384,7 +384,7 @@ class TxLogSpec extends SparkSpecBase {
         s"overlapping cluster ranges: $ranges")
       case _ =>
     }
-    val post = TxLog.read(spark, root, "part")
+    val post = TxLog.readTable(spark, root)
       .filter(col("n") >= 5L && col("n") <= 10L)
     assert(post.count() === 6L)
     assert(filesRead(post) <= 2L,
@@ -395,28 +395,28 @@ class TxLogSpec extends SparkSpecBase {
       "non-append commits refuse unless explicitly skipped") {
     val root = freshRoot("incr")
     TxLog.appendBatchTx(kv("a" -> 1, "b" -> 2), root, "part", "i1")
-    val (c1, v1) = TxLog.readChangesSince(spark, root, 0L, "part")
+    val (c1, v1) = TxLog.readChangesSince(spark, root, 0L)
     assert(c1.get.collect().map(_.getAs[Long]("n")).sorted.toSeq === Seq(1L, 2L))
     TxLog.appendBatchTx(kv("a" -> 10), root, "part", "i2")
-    val (c2, v2) = TxLog.readChangesSince(spark, root, v1, "part")
+    val (c2, v2) = TxLog.readChangesSince(spark, root, v1)
     assert(c2.get.collect().map(_.getAs[Long]("n")).toSeq === Seq(10L),
       "second window must hold ONLY the new batch")
     // drained: no changes, same checkpoint version back
-    val (c3, v3) = TxLog.readChangesSince(spark, root, v2, "part")
+    val (c3, v3) = TxLog.readChangesSince(spark, root, v2)
     assert(c3.isEmpty && v3 === v2)
     // an overwrite inside the window refuses loudly...
     TxLog.overwritePartitionsTx(kv("a" -> 100), root, "part")
     val ex = intercept[RuntimeException] {
-      TxLog.readChangesSince(spark, root, v2, "part")
+      TxLog.readChangesSince(spark, root, v2)
     }
     assert(ex.getMessage.contains("not appends"))
     // ...unless skipped — then ONLY later appends surface, and an
     // in-window append the overwrite replaced must NOT resurrect
     TxLog.appendBatchTx(kv("b" -> 20), root, "part", "i3")
-    val (c4, _) = TxLog.readChangesSince(spark, root, v2, "part",
+    val (c4, _) = TxLog.readChangesSince(spark, root, v2,
       skipNonAppend = true)
     assert(c4.get.collect().map(_.getAs[Long]("n")).toSeq === Seq(20L))
-    val (c5, _) = TxLog.readChangesSince(spark, root, v1, "part",
+    val (c5, _) = TxLog.readChangesSince(spark, root, v1,
       skipNonAppend = true)
     // window holds append(a->10) + overwrite(a->100) + append(b->20):
     // a's appended file is no longer live, so only b's row surfaces
@@ -447,35 +447,71 @@ class TxLogSpec extends SparkSpecBase {
     assert(TxLog.readTable(spark, root).count() === 2L)
   }
 
-  test("a legacy log without a schema record reads back equal, its schema " +
-      "from one driver-side footer read (no job while the read is built)") {
-    val root = freshRoot("legacyschema")
-    TxLog.overwritePartitionsTx(kv("a" -> 1, "b" -> 2), root, "part")
-    TxLog.appendBatchTx(kv("a" -> 3), root, "part", "l1")
-    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getAs[String]("part") -> r.getAs[Long]("n")).sorted.toSeq
-    val want = pairs(TxLog.read(spark, root, "part"))
-    val fs = new org.apache.hadoop.fs.Path(root)
+  test("a commit or checkpoint without the log generation line is " +
+      "refused by every reader, the CDF stream and the next commit") {
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(System.getProperty("java.io.tmpdir"))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commits = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/_txlog"))
-      .map(_.getPath).filter(_.getName.endsWith(".txn"))
-    assert(commits.length === 2)
-    commits.foreach { p =>
+    def lines(p: Path): List[String] = {
       val in = fs.open(p)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      assert(body.linesIterator.exists(_.startsWith("schema=")))
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    }
+    def logFile(root: String, suffix: String): Path =
+      fs.listStatus(new Path(s"$root/_txlog")).map(_.getPath)
+        .filter(_.getName.endsWith(suffix)).maxBy(_.getName)
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++
+        msgs(e.getCause))
+    val key = "graft.txlog.chkParquetMin"
+    // (case, chkParquetMin for a checkpoint at v2 (None: no checkpoint),
+    // the header of the stripped file, the stripped file)
+    Seq[(String, Option[String], String, String => Path)](
+      ("first commit", None, "graft-txn-v1",
+        root => new Path(root, f"_txlog/v${1L}%020d.txn")),
+      ("text checkpoint", Some(TxLog.DefaultChkParquetMin.toString),
+        "graft-chk-v1", root => logFile(root, ".chk")),
+      ("payload checkpoint", Some("1"), "graft-chk-v2",
+        root => logFile(root, ".chk"))
+    ).foreach { case (what, chkMin, header, file) =>
+      val root = freshRoot(s"gen-${what.replace(' ', '-')}")
+      TxLog.appendBatchTx(kv("a" -> 1, "b" -> 2), root, "part", "g1") // v1
+      TxLog.appendBatchTx(kv("a" -> 3), root, "part", "g2")           // v2
+      chkMin.foreach { m =>
+        spark.conf.set(key, m)
+        try TxLog.checkpoint(spark, root) finally spark.conf.unset(key)
+      }
+      val p = file(root)
+      val body = lines(p)
+      assert(body.head === header && body.contains("gen=2"), s"$what: $body")
       val out = fs.create(p, true)
-      try out.write(body.linesIterator.filterNot(_.startsWith("schema="))
+      try out.write(body.filterNot(_.startsWith("gen="))
         .mkString("", "\n", "\n").getBytes("UTF-8"))
       finally out.close()
+      TxLog.clearLogCache()
+      Seq[(String, () => Any)](
+        "readTable" -> (() => TxLog.readTable(spark, root)),
+        "readTableAt" -> (() => TxLog.readTableAt(spark, root, 2L)),
+        "countRows" -> (() => TxLog.countRows(spark, root)),
+        "tableDetail" -> (() => TxLog.tableDetail(spark, root)),
+        "readChangeFeed" -> (() => TxLog.readChangeFeed(spark, root, 0L)),
+        "readChangesSince" -> (() => TxLog.readChangesSince(spark, root, 0L)),
+        "CDF stream" -> (() => {
+          val q = spark.readStream.format("txlog")
+            .option("readChangeFeed", "true").load(root)
+            .writeStream.option("checkpointLocation", s"$root-ckpt")
+            .format("noop").start()
+          try q.processAllAvailable() finally q.stop()
+        }),
+        "commit" -> (() =>
+          TxLog.appendBatchTx(kv("c" -> 4), root, "part", "g3"))
+      ).foreach { case (call, run) =>
+        val e = intercept[Exception](run())
+        assert(msgs(e).exists(m => m.contains("records no log generation") &&
+            m.contains("needs gen=2") && m.contains(root)),
+          s"$what / $call: ${msgs(e).mkString(" | ")}")
+      }
     }
-    TxLog.clearLogCache()
-    assert(TxLog.snapshot(spark, root).schema.isEmpty,
-      "the stripped log must take the legacy path")
-    val (df, jobs) = jobsLaunchedBy(TxLog.read(spark, root, "part"))
-    assert(jobs.isEmpty, s"building the read launched jobs ${jobs.mkString(",")}")
-    assert(pairs(df) === want)
   }
 
   test("consumeChanges drives an exactly-once tx-to-tx pipeline: windows " +
@@ -487,7 +523,7 @@ class TxLogSpec extends SparkSpecBase {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(ckpt), false)
     TxLog.appendBatchTx(kv("a" -> 1, "b" -> 2), src, "part", "p1")
-    def pump(): Int = TxLog.consumeChanges(spark, src, "part", ckpt) {
+    def pump(): Int = TxLog.consumeChanges(spark, src, ckpt) {
       (win, v) => TxLog.appendBatchTx(win, dst, "part", s"pipe-$v"): Unit
     }
     assert(pump() === 1)
@@ -497,14 +533,14 @@ class TxLogSpec extends SparkSpecBase {
     TxLog.appendBatchTx(kv("a" -> 10), src, "part", "p2")
     var first = true
     intercept[RuntimeException] {
-      TxLog.consumeChanges(spark, src, "part", ckpt) { (win, v) =>
+      TxLog.consumeChanges(spark, src, ckpt) { (win, v) =>
         TxLog.appendBatchTx(win, dst, "part", s"pipe-$v"): Unit
         if (first) { first = false; sys.error("crash before checkpoint") }
       }
     }
     assert(pump() === 1, "retry must re-deliver the un-checkpointed window")
     assert(pump() === 0, "drained log must deliver nothing")
-    val got = TxLog.read(spark, dst, "part")
+    val got = TxLog.readTable(spark, dst)
       .groupBy("part").agg(sum("n").as("s"), count(lit(1)).as("c")).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     // exactly-once: the replayed window landed ONCE (a=1 and a=10 rows,
@@ -519,7 +555,8 @@ class TxLogSpec extends SparkSpecBase {
     TxLog.overwritePartitionsTx(kv("a" -> 2, "b" -> 5), root, "part") // v2
     TxLog.appendBatchTx(kv("a" -> 10), root, "part", "b1")            // v3
     def sumAt(v: Long) = TxLog.readSnapshot(spark, root,
-      TxLog.snapshotAt(spark, root, v), "part").agg(sum("n")).head.getLong(0)
+      TxLog.snapshotAt(spark, root, v), TxLog.tableMeta(spark, root)._2)
+      .agg(sum("n")).head.getLong(0)
     assert(sumAt(1) === 1L)
     assert(sumAt(2) === 7L)
     assert(sumAt(3) === 17L)
@@ -541,7 +578,7 @@ class TxLogSpec extends SparkSpecBase {
     val staged = TxLog.stage(kv("2024-01" -> 99), root, "part")
     // ...retention drops the old month...
     assert(TxLog.dropPartitionsWhereTx(spark, root, _ >= "2024-02") === 1)
-    val got = TxLog.read(spark, root, "part")
+    val got = TxLog.readTable(spark, root)
       .select("part").collect().map(_.getString(0)).toSet
     assert(got === Set("2024-02", "2024-03"))
     // ...and the stale writer's conflict check refuses the resurrection
@@ -554,7 +591,7 @@ class TxLogSpec extends SparkSpecBase {
     // dropped partition's now-unreferenced file
     assert(TxLog.dropPartitionsWhereTx(spark, root, _ >= "2024-02") === 0)
     assert(TxLog.vacuum(spark, root, minAgeMs = 0L) >= 1)
-    assert(TxLog.read(spark, root, "part").count() === 2L)
+    assert(TxLog.readTable(spark, root).count() === 2L)
     // time travel still reproduces the pre-removal state
     assert(TxLog.snapshotAt(spark, root, snap.version).parts.keySet
       .contains("2024-01") === true)
@@ -583,7 +620,7 @@ class TxLogSpec extends SparkSpecBase {
     // the recorded schema widens and pre-evolution rows NULL-backfill
     TxLog.appendBatchTx(Seq(("a", 9L, "extra")).toDF("part", "n", "note"),
       root, "part", "evolve-batch")
-    val widened = TxLog.read(spark, root, "part")
+    val widened = TxLog.readTable(spark, root)
     assert(widened.columns.toSet === Set("part", "n", "note"))
     val notes = widened.orderBy("n").collect()
       .map(r => r.getAs[Long]("n") -> Option(r.getAs[String]("note"))).toMap
@@ -597,14 +634,14 @@ class TxLogSpec extends SparkSpecBase {
     assert(TxLog.vacuum(spark, root, minAgeMs = 0L) === 0) // refusal self-discarded
     // time travel to the pre-evolution version reads the OLD schema
     val v1 = TxLog.readSnapshot(spark, root,
-      TxLog.snapshotAt(spark, root, 1L), "part")
+      TxLog.snapshotAt(spark, root, 1L), TxLog.tableMeta(spark, root)._2)
     assert(!v1.columns.contains("note"))
     // FULL overwrite (every current partition replaced) may still change
     // the schema arbitrarily
     val evolved = Seq(("a", 10L, true), ("b", 20L, false))
       .toDF("part", "n", "flag")
     TxLog.overwritePartitionsTx(evolved, root, "part")
-    val got = TxLog.read(spark, root, "part")
+    val got = TxLog.readTable(spark, root)
     assert(got.columns.toSet === Set("part", "n", "flag"))
     assert(got.count() === 2L)
   }
@@ -634,7 +671,7 @@ class TxLogSpec extends SparkSpecBase {
       select = (_: String) == "b") { df =>
       df.withColumn("n", col("n") + 100L)
     }
-    val got = TxLog.read(spark, root, "part").orderBy("n").collect()
+    val got = TxLog.readTable(spark, root).orderBy("n").collect()
       .map(r => (r.getAs[String]("part"), r.getAs[Long]("n"),
         Option(r.getAs[String]("note"))))
     assert(got.toSeq === Seq(("a", 1L, None), ("b", 102L, None),
@@ -642,7 +679,7 @@ class TxLogSpec extends SparkSpecBase {
     // stagedB was discarded (no leak); vacuum reclaims exactly the two
     // SUPERSEDED b files (v1's and the evolve append's), nothing else
     assert(TxLog.vacuum(spark, root, minAgeMs = 0L) === 2)
-    assert(TxLog.read(spark, root, "part").count() === 3L)
+    assert(TxLog.readTable(spark, root).count() === 3L)
   }
 
   test("null partition values are refused at stage time") {
@@ -693,7 +730,7 @@ class TxLogSpec extends SparkSpecBase {
         readVersion = snap.version, conflictCheck = true)
       assert(v === 3L)
     } finally TxLog.storeOverride = None
-    val got = TxLog.read(spark, root, "part")
+    val got = TxLog.readTable(spark, root)
       .collect().map(r => r.getAs[String]("part") -> r.getAs[Long]("n")).toMap
     assert(got === Map("a" -> 10L, "b" -> 2L, "zz" -> 100L))
     // and an OVERLAPPING interloper raises the conflict on the retry path
@@ -710,7 +747,7 @@ class TxLogSpec extends SparkSpecBase {
       }
       TxLog.discard(spark, root, staged)
     } finally TxLog.storeOverride = None
-    assert(TxLog.read(spark, root, "part").filter(col("part") === "a")
+    assert(TxLog.readTable(spark, root).filter(col("part") === "a")
       .select("n").head.getLong(0) === 99L)
   }
 
@@ -747,7 +784,7 @@ class TxLogSpec extends SparkSpecBase {
     assert(readErr.get() === null,
       s"reader threw under maintenance churn: ${readErr.get()}")
     assert(reads.get() > 0L)
-    val total = TxLog.read(spark, root, "part")
+    val total = TxLog.readTable(spark, root)
       .agg(sum("n")).head.getLong(0)
     assert(total === 1L + (1 to 10).map(10L * _).sum)
   }
@@ -773,7 +810,7 @@ class TxLogSpec extends SparkSpecBase {
     } finally pool.shutdown()
     // every batch survived the interleaved compactions (serialized
     // application: a compactor whose snapshot went stale re-derived)
-    val sums = TxLog.read(spark, root, "part")
+    val sums = TxLog.readTable(spark, root)
       .groupBy("part").agg(sum("n").as("s")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val tri = (1 to batches).map(_.toLong).sum
@@ -793,7 +830,7 @@ class TxLogSpec extends SparkSpecBase {
     val cp = new org.apache.hadoop.fs.Path(ckpt)
     cp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(cp, false)
     def pump(n: Int = Int.MaxValue): Int =
-      TxLog.consumeChanges(spark, src, "part", ckpt, maxCycles = n) {
+      TxLog.consumeChanges(spark, src, ckpt, maxCycles = n) {
         (win, v) => TxLog.appendBatchTx(win, dst, "part", s"ix-$v"): Unit
       }
     TxLog.appendBatchTx(kv("a" -> 1), src, "part", "ib1")
@@ -804,14 +841,14 @@ class TxLogSpec extends SparkSpecBase {
     // the new version and double-apply window 2's rows.
     TxLog.appendBatchTx(kv("a" -> 10), src, "part", "ib2")
     intercept[RuntimeException] {
-      TxLog.consumeChanges(spark, src, "part", ckpt) { (win, v) =>
+      TxLog.consumeChanges(spark, src, ckpt) { (win, v) =>
         TxLog.appendBatchTx(win, dst, "part", s"ix-$v"): Unit
         sys.error("crash after downstream commit, before checkpoint")
       }
     }
     TxLog.appendBatchTx(kv("a" -> 100), src, "part", "ib3")
     assert(pump() === 2, "restart must deliver the capped replay then the new window")
-    val (s, c) = TxLog.read(spark, dst, "part")
+    val (s, c) = TxLog.readTable(spark, dst)
       .agg(sum("n"), count(lit(1))).collect()
       .map(r => (r.getLong(0), r.getLong(1))).head
     assert((s, c) === (111L, 3L),
@@ -828,7 +865,7 @@ class TxLogSpec extends SparkSpecBase {
     TxLog.appendBatchTx(kv("a" -> 1), src, "part", "rb1")
     var seen = Seq.empty[(Long, Long)]
     def pump(rebase: Boolean): Int =
-      TxLog.consumeChanges(spark, src, "part", ckpt, reBaseline = rebase) {
+      TxLog.consumeChanges(spark, src, ckpt, reBaseline = rebase) {
         (win, v) => seen :+= (v, win.agg(sum("n")).head.getLong(0))
       }
     assert(pump(rebase = false) === 1)
@@ -857,10 +894,10 @@ class TxLogSpec extends SparkSpecBase {
     TxLog.overwritePartitionsTx(df, root, "part")
     // Spark SQL orders NaN above every double, so x > 100 matches the NaN
     // row — a max=10 footer bound must not skip the file
-    val got = TxLog.read(spark, root, "part").filter(col("x") > 100.0)
+    val got = TxLog.readTable(spark, root).filter(col("x") > 100.0)
     assert(got.count() === 1L, "NaN row lost to float upper-bound skipping")
     // lower-bound pruning on floats stays active and stays correct
-    assert(TxLog.read(spark, root, "part").filter(col("x") < 0.5).count() === 0L)
+    assert(TxLog.readTable(spark, root).filter(col("x") < 0.5).count() === 0L)
   }
 
   test("deleteWhereTx rewrites only files that might match; untouched " +
@@ -887,7 +924,7 @@ class TxLogSpec extends SparkSpecBase {
     val after = TxLog.snapshot(spark, root)
     assert(lowFiles.subsetOf(after.parts.values.flatten.toSet),
       "files that could not match must survive IDENTICALLY (no rewrite)")
-    assert(TxLog.read(spark, root, "part").agg(sum("n")).head.getLong(0)
+    assert(TxLog.readTable(spark, root).agg(sum("n")).head.getLong(0)
       === 1L + 2L + 100L + 200L)
     // a predicate evaluating NULL keeps the row (SQL DELETE semantics)
     val root2 = freshRoot("delnull")
@@ -895,7 +932,7 @@ class TxLogSpec extends SparkSpecBase {
       Seq(("a", Some(1L)), ("a", None), ("a", Some(5L))).toDF("part", "n"),
       root2, "part", "dn1")
     TxLog.deleteWhereTx(spark, root2, col("n") > 2L)
-    assert(TxLog.read(spark, root2, "part").count() === 2L,
+    assert(TxLog.readTable(spark, root2).count() === 2L,
       "NULL-predicate row must survive the delete")
     // a provably-unmatchable predicate commits nothing
     val (v2, r2) = TxLog.deleteWhereTx(spark, root2, col("n") > 1000L)
@@ -920,21 +957,21 @@ class TxLogSpec extends SparkSpecBase {
       before.stats(f)("k")._1.toLong >= 100L
     }.toSet
     assert(farFiles.size === 2)
-    val (_, feedV) = TxLog.readChangesSince(spark, root, 0L, "part")
+    val (_, feedV) = TxLog.readChangesSince(spark, root, 0L)
     // source: update k=2, insert k=3 — bounds [2,3] overlap only m1's file
     val src = Seq(("a", 2L, "new2"), ("a", 3L, "new3")).toDF("part", "k", "v")
     TxLog.mergeKeyedTx(spark, root, src, "k")
     val after = TxLog.snapshot(spark, root)
     assert(farFiles.subsetOf(after.parts.values.flatten.toSet),
       "files whose key range cannot overlap the source must not rewrite")
-    val got = TxLog.read(spark, root, "part").orderBy("k")
+    val got = TxLog.readTable(spark, root).orderBy("k")
       .collect().map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toSeq
     assert(got === Seq(1L -> "old1", 2L -> "new2", 3L -> "new3",
       100L -> "old100", 101L -> "old101"))
     // a rewrite is NOT expressible as appended rows: the change feed
     // refuses the window unless rewrites are reconciled out of band
     val ex = intercept[RuntimeException] {
-      TxLog.readChangesSince(spark, root, feedV, "part")
+      TxLog.readChangesSince(spark, root, feedV)
     }
     assert(ex.getMessage.contains("not appends"))
     // merge is serializable vs itself: two racing merges on the same
@@ -953,14 +990,14 @@ class TxLogSpec extends SparkSpecBase {
       })
       assert(Set(f1.get(), f2.get()).size === 2, "merges must serialize")
     } finally pool.shutdown()
-    val finalRows = TxLog.read(spark, root, "part").orderBy("k")
+    val finalRows = TxLog.readTable(spark, root).orderBy("k")
       .collect().map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toSeq
     assert(finalRows === Seq(1L -> "race1", 2L -> "new2", 3L -> "race3",
       50L -> "ins50", 60L -> "ins60", 100L -> "old100", 101L -> "old101"),
       s"racing merges lost an update: $finalRows")
     // rewritten-away files are unreferenced → vacuum reclaims them
     assert(TxLog.vacuum(spark, root, minAgeMs = 0L) > 0)
-    assert(TxLog.read(spark, root, "part").count() === 7L)
+    assert(TxLog.readTable(spark, root).count() === 7L)
   }
 
   test("change feed serves a multi-append window from ONE scan, " +
@@ -1033,7 +1070,7 @@ class TxLogSpec extends SparkSpecBase {
     assert(tail.get.collect().map(_.getAs[String]("_change_type")).toSeq
       === Seq("delete"))
     // the current TABLE state is consistent with the feed
-    assert(TxLog.read(spark, root, "part").orderBy("k").collect()
+    assert(TxLog.readTable(spark, root).orderBy("k").collect()
       .map(r => r.getAs[Long]("k") -> r.getAs[Long]("v")).toSeq
       === Seq(2L -> 200L, 3L -> 30L, 9L -> 90L))
     // RETENTION CONTRACT: the feed lives under BOTH horizons. A
@@ -1079,27 +1116,27 @@ class TxLogSpec extends SparkSpecBase {
         case s: org.apache.spark.sql.execution.FileSourceScanExec => s
       }.head.metrics("numFiles").value
     }
-    val eq = TxLog.read(spark, root, "part").filter(col("k") === "date")
+    val eq = TxLog.readTable(spark, root).filter(col("k") === "date")
     assert(eq.count() === 1L)
     assert(filesRead(eq) === 1L, "point lookup must read exactly one file")
     assert(filesRead(
-      TxLog.read(spark, root, "part").filter(col("k") >= "grape")) === 1L)
-    assert(filesRead(TxLog.read(spark, root, "part")
+      TxLog.readTable(spark, root).filter(col("k") >= "grape")) === 1L)
+    assert(filesRead(TxLog.readTable(spark, root)
       .filter(col("k").isin("apple", "kiwi"))) === 2L)
     // long values truncate: bounds sharing a >32-cp prefix must widen the
     // max and NEVER skip a file holding a matching longer value
     val long1 = "z" * 40 + "aaa"
     val long2 = "z" * 40 + "zzz"
     batch("sb4", long1, long2)
-    val hit = TxLog.read(spark, root, "part").filter(col("k") === long2)
+    val hit = TxLog.readTable(spark, root).filter(col("k") === long2)
     assert(hit.count() === 1L, "truncation must not lose the long-key row")
     assert(filesRead(hit) === 1L, "widened max must still prune the others")
     // hostile values (tabs, newlines, %, =) round-trip the log encoding
     val weird = "k\t1\n%=100x"
     batch("sb5", weird)
-    assert(TxLog.read(spark, root, "part")
+    assert(TxLog.readTable(spark, root)
       .filter(col("k") === weird).count() === 1L)
-    assert(TxLog.read(spark, root, "part").count() === 12L)
+    assert(TxLog.readTable(spark, root).count() === 12L)
   }
 
   test("string bound truncation/widening is sound at the edges") {
@@ -1138,7 +1175,7 @@ class TxLogSpec extends SparkSpecBase {
         "millis-encoded timestamp footer bounds must not be recorded " +
           s"(decoded as micros they are ~1000x off): ${snap.stats}")
       // the range read still answers correctly (no skipping, full scan)
-      val n = TxLog.read(spark, root, "part")
+      val n = TxLog.readTable(spark, root)
         .filter(col("ts") > lit(java.sql.Timestamp.valueOf("2024-06-01 23:00:00")))
         .count()
       assert(n === 1L)
@@ -1229,9 +1266,21 @@ class TxLogSpec extends SparkSpecBase {
     val classes = feed.get.groupBy("_change_type").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(classes.contains("insert") && classes.contains("delete"))
-    // compaction keeps content (partCol arg is advisory — the recorded
-    // 2-column schema drives the rewrite)
+    // compaction keeps content (partCol names one recorded column — the
+    // recorded 2-column schema drives the rewrite)
     TxLog.compactPartitionsTx(spark, root, "date")
+    assert(TxLog.readTable(spark, root).count() === 4L)
+    // a partCol the log does not record is refused, not restaged under
+    Seq[(String, () => Any)](
+      "TxLog.readModifyWriteWhere" ->
+        (() => TxLog.compactPartitionsTx(spark, root, "n")),
+      "TxLog.compactBinPackTx" ->
+        (() => TxLog.compactBinPackTx(spark, root, "n", 1L << 20))
+    ).foreach { case (who, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(s"$who: [n] is not a partition column") &&
+        e.getMessage.contains("recorded: [date, channel]"), e.getMessage)
+    }
     assert(TxLog.readTable(spark, root).count() === 4L)
   }
 
@@ -1360,7 +1409,7 @@ class TxLogSpec extends SparkSpecBase {
     assert(TxLog.snapshotAt(spark, root, 5L).version === 5L)
     assert(TxLog.readTableAt(spark, root, 5L)
       .agg(sum("n")).head.getLong(0) === 15L)
-    val (df3, v3) = TxLog.readChangesSince(spark, root, 3L, "part")
+    val (df3, v3) = TxLog.readChangesSince(spark, root, 3L)
     assert(v3 === 50L)
     assert(df3.get.agg(sum("n")).head.getLong(0) === (4L to 50L).sum)
     // once expireLog RECLAIMS the deltas, sub-floor reads refuse loudly
@@ -1602,7 +1651,7 @@ class TxLogSpec extends SparkSpecBase {
     assert(n1 === 1L)
     assert(TxLog.snapshot(spark, root).parts
       .map { case (p, fs) => p -> fs.toSet } === filesBefore)
-    val got1 = TxLog.read(spark, root, "part").select("k")
+    val got1 = TxLog.readTable(spark, root).select("k")
       .collect().map(_.getLong(0)).toSet
     assert(got1 === Set(1L, 3L, 4L))
     // metadata-only COUNT subtracts the vector exactly
@@ -1611,7 +1660,7 @@ class TxLogSpec extends SparkSpecBase {
     val (_, n2) = TxLog.deleteWhereDvTx(spark, root, col("k") === 1L)
     assert(n2 === 1L)
     assert(TxLog.countRows(spark, root) === Some(2L))
-    assert(TxLog.read(spark, root, "part").select("k")
+    assert(TxLog.readTable(spark, root).select("k")
       .collect().map(_.getLong(0)).toSet === Set(3L, 4L))
     // deleting an already-deleted (or absent) row is a no-op, no commit
     val vNow = TxLog.snapshot(spark, root).version
@@ -1621,7 +1670,7 @@ class TxLogSpec extends SparkSpecBase {
     // new, and the rewrite kills the file's dv entry with the file
     TxLog.mergeKeyedTx(spark, root,
       Seq(("a", 2L, 25.0)).toDF("part", "k", "v"), "k")
-    val got2 = TxLog.read(spark, root, "part")
+    val got2 = TxLog.readTable(spark, root)
       .collect().map(r => r.getAs[Long]("k") -> r.getAs[Double]("v")).toMap
     assert(got2 === Map(2L -> 25.0, 3L -> 30.0, 4L -> 40.0))
     assert(TxLog.snapshot(spark, root).dvs.isEmpty,
@@ -1632,7 +1681,7 @@ class TxLogSpec extends SparkSpecBase {
     assert(TxLog.readTableAt(spark, root, 3L).count() === 2L)
     // vacuum reclaims the superseded sidecars (all dvs are gone now)
     assert(TxLog.vacuum(spark, root, minAgeMs = 0L) >= 0)
-    assert(TxLog.read(spark, root, "part").count() === 3L)
+    assert(TxLog.readTable(spark, root).count() === 3L)
   }
 
   test("deletion vectors: compaction materializes, restore reinstates, " +
@@ -1650,17 +1699,17 @@ class TxLogSpec extends SparkSpecBase {
       TxLog.checkpoint(spark, root)
       TxLog.expireLog(spark, root)
       assert(TxLog.countRows(spark, root) === Some(2L))
-      assert(TxLog.read(spark, root, "part").select("k")
+      assert(TxLog.readTable(spark, root).select("k")
         .collect().map(_.getLong(0)).toSet === Set(2L, 3L))
       // compaction reads dv-filtered and drops the vectors
       TxLog.compactPartitionsTx(spark, root, "part",
         select = _ == "a")                                   // v3
       assert(TxLog.snapshot(spark, root).dvs.isEmpty)
-      assert(TxLog.read(spark, root, "part").count() === 2L)
+      assert(TxLog.readTable(spark, root).count() === 2L)
       // restore to the dv'd version reinstates the vector state
       TxLog.restoreTx(spark, root, vDv)                      // v4
       assert(TxLog.snapshot(spark, root).dvs.nonEmpty)
-      assert(TxLog.read(spark, root, "part").select("k")
+      assert(TxLog.readTable(spark, root).select("k")
         .collect().map(_.getLong(0)).toSet === Set(2L, 3L))
       assert(TxLog.countRows(spark, root) === Some(2L))
     } finally spark.conf.unset("graft.txlog.autoCheckpointEvery")
@@ -1683,7 +1732,7 @@ class TxLogSpec extends SparkSpecBase {
     assert(n1 === 2)
     val snap1 = TxLog.snapshot(spark, root)
     assert(snap1.parts("a").size === 1 && snap1.parts("b") === bFile)
-    assert(TxLog.read(spark, root, "part").agg(sum("v")).head.getDouble(0)
+    assert(TxLog.readTable(spark, root).agg(sum("v")).head.getDouble(0)
       === 15.0)
     // a second append + full dv delete of partition a, then bin-pack:
     // the merged read is EMPTY, so the smalls remove without restage
@@ -1700,7 +1749,7 @@ class TxLogSpec extends SparkSpecBase {
     assert(n2 === 2)
     val snap2 = TxLog.snapshot(spark, root)
     assert(!snap2.parts.contains("a") && snap2.dvs.isEmpty)
-    assert(TxLog.read(spark, root, "part").agg(sum("v")).head.getDouble(0)
+    assert(TxLog.readTable(spark, root).agg(sum("v")).head.getDouble(0)
       === 9.0)
     // the pure removal leaves no staging dir behind, and nothing more
     // for vacuum to reclaim than the files it unreferenced
@@ -1813,7 +1862,7 @@ class TxLogSpec extends SparkSpecBase {
         TxLog.MergeClause.delete(Some("s.v < 0")),
         TxLog.MergeClause.update(Map("v" -> "t.v + s.v"))),
       whenNotMatched = Seq(TxLog.MergeClause.insertAll(Some("s.v > 0"))))
-    val got = TxLog.read(spark, root, "part")
+    val got = TxLog.readTable(spark, root)
       .collect().map(r => r.getAs[Long]("k") -> r.getAs[Double]("v")).toMap
     assert(got === Map(2L -> 25.0, 3L -> 30.0, 5L -> 50.0, 9L -> 90.0))
     // SET on a partition column refuses
@@ -1841,7 +1890,7 @@ class TxLogSpec extends SparkSpecBase {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(classes === Map("delete" -> 1L, "update_preimage" -> 1L,
       "update_postimage" -> 1L, "insert" -> 1L), classes)
-    assert(TxLog.read(spark, root, "part")
+    assert(TxLog.readTable(spark, root)
       .collect().map(r => r.getAs[Long]("k") -> r.getAs[Double]("v"))
       .toMap === Map(3L -> 33.0, 5L -> 50.0, 7L -> 70.0, 9L -> 90.0))
   }
@@ -1856,7 +1905,7 @@ class TxLogSpec extends SparkSpecBase {
     val (_, n) = TxLog.updateWhereTx(spark, root, col("v") > 15.0,
       Map("v" -> (col("v") + 1.0)))
     assert(n >= 1)
-    val got = TxLog.read(spark, root, "part")
+    val got = TxLog.readTable(spark, root)
       .collect().map(r => r.getAs[Long]("k") ->
         Option(r.getAs[java.lang.Double]("v")).map(_.toDouble)).toMap
     // v=10 unmatched, v=20 updated, v=NULL (predicate NULL) unchanged
@@ -1891,7 +1940,7 @@ class TxLogSpec extends SparkSpecBase {
       TxLog.commit(spark, root, staged, "append", readVersion = 0L)
     }
     assert(err.getMessage.contains("constraints changed"), err.getMessage)
-    assert(TxLog.read(spark, root, "part").count() === 1L)
+    assert(TxLog.readTable(spark, root).count() === 1L)
     // a restage re-validates against the NEW set and refuses there
     intercept[IllegalArgumentException] {
       TxLog.stage(Seq(("a", -1.0)).toDF("part", "v"), root, "part")
@@ -1972,7 +2021,7 @@ class TxLogSpec extends SparkSpecBase {
       assert(r.getAs[Long]("log_files_expired") > 0L)
       // the overwrite's 2 orphans + the bin-pack's 3 replaced smalls
       assert(r.getAs[Long]("data_files_vacuumed") >= 2L)
-      assert(TxLog.read(spark, root, "part").agg(sum("n")).head.getLong(0)
+      assert(TxLog.readTable(spark, root).agg(sum("n")).head.getLong(0)
         === 10L)
       assert(TxLog.snapshot(spark, root).parts("a").size === 1)
       // idempotent: the second run finds nothing to do
@@ -2021,7 +2070,7 @@ class TxLogSpec extends SparkSpecBase {
       root, "part", "dve-b1")
     val (_, n1) = TxLog.deleteWhereDvTx(spark, root, col("k") === 1L)
     assert(n1 === 1L)
-    assert(TxLog.read(spark, root, "part").select("k")
+    assert(TxLog.readTable(spark, root).select("k")
       .collect().map(_.getLong(0)).toSet === Set(2L, 3L, 4L, 5L))
     val (_, n2) =
       TxLog.deleteWhereDvTx(spark, root, col("k") === 3L || col("k") === 4L)
@@ -2030,9 +2079,9 @@ class TxLogSpec extends SparkSpecBase {
     // the vectors key LIVE files (not "" or an encoded variant), so the
     // checkpoint fold carries them instead of dropping them as non-live
     TxLog.checkpoint(spark, root)
-    assert(TxLog.read(spark, root, "part").select("k")
+    assert(TxLog.readTable(spark, root).select("k")
       .collect().map(_.getLong(0)).toSet === Set(2L, 5L))
-    assert(TxLog.read(spark, root, "part")
+    assert(TxLog.readTable(spark, root)
       .filter(col("part") === "NORTH AMERICA").count() === 1L)
   }
 
@@ -2183,7 +2232,7 @@ class TxLogSpec extends SparkSpecBase {
       // and b's FILE is untouched (same physical file)
       assert(snap.dvs.keySet === Set(bFile), snap.dvs.keySet)
       assert(snap.parts("b").head === bFile)
-      assert(TxLog.read(spark, root, "part").select("k")
+      assert(TxLog.readTable(spark, root).select("k")
         .collect().map(_.getLong(0)).toSet === Set(2L, 3L, 5L, 6L, 7L))
       assert(TxLog.countRows(spark, root) === Some(5L))
       // idempotent: a second pass finds nothing above the threshold

@@ -13,11 +13,11 @@ object TxConflictHook {
 }
 
 /** Copy-on-write DML (MERGE, UPDATE, DELETE) writes its rewritten rows and
-  * its change images in ONE routed write: Spark-job budgets (and the
-  * deletion-vector read's), the routed change-file layout next to legacy
-  * `data/cdf-<uuid>` files, loser cleanup and vacuum retention. Sources
-  * are built with an explicit schema, so every counted job is one the tx
-  * layer launched. */
+  * its change images in ONE routed write: Spark-job budgets (and those of
+  * the deletion-vector read, the payload-table metadata calls and a
+  * replace), the routed change-file layout, loser cleanup and vacuum
+  * retention. Sources are built with an explicit schema, so every counted
+  * job is one the tx layer launched. */
 class TxRoutedWriteSpec extends SparkSpecBase {
 
   private def freshRoot(tag: String): String = {
@@ -51,16 +51,6 @@ class TxRoutedWriteSpec extends SparkSpecBase {
     df.select("_change_type", "part", "k", "v", "_commit_version").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSet
-
-  private def streamFeed(base: String, root: String)
-      : Set[(String, String, Long, Long, Long)] = {
-    val q = spark.readStream.format("txlog")
-      .option("readChangeFeed", "true").load(root)
-      .writeStream.option("checkpointLocation", s"$base/ckpt")
-      .format("parquet").option("path", s"$base/out").start()
-    try q.processAllAvailable() finally q.stop()
-    feedRows(spark.read.parquet(s"$base/out"))
-  }
 
   private def seeded(tag: String): String = {
     val root = freshRoot(tag)
@@ -186,6 +176,55 @@ class TxRoutedWriteSpec extends SparkSpecBase {
     assert(jobs.size === 5, s"dv delete launched ${jobs.size} jobs")
   }
 
+  test("job budget: on a payload table carrying a post-checkpoint " +
+      "deletion vector, the readers and metadata calls run their recorded " +
+      "job counts") {
+    val root = seeded("jobs-payload-meta")
+    TxLog.appendBatchTx(rows(("a", 5L, 50L), ("b", 6L, 60L)), root, "part",
+      "jobs-payload-meta-b2")
+    val key = "graft.txlog.chkParquetMin"
+    spark.conf.set(key, "1")
+    try TxLog.checkpoint(spark, root) finally spark.conf.unset(key)
+    TxLog.deleteWhereDvTx(spark, root, col("k") === 2L)
+    val counts = Seq[(String, () => Any)](
+      "readTable" -> (() => TxLog.readTable(spark, root)),
+      "countRows" -> (() => TxLog.countRows(spark, root)),
+      "partitionCounts" -> (() => TxLog.partitionCounts(spark, root)),
+      "tableDetail" -> (() => TxLog.tableDetail(spark, root))
+    ).map { case (name, call) => name -> jobsLaunchedBy(call())._2.size }
+    assert(TxLog.tableDetail(spark, root).head.getAs[String](
+      "representation") === "parquet-checkpoint")
+    assert(TxLog.readTable(spark, root).select("k").collect()
+      .map(_.getLong(0)).sorted.toSeq === Seq(1L, 3L, 5L, 6L))
+    assert(TxLog.countRows(spark, root) === Some(4L))
+    assert(TxLog.partitionCounts(spark, root) ===
+      Map("a" -> Some(2L), "b" -> Some(2L)))
+    assert(TxLog.tableDetail(spark, root).head.getAs[Long](
+      "n_deleted_rows") === 1L)
+    // held exactly: the payload is read with its fixed schema, so no
+    // count includes a schema-inference job
+    assert(counts === Seq("readTable" -> 0, "countRows" -> 3,
+      "partitionCounts" -> 3, "tableDetail" -> 4))
+  }
+
+  test("job budget: a non-empty replaceTableTx on a driver table runs its " +
+      "recorded job count") {
+    val root = seeded("jobs-replace")
+    // a source Spark must run to probe (not a local relation)
+    val src = spark.range(7L, 9L).select(
+      when(col("id") === 7L, "c").otherwise("d").as("part"),
+      col("id").as("k"), (col("id") * 10L).as("v"))
+    val (v, jobs) = jobsLaunchedBy(TxLog.replaceTableTx(src, root,
+      Seq("part")))
+    assert(v === 2L)
+    assert(TxLog.readTable(spark, root).select("part", "k").collect()
+      .map(r => (r.getString(0), r.getLong(1))).sorted.toSeq ===
+      Seq(("c", 7L), ("d", 8L)))
+    // held exactly: the staging write's shuffle and write stages, with no
+    // separate emptiness probe of the source
+    assert(jobs.size === 2, s"replace launched ${jobs.size} jobs")
+  }
+
   test("routed layout: data and change files of one DML commit share its " +
       "staging dir; partition values and change type come from the path") {
     val root = freshRoot("layout")
@@ -202,50 +241,6 @@ class TxRoutedWriteSpec extends SparkSpecBase {
       Set(("delete", "a", 1L, 10L, 2L)))
     assert(TxLog.readTable(spark, root).collect().map(_.getAs[Long]("k"))
       .toSeq === Seq(2L))
-  }
-
-  test("a window holding legacy data/cdf-<uuid> change files and routed " +
-      "ones serves the same rows through readChangeFeed and the CDF stream") {
-    val base = freshRoot("mixed")
-    val root = s"$base/table"
-    TxLog.appendBatchTx(rows(("a", 1L, 10L), ("a", 2L, 20L), ("b", 3L, 30L)),
-      root, "part", "mixed-b1")                                       // v1
-    TxLog.updateWhereTx(spark, root, col("k") === 1L,
-      Map("v" -> lit(11L)), changeFeed = true)                        // v2
-    TxLog.mergeKeyedTx(spark, root, rows(("b", 3L, 33L), ("b", 5L, 50L)),
-      "k", changeFeed = true)                                         // v3
-    TxLog.deleteWhereTx(spark, root, col("k") === 2L, changeFeed = true) // v4
-    val want = feedRows(TxLog.readChangeFeed(spark, root, 0L)._1.get)
-    // rewrite v2's change record into the legacy layout: one
-    // unpartitioned data/cdf-<uuid> dir whose files carry the partition
-    // column and _change_type as plain columns
-    val legacyRel = s"data/cdf-${java.util.UUID.randomUUID()}"
-    TxLog.readChangeFeed(spark, root, 1L, untilVersion = Some(2L))._1.get
-      .drop("_commit_version").coalesce(1)
-      .write.parquet(s"$root/$legacyRel")
-    val legacyFiles = fsOf(root).listStatus(new Path(root, legacyRel))
-      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-      .map(f => s"$legacyRel/$f").toSeq
-    val fs = fsOf(root)
-    val body = {
-      val in = fs.open(commitFile(root, 2L))
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    }
-    val out = fs.create(commitFile(root, 2L), true)
-    try out.write((body.filterNot(_.startsWith("c\t")) ++
-      legacyFiles.map(f => s"c\t$f")).mkString("", "\n", "\n")
-      .getBytes("UTF-8"))
-    finally out.close()
-    TxLog.clearLogCache()
-    assert(changesOf(root, 2L) === legacyFiles)
-    assert(changesOf(root, 3L).forall(!_.startsWith("data/cdf-")))
-    val (feed, build) =
-      jobsLaunchedBy(TxLog.readChangeFeed(spark, root, 0L)._1.get)
-    assert(build.isEmpty, s"building the feed launched ${build.size} jobs")
-    assert(feedRows(feed) === want)
-    assert(want.count(_._5 == 2L) === 2 && want.count(_._5 == 3L) === 3)
-    assert(streamFeed(base, root) === want)
   }
 
   test("a merge that loses its conflict check leaves no data file and no " +
